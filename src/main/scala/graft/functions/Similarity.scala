@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over embedding columns (Array[Float]).
@@ -508,6 +508,18 @@ object Similarity {
     }
   }
 
+  /** Largest shortlist the rerank re-attaches as an `isin` predicate.
+    * Defaults to the session's ACTUAL parquet inFilterThreshold: past that
+    * many values Spark degrades the In predicate to a [min,max] range
+    * before parquet sees it, and the rerank would scan like the join did
+    * but without the join's locality — deriving the bound keeps the two
+    * knobs from drifting apart. The threshold is read with no literal
+    * fallback, so an unset key yields Spark's registered default. */
+  private[graft] def rerankIsinMax(spark: SparkSession): Int =
+    spark.conf.getOption("spark.graft.ann.rerankIsinMax")
+      .getOrElse(spark.conf.get("spark.sql.parquet.pushdown.inFilterThreshold"))
+      .toInt
+
   /** EAGER for serving-sized shortlists: when `shortlist` ≤
     * `spark.graft.ann.rerankIsinMax`, CONSTRUCTING this frame runs one
     * bounded Spark job (the shortlist collect) and snapshots the candidate
@@ -547,17 +559,8 @@ object Similarity {
     // 4.6 s → ~2 s. Oversized shortlists (the exhaustive / oracle-replay
     // configs, shortlist ≥ corpus) keep the broadcast-join path — a
     // driver collect there would be corpus-sized.
-    // the default is the session's ACTUAL parquet inFilterThreshold (r15
-    // ADVICE): past that many values Spark degrades the In predicate to a
-    // [min,max] range before parquet sees it, and the rerank would scan
-    // like the join did but without the join's locality — deriving the
-    // bound keeps the two knobs from drifting apart
-    val rerankIsinMax = original.sparkSession.conf
-      .get("spark.graft.ann.rerankIsinMax",
-        original.sparkSession.conf
-          .get("spark.sql.parquet.pushdown.inFilterThreshold", "4096")).toInt
     val cand =
-      if (shortlist <= rerankIsinMax) {
+      if (shortlist <= rerankIsinMax(original.sparkSession)) {
         val ids = short.collect().map(_.get(0)).toIndexedSeq
         // empty shortlist: an empty frame of original's schema — never
         // re-derive `short` through a join (a second ADC job for zero rows)

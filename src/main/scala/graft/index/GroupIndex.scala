@@ -107,11 +107,6 @@ object GroupIndex {
   def build(df: DataFrame, groupCols: Seq[String], sumCols: Seq[String],
             distinctCols: Seq[String] = Nil): DataFrame = {
     require(groupCols.nonEmpty, "at least one group column required")
-    // index builds and delta refolds are themselves raw-path aggregations
-    // over the fact table — the dictionary-encoded grouping rewrite
-    // (exact int codes for dictionary-encoded parquet string keys) takes
-    // the same ~1.6× here as on the served GroupBy shape
-    graft.plans.DictGroupRewrite.install(df.sparkSession)
     distinctCols.foreach { c =>
       val t = df.schema(c).dataType
       require(t == org.apache.spark.sql.types.LongType ||

@@ -2146,23 +2146,15 @@ object IndexRewrite {
     try f finally suppressTL.set(prev)
   }
 
-  /** Install the rule into an existing session (idempotent). The
-    * [[DictGroupRewrite]] companion rule installs alongside and is kept
-    * LAST: index substitution must get first shot at an aggregation in
-    * each optimizer pass; the dictionary encoding carries whatever stays
-    * on the raw path. */
+  /** Install the rule into an existing session (idempotent). */
   def install(spark: SparkSession): Unit = {
     val already = spark.experimental.extraOptimizations.exists {
       case IndexRewrite(_) => true
       case _               => false
     }
-    if (!already) {
-      val (dict, rest) = spark.experimental.extraOptimizations
-        .partition(_.isInstanceOf[DictGroupRewrite])
+    if (!already)
       spark.experimental.extraOptimizations =
-        (rest :+ IndexRewrite(spark)) ++ dict
-    }
-    DictGroupRewrite.install(spark)
+        spark.experimental.extraOptimizations :+ IndexRewrite(spark)
   }
 }
 

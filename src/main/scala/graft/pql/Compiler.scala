@@ -24,11 +24,6 @@ final class Compiler(table: DataFrame, timeCol: Option[String] = None,
     resolve: String => DataFrame = n =>
       sys.error(s"no index resolver configured; cannot reference index '$n'")) {
 
-  // every PQL session gets the collision-free dictionary-encoded grouping
-  // rewrite (raw-path GroupBys over dictionary-encoded parquet strings
-  // aggregate on exact int codes; see graft.plans.DictGroupRewrite)
-  graft.plans.DictGroupRewrite.install(table.sparkSession)
-
   /** A bitmap result: Left = composable predicate, Right = materialized
     * `_id` set (single column "_id"). */
   type Bits = Either[Column, DataFrame]
@@ -793,7 +788,9 @@ final class Compiler(table: DataFrame, timeCol: Option[String] = None,
       case org.apache.spark.sql.types.TimestampType => unix_micros(col(f))
       case _ => col(f).cast("long")
     }
-    val vals = base.select(toBisect.as("v"))
+    // the cast itself may yield null (decimal overflow in `toBisect`):
+    // drop those rows here so ng/tot below count what the sample counts
+    val vals = base.select(toBisect.as("v")).filter(col("v").isNotNull)
     // ONE job picks the regime AND delivers everything both regimes need:
     // the value histogram rides as a capped-sample aggregate next to the
     // EXACT global stats (distinct-value count, min, max, total) over the

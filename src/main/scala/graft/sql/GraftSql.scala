@@ -694,7 +694,8 @@ object GraftSql {
     import org.apache.spark.sql.functions.{col => fcol}
     val plan = df.queryExecution.analyzed
     // inspect only the USER query's shape — view bodies (incl. TableLog's
-    // merge-on-read anti-join) are storage plumbing, not query structure
+    // merge-on-read id filter and union) are storage plumbing, not query
+    // structure
     def scan(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan):
         Iterator[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] = p match {
       case _: org.apache.spark.sql.catalyst.plans.logical.View => Iterator.empty

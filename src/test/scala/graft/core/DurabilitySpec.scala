@@ -58,6 +58,32 @@ class DurabilitySpec extends SparkSpec {
     }
   }
 
+  test("a restored session's merged view has no join and sees every write") {
+    withWarehouse { wh =>
+      Ddl.run(spark, "CREATE TABLE dur_nj (_id ID, v STRING)")
+      Ddl.run(spark, "INSERT INTO dur_nj VALUES (1, 'a'), (2, 'b'), (3, 'c')")
+      Ddl.run(spark, "INSERT INTO dur_nj VALUES (2, 'B'), (4, 'd')")
+      Ddl.run(spark, "DELETE FROM dur_nj WHERE _id = 3")
+      val s2 = spark.newSession()
+      s2.conf.set("spark.graft.warehouse", wh)
+      Ddl.restoreSession(s2)
+      assert(TableLog.depthOf(s2, "dur_nj") > 0, "restored log must be live")
+      val plan = s2.table("dur_nj").queryExecution.optimizedPlan
+      assert(plan.collect {
+        case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+      }.isEmpty, plan.toString)
+      def got = s2.table("dur_nj").collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSet
+      assert(got === Set((1L, "a"), (2L, "B"), (4L, "d")))
+      // the rebuilt id set keeps working for writes after restore
+      Ddl.run(s2, "DELETE FROM dur_nj WHERE _id = 1")
+      Ddl.run(s2, "INSERT INTO dur_nj VALUES (3, 'cc')")
+      assert(got === Set((2L, "B"), (3L, "cc"), (4L, "d")))
+      Ddl.run(s2, "DROP TABLE dur_nj")
+      Ddl.run(spark, "DROP TABLE IF EXISTS dur_nj")
+    }
+  }
+
   test("warehouse point writes leave the base piece untouched (O(delta))") {
     withWarehouse { _ =>
       Ddl.run(spark, "CREATE TABLE dur_p (_id ID, v STRING)")

@@ -40,6 +40,75 @@ class TableLogSpec extends SparkSpec {
     Ddl.run(spark, "DROP TABLE tl_sem")
   }
 
+  private def joins(name: String): Int =
+    spark.table(name).queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+    }.size
+
+  test("merge-on-read view has no join: the base is filtered by the " +
+      "removed-id set, with overlay and tombstones both live") {
+    Ddl.run(spark, "CREATE TABLE tl_nj (_id ID, v STRING)")
+    Ddl.run(spark, "INSERT INTO tl_nj VALUES (1, 'a'), (2, 'b'), (3, 'c')")
+    Ddl.run(spark, "INSERT INTO tl_nj VALUES (2, 'B'), (4, 'd')") // overlay
+    Ddl.run(spark, "DELETE FROM tl_nj WHERE _id = 3")             // tombstone
+    assert(TableLog.depthOf(spark, "tl_nj") > 0, "log must be live")
+    assert(joins("tl_nj") === 0,
+      spark.table("tl_nj").queryExecution.optimizedPlan.toString)
+    assert(rows("tl_nj") === Set((1L, "a"), (2L, "B"), (4L, "d")))
+    // resurrect, then delete an overlay-only id: still one shape, no join
+    Ddl.run(spark, "INSERT INTO tl_nj VALUES (3, 'cc')")
+    Ddl.run(spark, "DELETE FROM tl_nj WHERE _id = 4")
+    assert(joins("tl_nj") === 0)
+    assert(rows("tl_nj") === Set((1L, "a"), (2L, "B"), (3L, "cc")))
+    Ddl.run(spark, "DROP TABLE tl_nj")
+  }
+
+  test("string-keyed table: the merged view has no join and the upsert / " +
+      "delete / resurrect sequence holds") {
+    Ddl.run(spark, "CREATE TABLE tl_skey (_id STRING, v STRING)")
+    Ddl.run(spark,
+      "INSERT INTO tl_skey VALUES ('k1', 'a'), ('k2', 'b'), ('k3', 'c')")
+    def srows = spark.table("tl_skey").collect()
+      .map(r => (r.getString(r.fieldIndex("_id")), r.getAs[String]("v"))).toSet
+    Ddl.run(spark, "INSERT INTO tl_skey VALUES ('k2', 'B')")
+    Ddl.run(spark, "DELETE FROM tl_skey WHERE _id = 'k3'")
+    assert(TableLog.depthOf(spark, "tl_skey") > 0, "log must be live")
+    assert(joins("tl_skey") === 0,
+      spark.table("tl_skey").queryExecution.optimizedPlan.toString)
+    assert(srows === Set(("k1", "a"), ("k2", "B")))
+    Ddl.run(spark, "INSERT INTO tl_skey VALUES ('k3', 'cc')")
+    assert(srows === Set(("k1", "a"), ("k2", "B"), ("k3", "cc")))
+    Ddl.run(spark, "DELETE FROM tl_skey WHERE v < 'c'")
+    assert(joins("tl_skey") === 0)
+    assert(srows === Set(("k3", "cc")))
+    Ddl.run(spark, "DROP TABLE tl_skey")
+  }
+
+  test("a statement that pushes the removed-id set past its cap compacts " +
+      "in its own commit and stays correct") {
+    Ddl.run(spark, "CREATE TABLE tl_cap (_id ID, v STRING)")
+    Ddl.run(spark, "INSERT INTO tl_cap VALUES (0, 'seed'), (1, 'one')")
+    Ddl.run(spark, "DELETE FROM tl_cap WHERE _id = 1")
+    assert(TableLog.depthOf(spark, "tl_cap") > 0)
+    // one statement upserting more ids than the set may hold
+    val n = TableLog.MaxRemovedIds + 10
+    TableLog.upsert(spark, "tl_cap", spark.range(0, n)
+      .select(col("id").as("_id"), concat(lit("v"), col("id")).as("v")))
+    assert(TableLog.depthOf(spark, "tl_cap") === 0,
+      "over-cap statement must compact")
+    assert(joins("tl_cap") === 0)
+    val t = spark.table("tl_cap")
+    assert(t.count() === n)
+    assert(t.filter(col("_id") === 0).select("v").head().getString(0) == "v0")
+    assert(t.filter(col("_id") === 1).select("v").head().getString(0) == "v1")
+    // the log restarts on the compacted base
+    Ddl.run(spark, "DELETE FROM tl_cap WHERE _id = 5")
+    assert(TableLog.depthOf(spark, "tl_cap") === 1)
+    assert(joins("tl_cap") === 0)
+    assert(spark.table("tl_cap").count() === n - 1)
+    Ddl.run(spark, "DROP TABLE tl_cap")
+  }
+
   test("point writes never re-materialize the base; plan depth is bounded") {
     Ddl.run(spark, "CREATE TABLE tl_plan (_id ID, v STRING)")
     Ddl.run(spark, "INSERT INTO tl_plan VALUES (0, 'seed')")

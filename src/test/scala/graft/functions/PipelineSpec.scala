@@ -47,6 +47,19 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("minhash signature aggregation plans as HashAggregate (fixed-width " +
+      "UnsafeRow buffers), not ObjectHashAggregate") {
+    val docs = spark.createDataFrame(Seq(
+      (1L, "a b c d e"), (2L, "b c d e f"), (3L, "x y z w q")))
+      .toDF("doc_id", "text")
+    val sig = Dedup.minhashSignatures(
+      Dedup.shingledPosting(docs, "doc_id", "text"), 128)
+    val plan = sig.queryExecution.executedPlan.toString
+    assert(plan.contains("HashAggregate") &&
+      !plan.contains("ObjectHashAggregate"),
+      s"minhash_sig must use the paged UnsafeRow aggregation map:\n$plan")
+  }
+
   test("native GramHashes matches the HOF poly_hash(concat_ws(slice)) " +
     "formulation bit-for-bit (incl. empty/short/multi-space docs)") {
     import spark.implicits._
@@ -366,6 +379,21 @@ class PipelineSpec extends SparkSpec {
       q, 20, shortlist = 1000000, excludeId = Some(0L))
       .collect().map(_.getLong(0)).toSeq
     assert(exhaustive == brute)
+  }
+
+  test("rerankIsinMax follows Spark's registered inFilterThreshold default " +
+      "in a session not built through EngineConf") {
+    import org.apache.spark.sql.internal.SQLConf
+    val key = SQLConf.PARQUET_FILTER_PUSHDOWN_INFILTERTHRESHOLD.key
+    val plain = spark.newSession()
+    plain.conf.unset(key)
+    plain.conf.unset("spark.graft.ann.rerankIsinMax")
+    assert(Similarity.rerankIsinMax(plain) ==
+      SQLConf.PARQUET_FILTER_PUSHDOWN_INFILTERTHRESHOLD.defaultValue.get)
+    plain.conf.set(key, "77")
+    assert(Similarity.rerankIsinMax(plain) == 77)
+    plain.conf.set("spark.graft.ann.rerankIsinMax", "5")
+    assert(Similarity.rerankIsinMax(plain) == 5)
   }
 
   test("PQ: small-shortlist ADC keeps high recall; scan reads codes only") {

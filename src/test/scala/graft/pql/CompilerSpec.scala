@@ -97,6 +97,27 @@ class CompilerSpec extends SparkSpec {
     assert(c.run(Parser.parseOne("Percentile(field=v, nth=100)")).collect()(0).getLong(0) == 23L)
   }
 
+  test("Percentile drops a row whose bisection cast yields null: the " +
+      "answer equals the percentile computed without that row") {
+    // a decimal(38,2) value whose unscaled form overflows decimal(38):
+    // with ANSI off the bisection's rescale yields null instead of failing
+    val dt = org.apache.spark.sql.types.DecimalType(38, 2)
+    def frame(vs: Seq[String]) = spark.createDataFrame(
+        vs.zipWithIndex.map { case (v, i) => (i.toLong, v) })
+      .toDF("_id", "v").select(col("_id"), col("v").cast(dt).as("v"))
+    val small = (1 to 9).map(i => s"${i * 11}.25")
+    def p(df: org.apache.spark.sql.DataFrame, nth: Int) =
+      new Compiler(df).run(Parser.parseOne(s"Percentile(field=v, nth=$nth)"))
+        .collect()(0).getDecimal(0)
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try {
+      val withHuge = frame(small :+ "1e35")
+      assert(withHuge.filter(col("v").isNotNull).count() == 10)
+      for (nth <- Seq(0, 25, 50, 90, 100))
+        assert(p(withHuge, nth) == p(frame(small), nth), s"nth=$nth")
+    } finally spark.conf.unset("spark.sql.ansi.enabled")
+  }
+
   test("Percentile probe-loop fallback matches the CDF path") {
     // force the distributed-probe regime (maxCdf=1 < any real cardinality)
     // and check it lands on the same value the CDF bisection does — incl.
