@@ -585,12 +585,12 @@ object TableLog {
   private[graft] def depthOf(spark: SparkSession, name: String): Int =
     Option(states.get(key(spark, name))).map(_.depth).getOrElse(0)
 
-  /** Identity of the current base (spec: point writes must not touch it). */
   /** The current base piece's parquet dir (warehouse mode) — the path
     * index registrations bind to; moves at compaction (rebind hook). */
   private[graft] def basePathOf(spark: SparkSession, name: String): Option[String] =
     Option(states.get(key(spark, name))).flatMap(_.base.path)
 
+  /** Identity of the current base (spec: point writes must not touch it). */
   private[graft] def baseOf(spark: SparkSession, name: String): Option[DataFrame] =
     Option(states.get(key(spark, name))).map(_.base.df)
 }

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, AttributeSet, Expression, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project}
@@ -27,1232 +27,11 @@ import graft.index.BitmapCardinality
   *
   * Install per-session via [[IndexRewrite.install]] (or cluster-wide with
   * `--conf spark.sql.extensions=graft.plans.GraftExtensions`); register
-  * indexes with [[IndexCatalog.register]].
-  */
-object IndexCatalog {
-  final case class Entry(segCol: String, idCol: String, indexPlan: LogicalPlan,
-                         factSig: Option[String] = None)
-
-  /** A materialized grouped-aggregate index ([[graft.index.GroupIndex]]):
-    * `groupCols` in build order, `explodedCols` the ArrayType members the
-    * build exploded, `sumCols` the columns with a stored `sum_<col>`,
-    * `distinctCols` the columns with a stored roaring `bm_<col>` (serving
-    * per-combo count-distinct via bitmap cardinality). `factSig` is the
-    * fact listing's fingerprint at registration time (freshness guard).
-    * `quantums` maps each time-quantum key column name
-    * ([[graft.index.GroupIndex.Quantum]], `__q_<unit>_<ts>`) to the BUILD's
-    * truncation timezone — the rewrite requires the query's to match. */
-  final case class GroupEntry(groupCols: Seq[String], explodedCols: Set[String],
-                              sumCols: Set[String], distinctCols: Set[String],
-                              indexPlan: LogicalPlan,
-                              factSig: Option[String] = None,
-                              quantums: Map[String, String] = Map.empty)
-
-  private val entries =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String), Entry]
-  private val groupEntries =
-    new java.util.concurrent.ConcurrentHashMap[(String, Set[String]), GroupEntry]
-
-  /** Register a materialized segment index for a parquet-backed fact table.
-    * `basePath` is the fact table's parquet location; `index` must be the
-    * materialized (seg, bm) table (read back from storage — registering a
-    * non-materialized plan would re-derive the index per query). The fact
-    * listing is fingerprinted now (pass `factSig` to reuse a stored one);
-    * at rule time a differing listing declines the rewrite — an index that
-    * no longer summarizes the files the query would scan must not serve. */
-  def register(basePath: String, segCol: String, idCol: String,
-               index: DataFrame, factSig: Option[String] = None): Unit =
-    entries.put((normalize(basePath), segCol, idCol),
-      Entry(segCol, idCol, index.queryExecution.optimizedPlan,
-        factSig.orElse(factSignature(index.sparkSession, basePath))))
-
-  def lookup(paths: Seq[String], segCol: String, idCol: String): Option[Entry] =
-    paths.headOption.flatMap(p =>
-      Option(entries.get((normalize(p), segCol, idCol))))
-
-  /** Register a materialized [[graft.index.GroupIndex.build]] table. Keyed
-    * by the SET of group columns — a grouped query matches regardless of
-    * key order (hash aggregation is order-insensitive). */
-  def registerGroup(basePath: String, groupCols: Seq[String],
-                    explodedCols: Set[String], sumCols: Seq[String],
-                    index: DataFrame, distinctCols: Seq[String] = Nil,
-                    factSig: Option[String] = None,
-                    quantums: Map[String, String] = Map.empty): Unit =
-    groupEntries.put((normalize(basePath), groupCols.toSet),
-      GroupEntry(groupCols, explodedCols, sumCols.toSet, distinctCols.toSet,
-        index.queryExecution.optimizedPlan,
-        factSig.orElse(factSignature(index.sparkSession, basePath)), quantums))
-
-  def lookupGroup(paths: Seq[String], groupCols: Set[String]): Option[GroupEntry] =
-    paths.headOption.flatMap(p =>
-      Option(groupEntries.get((normalize(p), groupCols))))
-
-  /** Every grouped entry registered for a base path — the rollup matcher
-    * ([[IndexRewrite]]) scans these for an index whose key set GENERALIZES
-    * the query's (registration count per table is operator-bounded and
-    * small; this is a rule-time in-memory scan, no IO). */
-  def groupEntriesFor(paths: Seq[String]): Seq[GroupEntry] = {
-    import scala.jdk.CollectionConverters._
-    paths.headOption.toSeq.flatMap { p =>
-      val n = normalize(p)
-      groupEntries.asScala.collect {
-        case ((bp, _), e) if bp == n => e }.toSeq
-    }
-  }
-
-  def clear(): Unit = { entries.clear(); groupEntries.clear() }
-
-  /** Drop every in-memory registration of one base path — used when a
-    * table's storage moves (compaction rebind): the old path's entries can
-    * never match a scan again and would only pin dead plans. */
-  def unregisterBase(basePath: String): Unit = {
-    val n = normalize(basePath)
-    entries.keySet.removeIf(_._1 == n)
-    groupEntries.keySet.removeIf(_._1 == n): Unit
-  }
-
-  /** Is any seg/group index registered over this base path? — the
-    * mutation-path immediate stale warning reads this
-    * ([[IndexRewrite.warnMutated]]). */
-  def isRegistered(path: String): Boolean = {
-    val n = normalize(path)
-    import scala.jdk.CollectionConverters._
-    entries.keySet.asScala.exists(_._1 == n) ||
-      groupEntries.keySet.asScala.exists(_._1 == n)
-  }
-
-  /** Fingerprint of a FileIndex's resolved listing: sorted
-    * (path, length, modificationTime) triples, SHA-256. At rule time this
-    * is computed from the SCAN's OWN location — the listing Spark already
-    * resolved for the query — so the freshness check costs no extra IO. */
-  def locationSig(
-      loc: org.apache.spark.sql.execution.datasources.FileIndex): String = {
-    val lines = loc.listFiles(Nil, Nil).flatMap(_.files)
-      .map(f => s"${f.getPath}|${f.getLen}|${f.getModificationTime}")
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    lines.sorted.foreach(l => md.update(l.getBytes("UTF-8")))
-    md.digest().map("%02x".format(_)).mkString
-  }
-
-  /** [[locationSig]] of a parquet table's CURRENT listing (one file listing
-    * + one footer read for schema inference — registration-time cost). None
-    * when the path can't be listed; the rewrite then serves unguarded, the
-    * pre-guard behavior. */
-  def factSignature(spark: org.apache.spark.sql.SparkSession,
-                    basePath: String): Option[String] =
-    scala.util.Try {
-      spark.read.parquet(basePath).queryExecution.analyzed.collectFirst {
-        case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
-          locationSig(fs.location)
-      }
-    }.toOption.flatten
-
-  /** [[locationSig]]-compatible fingerprint from a plain recursive
-    * [[org.apache.hadoop.fs.FileSystem]] listing — no parquet footer read,
-    * no DataFrame analysis — for per-batch maintenance loops
-    * ([[graft.streaming.IndexMaintain.foldBatch]] fingerprints the fact dir
-    * every micro-batch). Lists what Spark's file index lists: visible
-    * files, hidden (`_`/`.`-prefixed) names pruned at every level. Must
-    * stay equal to [[factSignature]] on the same dir (IndexMaintainSpec
-    * pins the equality — a drift would make the freshness guard decline
-    * and the maintained index stop serving). */
-  def factSignatureFast(spark: SparkSession, basePath: String): Option[String] =
-    scala.util.Try {
-      val p = new org.apache.hadoop.fs.Path(basePath)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      def visible(n: String) = !n.startsWith("_") && !n.startsWith(".")
-      def walk(st: org.apache.hadoop.fs.FileStatus): Seq[org.apache.hadoop.fs.FileStatus] =
-        if (!visible(st.getPath.getName)) Nil
-        else if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(walk)
-        else Seq(st)
-      val lines = fs.listStatus(p).toSeq.flatMap(walk)
-        .map(f => s"${f.getPath}|${f.getLen}|${f.getModificationTime}")
-      val md = java.security.MessageDigest.getInstance("SHA-256")
-      lines.sorted.foreach(l => md.update(l.getBytes("UTF-8")))
-      md.digest().map("%02x".format(_)).mkString
-    }.toOption
-
-  private def normalize(p: String): String =
-    p.stripPrefix("file:").replaceAll("/+$", "")
-}
-
-/** Durable index registrations: when `spark.graft.warehouse` is set,
-  * [[registerGroupDurable]] / [[registerDurable]] persist the registration
-  * metadata (paths + column roles — the index DATA is already parquet) to
-  * `warehouse/_indexes.json` and [[restore]] replays them, so a bounced
-  * serving process resumes index-serving without re-registration — the
-  * same restart contract as TableLog/DDL metadata
-  * (`graft.sql.Ddl.restoreSession` calls [[restore]]). Registrations
-  * whose index parquet vanished are skipped with a stderr note (the
-  * query is still answered, from the fact table). */
-object IndexRegistry {
-  private def file(spark: SparkSession): Option[java.nio.file.Path] =
-    scala.util.Try(spark.conf.get("spark.graft.warehouse")).toOption
-      .map(wh => java.nio.file.Paths.get(wh, "_indexes.json"))
-
-  private val lock = new Object
-  import org.json4s._
-  import org.json4s.jackson.JsonMethods
-
-  /** Thrown by a CAS-guarded registration when the registry's current
-    * version is not the one the maintainer read — the maintainer lost a
-    * race and must re-read and retry (or decline); it never registers. */
-  final class StaleRegistrationException(msg: String)
-    extends IllegalStateException(msg)
-
-  /** Per-FACT-TABLE maintenance serialization (r14 VERDICT #1): every
-    * version-publish path — [[refoldMutation]], [[refoldDelete]],
-    * [[foldAppend]], [[graft.streaming.IndexMaintain.foldBatch]] — computes
-    * `.v<N+1>`/`.b<id>` from the registration it read, so two concurrent
-    * maintainers on one index would clobber the same version dir and the
-    * LAST re-register would win with a freshly computed fact signature: an
-    * index missing the loser's maintenance would serve as fresh, and the
-    * freshness guard could not decline. All maintenance of one fact table
-    * therefore serializes on the normalized base path (the
-    * [[graft.server.AnnServe]] `lockFor` discipline; per-TABLE rather than
-    * per-stem because fact-batch publishes and refolds of *different*
-    * indexes of one table also interleave — a refold recomputes touched
-    * combos FROM FACTS, so a fact publish landing mid-refold would be
-    * double-counted by the next fold). JVM-scoped, like the registry file
-    * lock; cross-process maintainers are additionally caught by the
-    * `expectPrev` CAS on registration and by the pre-scan fact signature
-    * (a lost cross-process race declines stale at serve — never wrong). */
-  private val maintLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]
-  private def normBase(p: String): String =
-    p.stripPrefix("file:").replaceAll("/+$", "")
-  def maintLock[T](basePath: String)(f: => T): T =
-    maintLocks.computeIfAbsent(normBase(basePath), _ => new Object)
-      .synchronized(f)
-
-  /** The registered index path for (basePath, groupCols), read from the
-    * durable registry — the merge base every maintainer must start from
-    * (read it INSIDE [[maintLock]], or the read races a concurrent
-    * publish). None without a warehouse or registration. */
-  def currentIndexPath(spark: SparkSession, basePath: String,
-                       groupCols: Seq[String]): Option[String] = {
-    val key = groupCols.sorted.mkString(",")
-    file(spark).flatMap { f =>
-      lock.synchronized(readAll(f)).find { e =>
-        e \ "kind" == JString("group") &&
-          (e \ "basePath" match {
-            case JString(bp) => normBase(bp) == normBase(basePath)
-            case _           => false
-          }) && e \ "key" == JString(key)
-      }.collect { case e =>
-        e \ "indexPath" match { case JString(p) => p; case o => o.toString }
-      }
-    }
-  }
-
-  /** Remove one durable group/seg record (identified by basePath +
-    * indexPath) — the rebind path drops the OLD base's record after the
-    * refolded index registers under the new base. */
-  private def dropRecord(spark: SparkSession, basePath: String,
-                         indexPath: String): Unit =
-    file(spark).foreach { f => lock.synchronized {
-      def s(v: JValue): String =
-        v match { case JString(x) => x; case o => o.toString }
-      val kept = readAll(f).filterNot(e =>
-        Set("group", "seg")(s(e \ "kind")) &&
-          normBase(s(e \ "basePath")) == normBase(basePath) &&
-          s(e \ "indexPath") == indexPath)
-      java.nio.file.Files.createDirectories(f.getParent)
-      java.nio.file.Files.writeString(f,
-        JsonMethods.compact(JsonMethods.render(JArray(kept))))
-    }}
-
-  /** REBIND maintenance for a fact table whose storage MOVED — the
-    * compaction hook ([[graft.core.TableLog]]): merge-on-read tables
-    * materialize a NEW base dir when they compact, so every index
-    * registered over the old dir would go permanently dark (no scan ever
-    * matches the old path again). For each registration on `oldBase`:
-    * delta-refold its touched combos against the NEW base (which already
-    * contains the post-mutation truth), register under `newBase`, drop the
-    * old record. `touched` is the union of the mutation window's pre-image
-    * and post-image rows — exactly what the log's overlay/tombstone state
-    * provides for free at compaction time, so maintenance stays O(touched)
-    * on top of the already-paid O(table) compaction. Refusals follow
-    * [[refuseOrRebuild]]'s policy (auto-rebuild opt-in, else a stale flag
-    * on the old record). */
-  def rebindRefold(spark: SparkSession, oldBase: String, newBase: String,
-                   touched: org.apache.spark.sql.DataFrame)
-      : Seq[(String, Boolean)] = maintLock(newBase) {
-    val records = file(spark).map(f => lock.synchronized(readAll(f)))
-      .getOrElse(Nil)
-    def s(v: JValue): String =
-      v match { case JString(x) => x; case o => o.toString }
-    def arr(v: JValue): Seq[String] =
-      v match { case JArray(xs) => xs.map(s); case _ => Nil }
-    val out = records.filter(e => Set("group", "seg")(s(e \ "kind")) &&
-        normBase(s(e \ "basePath")) == normBase(oldBase)).map { e =>
-      val idxPath = s(e \ "indexPath")
-      scala.util.Try {
-        IndexRewrite.suppress {
-          if (s(e \ "kind") == "group") {
-            val quantums = e \ "quantums" match {
-              case JObject(fields) => fields.collect {
-                case (k, JString(v)) => k -> v }.toMap
-              case _ => Map.empty[String, String]
-            }
-            refoldGroupTouched(spark, newBase, idxPath,
-              arr(e \ "groupCols"), arr(e \ "explodedCols").toSet,
-              arr(e \ "sumCols"), arr(e \ "distinctCols"), quantums, touched)
-          } else
-            refoldSegTouched(spark, newBase, idxPath, s(e \ "segCol"),
-              s(e \ "idCol"), touched)
-        }
-        dropRecord(spark, oldBase, idxPath)
-      } match {
-        case scala.util.Success(_) => (idxPath, true)
-        case scala.util.Failure(ex) =>
-          // refuseOrRebuild rebuilds/registers against the NEW base; a
-          // refusal must flag the OLD record (the one that exists)
-          val auto = spark.conf
-            .get("spark.graft.index.autoRebuild", "false") == "true"
-          val rebuilt = auto &&
-            scala.util.Try(rebuildRecord(spark, newBase, e)).isSuccess
-          if (rebuilt) { dropRecord(spark, oldBase, idxPath); (idxPath, true) }
-          else {
-            System.err.println(s"[rebind] $idxPath NOT rebound to $newBase " +
-              s"(stale; rebuild to serve again): ${ex.getMessage}")
-            markStale(spark, oldBase, idxPath, String.valueOf(ex.getMessage))
-            (idxPath, false)
-          }
-      }
-    }
-    if (out.nonEmpty) IndexCatalog.unregisterBase(oldBase)
-    out
-  }
-
-  /** Flag a registration STALE in the registry file (kept serving-safe by
-    * the freshness guard — this makes the decline VISIBLE to operators
-    * instead of a stderr line they must notice: the HTTP facade's `/status`
-    * lists stale indexes and `Advise` reports them). A later successful
-    * maintenance or rebuild re-registers the record and the flag clears
-    * with it (r14 VERDICT #5: a declined index must not silently
-    * serve-from-facts forever while wearing a registration). */
-  def markStale(spark: SparkSession, basePath: String, indexPath: String,
-                reason: String): Unit =
-    file(spark).foreach { f => lock.synchronized {
-      def s(v: JValue): String =
-        v match { case JString(x) => x; case o => o.toString }
-      val updated = readAll(f).map {
-        case e @ JObject(fields)
-            if Set("group", "seg")(s(e \ "kind")) &&
-              normBase(s(e \ "basePath")) == normBase(basePath) &&
-              s(e \ "indexPath") == indexPath =>
-          JObject(fields.filterNot(x =>
-            x._1 == "stale" || x._1 == "staleReason") ++
-            List("stale" -> (JBool(true): JValue),
-              "staleReason" -> (JString(reason.take(300)): JValue)))
-        case e => e
-      }
-      java.nio.file.Files.createDirectories(f.getParent)
-      java.nio.file.Files.writeString(f,
-        JsonMethods.compact(JsonMethods.render(JArray(updated))))
-    }}
-
-  /** The registrations currently flagged stale:
-    * (kind, basePath, key, indexPath, reason). */
-  def staleRecords(spark: SparkSession)
-      : Seq[(String, String, String, String, String)] = {
-    def s(v: JValue): String =
-      v match { case JString(x) => x; case o => o.toString }
-    file(spark).map(f => lock.synchronized(readAll(f))).getOrElse(Nil)
-      .filter(e => e \ "stale" == JBool(true))
-      .map(e => (s(e \ "kind"), s(e \ "basePath"), s(e \ "key"),
-        s(e \ "indexPath"), s(e \ "staleReason")))
-  }
-
-  /** Reap versioned siblings older than the PREVIOUS version of `newPath`'s
-    * stem — the [[graft.server.AnnServe]] keep-≤2 discipline applied to
-    * grouped/segment index versions (r14 ADVICE: `refoldMutation` published
-    * a version per mutation with no reaping — unbounded disk under the
-    * advertised high-frequency point-update maintenance). Keeps `.v<N>` and
-    * `.v<N-1>` (in-flight queries planned against the previous registration
-    * finish; posix keeps open handles readable), deletes older `.v`
-    * siblings. The BARE stem dir (the caller's original build, version 0)
-    * is never reaped: operators cache expensive initial builds there
-    * (e.g. the 1B bench indexes) and disk stays bounded at ≤3 dirs. */
-  def reapVersions(spark: SparkSession, newPath: String): Unit =
-    scala.util.Try {
-      val Versioned = "(.*)\\.v(\\d+)$".r
-      newPath match {
-        case Versioned(stem, nStr) =>
-          val n = nStr.toLong
-          val stemPath = new org.apache.hadoop.fs.Path(stem)
-          val fs = stemPath.getFileSystem(spark.sessionState.newHadoopConf())
-          val parent = stemPath.getParent
-          val re = java.util.regex.Pattern.compile(
-            java.util.regex.Pattern.quote(stemPath.getName) + "\\.v(\\d+)")
-          if (parent != null && fs.exists(parent))
-            fs.listStatus(parent).toSeq.filter(_.isDirectory).foreach { st =>
-              val m = re.matcher(st.getPath.getName)
-              if (m.matches() && m.group(1).toLong < n - 1)
-                fs.delete(st.getPath, true)
-            }
-        case _ => ()
-      }
-    }: Unit
-
-  private def readAll(f: java.nio.file.Path): List[JValue] =
-    if (!java.nio.file.Files.exists(f)) Nil
-    else JsonMethods.parse(java.nio.file.Files.readString(f)) match {
-      case JArray(xs) => xs
-      case _          => Nil
-    }
-
-  private def append(spark: SparkSession, entry: JValue,
-                     expectPrev: Option[String] = None): Unit =
-    file(spark).foreach { f => lock.synchronized {
-      // idempotent: a re-registration supersedes. Group/seg records key by
-      // (kind, basePath, key) — basePath is the STABLE fact path, and one
-      // fact table legitimately carries many indexes. ANN records key by
-      // (kind, name) alone: their basePath IS the code-table path, which
-      // the versioned-publish rebuild moves every build — keying on it
-      // would leave one stale record (pointing at a reaped version) per
-      // rebuild, and restore would replay the dead one.
-      def keyOf(e: JValue) =
-        if (e \ "kind" == JString("ann")) (e \ "kind", JNothing: JValue, e \ "key")
-        else (e \ "kind", e \ "basePath", e \ "key")
-      val key = keyOf(entry)
-      val all = readAll(f)
-      // registration CAS: a maintainer passes the indexPath it READ as its
-      // merge base; if someone else published meanwhile, this registration
-      // would bless a version missing that maintenance as fresh — refuse
-      // instead (the caller retries from the new current, or declines).
-      // Atomic with the write under the registry file lock.
-      expectPrev.foreach { prev =>
-        all.find(e => keyOf(e) == key).foreach { cur =>
-          val curPath = cur \ "indexPath" match {
-            case JString(p) => p; case o => o.toString }
-          if (curPath != prev)
-            throw new StaleRegistrationException(
-              s"registry moved $prev -> $curPath during maintenance; " +
-                "re-read and retry — registering would lose the other " +
-                "maintainer's work")
-        }
-      }
-      val kept = all.filterNot(e => keyOf(e) == key)
-      java.nio.file.Files.createDirectories(f.getParent)
-      java.nio.file.Files.writeString(f,
-        JsonMethods.compact(JsonMethods.render(JArray(kept :+ entry))))
-    }}
-
-  /** Durable [[IndexCatalog.register]]: also records (basePath, segCol,
-    * idCol, indexPath) in the warehouse for restart replay. Pass `factSig`
-    * when the caller captured the listing BEFORE its maintenance scan (a
-    * concurrent fact change then declines stale at serve — never serves
-    * wrong); `expectPrev` for the maintenance CAS. */
-  def registerDurable(spark: SparkSession, basePath: String, segCol: String,
-                      idCol: String, indexPath: String,
-                      factSig: Option[String] = None,
-                      expectPrev: Option[String] = None): Unit = {
-    val sig = factSig.orElse(IndexCatalog.factSignature(spark, basePath))
-    append(spark, JObject(List(
-      "kind" -> JString("seg"), "basePath" -> JString(basePath),
-      "key" -> JString(s"$segCol/$idCol"), "segCol" -> JString(segCol),
-      "idCol" -> JString(idCol), "indexPath" -> JString(indexPath)) ++
-      sig.map(s => "factSig" -> (JString(s): JValue))), expectPrev)
-    IndexCatalog.register(basePath, segCol, idCol,
-      spark.read.parquet(indexPath), sig)
-  }
-
-  /** Durable [[IndexCatalog.registerGroup]]. Pass `factSig` when the caller
-    * already listed the fact dir (e.g. [[graft.streaming.IndexMaintain]]
-    * per batch) — it skips a second listing + footer read here. */
-  def registerGroupDurable(spark: SparkSession, basePath: String,
-                           groupCols: Seq[String], explodedCols: Set[String],
-                           sumCols: Seq[String], indexPath: String,
-                           distinctCols: Seq[String] = Nil,
-                           quantums: Map[String, String] = Map.empty,
-                           factSig: Option[String] = None,
-                           expectPrev: Option[String] = None): Unit = {
-    val sig = factSig.orElse(IndexCatalog.factSignature(spark, basePath))
-    // durable append FIRST: its CAS may refuse, and the in-memory catalog
-    // must not have adopted a registration the registry rejected
-    append(spark, JObject(List(
-      "kind" -> JString("group"), "basePath" -> JString(basePath),
-      "key" -> JString(groupCols.sorted.mkString(",")),
-      "groupCols" -> JArray(groupCols.toList.map(JString(_))),
-      "explodedCols" -> JArray(explodedCols.toList.sorted.map(JString(_))),
-      "sumCols" -> JArray(sumCols.toList.map(JString(_))),
-      "distinctCols" -> JArray(distinctCols.toList.map(JString(_))),
-      "indexPath" -> JString(indexPath),
-      "quantums" -> JObject(quantums.toList.map {
-        case (k, v) => k -> (JString(v): JValue) })) ++
-      sig.map(s => "factSig" -> (JString(s): JValue))), expectPrev)
-    IndexCatalog.registerGroup(basePath, groupCols, explodedCols, sumCols,
-      spark.read.parquet(indexPath), distinctCols, sig, quantums)
-  }
-
-  /** Durable ANN serving registration ([[graft.server.AnnServe]]): the
-    * quantizer (centroids + codebooks — small arrays) and rerank sources
-    * persist alongside the grouped/segment registrations; the code-table
-    * parquet persists itself. Closes the r11 operational asymmetry where a
-    * bounced facade kept serving grouped indexes but silently lost its
-    * `/ann/{name}` bindings.
-    *
-    * The registry file is COMPACT by construction: [[append]] supersedes
-    * ann records by ("ann", name) — deliberately NOT by codesPath, which
-    * the versioned-publish rebuild moves every build — so N appends AND N
-    * rebuilds of one index leave exactly ONE record per name: the
-    * quantizer is serialized in the file once, and restore replays one
-    * record (one parquet schema read) per live name (IndexRegistrySpec
-    * pins the record count). */
-  def registerAnnDurable(spark: SparkSession, name: String,
-      codesPath: String, idCol: String, vecCol: String, dim: Int,
-      centroids: Array[Array[Double]],
-      codebooks: Array[Array[Array[Double]]],
-      sources: Seq[(String, Option[String])], residualNormBuild: Double,
-      residualNormLastAppend: Option[Double]): Unit = {
-    def darr(a: Array[Double]): JValue = JArray(a.toList.map(JDouble(_)))
-    append(spark, JObject(List[(String, JValue)](
-      "kind" -> JString("ann"), "basePath" -> JString(codesPath),
-      "key" -> JString(name), "name" -> JString(name),
-      "idCol" -> JString(idCol), "vecCol" -> JString(vecCol),
-      "dim" -> JInt(dim),
-      "centroids" -> JArray(centroids.toList.map(darr)),
-      "codebooks" -> JArray(codebooks.toList.map(cb =>
-        JArray(cb.toList.map(darr)))),
-      "sources" -> JArray(sources.toList.map { case (t, w) =>
-        JObject(List[(String, JValue)]("table" -> JString(t)) ++
-          w.map(x => "where" -> (JString(x): JValue))) }),
-      "residualNormBuild" -> JDouble(residualNormBuild)) ++
-      residualNormLastAppend.map(v =>
-        "residualNormLastAppend" -> (JDouble(v): JValue))))
-  }
-
-  /** Combo-resolvable DELETE maintenance over the DURABLE group
-    * registrations of one fact path ([[graft.index.GroupIndex.deleteCombos]]
-    * made operational): call AFTER deleting `WHERE pred` from the facts.
-    * Every group index on `basePath` whose key columns cover the
-    * predicate's references is refolded — matching combos filtered out,
-    * written as the next index version, re-registered durably with a FRESH
-    * fact signature — so it keeps serving through the delete instead of
-    * declining stale until a rebuild. Indexes whose keys do NOT cover the
-    * predicate are left alone (they decline stale, the honest outcome —
-    * a row-level cut inside a combo has no exact filter form) and reported
-    * in the returned (indexPath, refolded?) pairs. */
-  /** Translate a fact-side delete predicate's ALIGNED raw-ts bounds onto
-    * an index's quantum key columns, so a RETENTION delete — `DELETE
-    * WHERE ts < cutoff`, the canonical delete at scale — refolds a
-    * quantum index: a `>=`/`<` conjunct whose literal sits on the key's
-    * bucket boundary (evaluated with the registered timezone, the same
-    * check as the serve-side quantumizeBounds) cuts whole buckets, so the
-    * column reference moves onto the key — identity literal for timestamp
-    * keys, the dialect rendering for string keys (RFC3339 prefixes
-    * preserve order); the optimizer-style `isnotnull(ts)` maps
-    * unconditionally. Non-aligned bounds and edge-splitting `>`/`<=` stay
-    * on the raw column, so [[graft.index.GroupIndex.deleteCombos]]'s
-    * key-only check refuses them — the honest outcome. Every other
-    * conjunct re-resolves by NAME against the index. */
-  private def quantumizeDeletePred(spark: SparkSession, basePath: String,
-      pred: org.apache.spark.sql.Column, groupCols: Seq[String],
-      quantums: Map[String, String]): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.types.{StringType, TimestampType}
-    val cond = spark.read.parquet(basePath).filter(pred)
-      .queryExecution.analyzed.collectFirst {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-          f.condition
-      }.getOrElse(return pred)
-    def split(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => split(l) ++ split(r)
-      case x         => Seq(x)
-    }
-    val qKeys = groupCols.flatMap(k =>
-      QuantumKeys.parseQuantum(k).map(k -> _))
-    def keyFor(ts: String) = qKeys.find(_._2._3 == ts)
-    val strUnitAsTrunc = Map("yy" -> "year", "m" -> "month", "d" -> "day",
-      "hh" -> "hour", "mi" -> "minute", "s" -> "second")
-    def alignedTo(key: String, isStr: Boolean, unit: String,
-                  micros: Long): Boolean =
-      quantums.get(key).exists { tz =>
-        (if (isStr) strUnitAsTrunc.get(unit) else Some(unit)).exists { u =>
-          TruncTimestamp(
-            Literal(org.apache.spark.unsafe.types.UTF8String.fromString(u),
-              StringType),
-            Literal(micros, TimestampType), Some(tz)).eval(null) == micros
-        }
-      }
-    def bound(a: Expression, l: Expression, lower: Boolean): Option[Expression] =
-      (a, l) match {
-        case (ar: AttributeReference, lit: Literal)
-            if ar.dataType == TimestampType && lit.dataType == TimestampType =>
-          for {
-            micros <- Option(lit.value).collect {
-              case x: java.lang.Long => x.longValue }
-            (key, (isStr, unit, _)) <- keyFor(ar.name)
-            if alignedTo(key, isStr, unit, micros)
-          } yield {
-            val rhs: Expression =
-              if (!isStr) Literal(micros, TimestampType)
-              else Literal(org.apache.spark.unsafe.types.UTF8String.fromString(
-                DateFormatClass(Literal(micros, TimestampType),
-                  Literal(org.apache.spark.unsafe.types.UTF8String.fromString(
-                    graft.index.GroupIndex.strPatterns(unit)), StringType),
-                  quantums.get(key)).eval(null).toString), StringType)
-            if (lower) GreaterThanOrEqual(UnresolvedAttribute(key), rhs)
-            else LessThan(UnresolvedAttribute(key), rhs)
-          }
-        case _ => None
-      }
-    // untouched conjuncts re-resolve by NAME on the index side (the
-    // analyzed attrs carry fact-relation exprIds that would never bind)
-    def byName(e: Expression): Expression = e.transform {
-      case ar: AttributeReference => UnresolvedAttribute(ar.name)
-    }
-    val out = split(cond).map {
-      case c @ GreaterThanOrEqual(a, l: Literal) =>
-        bound(a, l, lower = true).getOrElse(byName(c))
-      case c @ LessThanOrEqual(l: Literal, a) =>
-        bound(a, l, lower = true).getOrElse(byName(c))
-      case c @ LessThan(a, l: Literal) =>
-        bound(a, l, lower = false).getOrElse(byName(c))
-      case c @ GreaterThan(l: Literal, a) =>
-        bound(a, l, lower = false).getOrElse(byName(c))
-      case IsNotNull(ar: AttributeReference)
-          if ar.dataType == TimestampType && keyFor(ar.name).isDefined =>
-        IsNotNull(UnresolvedAttribute(keyFor(ar.name).get._1))
-      case other => byName(other)
-    }
-    org.apache.spark.sql.graftshim.Shim.column(out.reduceLeft(And))
-  }
-
-  def refoldDelete(spark: SparkSession, basePath: String,
-                   pred: org.apache.spark.sql.Column)
-      : Seq[(String, Boolean)] = maintLock(basePath) {
-    // records read INSIDE the maintenance lock: the indexPath each refold
-    // starts from must still be the registered one when it re-registers
-    val records = file(spark).map(f => lock.synchronized(readAll(f)))
-      .getOrElse(Nil)
-    def s(v: JValue): String = v match { case JString(x) => x; case o => o.toString }
-    def arr(v: JValue): Seq[String] =
-      v match { case JArray(xs) => xs.map(s); case _ => Nil }
-    records.filter(e => Set("group", "seg")(s(e \ "kind")) &&
-        s(e \ "basePath") == basePath).map { e =>
-      val idxPath = s(e \ "indexPath")
-      scala.util.Try {
-        // fact listing captured BEFORE the maintenance scan (r14 ADVICE):
-        // registered as the new version's signature, so an out-of-band
-        // fact write landing mid-refold declines stale at serve
-        val preSig = IndexCatalog.factSignatureFast(spark, basePath)
-        if (s(e \ "kind") == "group") {
-          val groupCols = arr(e \ "groupCols")
-          val quantums = e \ "quantums" match {
-            case JObject(fields) => fields.collect {
-              case (k, JString(v)) => k -> v }.toMap
-            case _ => Map.empty[String, String]
-          }
-          val translated =
-            if (quantums.isEmpty) pred
-            else quantumizeDeletePred(spark, basePath, pred, groupCols,
-              quantums)
-          val next = graft.index.GroupIndex.deleteCombos(
-            spark, idxPath, translated, groupCols)
-          registerGroupDurable(spark, basePath, groupCols,
-            arr(e \ "explodedCols").toSet, arr(e \ "sumCols"), next,
-            arr(e \ "distinctCols"), quantums, factSig = preSig,
-            expectPrev = Some(idxPath))
-          reapVersions(spark, next)
-        } else {
-          // segment (roaring) index: one row per seg value — a delete
-          // keyed on the seg column drops whole rows, the same
-          // combo-resolvable filter (ids inside surviving bitmaps are
-          // untouched by a seg-keyed delete by definition). The index
-          // stores the value under the reserved name "seg", so it is
-          // temporarily renamed back to the fact column for the
-          // predicate to resolve — then deleteCombos validates key-only
-          // references and writes the next version.
-          val segCol = s(e \ "segCol")
-          val Versioned = "(.*)\\.v(\\d+)$".r
-          val (stem, ver) = idxPath match {
-            case Versioned(st, v) => (st, v.toLong)
-            case p                => (p, 0L)
-          }
-          val next = s"$stem.v${ver + 1}"
-          val renamed = spark.read.parquet(idxPath)
-            .withColumnRenamed("seg", segCol)
-          val filtered = renamed.filter(
-            !org.apache.spark.sql.functions.coalesce(pred,
-              org.apache.spark.sql.functions.lit(false)))
-          val refs = filtered.queryExecution.analyzed.collect {
-            case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-              f.condition.references.map(_.name).toSet
-          }.foldLeft(Set.empty[String])(_ ++ _)
-          require((refs - segCol).isEmpty,
-            s"refoldDelete(seg): predicate references non-seg column(s) " +
-              s"${(refs - segCol).mkString(", ")}")
-          filtered.withColumnRenamed(segCol, "seg")
-            .write.mode("overwrite").parquet(next)
-          registerDurable(spark, basePath, segCol, s(e \ "idCol"), next,
-            factSig = preSig, expectPrev = Some(idxPath))
-          reapVersions(spark, next)
-        }
-      } match {
-        case scala.util.Success(_) => (idxPath, true)
-        case scala.util.Failure(ex) =>
-          refuseOrRebuild(spark, basePath, e, idxPath, ex, "refoldDelete")
-      }
-    }
-  }
-
-  /** DELTA REFOLD for UPDATEs and row-level (non-key) deletes — the
-    * mutation shapes [[refoldDelete]] cannot serve (a cut INSIDE a combo
-    * has no inverse in the merge algebra, so until r14 any UPDATE / PQL
-    * mutex `Set`/`Store` / non-key delete staled every index on the table
-    * until an O(corpus) rebuild; the reference mutates its fragments in
-    * place on every write, `reference/executor.go:6194`). The delta
-    * observation: a mutation only changes the index rows of the combos its
-    * touched rows belonged to BEFORE or belong to AFTER — so maintenance
-    * is: recompute ONLY those combos' rows from the post-mutation facts
-    * (a predicate-pruned scan), splice them into the next `.v<N+1>`
-    * version in place of the old rows, and durably re-register with a
-    * fresh fact signature. Aggregates of UNTOUCHED combos are carried
-    * over byte-identical; touched combos are recomputed from facts, so
-    * min/max/bitmap exactness needs no inverse.
-    *
-    * Call AFTER the fact mutation has landed at `basePath`, passing
-    * `touched` = the union of the mutation's PRE-image and POST-image rows
-    * (for a pure delete, the pre-image alone). `touched` must carry every
-    * index key SOURCE column (the raw ts column for quantum keys); extra
-    * columns are ignored. Derive the POST-image by row id (or another
-    * immutable column), not by re-filtering the mutated table with the
-    * original predicate — a predicate naming PRE-image values (`WHERE
-    * type = 'click'` for a mutation that rewrites type) matches nothing
-    * after the mutation, and the under-counted combo set would leave the
-    * new values' combos stale (DeltaRefoldSpec's segment test pins the
-    * correct derivation).
-    *
-    * Cost shape: the recompute aggregates the PRUNED fact slice and then
-    * cuts to the touched combos (filter-after-aggregate — the combo test
-    * runs per aggregated row, never per fact row), so the worst case —
-    * no key prunes the layout — is the pruned slice's rebuild cost, and
-    * the best case is the prune: a 1000-row point update against the 1B
-    * day-quantum index refolds in ~1.4 s (one day of row groups read,
-    * INT64 ts stats) vs the ~51 s corpus rebuild. Cost per index: one scan of `touched`, one
-    * fact scan PRUNED by the touched combos' key values (pushed to
-    * parquet row-group stats — `IN (…)` for scalar keys, a raw-timestamp
-    * range for aligned quantum keys — so a layout clustered by a key
-    * column reads only the touched slice), and a combo-cardinality splice.
-    * Indexes whose touched-combo count exceeds
-    * `spark.graft.refold.maxCombos` (default 1,000,000) refuse — at that
-    * width a rebuild is the cheaper plan — as do indexes whose key source
-    * columns `touched` does not carry; refusals report `(path, false)`
-    * and the index declines stale, never serves wrong. */
-  def refoldMutation(spark: SparkSession, basePath: String,
-                     touched: org.apache.spark.sql.DataFrame)
-      : Seq[(String, Boolean)] = maintLock(basePath) {
-    val records = file(spark).map(f => lock.synchronized(readAll(f)))
-      .getOrElse(Nil)
-    def s(v: JValue): String = v match { case JString(x) => x; case o => o.toString }
-    def arr(v: JValue): Seq[String] =
-      v match { case JArray(xs) => xs.map(s); case _ => Nil }
-    records.filter(e => Set("group", "seg")(s(e \ "kind")) &&
-        s(e \ "basePath") == basePath).map { e =>
-      val idxPath = s(e \ "indexPath")
-      scala.util.Try {
-        IndexRewrite.suppress {
-          if (s(e \ "kind") == "group") {
-            val quantums = e \ "quantums" match {
-              case JObject(fields) => fields.collect {
-                case (k, JString(v)) => k -> v }.toMap
-              case _ => Map.empty[String, String]
-            }
-            refoldGroupTouched(spark, basePath, idxPath,
-              arr(e \ "groupCols"), arr(e \ "explodedCols").toSet,
-              arr(e \ "sumCols"), arr(e \ "distinctCols"), quantums, touched)
-          } else
-            refoldSegTouched(spark, basePath, idxPath, s(e \ "segCol"),
-              s(e \ "idCol"), touched)
-        }
-      } match {
-        case scala.util.Success(_) => (idxPath, true)
-        case scala.util.Failure(ex) =>
-          refuseOrRebuild(spark, basePath, e, idxPath, ex, "refoldMutation")
-      }
-    }
-  }
-
-  /** APPEND-FOLD over the durable registrations of one fact path — the
-    * concurrent-safe operational form of [[graft.index.GroupIndex
-    * .appendDelta]]: `publishFacts` (the caller's fact-file append, e.g. a
-    * parquet batch write into `basePath`) runs INSIDE the per-table
-    * [[maintLock]] together with every index fold and its registration, so
-    * a [[refoldMutation]] can never land between the fact publish and the
-    * fold (it would recompute the touched combos from facts that already
-    * include the batch, and the fold would then add the batch AGAIN —
-    * serialization is what makes the two maintenance algebras compose).
-    * Group indexes fold with the merge algebra (quantum key columns derived
-    * on the batch with each registration's RECORDED timezone); segment
-    * (roaring) indexes OR-merge the batch's per-seg bitmap delta — exact
-    * for append-only ids. Each index re-registers with the post-publish
-    * fact signature and the CAS guard, then reaps versions older than the
-    * previous. Returns (indexPath, folded?) per registration; a failed fold
-    * declines stale, never serves wrong. */
-  def foldAppend(spark: SparkSession, basePath: String,
-                 rows: org.apache.spark.sql.DataFrame,
-                 publishFacts: () => Unit = () => ())
-      : Seq[(String, Boolean)] = maintLock(basePath) {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.catalyst.expressions.{DateFormatClass, Literal, TruncTimestamp}
-    import org.apache.spark.sql.types.StringType
-    import org.apache.spark.unsafe.types.UTF8String
-    publishFacts()
-    val records = file(spark).map(f => lock.synchronized(readAll(f)))
-      .getOrElse(Nil)
-    def s(v: JValue): String = v match { case JString(x) => x; case o => o.toString }
-    def arr(v: JValue): Seq[String] =
-      v match { case JArray(xs) => xs.map(s); case _ => Nil }
-    records.filter(e => Set("group", "seg")(s(e \ "kind")) &&
-        normBase(s(e \ "basePath")) == normBase(basePath)).map { e =>
-      val idxPath = s(e \ "indexPath")
-      scala.util.Try {
-        val preSig = IndexCatalog.factSignatureFast(spark, basePath)
-        if (s(e \ "kind") == "group") {
-          val groupCols = arr(e \ "groupCols")
-          val quantums = e \ "quantums" match {
-            case JObject(fields) => fields.collect {
-              case (k, JString(v)) => k -> v }.toMap
-            case _ => Map.empty[String, String]
-          }
-          val withKeys = deriveQuantumKeys(spark, rows, groupCols, quantums)
-          val next = graft.index.GroupIndex.appendDelta(withKeys, groupCols,
-            arr(e \ "sumCols"), idxPath, arr(e \ "distinctCols"))
-          registerGroupDurable(spark, basePath, groupCols,
-            arr(e \ "explodedCols").toSet, arr(e \ "sumCols"), next,
-            arr(e \ "distinctCols"), quantums, factSig = preSig,
-            expectPrev = Some(idxPath))
-          reapVersions(spark, next)
-        } else {
-          val segCol = s(e \ "segCol"); val idCol = s(e \ "idCol")
-          val next = nextVersionOf(idxPath)
-          IndexRewrite.suppress {
-            val delta = graft.index.Bitmap.segmentIndex(rows, segCol, idCol)
-            val old = spark.read.parquet(idxPath)
-            old.unionByName(delta)
-              .groupBy("seg")
-              .agg(graft.index.Bitmap.bitmapOrAgg(spark, "`bm`").as("bm"))
-              .write.mode("overwrite").parquet(next)
-          }
-          registerDurable(spark, basePath, segCol, idCol, next,
-            factSig = preSig, expectPrev = Some(idxPath))
-          reapVersions(spark, next)
-        }
-      } match {
-        case scala.util.Success(_) => (idxPath, true)
-        case scala.util.Failure(ex) =>
-          refuseOrRebuild(spark, basePath, e, idxPath, ex, "foldAppend")
-      }
-    }
-  }
-
-  private def nextVersionOf(indexPath: String): String = {
-    val Versioned = "(.*)\\.v(\\d+)$".r
-    indexPath match {
-      case Versioned(st, v) => s"$st.v${v.toLong + 1}"
-      case p                => s"$p.v1"
-    }
-  }
-
-  /** Materialize each quantum key column of `groupCols` on `df` with its
-    * REGISTERED timezone (the build's truncation, not the session's) —
-    * shared by the fold/rebuild paths. */
-  private def deriveQuantumKeys(spark: SparkSession,
-      df: org.apache.spark.sql.DataFrame, groupCols: Seq[String],
-      quantums: Map[String, String]): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.catalyst.expressions.{DateFormatClass, Literal, TruncTimestamp}
-    import org.apache.spark.sql.types.StringType
-    import org.apache.spark.unsafe.types.UTF8String
-    groupCols.flatMap(k => QuantumKeys.parseQuantum(k).map(k -> _))
-      .foldLeft(df) { case (acc, (k, (isStr, unit, ts))) =>
-        val tz = quantums.getOrElse(k,
-          spark.sessionState.conf.sessionLocalTimeZone)
-        val ex =
-          if (isStr) DateFormatClass(UnresolvedAttribute(ts),
-            Literal(UTF8String.fromString(
-              graft.index.GroupIndex.strPatterns(unit)), StringType),
-            Some(tz))
-          else TruncTimestamp(
-            Literal(UTF8String.fromString(unit), StringType),
-            UnresolvedAttribute(ts), Some(tz))
-        acc.withColumn(k, org.apache.spark.sql.graftshim.Shim.column(ex))
-      }
-  }
-
-  /** O(corpus) rebuild of ONE registered index from its fact table —
-    * the recovery every refusal path can fall back to. Registers the new
-    * version with the pre-scan fact signature and the CAS guard; caller
-    * holds [[maintLock]]. */
-  private def rebuildRecord(spark: SparkSession, basePath: String,
-                            e: JValue): String = {
-    def s(v: JValue): String =
-      v match { case JString(x) => x; case o => o.toString }
-    def arr(v: JValue): Seq[String] =
-      v match { case JArray(xs) => xs.map(s); case _ => Nil }
-    val idxPath = s(e \ "indexPath")
-    val next = nextVersionOf(idxPath)
-    val preSig = IndexCatalog.factSignatureFast(spark, basePath)
-    if (s(e \ "kind") == "group") {
-      val groupCols = arr(e \ "groupCols")
-      val quantums = e \ "quantums" match {
-        case JObject(fields) => fields.collect {
-          case (k, JString(v)) => k -> v }.toMap
-        case _ => Map.empty[String, String]
-      }
-      IndexRewrite.suppress {
-        graft.index.GroupIndex.build(
-          deriveQuantumKeys(spark, spark.read.parquet(basePath), groupCols,
-            quantums),
-          groupCols, arr(e \ "sumCols"), arr(e \ "distinctCols"))
-          .write.mode("overwrite").parquet(next)
-      }
-      registerGroupDurable(spark, basePath, groupCols,
-        arr(e \ "explodedCols").toSet, arr(e \ "sumCols"), next,
-        arr(e \ "distinctCols"), quantums, factSig = preSig,
-        expectPrev = Some(idxPath))
-    } else {
-      IndexRewrite.suppress {
-        graft.index.Bitmap.segmentIndex(spark.read.parquet(basePath),
-          s(e \ "segCol"), s(e \ "idCol"))
-          .write.mode("overwrite").parquet(next)
-      }
-      registerDurable(spark, basePath, s(e \ "segCol"), s(e \ "idCol"), next,
-        factSig = preSig, expectPrev = Some(idxPath))
-    }
-    reapVersions(spark, next)
-    next
-  }
-
-  /** Shared refusal handling: with `spark.graft.index.autoRebuild=true` a
-    * refused maintenance falls back to the O(corpus) [[rebuildRecord]] —
-    * the index keeps serving at the rebuild's cost instead of declining
-    * stale indefinitely; otherwise (default) the record is flagged stale
-    * ([[markStale]]) so `/status` and `Advise` surface the needed rebuild. */
-  private def refuseOrRebuild(spark: SparkSession, basePath: String,
-      e: JValue, idxPath: String, ex: Throwable,
-      tag: String): (String, Boolean) = {
-    System.err.println(s"[$tag] $idxPath NOT maintained " +
-      s"(declines stale until rebuilt): ${ex.getMessage}")
-    val auto =
-      spark.conf.get("spark.graft.index.autoRebuild", "false") == "true"
-    if (auto) scala.util.Try(rebuildRecord(spark, basePath, e)) match {
-      case scala.util.Success(next) =>
-        System.err.println(s"[$tag] $idxPath auto-rebuilt -> $next")
-        (idxPath, true)
-      case scala.util.Failure(ex2) =>
-        markStale(spark, basePath, idxPath,
-          s"${ex.getMessage}; auto-rebuild failed: ${ex2.getMessage}")
-        (idxPath, false)
-    } else {
-      markStale(spark, basePath, idxPath, String.valueOf(ex.getMessage))
-      (idxPath, false)
-    }
-  }
-
-  /** One group index's delta refold (see [[refoldMutation]]). */
-  private def refoldGroupTouched(spark: SparkSession, basePath: String,
-      idxPath: String, groupCols: Seq[String], explodedCols: Set[String],
-      sumCols: Seq[String], distinctCols: Seq[String],
-      quantums: Map[String, String],
-      touched: org.apache.spark.sql.DataFrame): Unit = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.catalyst.expressions.{DateFormatClass, Literal, TruncTimestamp}
-    import org.apache.spark.sql.functions.{broadcast, col, explode, lit}
-    import org.apache.spark.sql.types.StringType
-    import org.apache.spark.unsafe.types.UTF8String
-    // fact listing captured BEFORE the recompute scan (r14 ADVICE): the new
-    // version registers with THIS signature, so a fact write landing
-    // between capture and registration declines stale at serve instead of
-    // being blessed as fresh
-    val preSig = IndexCatalog.factSignatureFast(spark, basePath)
-    val parsedKeys = groupCols.map(k => k -> QuantumKeys.parseQuantum(k))
-    // every key's SOURCE column must arrive on `touched`, or the touched
-    // combos cannot be identified — refuse, decline stale
-    val sources = parsedKeys.map { case (k, q) => q.map(_._3).getOrElse(k) }
-    val missing = sources.distinct.filterNot(touched.columns.contains)
-    require(missing.isEmpty,
-      s"touched rows missing index key source column(s) ${missing.mkString(", ")}")
-    // quantum keys materialize with the REGISTERED timezone — the build's
-    // own truncation, not the current session's
-    def withKeys(df: org.apache.spark.sql.DataFrame) =
-      parsedKeys.foldLeft(df) {
-        case (acc, (k, Some((isStr, unit, ts)))) =>
-          val tz = quantums.getOrElse(k,
-            spark.sessionState.conf.sessionLocalTimeZone)
-          val e =
-            if (isStr) DateFormatClass(UnresolvedAttribute(ts),
-              Literal(UTF8String.fromString(
-                graft.index.GroupIndex.strPatterns(unit)), StringType),
-              Some(tz))
-            else TruncTimestamp(
-              Literal(UTF8String.fromString(unit), StringType),
-              UnresolvedAttribute(ts), Some(tz))
-          acc.withColumn(k, org.apache.spark.sql.graftshim.Shim.column(e))
-        case (acc, _) => acc
-      }
-    // replicate the build's explode semantics (cross-product; empty/null
-    // sets contribute nothing) so combos match the index's rows exactly
-    def prepare(df: org.apache.spark.sql.DataFrame) =
-      groupCols.foldLeft(withKeys(df)) { (acc, c) =>
-        if (explodedCols(c)) acc.withColumn(c, explode(col(c))) else acc
-      }
-    val combos = prepare(touched.select(sources.distinct.map(col): _*))
-      .select(groupCols.map(col): _*).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nCombos = combos.count()
-      val maxCombos = spark.conf
-        .get("spark.graft.refold.maxCombos", "1000000").toLong
-      require(nCombos <= maxCombos,
-        s"$nCombos touched combos exceed spark.graft.refold.maxCombos=" +
-          s"$maxCombos — a rebuild is the cheaper maintenance at that width")
-      // prune the fact scan by the touched key values BEFORE the semi-join:
-      // conjunctive SUPERSETS of the touched-combo condition, pushable to
-      // parquet stats (range for quantum keys, IN for scalars) — the
-      // semi-join below is what makes the cut exact, pruning only shrinks IO
-      val facts = spark.read.parquet(basePath)
-      val pruned = parsedKeys.foldLeft(facts) { case (acc, (k, parsed)) =>
-        pruneCond(spark, acc, k, parsed, explodedCols(k), combos, quantums)
-          .map(acc.filter).getOrElse(acc)
-      }
-      // aggregate FIRST, then cut to the touched combos: the combo test
-      // must run once per AGGREGATED row (combo cardinality), never once
-      // per exploded fact row — probing a broadcast 4-string null-safe
-      // key per exploded row measured 273 s at 1B, 7× the plain
-      // aggregation it guarded. Catalyst's PushDownLeftSemiAntiJoin would
-      // rewrite a lazily-composed semi-join straight back below the
-      // Aggregate (the condition references only grouping columns, its
-      // push criterion), so the aggregate MATERIALIZES first: the
-      // InMemoryRelation is a barrier the rule cannot cross, and the
-      // extra pass costs one combo-cardinality cache read. Worst case —
-      // no key prunes the layout — the refold is the pruned slice's
-      // rebuild-aggregation cost; best case it is the prune.
-      val deltaAll = graft.index.GroupIndex.build(prepare(pruned),
-          groupCols, sumCols, distinctCols)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        deltaAll.count()
-        val semiCond = groupCols.map(k =>
-          col(s"f.`$k`") <=> col(s"t.`$k`")).reduce(_ && _)
-        val delta = deltaAll.as("f")
-          .join(broadcast(combos.as("t")), semiCond, "left_semi")
-        val old = spark.read.parquet(idxPath)
-        val antiCond = groupCols.map(k =>
-          col(s"o.`$k`") <=> col(s"t.`$k`")).reduce(_ && _)
-        val survivors = old.as("o")
-          .join(broadcast(combos.as("t")), antiCond, "left_anti")
-        val next = nextVersionOf(idxPath)
-        // schema pinned to the serving index's (GroupIndex.merge's rule)
-        survivors.unionByName(delta.select(old.schema.fields.toIndexedSeq.map(
-            fd => col(fd.name).cast(fd.dataType).as(fd.name)): _*))
-          .write.mode("overwrite").parquet(next)
-        registerGroupDurable(spark, basePath, groupCols, explodedCols,
-          sumCols, next, distinctCols, quantums, factSig = preSig,
-          expectPrev = Some(idxPath))
-        reapVersions(spark, next)
-      } finally deltaAll.unpersist(): Unit
-    } finally combos.unpersist(): Unit
-  }
-
-  /** Pushable prune predicate for one key: `[minBucket, maxBucket+1unit)`
-    * on the raw ts for timestamp-quantum keys, `IN (touched values)` for
-    * scalar keys, `arrays_overlap` for exploded set keys; `None` (no
-    * pruning — the semi-join still bounds correctness) for dialect string
-    * cuts, very wide value sets, or null-carrying exploded sets. */
-  private def pruneCond(spark: SparkSession,
-      facts: org.apache.spark.sql.DataFrame, key: String,
-      parsed: Option[(Boolean, String, String)], isExploded: Boolean,
-      combos: org.apache.spark.sql.DataFrame,
-      quantums: Map[String, String]): Option[org.apache.spark.sql.Column] = {
-    import org.apache.spark.sql.functions._
-    parsed match {
-      case Some((true, _, _)) => None // string cut: range not derivable cheaply
-      case Some((false, unit, ts)) =>
-        val r = combos.agg(min(col(key)), max(col(key)),
-          sum(when(col(key).isNull, 1L).otherwise(0L))).head()
-        val hasNull = !r.isNullAt(2) && r.getLong(2) > 0
-        if (r.isNullAt(0)) Some(if (hasNull) col(ts).isNull else lit(false))
-        else {
-          val zone = java.time.ZoneId.of(quantums.getOrElse(key,
-            spark.sessionState.conf.sessionLocalTimeZone))
-          val lo = r.getTimestamp(0)
-          val hiB = r.getTimestamp(1).toInstant.atZone(zone)
-          val chrono = unit.toLowerCase match {
-            case "year"   => java.time.temporal.ChronoUnit.YEARS
-            case "month"  => java.time.temporal.ChronoUnit.MONTHS
-            case "week"   => java.time.temporal.ChronoUnit.WEEKS
-            case "day"    => java.time.temporal.ChronoUnit.DAYS
-            case "hour"   => java.time.temporal.ChronoUnit.HOURS
-            case "minute" => java.time.temporal.ChronoUnit.MINUTES
-            case _        => java.time.temporal.ChronoUnit.SECONDS
-          }
-          val hi = java.sql.Timestamp.from(hiB.plus(1, chrono).toInstant)
-          val range = col(ts) >= lit(lo) && col(ts) < lit(hi)
-          Some(if (hasNull) range || col(ts).isNull else range)
-        }
-      case None =>
-        val rows = combos.select(col(key)).distinct().limit(1001).collect()
-        if (rows.length > 1000) None
-        else {
-          val hasNull = rows.exists(_.isNullAt(0))
-          val vals = rows.filterNot(_.isNullAt(0)).map(_.get(0)).toSeq
-          if (isExploded) {
-            // raw column is the ARRAY; overlap-test it pre-explode. Null
-            // members make overlap three-valued — skip pruning then. The
-            // value cap is much tighter than the scalar one: isin past 10
-            // values becomes an O(1) InSet hash probe, but arrays_overlap
-            // against an N-literal array is N string-compares per MEMBER
-            // per row — measured at 1B rows a ~500-value overlap list
-            // cost ~5× the scan it was meant to shrink (and a zipf-hot
-            // member set prunes nothing anyway)
-            if (hasNull || vals.isEmpty || vals.length > 32) None
-            else Some(arrays_overlap(col(key),
-              array(vals.map(v => lit(v)): _*)))
-          } else {
-            val in = if (vals.isEmpty) lit(false) else col(key).isin(vals: _*)
-            Some(if (hasNull) in || col(key).isNull else in)
-          }
-        }
-    }
-  }
-
-  /** One segment (roaring) index's delta refold: recompute the bitmaps of
-    * the TOUCHED seg values from facts, carry every other row over. */
-  private def refoldSegTouched(spark: SparkSession, basePath: String,
-      idxPath: String, segCol: String, idCol: String,
-      touched: org.apache.spark.sql.DataFrame): Unit = {
-    import org.apache.spark.sql.functions._
-    val preSig = IndexCatalog.factSignatureFast(spark, basePath)
-    require(touched.columns.contains(segCol),
-      s"touched rows missing segment column '$segCol'")
-    val rows = touched.select(col(segCol)).distinct().limit(100001).collect()
-    require(rows.length <= 100000,
-      s"${rows.length}+ touched segments — rebuild instead")
-    if (rows.isEmpty) return // no touched rows: nothing to maintain
-    val hasNull = rows.exists(_.isNullAt(0))
-    val vals = rows.filterNot(_.isNullAt(0)).map(_.get(0)).toSeq
-    def touchOf(c: org.apache.spark.sql.Column) = {
-      val in = if (vals.isEmpty) lit(false) else c.isin(vals: _*)
-      if (hasNull) in || c.isNull else in
-    }
-    val rebuilt = graft.index.Bitmap.segmentIndex(
-      spark.read.parquet(basePath).filter(touchOf(col(segCol))),
-      segCol, idCol)
-    val old = spark.read.parquet(idxPath)
-    val next = nextVersionOf(idxPath)
-    old.filter(!touchOf(col("seg")))
-      .unionByName(rebuilt.select(old.schema.fields.toIndexedSeq.map(
-        fd => col(fd.name).cast(fd.dataType).as(fd.name)): _*))
-      .write.mode("overwrite").parquet(next)
-    registerDurable(spark, basePath, segCol, idCol, next,
-      factSig = preSig, expectPrev = Some(idxPath))
-    reapVersions(spark, next)
-  }
-
-  /** Replay persisted registrations into the in-memory catalog (and
-    * install the rule). Safe to call repeatedly; no-op without a
-    * warehouse. */
-  def restore(spark: SparkSession): Unit = file(spark).foreach { f =>
-    def s(v: JValue): String = v match { case JString(x) => x; case o => o.toString }
-    def arr(v: JValue): Seq[String] =
-      v match { case JArray(xs) => xs.map(s); case _ => Nil }
-    def dbl(v: JValue): Double = v match {
-      case JDouble(x) => x; case JInt(x) => x.toDouble
-      case JDecimal(x) => x.toDouble; case o => o.toString.toDouble
-    }
-    def darr(v: JValue): Array[Double] =
-      v match { case JArray(xs) => xs.map(dbl).toArray; case _ => Array.empty }
-    val entries = lock.synchronized(readAll(f))
-    if (entries.nonEmpty) IndexRewrite.install(spark)
-    // ANN records whose code table vanished are DEREGISTERED (removed from
-    // the file, not just skipped): a durable registration pointing at a
-    // dead path would otherwise resurrect as a serve-time failure on every
-    // restart forever. Grouped/segment records stay skip-only — their
-    // index parquet may be on a temporarily-unmounted volume and the query
-    // still answers from facts, so dropping them would be lossy.
-    val dead = scala.collection.mutable.ListBuffer[JValue]()
-    entries.foreach { e =>
-      try {
-        s(e \ "kind") match {
-          case "seg" | "group" =>
-            val idx = spark.read.parquet(s(e \ "indexPath"))
-            // replay the REGISTRATION-TIME fact fingerprint, not a fresh
-            // one: facts that changed while the process was down must
-            // decline at rule time, same as a live mutation would
-            val sig = e \ "factSig" match {
-              case JString(x) => Some(x)
-              case _          => None
-            }
-            if (s(e \ "kind") == "seg")
-              IndexCatalog.register(
-                s(e \ "basePath"), s(e \ "segCol"), s(e \ "idCol"), idx, sig)
-            else {
-              val quantums = e \ "quantums" match {
-                case JObject(fields) => fields.collect {
-                  case (k, JString(v)) => k -> v }.toMap
-                case _ => Map.empty[String, String]
-              }
-              IndexCatalog.registerGroup(
-                s(e \ "basePath"), arr(e \ "groupCols"),
-                arr(e \ "explodedCols").toSet, arr(e \ "sumCols"), idx,
-                arr(e \ "distinctCols"), sig, quantums)
-            }
-          case "ann" =>
-            // verify the code table still exists (the serving data); the
-            // quantizer replays from the JSON record
-            val codesPath = s(e \ "basePath")
-            val cp = new org.apache.hadoop.fs.Path(codesPath)
-            if (!cp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-                  .exists(cp)) {
-              dead += e
-              throw new IllegalStateException(
-                s"code table $codesPath no longer exists — registration " +
-                "dropped; rebuild to serve this name again")
-            }
-            spark.read.parquet(codesPath).schema
-            val sources = e \ "sources" match {
-              case JArray(xs) => xs.map(src => (s(src \ "table"),
-                src \ "where" match {
-                  case JString(w) => Some(w); case _ => None }))
-              case _ => Nil
-            }
-            graft.server.AnnServe.restoreEntry(s(e \ "name"), codesPath,
-              s(e \ "idCol"), s(e \ "vecCol"), dbl(e \ "dim").toInt,
-              (e \ "centroids" match {
-                case JArray(xs) => xs.map(darr).toArray
-                case _ => Array.empty[Array[Double]] }),
-              (e \ "codebooks" match {
-                case JArray(xs) => xs.map {
-                  case JArray(ys) => ys.map(darr).toArray
-                  case _ => Array.empty[Array[Double]] }.toArray
-                case _ => Array.empty[Array[Array[Double]]] }),
-              sources, dbl(e \ "residualNormBuild"),
-              e \ "residualNormLastAppend" match {
-                case JNothing => None; case v => Some(dbl(v)) })
-          case other => System.err.println(s"[restore] unknown index kind $other")
-        }
-      } catch { case ex: Exception =>
-        System.err.println(s"[restore] index registration skipped " +
-          s"(${s(e \ "kind")} ${s(e \ "key")}): ${ex.getMessage}")
-      }
-    }
-    if (dead.nonEmpty) lock.synchronized {
-      val deadKeys =
-        dead.map(d => (d \ "kind", d \ "basePath", d \ "key")).toSet
-      val kept = readAll(f).filterNot(e =>
-        deadKeys((e \ "kind", e \ "basePath", e \ "key")))
-      java.nio.file.Files.writeString(f,
-        JsonMethods.compact(JsonMethods.render(JArray(kept))))
-    }
-  }
-}
-
-/** The rewrite rule. Matches
+  * indexes with [[IndexCatalog.register]] (in memory) or durably through
+  * [[IndexRegistry]] (`IndexRegistry.scala`, which also keeps registered
+  * indexes maintained through writes).
+  *
+  * The rule matches
   * `Aggregate([segAttr], [segAttr?, count(DISTINCT idAttr)…], scan(fact))`
   * where scan is an unfiltered (possibly column-pruned) parquet relation with
   * a registered index, and replaces it with

@@ -20,8 +20,10 @@ import org.apache.spark.sql.functions._
 class DeltaRefoldSpec extends SparkSpec {
 
   /** Fresh warehouse session + fact dir with a grouped index over
-    * (event_type, user_id) sums value, distinct event_id. */
-  private def fixture(tag: String) = {
+    * (event_type, user_id) sums value, distinct event_id, registered under
+    * the base path `registeredAs(fact)`. */
+  private def fixture(tag: String,
+                      registeredAs: String => String = identity) = {
     val s = spark.newSession()
     val wh = java.nio.file.Files.createTempDirectory(s"graft-dref-$tag").toString
     s.conf.set("spark.graft.warehouse", wh)
@@ -32,7 +34,7 @@ class DeltaRefoldSpec extends SparkSpec {
     ev.write.parquet(fact)
     GroupIndex.buildTo(s.read.parquet(fact), Seq("event_type", "user_id"),
       Seq("value"), s"$root/g", distinctCols = Seq("event_id"))
-    IndexRegistry.registerGroupDurable(s, fact,
+    IndexRegistry.registerGroupDurable(s, registeredAs(fact),
       Seq("event_type", "user_id"), Set.empty, Seq("value"), s"$root/g",
       distinctCols = Seq("event_id"))
     IndexRewrite.install(s)
@@ -88,6 +90,26 @@ class DeltaRefoldSpec extends SparkSpec {
     assert(phys.contains("/g.v1"), s"must serve the NEXT version:\n$phys")
     assertSame(served.collect(),
       IndexRewrite.suppress(q(s, fact).collect()))
+    IndexCatalog.clear()
+  }
+
+  test("an index registered under a file: URI is maintained when the " +
+    "refold names the plain path (base paths match after normalization)") {
+    val (s, ev, fact, root) = fixture("uri", f => s"file:$f")
+    val pred = col("user_id") % 5 === 0
+    val after = ev.withColumn("value",
+      when(pred, col("value") + 1).otherwise(col("value")))
+    after.write.mode("overwrite").parquet(fact)
+    val r = IndexRegistry.refoldMutation(s, fact,
+      ev.filter(pred).unionByName(after.filter(pred)))
+    assert(r == Seq((s"$root/g", true)), r.toString)
+    val served = q(s, fact)
+    val phys = served.queryExecution.executedPlan.toString
+    assert(phys.contains("/g.v1"), s"must serve the NEXT version:\n$phys")
+    assertSame(served.collect(), IndexRewrite.suppress(q(s, fact).collect()))
+    assert(IndexRegistry.staleRecords(s).isEmpty)
+    // the new version superseded the file: record instead of adding one
+    assert(IndexRegistry.records(s).map(_.basePath) == List(fact))
     IndexCatalog.clear()
   }
 
