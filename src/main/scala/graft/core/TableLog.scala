@@ -19,7 +19,14 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * small *overlay* of upserted rows and a *tombstone* set of deleted ids.
   *
   *  - write cost   = O(delta): only the overlay/tombstones (re-)materialize
-  *    per statement, never the base;
+  *    per statement, never the base. A keyed delta piece is ONE file of
+  *    at most [[MaxRemovedIds]] rows: a read pays one scan task (task
+  *    shipping, a parquet footer, a Hadoop conf copy) per overlay file, and
+  *    `prev ∪ delta` written with its inputs' partitioning grows a file per
+  *    statement — the reference's in-place fragment write
+  *    (`reference/rbf/rbf.go:3-29`) reads the same after the 15th write as
+  *    after the 1st, and so does one file. A delta past the cap writes no
+  *    piece: its commit folds it straight into the new base;
   *  - read cost    = base scan filtered by `NOT _id IN removed` ∪ overlay,
   *    no join: the log keeps the *removed-id set* (the `_id`s of the
   *    overlay and the tombstones) in memory and the view carries it as one
@@ -72,7 +79,10 @@ object TableLog {
     * over a 400k-row base (grouped read, median of 9): level with the
     * anti-join plan up to a few thousand ids, 1.8× it at 16k ids and 5.6×
     * at 65k. Past the cap, one compaction in the statement's own commit
-    * costs less than making every read pay. */
+    * costs less than making every read pay. The cap also bounds each
+    * overlay and tombstone piece, which is why such a piece can be one
+    * single-task file: a statement whose delta would pass it writes no
+    * piece, and its compaction rewrites the base with full parallelism. */
   private[graft] val MaxRemovedIds = 1 << 12
 
   /** A materialized piece of table state: the DataFrame plus, in warehouse
@@ -158,8 +168,12 @@ object TableLog {
     // `_id` min/max stats: shard-scoped reads (PQL Options(shards=)) and
     // point FieldValue lookups prune files instead of scanning the table.
     // The sort shuffle is paid once per compaction (1/compactAfter
-    // writes), not per write. Overlay/tombstone pieces are small and churn
-    // every write — leave them unsorted.
+    // writes), not per write. Keyed overlay/tombstone pieces are small
+    // (≤ MaxRemovedIds rows) and churn every write — unsorted, and one
+    // partition so each is ONE file: every read scans the overlay once per
+    // file. Callers pass them only over materialized inputs, never a plan
+    // that still scans the table. A keyless append overlay has no cap,
+    // so it keeps its inputs' partitioning.
     //
     // OPT-IN scalar-key clustering (r15 VERDICT item 4, guide §6 "sort
     // order on write determines how well readers skip"): when
@@ -185,6 +199,7 @@ object TableLog {
           case None =>
             df.repartitionByRange(col("_id")).sortWithinPartitions("_id")
         }
+      else if (kind != "base" && hasId(df)) df.coalesce(1)
       else df
     warehouse(spark) match {
       case Some(wh) =>
@@ -196,16 +211,24 @@ object TableLog {
   }
 
   /** The `_id`s of a piece the statement already materialized, or None
-    * when it holds more than [[MaxRemovedIds]] rows: one bounded read,
-    * never a re-run of the statement's query. */
+    * when it holds more than [[MaxRemovedIds]] rows: one bounded read in
+    * one task, never a re-run of the statement's query. */
   private def idsOf(piece: DataFrame): Option[Set[Any]] = {
-    val ids = piece.select("_id").where(col("_id").isNotNull)
+    val ids = piece.select("_id").where(col("_id").isNotNull).coalesce(1)
       .limit(MaxRemovedIds + 1).collect()
     if (ids.length > MaxRemovedIds) None else Some(ids.iterator.map(_.get(0)).toSet)
   }
 
+  /** The removed-id set with `more` added, or None past the cap. */
   private def plus(removed: Option[Set[Any]], more: => Option[Set[Any]]) =
-    for (r <- removed; m <- more) yield r ++ m
+    (for (r <- removed; m <- more) yield r ++ m).filter(_.size <= MaxRemovedIds)
+
+  /** A delta piece of a statement whose removed-id set is `removed`: a
+    * materialized one-file piece within the cap; past it, the bare plan,
+    * which the statement's commit folds into the new base. */
+  private def delta(spark: SparkSession, name: String, kind: String,
+                    removed: Option[Set[Any]], df: DataFrame): Piece =
+    if (removed.isDefined) mat(spark, name, kind, df) else Piece(df, None)
 
   /** `base` without the removed ids, plus the overlay. Rows with a null
     * `_id` stay, as they did under the anti-joins this filter replaced. */
@@ -339,7 +362,7 @@ object TableLog {
       "true"
     val st =
       if (st0.depth >= compactAfter ||
-          st0.removed.forall(_.size > MaxRemovedIds) ||
+          st0.removed.isEmpty ||
           (writeThrough && dirty && indexedBase.isDefined)) {
         val autoRefold = scala.util.Try(
           spark.conf.get("spark.graft.index.autoRefold")).getOrElse("true") !=
@@ -439,18 +462,20 @@ object TableLog {
           st.overlay.map(_.df.unionByName(incoming)).getOrElse(incoming))
         st.copy(overlay = Some(o), depth = st.depth + 1)
       } else {
-        // reused by the joins below and by the removed-id set
+        // reused by the joins below and by the removed-id set, which is
+        // decided before any piece is written
         val inc = Materialize.stable(incoming)
         val ids = inc.select("_id")
-        val o = mat(spark, name, "overlay", st.overlay match {
+        val removed = plus(st.removed, idsOf(inc))
+        val o = delta(spark, name, "overlay", removed, st.overlay match {
           case Some(prev) => prev.df.join(ids, Seq("_id"), "left_anti")
             .unionByName(inc)
           case None => inc
         })
-        val t = st.tombstones.map(p =>
-          mat(spark, name, "tomb", p.df.join(ids, Seq("_id"), "left_anti")))
-        st.copy(overlay = Some(o), tombstones = t,
-          removed = plus(st.removed, idsOf(inc)), depth = st.depth + 1)
+        val t = st.tombstones.map(p => delta(spark, name, "tomb", removed,
+          p.df.join(ids, Seq("_id"), "left_anti")))
+        st.copy(overlay = Some(o), tombstones = t, removed = removed,
+          depth = st.depth + 1)
       }
     commit(spark, name, next)
     }
@@ -473,23 +498,26 @@ object TableLog {
           // keyless: no id to tombstone — filtered rewrite is the honest cost
           replace(spark, name, m.filter(!hit), checkpoint = true)
         } else {
-          val ids = m.filter(hit).select("_id")
-          val t = mat(spark, name, "tomb", st.tombstones
-            .map(_.df.unionByName(ids)).getOrElse(ids))
-          commit(spark, name, tombstoned(spark, name, st, t))
+          commit(spark, name,
+            tombstoned(spark, name, st, m.filter(hit).select("_id")))
         }
     }
   }
 
-  /** The state after a DELETE whose tombstone piece `t` (old tombstones
-    * plus the statement's ids) is materialized: drop those ids from the
-    * overlay, add them to the removed-id set. */
+  /** The state after a DELETE of the `_id`s `hits`: they join the
+    * tombstones and the removed-id set and leave the overlay. `hits` is
+    * materialized once — the statement's one distributed pass — and the
+    * pieces are then written from it. */
   private def tombstoned(spark: SparkSession, name: String, st: State,
-                         t: Piece): State = {
-    val o = st.overlay.map(p => mat(spark, name, "overlay",
-      p.df.join(t.df, Seq("_id"), "left_anti")))
-    st.copy(overlay = o, tombstones = Some(t),
-      removed = plus(st.removed, idsOf(t.df)), depth = st.depth + 1)
+                         hits0: DataFrame): State = {
+    val hits = Materialize.stable(hits0)
+    val removed = plus(st.removed, idsOf(hits))
+    val t = delta(spark, name, "tomb", removed,
+      st.tombstones.map(_.df.unionByName(hits)).getOrElse(hits))
+    val o = st.overlay.map(p => delta(spark, name, "overlay", removed,
+      p.df.join(hits, Seq("_id"), "left_anti")))
+    st.copy(overlay = o, tombstones = Some(t), removed = removed,
+      depth = st.depth + 1)
   }
 
   /** DELETE by a materialized `_id` set (serving-path `Delete` whose ids
@@ -502,10 +530,8 @@ object TableLog {
       graft.plans.IndexRewrite.warnMutated(st.base.df)
       if (!hasId(st.base.df)) sys.error(s"$name is keyless; deleteByIds needs _id")
       val idT = st.base.df.schema("_id").dataType
-      val idsOnly = ids.select(col("_id").cast(idT).as("_id"))
-      val t = mat(spark, name, "tomb", st.tombstones
-        .map(_.df.unionByName(idsOnly)).getOrElse(idsOnly))
-      commit(spark, name, tombstoned(spark, name, st, t))
+      commit(spark, name, tombstoned(spark, name, st,
+        ids.select(col("_id").cast(idT).as("_id"))))
     }
 
   /** Whether this session persists DML durably (`spark.graft.warehouse`). */
@@ -565,7 +591,7 @@ object TableLog {
               (r, p) => plus(r, idsOf(p.df)))
           val st = State(base, overlay, tombstones, removed, depth, null)
           // a log written past the cap folds once here (commit compacts)
-          if (removed.forall(_.size > MaxRemovedIds))
+          if (removed.isEmpty)
             mutate(spark, name)(commit(spark, name, st))
           else {
             val view = merged(st)

@@ -84,16 +84,84 @@ class DurabilitySpec extends SparkSpec {
     }
   }
 
+  private def pieceDirs(wh: String, name: String): Seq[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    Files.list(java.nio.file.Paths.get(wh, name)).iterator.asScala.toSeq
+      .filter(_.getFileName.toString.matches("(base|overlay|tomb)-\\d+"))
+  }
+
+  private def idRows(s: org.apache.spark.sql.SparkSession,
+                     name: String): Set[(Long, String)] =
+    s.table(name).collect().map(r => (r.getLong(0), r.getString(1))).toSet
+
+  private def restored(wh: String) = {
+    val s2 = spark.newSession()
+    s2.conf.set("spark.graft.warehouse", wh)
+    Ddl.restoreSession(s2)
+    s2
+  }
+
   test("warehouse point writes leave the base piece untouched (O(delta))") {
-    withWarehouse { _ =>
+    withWarehouse { wh =>
       Ddl.run(spark, "CREATE TABLE dur_p (_id ID, v STRING)")
       Ddl.run(spark, "INSERT INTO dur_p VALUES (0, 'seed')")
+      // fold the seed into the base, so the DELETE below hits a base id
+      TableLog.replace(spark, "dur_p", spark.table("dur_p"), checkpoint = true)
       val base0 = TableLog.baseOf(spark, "dur_p").get
       (1 to 5).foreach(i =>
         Ddl.run(spark, s"INSERT INTO dur_p VALUES ($i, 'v$i')"))
       assert(TableLog.baseOf(spark, "dur_p").get eq base0)
       assert(spark.table("dur_p").count() === 6)
-      Ddl.run(spark, "DROP TABLE dur_p")
+      Ddl.run(spark, "DELETE FROM dur_p WHERE _id = 0")
+      Ddl.run(spark, "INSERT INTO dur_p VALUES (0, 'again')")
+      assert(TableLog.baseOf(spark, "dur_p").get eq base0)
+      val want = (1 to 5).map(i => (i.toLong, s"v$i")).toSet + ((0L, "again"))
+      assert(idRows(spark, "dur_p") === want)
+      // every delta piece, live or superseded, is one file: a read scans
+      // the overlay once, however many statements since the last compaction
+      val deltas = pieceDirs(wh, "dur_p")
+        .filterNot(_.getFileName.toString.startsWith("base-"))
+      assert(deltas.exists(_.getFileName.toString.startsWith("tomb-")))
+      deltas.foreach { d =>
+        val parts = Files.list(d).toArray.map(_.toString).filter(f =>
+          f.contains("part-") && f.endsWith(".parquet"))
+        assert(parts.length === 1, s"$d holds ${parts.mkString(", ")}")
+      }
+      val s2 = restored(wh)
+      assert(idRows(s2, "dur_p") === want)
+      Ddl.run(s2, "DROP TABLE dur_p")
+      Ddl.run(spark, "DROP TABLE IF EXISTS dur_p")
+    }
+  }
+
+  test("a statement past the removed-id cap writes no delta piece: its " +
+      "commit folds the delta straight into a new base") {
+    withWarehouse { wh =>
+      import org.apache.spark.sql.functions._
+      Ddl.run(spark, "CREATE TABLE dur_cap (_id ID, v STRING)")
+      Ddl.run(spark, "INSERT INTO dur_cap VALUES (0, 'seed'), (1, 'one')")
+      Ddl.run(spark, "DELETE FROM dur_cap WHERE _id = 1")
+      assert(TableLog.depthOf(spark, "dur_cap") > 0)
+      def names = pieceDirs(wh, "dur_cap").map(_.getFileName.toString).toSet
+      def gainsOneBase(stmt: => Unit): Unit = {
+        val before = names
+        stmt
+        val gained = names -- before
+        assert(gained.size === 1 && gained.head.startsWith("base-"),
+          s"expected one new base piece, got $gained")
+        assert(TableLog.depthOf(spark, "dur_cap") === 0)
+        assert(idRows(restored(wh), "dur_cap") === idRows(spark, "dur_cap"))
+      }
+      val n = TableLog.MaxRemovedIds + 10
+      gainsOneBase(TableLog.upsert(spark, "dur_cap", spark.range(0, n)
+        .select(col("id").as("_id"), concat(lit("v"), col("id")).as("v"))))
+      assert(idRows(spark, "dur_cap") ===
+        (0 until n).map(i => (i.toLong, s"v$i")).toSet)
+      // a predicate DELETE matching more ids than the cap
+      gainsOneBase(Ddl.run(spark, "DELETE FROM dur_cap WHERE _id >= 5"))
+      assert(idRows(spark, "dur_cap") ===
+        (0 until 5).map(i => (i.toLong, s"v$i")).toSet)
+      Ddl.run(spark, "DROP TABLE dur_cap")
     }
   }
 

@@ -114,6 +114,8 @@ class TableLogSpec extends SparkSpec {
     Ddl.run(spark, "INSERT INTO tl_plan VALUES (0, 'seed')")
     val base0 = TableLog.baseOf(spark, "tl_plan").get
     val nodesAfter1 = planNodes("tl_plan")
+    def scanTasks = spark.table("tl_plan").queryExecution.toRdd.getNumPartitions
+    val tasksAfter1 = scanTasks
     (1 to 10).foreach { i =>
       Ddl.run(spark, s"INSERT INTO tl_plan VALUES ($i, 'v$i')")
     }
@@ -122,6 +124,8 @@ class TableLogSpec extends SparkSpec {
     assert(TableLog.baseOf(spark, "tl_plan").get eq base0)
     // read plan doesn't stack with statement count (leaves are checkpointed)
     assert(planNodes("tl_plan") <= nodesAfter1 + 8)
+    // nor does a read's task count: the overlay stays one partition
+    assert(scanTasks === tasksAfter1)
     assert(spark.table("tl_plan").count() === 11)
     Ddl.run(spark, "DROP TABLE tl_plan")
   }
