@@ -1,6 +1,9 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, classic}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, ExpressionSet}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.storage.StorageLevel
 
 /** Fault-tolerant materialization of multi-consumer intermediates.
@@ -59,7 +62,7 @@ object Materialize {
     val sc = spark.sparkContext
     val reliableDir = scala.util.Try(spark.conf.get("spark.graft.checkpointDir"))
       .toOption.filter(_.nonEmpty)
-    reliableDir match {
+    bound(reliableDir match {
       case Some(dir) =>
         // idempotent: first caller pins the dir; SparkContext keeps it
         if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
@@ -67,7 +70,26 @@ object Materialize {
       case None =>
         val lvl = if (sc.isLocal) level else replicated(level)
         df.localCheckpoint(eager = true, lvl)
-    }
+    })
+  }
+
+  /** The checkpoint with its constraints bound to its own output
+    * attributes. Spark carries the source plan's constraints onto the
+    * `LogicalRDD` and rewrites them by Attribute equality, which includes
+    * nullability: a constraint on `_id` taken where `_id` was still
+    * nullable keeps that instance. `LogicalRDD.newInstance` — the piece
+    * read twice in one plan, as a self-join or self-union does — then
+    * leaves it on the old exprId, and `Union.validConstraints` fails with
+    * "key not found: _id#…". */
+  private def bound(ds: DataFrame): DataFrame = ds.queryExecution.logical match {
+    case r: LogicalRDD =>
+      val byId = AttributeMap(r.output.map(a => a -> a))
+      val cs = ExpressionSet(r.constraints.toSeq
+        .filter(_.references.forall(byId.contains))
+        .map(_.transform { case a: Attribute => byId(a) }))
+      val session = ds.sparkSession.asInstanceOf[classic.SparkSession]
+      Shim.ofRows(session, r.copy()(session, Some(r.stats), Some(cs)))
+    case _ => ds
   }
 
   private def replicated(l: StorageLevel): StorageLevel =

@@ -983,13 +983,17 @@ object Pql {
     (results, state)
   }
 
-  /** [[programResults]] with DURABLE write semantics: the table's temp view
-    * (registered through [[graft.core.TableLog]]) is the state between
-    * calls, and each write call persists only its touched rows via
-    * `TableLog.upsert`/`deleteByIds` — O(touched), never O(table), and a
-    * restarted JVM restores the writes from the warehouse manifest like the
-    * reference's RBF storage (`reference/rbf/rbf.go:3-29`). Callers hold the
-    * table's write lock, exactly like the in-memory path. */
+  /** [[programResults]] with committed write semantics: the table's temp
+    * view (registered through [[graft.core.TableLog]]) is the state between
+    * calls, and each write call commits only its touched rows via
+    * `TableLog.upsert`/`deleteByIds` — O(touched), never O(table). With
+    * `spark.graft.warehouse` set the commit is durable: a restarted JVM
+    * restores the writes from the warehouse manifest like the reference's
+    * RBF storage (`reference/rbf/rbf.go:3-29`). Without it the log's pieces
+    * are session-lifetime checkpoints. Either way every frontend on the
+    * session reads the committed view. Each write call takes the table's
+    * TableLog lock; a caller that needs the whole program serialized holds
+    * it across the call. */
   def programResultsDurable(spark: SparkSession, tableName: String, pql: String)
       : Seq[Option[DataFrame]] = {
     val calls = Parser.parse(pql)

@@ -110,8 +110,6 @@ final class GrpcFacade(spark: SparkSession, dir: String, port: Int,
                        auth: Option[Auth.Config] = None,
                        tls: Option[Tls.Config] = None) {
 
-  private val state = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]
-
   // ----------------------------------------------------- query governance
   /** The reference's request-context semantics on the gRPC surface: the Go
     * server hands the RPC's ctx to `api.Query`, so a client disconnect or
@@ -311,16 +309,11 @@ final class GrpcFacade(spark: SparkSession, dir: String, port: Int,
           denied("insufficient permissions to access requested tables")
     }
   }
-  /** With `spark.graft.warehouse` set, writes persist through the TableLog
-    * warehouse (restart-safe); see [[HttpFacade]] for the full notes. */
-  private def durable: Boolean = graft.core.TableLog.isDurable(spark)
-
+  /** A table's current state: its session view, which every write commits
+    * through [[graft.core.TableLog]] — the store the HTTP facade on this
+    * session reads and writes too; see [[HttpFacade]] for the full notes. */
   private def tableState(name: String): DataFrame =
-    if (durable) spark.table(graft.core.Idents.q(name))
-    else state.computeIfAbsent(name, n =>
-      if (graft.core.Tables.names.contains(n))
-        graft.core.Tables.load(spark, dir, n)
-      else spark.table(graft.core.Idents.q(n))) // DDL/RPC-created indexes live in the catalog
+    spark.table(graft.core.Idents.q(name))
 
   /** Every index this facade serves: parquet test tables plus DDL-created
     * catalog tables, minus fb_* system views and CREATE VIEW definitions
@@ -337,20 +330,14 @@ final class GrpcFacade(spark: SparkSession, dir: String, port: Int,
     (graft.core.Tables.names ++ cat).distinct
   }
 
-  /** gRPC handlers run on netty's pool; write programs hold a per-table
-    * lock across state-read -> compute -> commit so concurrent mutations
-    * serialize (the reference's per-shard RBF transaction). Reads stay
-    * lock-free on immutable DataFrames. */
-  private val tableLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]
-
-  /** In durable mode also hold TableLog's per-(session,table) mutation lock:
-    * the HTTP facade sharing this SparkSession has its own lock map, and the
-    * log's contract requires read→delta→commit under ITS lock (reentrant,
-    * so the PQL durable path's inner locked() composes). */
+  /** gRPC handlers run on netty's pool; write programs hold TableLog's
+    * per-(session, table) mutation lock across state-read -> compute ->
+    * commit so concurrent mutations from this facade and the HTTP one on
+    * the same session serialize (the reference's per-shard RBF
+    * transaction). The lock is reentrant, so the log's own mutators
+    * compose. Reads stay lock-free on immutable DataFrames. */
   private def writeLock[A](name: String)(f: => A): A =
-    tableLocks.computeIfAbsent(name, _ => new Object).synchronized(
-      if (durable) graft.core.TableLog.locked(spark, name)(f) else f)
+    graft.core.TableLog.locked(spark, name)(f)
 
   private val MaxWireRows = 100000
 
@@ -454,25 +441,16 @@ final class GrpcFacade(spark: SparkSession, dir: String, port: Int,
   }
 
   /** Single-call PQL, reference unary semantics. Returns the result frame or
-    * None for a write (acked as ResultBool). */
+    * None for a write (acked as ResultBool). A multi-call program is
+    * rejected before any call runs (`grpc.go:371-373`), so none of its
+    * writes commit. */
   private def runPqlUnary(index: String, pql: String): Option[DataFrame] = {
     graft.core.Metrics.inc(graft.core.Metrics.PqlQueries)
-    def one(results: Seq[Option[DataFrame]]): Option[DataFrame] = {
-      if (results.length != 1)
-        throw Status.INVALID_ARGUMENT
-          .withDescription("QueryPQLUnary handles exactly one query")
-          .asRuntimeException()
-      results.head
-    }
-    def run(): Option[DataFrame] =
-      if (durable) // writes persist O(delta) through the TableLog warehouse
-        one(graft.pql.Pql.programResultsDurable(spark, index, pql))
-      else {
-        val (results, next) = graft.pql.Pql.programResults(tableState(index), index, pql)
-        val r = one(results)
-        state.put(index, next)
-        r
-      }
+    if (graft.pql.Parser.parse(pql).length != 1)
+      throw Status.INVALID_ARGUMENT
+        .withDescription("QueryPQLUnary handles exactly one query")
+        .asRuntimeException()
+    def run() = graft.pql.Pql.programResultsDurable(spark, index, pql).head
     if (graft.pql.Pql.writeCallN(pql) > 0) writeLock(index)(run()) else run()
   }
 
@@ -688,7 +666,6 @@ final class GrpcFacade(spark: SparkSession, dir: String, port: Int,
             .withDescription("index not found")
             .asRuntimeException()
         graft.sql.Ddl.run(spark, s"DROP TABLE $name")
-        state.remove(name)
         graft.core.Metrics.inc(graft.core.Metrics.DeleteIndex)
         Array.emptyByteArray // DeleteIndexResponse{}
       })
@@ -732,10 +709,9 @@ final class GrpcFacade(spark: SparkSession, dir: String, port: Int,
   }
 
   def start(): Int = {
-    if (durable) { // views + warehouse state must exist before queries land
-      graft.core.Tables.registerAll(spark, dir)
-      graft.sql.Ddl.restoreSession(spark)
-    }
+    // views + warehouse state must exist before queries land
+    graft.core.Tables.registerAll(spark, dir)
+    graft.sql.Ddl.restoreSession(spark)
     spark.sparkContext.addSparkListener(jobSpans) // killed-group re-cancel hook
     server.start(); server.getPort
   }

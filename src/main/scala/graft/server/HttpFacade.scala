@@ -13,9 +13,10 @@ import scala.jdk.CollectionConverters._
   *   - `POST /index/{index}/query`  — reference `http_handler.go:521` (PQL;
   *                                    multi-call programs return one result
   *                                    per call as `{"results":[…]}` like
-  *                                    `handler.go:51-56`; writes advance
-  *                                    session state like the reference's
-  *                                    mutable fragments and ack as `true`)
+  *                                    `handler.go:51-56`; writes commit
+  *                                    through [[graft.core.TableLog]] to the
+  *                                    session's table view, which every
+  *                                    frontend reads, and ack as `true`)
   *   - `GET  /schema`               — reference `GET /schema`
   *   - `GET  /status`               — health probe
   *
@@ -110,67 +111,32 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
       case _ => _ => true
     }
 
-  /** Whether writes persist durably: with `spark.graft.warehouse` set, every
-    * serving-path write routes through [[graft.core.TableLog]] — parquet
-    * pieces + manifest, restart-safe like the reference's RBF storage
-    * (`reference/rbf/rbf.go:3-29`). Without it, state is an in-memory
-    * successor chain for the life of the server (the dev/test mode). */
-  private def durable: Boolean = graft.core.TableLog.isDurable(spark)
-
   /** key↔id translation for `/internal/translate/...` — warehouse-durable
-    * when the facade is (ids must survive a bounce; a client holds them). */
+    * when `spark.graft.warehouse` is set (ids must survive a bounce; a
+    * client holds them). */
   private val keyTranslate = new KeyTranslate(
     Option(spark.conf.get("spark.graft.warehouse", null))
       .map(w => java.nio.file.Paths.get(w, "_translate.tsv")))
 
-  /** Per-table mutable state (non-durable mode): PQL writes and field
-    * imports persist across requests for the life of the server — the
-    * reference's immediately-queryable mutable fragments. Seeded lazily
-    * from the parquet tables. In durable mode the TableLog-registered temp
-    * view is the single source of truth instead. */
-  private val state =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]
-
+  /** A table's current state: its session view, which every write commits
+    * through [[graft.core.TableLog]] — the one store every frontend on this
+    * session reads, like the reference's single RBF store
+    * (`reference/rbf/rbf.go:3-29`). With `spark.graft.warehouse` set the
+    * log persists parquet pieces and a restarted JVM restores them;
+    * without it the same log runs on session-lifetime checkpoint pieces. */
   private def tableState(name: String): DataFrame =
-    if (durable) spark.table(graft.core.Idents.q(name))
-    else state.computeIfAbsent(name, n =>
-      if (graft.core.Tables.names.contains(n))
-        graft.core.Tables.load(spark, dir, n)
-      else spark.table(graft.core.Idents.q(n))) // DDL-created indexes live in the catalog
+    spark.table(graft.core.Idents.q(name))
 
-  /** Writes since the last materialization, per table. */
-  private val writesSince =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]
-
-  /** Successor states stack lazily (Catalyst's ProjectCollapsing fuses the
-    * narrow per-write projections) and materialize every Nth write — the
-    * round-1 per-request localCheckpoint re-wrote O(table) on EVERY write
-    * program; now that cost is amortized 1/16 and a read between writes
-    * still sees the exact committed state. */
+  /** Commit `next` by upserting only its `touched` rows: TableLog upsert
+    * is O(delta), the serving-path analogue of the reference's per-shard
+    * RBF commit. */
   private def commitState(name: String, next: DataFrame,
-                          touched: Option[DataFrame] = None): Unit = {
-    if (durable) {
-      // persist only the touched rows: TableLog upsert is O(delta), the
-      // serving-path analogue of the reference's per-shard RBF commit
-      import org.apache.spark.sql.functions.col
-      val idT = next.schema("_id").dataType
-      touched match {
-        case Some(ids) =>
-          graft.core.TableLog.upsert(spark, name, next.join(
-            ids.select(col("_id").cast(idT)).distinct(), Seq("_id"), "left_semi"))
-        case None => // no id set known — honest whole-state replace
-          graft.core.TableLog.replace(spark, name, next, checkpoint = true)
-      }
-      invalidateTableCaches(name)
-      return
-    }
-    val before = state.get(name)
-    if (next ne before) {
-      val n = writesSince.merge(name, 1, (a, b) => a + b)
-      state.put(name,
-        if (n % 16 == 0) graft.core.Materialize.stable(next) else next)
-      invalidateTableCaches(name)
-    }
+                          touched: DataFrame): Unit = {
+    import org.apache.spark.sql.functions.col
+    val idT = next.schema("_id").dataType
+    graft.core.TableLog.upsert(spark, name, next.join(
+      touched.select(col("_id").cast(idT)).distinct(), Seq("_id"), "left_semi"))
+    invalidateTableCaches(name)
   }
 
   /** `/schema/details` per-table field-cardinality memo: the endpoint is a
@@ -327,23 +293,16 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
   }
 
   /** Per-table write serialization: requests run on a thread pool (below),
-    * and a read-modify-write against the same table from two threads would
-    * otherwise lose one of the updates — the reference serializes via its
-    * per-shard RBF write transaction (`rbf/rbf.go:3-29`). Reads stay
-    * lock-free on immutable DataFrames. */
-  private val tableLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]
-
-  /** In durable mode the facade lock alone is not enough: another FRONTEND
-    * (gRPC) sharing this SparkSession has its own lock map, so the
-    * read→compute-delta→commit sequence must also hold TableLog's
-    * per-(session,table) mutation lock — the log's documented contract.
-    * Intrinsic locks are reentrant, so paths that already take
-    * TableLog.locked deeper down (the PQL durable write path) compose.
-    * Ordering is always facade-lock → log-lock, never the reverse. */
+    * and a read-modify-write against the same table from two threads — or
+    * from this facade and the gRPC one on the same session — would
+    * otherwise lose one of the updates. The read→compute-delta→commit
+    * sequence holds TableLog's per-(session, table) mutation lock, the
+    * log's documented contract (the reference serializes via its per-shard
+    * RBF write transaction, `rbf/rbf.go:3-29`). The lock is reentrant, so
+    * the log's own mutators compose. Reads stay lock-free on immutable
+    * DataFrames. */
   private def writeLock[A](name: String)(f: => A): A =
-    tableLocks.computeIfAbsent(name, _ => new Object).synchronized(
-      if (durable) graft.core.TableLog.locked(spark, name)(f) else f)
+    graft.core.TableLog.locked(spark, name)(f)
 
   /** This node's URI JSON as the Go client's StatusURI/fragmentNode
     * parse it (`client.go:1602-1606,1650-1654`). */
@@ -355,7 +314,7 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
   def start(): Int = {
     spark.sparkContext.addSparkListener(jobSpans)
     graft.core.Tables.registerAll(spark, dir)
-    // durable mode: re-register warehouse tables over the parquet views so
+    // with a warehouse: re-register its tables over the parquet views so
     // writes from a previous process are visible (restart = restore)
     graft.sql.Ddl.restoreSession(spark)
     server.createContext("/sql", new HttpHandler {
@@ -492,8 +451,7 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
               }
               val allTouched = touched.result()
               if (allTouched.nonEmpty)
-                commitState(idx, t,
-                  touched = Some(allTouched.reduce(_ unionByName _)))
+                commitState(idx, t, allTouched.reduce(_ unionByName _))
             }
           }
         }
@@ -622,26 +580,14 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
             // reference's boolean ack. Write programs hold the table's
             // write lock across state-read -> compute -> commit; pure reads
             // run lock-free on the immutable committed state.
-            def run(): String =
-              if (durable) {
-                // each write call persists its touched rows through the
-                // TableLog warehouse — restart-safe, O(delta) per write
-                val wire = graft.pql.Pql.programResultsDurable(spark, idx, body).map {
-                  case Some(df) => toWire(df)
-                  case None     => "true"
-                }.mkString("""{"results":[""", ",", "]}")
-                if (writes) invalidateTableCaches(idx)
-                wire
-              } else {
-                val (results, next) =
-                  graft.pql.Pql.programResults(tableState(idx), idx, body)
-                val wire = results.map { // materialize before exposing new state
-                  case Some(df) => toWire(df)
-                  case None     => "true"
-                }.mkString("""{"results":[""", ",", "]}")
-                commitState(idx, next)
-                wire
-              }
+            def run(): String = {
+              val wire = graft.pql.Pql.programResultsDurable(spark, idx, body).map {
+                case Some(df) => toWire(df)
+                case None     => "true"
+              }.mkString("""{"results":[""", ",", "]}")
+              if (writes) invalidateTableCaches(idx)
+              wire
+            }
             tracked(body, "", idx) {
               if (writes) writeLock(idx)(run()) else run()
             }
@@ -662,7 +608,7 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
                   (id.trim, v.trim, i.toLong)
                 }.toSeq.toDF("_id", "value", "seq")
               commitState(idx, graft.core.Mutation.setBulk(t, field, writes),
-                touched = Some(writes))
+                writes)
             }
             s"""{"imported":true}"""
           case Array("index", idx, "field", field, "import-roaring", shard) =>
@@ -979,7 +925,7 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
     })
     // `GET /internal/disk-usage[/{index}]` (`http_handler.go:558-559,
     // 1201-1224`, `util.go:59-84`): recursive byte size of the data dir
-    // (the warehouse when durable, the parquet dir otherwise) or one
+    // (the warehouse when set, the parquet dir otherwise) or one
     // index's storage; a bad path answers 500 with the walk error like
     // Go's http.Error
     server.createContext("/internal/disk-usage", new HttpHandler {
@@ -1508,8 +1454,7 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
       bits += seq
     }
     commitState(idx, next,
-      touched = Some(if (idKeyed) touchedS.toSeq.toDF("_id")
-                     else touchedL.toSeq.toDF("_id")))
+      if (idKeyed) touchedS.toSeq.toDF("_id") else touchedL.toSeq.toDF("_id"))
     graft.core.Metrics.add(graft.core.Metrics.ImportedN, bits)
     s"""{"imported":true,"bits":$bits}"""
   }
@@ -1554,8 +1499,8 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
     * fields applied in one transaction. JSON envelope mirroring the proto:
     * `{"views":[{"field":f,"view":"standard","set":b64,"clear":b64,
     * "clearRecords":bool}]}`. All updates chain onto one successor state and
-    * commit with a single swap — per-shard atomicity like the reference's
-    * single Tx. */
+    * commit as one TableLog upsert — per-shard atomicity like the
+    * reference's single Tx. */
   private def importRoaringShard(idx: String, shard: Long, body: String): String = {
     import spark.implicits._
     val t = tableState(idx)
@@ -1606,7 +1551,7 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
           ps.toDF("_id", "value", "seq"))
       }
     }
-    commitState(idx, next, touched = Some(touchedIds.toSeq.toDF("_id")))
+    commitState(idx, next, touchedIds.toSeq.toDF("_id"))
     graft.core.Metrics.add(graft.core.Metrics.ImportedN, bits)
     s"""{"imported":true,"bits":$bits}"""
   }
@@ -1641,7 +1586,6 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
   /** `DELETE /index/{i}` (`http_handler.go:1879-1890`). */
   private def dropIndex(idx: String): String = {
     graft.sql.Ddl.run(spark, s"DROP TABLE $idx")
-    state.remove(idx)
     invalidateTableCaches(idx)
     graft.core.Metrics.inc(graft.core.Metrics.DeleteIndex)
     success(idx)
@@ -1752,7 +1696,6 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
       case other       => sys.error(s"invalid field type: $other")
     }
     graft.sql.Ddl.run(spark, s"ALTER TABLE $idx ADD COLUMN $field $ddlType")
-    state.remove(idx) // next read sees the widened schema
     invalidateTableCaches(idx)
     graft.core.Metrics.inc(graft.core.Metrics.CreateField)
     success(field)
@@ -1761,7 +1704,6 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
   /** `DELETE /index/{i}/field/{f}` (`http_handler.go:516` DeleteField). */
   private def dropField(idx: String, field: String): String = {
     graft.sql.Ddl.run(spark, s"ALTER TABLE $idx DROP COLUMN $field")
-    state.remove(idx)
     invalidateTableCaches(idx)
     graft.core.Metrics.inc(graft.core.Metrics.DeleteField)
     success(field)
@@ -1796,27 +1738,19 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
         if (shards.nonEmpty && writes)
           sys.error("shards restriction unsupported on write programs")
         val calls = graft.pql.Parser.parse(query)
-        def run(): Array[Byte] =
-          if (durable) {
-            val rs = graft.pql.Pql.programResultsDurable(spark, idx, query)
-            if (writes) invalidateTableCaches(idx)
-            PbQuery.encodeResponse(calls.zip(rs), MaxWireRows)
-          } else {
-            import org.apache.spark.sql.functions.col
-            val base0 = tableState(idx)
-            val base =
-              if (shards.isEmpty) base0
-              else {
-                val w = graft.pql.Compiler.ShardWidth
-                base0.filter(shards.map(s =>
-                  col("_id") >= s * w && col("_id") < (s + 1) * w)
-                  .reduceLeft(_ || _))
-              }
-            val (rs, next) = graft.pql.Pql.programResults(base, idx, query)
-            val wire = PbQuery.encodeResponse(calls.zip(rs), MaxWireRows)
-            if (writes) commitState(idx, next)
-            wire
-          }
+        def run(): Array[Byte] = {
+          val rs =
+            if (shards.isEmpty) graft.pql.Pql.programResultsDurable(spark, idx, query)
+            else { // a read-only program (checked above) over those shards
+              import org.apache.spark.sql.functions.col
+              val w = graft.pql.Compiler.ShardWidth
+              graft.pql.Pql.programResults(tableState(idx).filter(shards.map(s =>
+                col("_id") >= s * w && col("_id") < (s + 1) * w)
+                .reduceLeft(_ || _)), idx, query)._1
+            }
+          if (writes) invalidateTableCaches(idx)
+          PbQuery.encodeResponse(calls.zip(rs), MaxWireRows)
+        }
         (200, tracked(query, "", idx) {
           if (writes) writeLock(idx)(run()) else run()
         })
@@ -1929,7 +1863,7 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
           val next =
             if (doClear) graft.core.Mutation.clearBulk(t, field, writes)
             else graft.core.Mutation.setBulk(t, field, writes)
-          commitState(idx, next, touched = Some(writes))
+          commitState(idx, next, writes)
         }
     }
   }

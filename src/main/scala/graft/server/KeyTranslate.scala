@@ -20,8 +20,8 @@ import scala.jdk.CollectionConverters._
   *
   * Durability: append-only TSV under the warehouse (URL-encoded keys),
   * replayed on restart so ids stay stable across a server bounce. A
-  * non-durable session keeps the map in memory (the facade's general
-  * dev/test durability story).
+  * session without a warehouse keeps the map in memory for the life of
+  * the facade.
   */
 final class KeyTranslate(persistTo: Option[Path]) {
   private final class Scope {

@@ -109,6 +109,25 @@ class TableLogSpec extends SparkSpec {
     Ddl.run(spark, "DROP TABLE tl_cap")
   }
 
+  test("session-lifetime upserts of bulk Set/Clear deltas compose: a " +
+      "checkpointed piece read twice in one plan keeps its constraints bound") {
+    import spark.implicits._
+    Ddl.run(spark, "CREATE TABLE tl_bulk (_id ID, age INT)")
+    def upsert(next: org.apache.spark.sql.DataFrame, ids: Long*): Unit =
+      TableLog.upsert(spark, "tl_bulk",
+        next.join(ids.toDF("_id"), Seq("_id"), "left_semi"))
+    val set = Seq(("1", "10", 0L), ("2", "20", 1L)).toDF("_id", "value", "seq")
+    upsert(Mutation.setBulk(spark.table("tl_bulk"), "age", set), 1L, 2L)
+    // the second upsert unions the new delta with the previous overlay
+    // anti-joined by the delta's own ids: the delta's piece is read twice
+    val clr = Seq(("2", "20", 0L)).toDF("_id", "value", "seq")
+    upsert(Mutation.clearBulk(spark.table("tl_bulk"), "age", clr), 2L)
+    assert(spark.table("tl_bulk").collect()
+      .map(r => (r.getLong(0), Option(r.get(1)).map(_.toString))).toSet ===
+      Set((1L, Some("10")), (2L, None)))
+    Ddl.run(spark, "DROP TABLE tl_bulk")
+  }
+
   test("point writes never re-materialize the base; plan depth is bounded") {
     Ddl.run(spark, "CREATE TABLE tl_plan (_id ID, v STRING)")
     Ddl.run(spark, "INSERT INTO tl_plan VALUES (0, 'seed')")

@@ -96,6 +96,9 @@ class AuthUnitSpec extends AnyFunSuite {
 /** End-to-end facade authz: the chkAuthZ route table of
   * `reference/http_handler.go:497-536` driven over live HTTP. */
 class AuthFacadeSpec extends SparkSpec {
+  // its own session: facade writes land in the session's table views
+  override lazy val spark: org.apache.spark.sql.SparkSession =
+    graft.SparkSpec.session.newSession()
 
   private val secret = "0123456789abcdef0123456789abcdef".getBytes
   private val perms = GroupPermissions.fromYaml(
@@ -218,6 +221,9 @@ class AuthFacadeSpec extends SparkSpec {
 /** gRPC authz parity (`reference/server/grpc.go:159-300`): bearer token in
   * the `authorization` metadata key, PERMISSION_DENIED on shortfall. */
 class AuthGrpcSpec extends SparkSpec {
+  // its own session: facade writes land in the session's table views
+  override lazy val spark: org.apache.spark.sql.SparkSession =
+    graft.SparkSpec.session.newSession()
   import org.sparkproject.connect.grpc
   import org.sparkproject.connect.grpc.StatusRuntimeException
 

@@ -10,7 +10,8 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
   * from the warehouse manifest, like the reference's RBF storage
   * (`reference/rbf/rbf.go:3-29`). Also asserts the writes are O(delta): the
   * base piece is written once (first write materializes it) and point
-  * writes after that only add overlay/tombstone pieces. */
+  * writes after that only add overlay/tombstone pieces. Without a
+  * warehouse the same log serves every frontend on the session. */
 class DurableFacadeSpec extends SparkSpec {
 
   private val wh = java.nio.file.Files
@@ -114,7 +115,6 @@ class DurableFacadeSpec extends SparkSpec {
   }
 
   test("concurrent durable writes from TWO facades serialize in TableLog: no lost updates") {
-    // HTTP and gRPC facades each hold their own per-table write locks —
     // the per-(session, table) lock inside TableLog is what serializes
     // writes ACROSS frontends sharing one warehouse session
     val s = spark.newSession()
@@ -233,6 +233,64 @@ class DurableFacadeSpec extends SparkSpec {
       val r = new Proto.Reader(resp)
       assert(r.fields.contains(2), "expected a data row in the TableResponse")
     } finally { ch2.shutdownNow(); g2.stop() }
+  }
+
+  /** The one count a single-call PQL program answers over gRPC. */
+  private def grpcCount(ch: org.sparkproject.connect.grpc.ManagedChannel,
+                        g: GrpcFacade, index: String, pql: String): Long = {
+    val r = new Proto.Reader(GrpcFacade.call(ch, g.QueryPqlUnaryMethod,
+      GrpcFacade.pqlRequest(index, pql)))
+    val row = new Proto.Reader(r.fields(2).head.asInstanceOf[Array[Byte]])
+    new Proto.Reader(row.fields(1).head.asInstanceOf[Array[Byte]])
+      .fields(3).head.asInstanceOf[Long]
+  }
+
+  test("protobuf QueryRequest.Shards restricts a read on a durable facade") {
+    val s = spark.newSession()
+    s.conf.set("spark.graft.warehouse", wh)
+    val f = new HttpFacade(s, sfDir, 0)
+    val p = f.start()
+    def protoCount(shards: Long*): Long = {
+      val q = new Proto.Writer().string(1, "Count(All())")
+      shards.foreach(q.int(2, _))
+      val r = client.send(
+        HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$p/index/region/query"))
+          .header("Content-Type", "application/x-protobuf")
+          .POST(HttpRequest.BodyPublishers.ofByteArray(q.result)).build(),
+        HttpResponse.BodyHandlers.ofByteArray())
+      assert(r.statusCode() == 200)
+      val result = new Proto.Reader(r.body()).fields(2).head.asInstanceOf[Array[Byte]]
+      new Proto.Reader(result).fields(2).head.asInstanceOf[Long]
+    }
+    try {
+      val before = protoCount()
+      val w = graft.pql.Compiler.ShardWidth
+      assert(post(p, "/index/region/query", s"Set(${3 * w + 1}, r_name='FAR')")._1 == 200)
+      assert(protoCount() == before + 1)
+      assert(protoCount(3) == 1, "shard 3 holds only the far row")
+      assert(protoCount(0) == before, "shard 0 holds every other row")
+    } finally f.stop()
+  }
+
+  test("without a warehouse, HTTP, /sql and gRPC share one table state") {
+    val s = spark.newSession()
+    assert(!graft.core.TableLog.isDurable(s))
+    val hf = new HttpFacade(s, sfDir, 0)
+    val gf = new GrpcFacade(s, sfDir, 0)
+    val hp = hf.start()
+    val ch = GrpcFacade.channel(gf.start())
+    try {
+      assert(post(hp, "/index/nation/query", "Set(9100, n_regionkey=91)")._1 == 200)
+      val (cs, bs) = post(hp, "/sql",
+        "SELECT COUNT(*) AS n FROM nation WHERE n_regionkey = 91")
+      assert(cs == 200 && bs.contains(""""data":[[1]]"""), bs)
+      assert(grpcCount(ch, gf, "nation", "Count(Row(n_regionkey=91))") == 1)
+
+      GrpcFacade.call(ch, gf.QueryPqlUnaryMethod,
+        GrpcFacade.pqlRequest("nation", "Set(9101, n_regionkey=92)"))
+      val (c, b) = post(hp, "/index/nation/query", "Count(Row(n_regionkey=92))")
+      assert(c == 200 && b.contains(""""data":[[1]]"""), b)
+    } finally { ch.shutdownNow(); hf.stop(); gf.stop() }
   }
 
   override def afterAll(): Unit = {

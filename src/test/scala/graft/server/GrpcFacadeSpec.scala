@@ -1,15 +1,24 @@
 package graft.server
 
 import graft.SparkSpec
-import org.sparkproject.connect.grpc.StatusRuntimeException
+import org.sparkproject.connect.grpc.{ManagedChannel, StatusRuntimeException}
 
 class GrpcFacadeSpec extends SparkSpec {
+  // its own session: facade writes land in the session's table views
+  override lazy val spark: org.apache.spark.sql.SparkSession =
+    graft.SparkSpec.session.newSession()
 
   private lazy val facade = new GrpcFacade(spark, sfDir, 0) // ephemeral port
   private lazy val ch = GrpcFacade.channel(facade.start())
 
   override def afterAll(): Unit = {
     ch.shutdownNow(); facade.stop(); super.afterAll()
+  }
+
+  private def withOwnFacade(f: (GrpcFacade, ManagedChannel) => Unit): Unit = {
+    val own = new GrpcFacade(graft.SparkSpec.session.newSession(), sfDir, 0)
+    val ownCh = GrpcFacade.channel(own.start())
+    try f(own, ownCh) finally { ownCh.shutdownNow(); own.stop() }
   }
 
   // ---- tiny TableResponse / RowResponse decoders over the same wire codec
@@ -42,18 +51,22 @@ class GrpcFacadeSpec extends SparkSpec {
   }
 
   test("QueryPQLUnary: Count result and write ack (grpc.go:346-405,621-639)") {
-    val cnt = new Proto.Reader(GrpcFacade.call(ch, facade.QueryPqlUnaryMethod,
-      GrpcFacade.pqlRequest("region", "Count(Row(r_regionkey=0))")))
-    assert(headersOf(cnt).map(_._1) == Seq("cnt"))
-    assert(tableRows(cnt) == Seq(Seq(1L)))
-    // a write acks as the ResultBool table and is visible to the next query
-    val ack = new Proto.Reader(GrpcFacade.call(ch, facade.QueryPqlUnaryMethod,
-      GrpcFacade.pqlRequest("region", "Set(42, r_name='GRPCLAND')")))
-    assert(headersOf(ack) == Seq(("result", "bool")))
-    assert(tableRows(ack) == Seq(Seq(true)))
-    val after = new Proto.Reader(GrpcFacade.call(ch, facade.QueryPqlUnaryMethod,
-      GrpcFacade.pqlRequest("region", "Count(Row(r_name='GRPCLAND'))")))
-    assert(tableRows(after) == Seq(Seq(1L)))
+    // a facade of its own: the write to region would change the row
+    // counts the SQL tests below assert
+    withOwnFacade { (facade, ch) =>
+      val cnt = new Proto.Reader(GrpcFacade.call(ch, facade.QueryPqlUnaryMethod,
+        GrpcFacade.pqlRequest("region", "Count(Row(r_regionkey=0))")))
+      assert(headersOf(cnt).map(_._1) == Seq("cnt"))
+      assert(tableRows(cnt) == Seq(Seq(1L)))
+      // a write acks as the ResultBool table and is visible to the next query
+      val ack = new Proto.Reader(GrpcFacade.call(ch, facade.QueryPqlUnaryMethod,
+        GrpcFacade.pqlRequest("region", "Set(42, r_name='GRPCLAND')")))
+      assert(headersOf(ack) == Seq(("result", "bool")))
+      assert(tableRows(ack) == Seq(Seq(true)))
+      val after = new Proto.Reader(GrpcFacade.call(ch, facade.QueryPqlUnaryMethod,
+        GrpcFacade.pqlRequest("region", "Count(Row(r_name='GRPCLAND'))")))
+      assert(tableRows(after) == Seq(Seq(1L)))
+    }
   }
 
   test("QueryPQLUnary rejects multi-call programs like the reference") {

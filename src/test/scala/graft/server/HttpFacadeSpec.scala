@@ -5,6 +5,9 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
 class HttpFacadeSpec extends SparkSpec {
+  // its own session: facade writes land in the session's table views
+  override lazy val spark: org.apache.spark.sql.SparkSession =
+    graft.SparkSpec.session.newSession()
 
   private lazy val facade = new HttpFacade(spark, sfDir, 0) // ephemeral port
   private lazy val port = facade.start()
@@ -1002,14 +1005,20 @@ class HttpFacadeSpec extends SparkSpec {
     tmp.deleteOnExit()
     java.nio.file.Files.copy(src, tmp.toPath,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    val pb = new ProcessBuilder(node.get.getAbsolutePath, tmp.getAbsolutePath)
-    pb.environment().put("GRAFT_BASE", s"http://127.0.0.1:$port")
-    pb.redirectErrorStream(true)
-    val p = pb.start()
-    val out = new String(p.getInputStream.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8)
-    val code = p.waitFor()
-    assert(code == 0 && out.contains("CONSOLE-DRIVE-OK"), out.take(1500))
+    // a facade of its own: the script counts region's rows over /sql,
+    // which this spec's PQL writes to region change
+    val own = new HttpFacade(graft.SparkSpec.session.newSession(), sfDir, 0)
+    val ownPort = own.start()
+    try {
+      val pb = new ProcessBuilder(node.get.getAbsolutePath, tmp.getAbsolutePath)
+      pb.environment().put("GRAFT_BASE", s"http://127.0.0.1:$ownPort")
+      pb.redirectErrorStream(true)
+      val p = pb.start()
+      val out = new String(p.getInputStream.readAllBytes(),
+        java.nio.charset.StandardCharsets.UTF_8)
+      val code = p.waitFor()
+      assert(code == 0 && out.contains("CONSOLE-DRIVE-OK"), out.take(1500))
+    } finally own.stop()
   }
 
   test("admin console: / serves the UI; lattice SPA routes, favicons, " +

@@ -13,6 +13,9 @@ import java.time.Duration
   * a normal query after the storm. Seeded; count via
   * SPARK_GRAFT_HTTP_FUZZ_N (default 300). */
 class HttpFuzzSpec extends SparkSpec {
+  // its own session: facade writes land in the session's table views
+  override lazy val spark: org.apache.spark.sql.SparkSession =
+    graft.SparkSpec.session.newSession()
 
   private lazy val facade = new HttpFacade(spark, sfDir, 0)
   private lazy val port = facade.start()

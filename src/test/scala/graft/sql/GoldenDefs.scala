@@ -634,6 +634,9 @@ object GoldenDefs {
     * `defs.go` (`TableTests` var). Returns TableTests in registry order. */
   def loadCorpus(dir: String = "/root/reference/sql3/test/defs"): List[TableTest] = {
     val d = new java.io.File(dir)
+    if (!d.isDirectory)
+      throw new java.io.FileNotFoundException(
+        s"golden corpus directory $dir is missing (the reference's sql3/test/defs tree)")
     val files = d.listFiles().filter(f => f.getName.startsWith("defs") && f.getName.endsWith(".go"))
     val allVars = mutable.LinkedHashMap[String, G]()
     for (f <- files.sortBy(_.getName)) {
