@@ -113,15 +113,6 @@ object Mutation {
   def deleteIds(df: DataFrame, ids: DataFrame): DataFrame =
     df.join(ids.select(col("_id")), Seq("_id"), "left_anti")
 
-  /** Bulk Set: apply `Set(id, field=value)` for EVERY row of `writes`
-    * (`_id`, `value` string, `seq` apply order) in ONE full-outer join —
-    * the reference's /import endpoints are its bulk-ingest path
-    * (`reference/http_handler.go:517-520`), so a million-bit import must be
-    * one shuffle, not a million stacked plan layers.
-    *
-    * Semantics per [[set]]: scalar/mutex — last value per id wins (apply
-    * order); set field — every value becomes a member; unseen ids create
-    * records (existence-bit parity), other fields null. */
   /** Bulk Clear: apply `Clear(id, field=value)` for every row of `writes`
     * in ONE left join (the roaring-import `action=clear` path). Semantics per
     * [[clear]]: set field — drop the members; scalar — null iff the current
@@ -148,6 +139,15 @@ object Mutation {
       }.toIndexedSeq: _*)
   }
 
+  /** Bulk Set: apply `Set(id, field=value)` for EVERY row of `writes`
+    * (`_id`, `value` string, `seq` apply order) in ONE full-outer join —
+    * the reference's /import endpoints are its bulk-ingest path
+    * (`reference/http_handler.go:517-520`), so a million-bit import must be
+    * one shuffle, not a million stacked plan layers.
+    *
+    * Semantics per [[set]]: scalar/mutex — last value per id wins (apply
+    * order); set field — every value becomes a member; unseen ids create
+    * records (existence-bit parity), other fields null. */
   def setBulk(df: DataFrame, field: String, writes: DataFrame): DataFrame = {
     val idType = df.schema("_id").dataType
     val incoming =
@@ -171,5 +171,19 @@ object Mutation {
           else coalesce(col("_new"), col(f.name))
         c.cast(f.dataType).as(f.name)
       }.toIndexedSeq: _*)
+  }
+
+  /** Bulk ClearRecords: empty `field` for every `_id` of `writes` (values
+    * ignored) in ONE left join — the roaring shard import's `clearRecords`,
+    * whose clear bitmap is one row of record bits subtracted from every row
+    * (`reference/handler.go:489-492`). A set field is left with no members,
+    * a scalar with null; other records are unchanged, and ids not in the
+    * table are no-ops. */
+  def clearRecordsBulk(df: DataFrame, field: String, writes: DataFrame): DataFrame = {
+    val cleared = writes.select(col("_id").cast(df.schema("_id").dataType).as("_id"))
+      .distinct().withColumn("_rm", lit(true))
+    df.join(cleared, Seq("_id"), "left")
+      .withColumn(field, when(col("_rm").isNull, col(field)))
+      .select(df.columns.map(col).toIndexedSeq: _*)
   }
 }

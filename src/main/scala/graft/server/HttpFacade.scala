@@ -127,18 +127,6 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
   private def tableState(name: String): DataFrame =
     spark.table(graft.core.Idents.q(name))
 
-  /** Commit `next` by upserting only its `touched` rows: TableLog upsert
-    * is O(delta), the serving-path analogue of the reference's per-shard
-    * RBF commit. */
-  private def commitState(name: String, next: DataFrame,
-                          touched: DataFrame): Unit = {
-    import org.apache.spark.sql.functions.col
-    val idT = next.schema("_id").dataType
-    graft.core.TableLog.upsert(spark, name, next.join(
-      touched.select(col("_id").cast(idT)).distinct(), Seq("_id"), "left_semi"))
-    invalidateTableCaches(name)
-  }
-
   /** `/schema/details` per-table field-cardinality memo: the endpoint is a
     * metadata probe, and recomputing one agg pass per table per request
     * would turn it into a repeated table scan. Invalidated on write/DDL
@@ -393,66 +381,43 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
           case Left(m) => plainError(ex, 400, m)
           case Right((idx, ivr, ir)) => protoWrite(ex, idx) {
             if (idx.isEmpty) sys.error("AtomicRecord.Index missing")
-            writeLock(idx) {
-              // the reference's handlePostImportAtomicRecord error switch
-              // (`http_handler.go:3117-3126`) has NO not-found case — a
-              // missing index/field falls to the default 500 with the
-              // api-layer wrapped wording (`api.go:1377-1380` "getting
-              // index"; newNotFoundError renders "<name>: index not found")
-              var t = try tableState(idx)
-                      catch { case _: Exception =>
-                        throw PlainError(500,
-                          s"getting index: $idx: index not found") }
-              val schema = t.schema
-              import spark.implicits._
-              val touched = Seq.newBuilder[org.apache.spark.sql.DataFrame]
-              // the reference's SimPowerLossAfter QA hook (`api.go:
-              // 1358-1412`): abort once the sub-import counter passes the
-              // threshold — its Qcx rolls everything back, our
-              // single-commit does the same by never committing
-              var tot = 0L
-              def checkLoss(): Unit = {
-                tot += 1
-                if (lossAfter > 0 && tot > lossAfter)
-                  throw PlainError(500, "error: update was aborted")
-              }
-              def apply1(field: String, pairs: Seq[(String, String)],
-                         clear: Boolean, wrap: String): Unit = {
-                // 500, not 404: mirrors `api.go:1400-1417` errors.Wrap over
-                // indexField's "getting index and field" over the
-                // newNotFoundError rendering
-                if (!schema.fields.exists(_.name == field))
-                  throw PlainError(500,
-                    s"$wrap: getting index and field: $field: field not found")
-                if (pairs.nonEmpty) {
-                  val writes = pairs.zipWithIndex
-                    .map { case ((id, v), i) => (id, v, i.toLong) }
-                    .toDF("_id", "value", "seq")
-                  t = if (clear) graft.core.Mutation.clearBulk(t, field, writes)
-                      else graft.core.Mutation.setBulk(t, field, writes)
-                  touched += writes.select("_id")
-                }
-              }
-              ivr.foreach { m => // pb.ImportValueRequest (BSI values)
-                checkLoss()
-                val field = m.strings(2).headOption.getOrElse(
-                  sys.error("ImportValueRequest.Field missing"))
-                apply1(field, PbQuery.valuePairs(m),
-                  m.longs(12).headOption.exists(_ == 1L),
-                  "ImportAtomicRecord ImportValueWithTx")
-              }
-              ir.foreach { m => // pb.ImportRequest (bits)
-                checkLoss()
-                val field = m.strings(2).headOption.getOrElse(
-                  sys.error("ImportRequest.Field missing"))
-                apply1(field, PbQuery.rowPairs(m),
-                  m.longs(11).headOption.exists(_ == 1L),
-                  "ImportAtomicRecord ImportWithTx")
-              }
-              val allTouched = touched.result()
-              if (allTouched.nonEmpty)
-                commitState(idx, t, allTouched.reduce(_ unionByName _))
+            // the reference's handlePostImportAtomicRecord error switch
+            // (`http_handler.go:3117-3126`) has NO not-found case — a
+            // missing index/field falls to the default 500 with the
+            // api-layer wrapped wording (`api.go:1377-1380` "getting
+            // index"; newNotFoundError renders "<name>: index not found")
+            val schema = try tableState(idx).schema
+                         catch { case _: Exception =>
+                           throw PlainError(500,
+                             s"getting index: $idx: index not found") }
+            // the reference's SimPowerLossAfter QA hook (`api.go:
+            // 1358-1412`): abort once the sub-import counter passes the
+            // threshold — its Qcx rolls everything back, our single
+            // commit does the same by never committing
+            var tot = 0L
+            def write(m: PbQuery.ImportMsg, what: String,
+                      pairs: PbQuery.ImportMsg => Seq[(String, String)],
+                      clearFlag: Int, wrap: String): FieldWrite = {
+              tot += 1
+              if (lossAfter > 0 && tot > lossAfter)
+                throw PlainError(500, "error: update was aborted")
+              val field = m.strings(2).headOption.getOrElse(
+                sys.error(s"$what.Field missing"))
+              val rows = pairs(m)
+              // 500, not 404: mirrors `api.go:1400-1417` errors.Wrap over
+              // indexField's "getting index and field" over the
+              // newNotFoundError rendering
+              if (!schema.fields.exists(_.name == field))
+                throw PlainError(500,
+                  s"$wrap: getting index and field: $field: field not found")
+              FieldWrite(field, if (m.longs(clearFlag).headOption.contains(1L))
+                ImportOp.Clear else ImportOp.Set, rows)
             }
+            applyImport(idx,
+              ivr.map(write(_, "ImportValueRequest", PbQuery.valuePairs(_), 12,
+                "ImportAtomicRecord ImportValueWithTx")) ++ // BSI values
+              ir.map(write(_, "ImportRequest", PbQuery.rowPairs, 11,
+                "ImportAtomicRecord ImportWithTx"))) // bits
           }
         }
       }
@@ -595,28 +560,22 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
             // CSV lines `id,value` applied with Set semantics (the
             // reference's `/import` endpoints, `http_handler.go:517-520`;
             // wire format here is CSV instead of the roaring/proto encoding)
-            // bulk path: ALL lines apply through ONE full-outer join
-            // (Mutation.setBulk) — per-line plan stacking would make a
-            // million-bit import a million-node analysis tree
             chk(ex, Some(idx), Auth.PermWrite)
-            writeLock(idx) {
-              val t = tableState(idx)
-              import spark.implicits._
-              val writes = body.linesIterator.filter(_.nonEmpty).zipWithIndex
-                .map { case (line, i) =>
-                  val Array(id, v) = line.split(",", 2)
-                  (id.trim, v.trim, i.toLong)
-                }.toSeq.toDF("_id", "value", "seq")
-              commitState(idx, graft.core.Mutation.setBulk(t, field, writes),
-                writes)
-            }
+            applyImport(idx, Seq(FieldWrite(field, ImportOp.Set,
+              body.linesIterator.zipWithIndex.filter(_._1.nonEmpty).map {
+                case (line, i) => line.split(",", 2) match {
+                  case Array(id, v) => (id.trim, v.trim)
+                  case _ => sys.error(
+                    s"line ${i + 1}: expected id,value, got '$line'")
+                }
+              }.toSeq)))
             s"""{"imported":true}"""
           case Array("index", idx, "field", field, "import-roaring", shard) =>
             chk(ex, Some(idx), Auth.PermWrite)
-            writeLock(idx)(importRoaring(idx, field, shard.toLong, body))
+            importRoaring(idx, field, shard.toLong, body)
           case Array("index", idx, "shard", shard, "import-roaring") =>
             chk(ex, Some(idx), Auth.PermWrite)
-            writeLock(idx)(importRoaringShard(idx, shard.toLong, body))
+            importRoaringShard(idx, shard.toLong, body)
           case _ => sys.error(
             s"expected /index/{i}/query or /index/{i}/field/{f}/import, got ${ex.getRequestURI.getPath}")
         }
@@ -1372,91 +1331,134 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
     * s·ShardWidth + p mod ShardWidth (`reference/fragment.go:36,318`). */
   private val ShardWidth = 1L << 20
 
+  /** How a [[FieldWrite]] folds onto its field: per
+    * [[graft.core.Mutation.setBulk]], [[graft.core.Mutation.clearBulk]] or
+    * [[graft.core.Mutation.clearRecordsBulk]]. */
+  private sealed trait ImportOp
+  private object ImportOp {
+    case object Set extends ImportOp
+    case object Clear extends ImportOp
+    case object ClearRecords extends ImportOp
+  }
+
+  /** One field's share of a bulk import: `(record id, value)` pairs in
+    * apply order, spelled as the wire gave them — the fold casts them to
+    * the table's id and column types. */
+  private case class FieldWrite(field: String, op: ImportOp,
+                                rows: Seq[(String, String)])
+
+  /** Commit an import's decoded writes as ONE TableLog upsert — the
+    * reference applies an import to the fragments it names under one RBF
+    * transaction (`rbf/rbf.go:3-29`, `http_handler.go:517-520`). Every
+    * import route on every wire ends here. The table state is restricted
+    * to the touched ids (a semi-join against the driver-side id list, so
+    * the table side is not shuffled) BEFORE the writes fold onto it:
+    * Spark does not push that semi-join below setBulk's full-outer join,
+    * so restricting after the fold would shuffle the whole table. The rows
+    * are the same either way, because every bulk op changes or creates
+    * only rows whose `_id` is among its writes. All writes of one request
+    * fold onto one successor in order, each as one join, never one plan
+    * layer per bit. An import with no rows commits nothing. */
+  private def applyImport(idx: String, writes: Seq[FieldWrite]): Unit =
+    writeLock(idx) {
+      import org.apache.spark.sql.functions.col
+      import spark.implicits._
+      val state = tableState(idx)
+      val touched = writes.flatMap(_.rows.map(_._1)).distinct.toDF("_id")
+        .select(col("_id").cast(state.schema("_id").dataType).as("_id"))
+      val next = writes.foldLeft(state.join(touched, Seq("_id"), "left_semi")) {
+        (t, w) =>
+          val df = w.rows.zipWithIndex.map { case ((id, v), i) => (id, v, i.toLong) }
+            .toDF("_id", "value", "seq")
+          w.op match {
+            case ImportOp.Set => graft.core.Mutation.setBulk(t, w.field, df)
+            case ImportOp.Clear => graft.core.Mutation.clearBulk(t, w.field, df)
+            case ImportOp.ClearRecords =>
+              graft.core.Mutation.clearRecordsBulk(t, w.field, df)
+          }
+      }
+      if (writes.exists(_.rows.nonEmpty)) {
+        // an id that does not cast to the table's id type names no record
+        graft.core.TableLog.upsert(spark, idx, next.filter(col("_id").isNotNull))
+        invalidateTableCaches(idx)
+      }
+    }
+
+  /** One roaring bitmap of fragment bit positions in `shard` → the write
+    * `op` of its bits to `field`: position p is row p / ShardWidth of
+    * record shard·ShardWidth + p mod ShardWidth. Decoded driver-side: the
+    * payload is one bounded HTTP body, exactly the work the reference's
+    * handler does. On a keyed index or field the payload carries
+    * TRANSLATED ids (the batch ingester pre-translates keys through
+    * /internal/translate/... and builds bitmaps over the returned uint64s,
+    * `batch/batch.go:1380-1470`), so record and row ids map back through
+    * [[KeyTranslate]]; a ClearRecords bitmap's rows are not values and are
+    * not translated. */
+  private def roaringWrites(idx: String, field: String, shard: Long,
+                            op: ImportOp, bytes: Array[Byte]): FieldWrite = {
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    val schema = tableState(idx).schema
+    def keyOf(scope: String, what: String)(id: Long): String =
+      keyTranslate.keyOf(scope, id).getOrElse(
+        sys.error(s"translating $what $id: key not found"))
+    val rec: Long => String =
+      if (schema("_id").dataType == StringType) keyOf(s"idx:$idx", "id")
+      else _.toString
+    val row: Long => String = schema(field).dataType match {
+      case StringType | ArrayType(StringType, _) if op != ImportOp.ClearRecords =>
+        keyOf(s"fld:$idx/$field", "row")
+      case _ => _.toString
+    }
+    val rows = Seq.newBuilder[(String, String)]
+    val it = graft.index.Bitmap.deserialize(bytes).getLongIterator
+    while (it.hasNext) {
+      val p = it.next()
+      rows += ((rec(shard * ShardWidth + p % ShardWidth), row(p / ShardWidth)))
+    }
+    FieldWrite(field, op, rows.result())
+  }
+
+  /** Commit the decoded writes of a roaring import and answer with its
+    * bit count — every decoded position, set or cleared. */
+  private def importBits(idx: String, writes: Seq[FieldWrite]): String = {
+    applyImport(idx, writes)
+    val bits = writes.map(_.rows.length.toLong).sum
+    graft.core.Metrics.add(graft.core.Metrics.ImportedN, bits)
+    s"""{"imported":true,"bits":$bits}"""
+  }
+
   /** `POST /index/{i}/field/{f}/import-roaring/{shard}` — the reference's
     * high-throughput pre-sharded ingest (`reference/http_handler.go:519`,
     * client pre-sharding `reference/client/batch.go`). The reference envelope
     * is protobuf (`reference/handler.go:446-455` ImportRoaringRequest:
-    * Views map[view]→roaring bytes + Action); here the envelope is JSON with
-    * base64 view payloads — no protobuf dependency — but the payload itself
-    * is the same idea: ONE serialized roaring bitmap of fragment bit
-    * positions per view, applied as a single bulk join (not per-bit writes).
-    * Supported: the `standard` view, actions `set` (default) and `clear`. */
+    * Views map[view]→roaring bytes + Action), served by [[protoRoaring]];
+    * this JSON envelope carries base64 view payloads. Either way the
+    * payload is ONE serialized roaring bitmap of fragment bit positions per
+    * view, applied as bulk joins (not per-bit writes). Supported: the
+    * `standard` view, actions `set` (default) and `clear`. */
   private def importRoaring(idx: String, field: String, shard: Long,
                             body: String): String = {
-    val t = tableState(idx)
-    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+    val node = mapper.readTree(body)
     val action = Option(node.get("action")).map(_.asText).getOrElse("set")
     require(action == "set" || action == "clear",
       s"action must be set|clear (overwrite is a block-level RBF operation " +
       s"with no table analogue here), got '$action'")
     val views = node.get("views")
     require(views != null && views.isObject, """body must carry {"views":{"standard":"<base64 roaring>"}}""")
-    import spark.implicits._
-    // keyed targets: a roaring payload carries TRANSLATED ids (the batch
-    // ingester pre-translates keys through /internal/translate/... and
-    // builds bitmaps over the returned uint64s, `batch/batch.go:1380-1470`)
-    // — map record positions and row ids back through [[KeyTranslate]] so
-    // the fbbatch flow round-trips: CreateIndexKeys → import-roaring →
-    // query by key.
-    val idKeyed = t.schema("_id").dataType ==
-      org.apache.spark.sql.types.StringType
-    val fldKeyed = t.schema(field).dataType match {
-      case org.apache.spark.sql.types.StringType => true
-      case org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.StringType, _) => true
-      case _ => false
-    }
-    def recKey(id: Long): String =
-      keyTranslate.keyOf(s"idx:$idx", id).getOrElse(
-        sys.error(s"translating id $id: key not found"))
-    def rowKey(r: Long): String =
-      keyTranslate.keyOf(s"fld:$idx/$field", r).getOrElse(
-        sys.error(s"translating row $r: key not found"))
-    var next = t
-    var bits = 0L
-    val touchedL = scala.collection.mutable.LinkedHashSet.empty[Long]
-    val touchedS = scala.collection.mutable.LinkedHashSet.empty[String]
-    val names = views.fieldNames()
-    while (names.hasNext) {
-      val view = names.next()
-      require(view == "standard",
-        s"only the standard view is supported (time/bsi views pend), got '$view'")
-      val bm = graft.index.Bitmap.deserialize(
-        java.util.Base64.getDecoder.decode(views.get(view).asText))
-      // decode driver-side: the payload is one bounded HTTP body, exactly the
-      // work the reference's handler does; the APPLY is one distributed join
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-      val it = bm.getLongIterator
-      var seq = 0L
-      while (it.hasNext) {
-        val p = it.next()
-        buf += ((shard * ShardWidth + p % ShardWidth, p / ShardWidth, seq))
-        seq += 1
-      }
-      // translate each bit's record id ONCE and reuse the mapped tuples for
-      // the touched set — recKey holds the KeyTranslate lock, so a second
-      // per-bit pass doubled time under it on the bulk-ingest hot path
-      val keyed = if (idKeyed) buf.toSeq.map(x => (recKey(x._1), x._2, x._3))
-                  else Seq.empty
-      val writes = (idKeyed, fldKeyed) match {
-        case (false, false) => buf.toSeq.toDF("_id", "value", "seq")
-        case (true, false)  => keyed.toDF("_id", "value", "seq")
-        case (false, true) =>
-          buf.toSeq.map(x => (x._1, rowKey(x._2), x._3)).toDF("_id", "value", "seq")
-        case (true, true) =>
-          keyed.map(x => (x._1, rowKey(x._2), x._3)).toDF("_id", "value", "seq")
-      }
-      next =
-        if (action == "clear") graft.core.Mutation.clearBulk(next, field, writes)
-        else graft.core.Mutation.setBulk(next, field, writes)
-      if (idKeyed) touchedS ++= keyed.map(_._1)
-      else touchedL ++= buf.map(_._1)
-      bits += seq
-    }
-    commitState(idx, next,
-      if (idKeyed) touchedS.toSeq.toDF("_id") else touchedL.toSeq.toDF("_id"))
-    graft.core.Metrics.add(graft.core.Metrics.ImportedN, bits)
-    s"""{"imported":true,"bits":$bits}"""
+    importBits(idx, views.fields.asScala.toSeq.map { e =>
+      roaringView(idx, field, shard, action == "clear", e.getKey,
+        java.util.Base64.getDecoder.decode(e.getValue.asText))
+    })
+  }
+
+  /** One view of a field-level roaring import, on either wire. */
+  private def roaringView(idx: String, field: String, shard: Long,
+                          clear: Boolean, view: String,
+                          data: Array[Byte]): FieldWrite = {
+    require(view == "standard",
+      s"only the standard view is supported (time/bsi views pend), got '$view'")
+    roaringWrites(idx, field, shard,
+      if (clear) ImportOp.Clear else ImportOp.Set, data)
   }
 
   // --------------------------------------------------- export/transactions
@@ -1496,64 +1498,39 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
 
   /** `POST /index/{i}/shard/{s}/import-roaring` (`http_handler.go:3414`,
     * `handler.go:459-493` ImportRoaringShardRequest): updates for MULTIPLE
-    * fields applied in one transaction. JSON envelope mirroring the proto:
-    * `{"views":[{"field":f,"view":"standard","set":b64,"clear":b64,
-    * "clearRecords":bool}]}`. All updates chain onto one successor state and
-    * commit as one TableLog upsert — per-shard atomicity like the
-    * reference's single Tx. */
+    * fields applied in one transaction. JSON envelope mirroring the proto
+    * ([[protoRoaringShard]]): `{"views":[{"field":f,"view":"standard",
+    * "set":b64,"clear":b64,"clearRecords":bool}]}`. All updates fold onto
+    * one successor state and commit as one TableLog upsert — per-shard
+    * atomicity like the reference's single Tx. */
   private def importRoaringShard(idx: String, shard: Long, body: String): String = {
-    import spark.implicits._
-    val t = tableState(idx)
-    val node = mapper.readTree(body)
-    val views = Option(node.get("views")).filter(_.isArray)
+    val views = Option(mapper.readTree(body).get("views")).filter(_.isArray)
       .getOrElse(sys.error("""body must carry {"views":[...]}"""))
-    var next = t
-    var bits = 0L
-    val touchedIds = scala.collection.mutable.LinkedHashSet.empty[Long]
-    views.forEach { v =>
-      val field = Option(v.get("field")).map(_.asText)
-        .getOrElse(sys.error("view update missing field"))
-      val view = Option(v.get("view")).map(_.asText).getOrElse("standard")
-      require(view == "standard",
-        s"only the standard view is supported, got '$view'")
-      val clearRecords = Option(v.get("clearRecords")).exists(_.asBoolean(false))
-      def decode(key: String): Option[Seq[(Long, Long, Long)]] =
-        Option(v.get(key)).map { b64 =>
-          val bm = graft.index.Bitmap.deserialize(
-            java.util.Base64.getDecoder.decode(b64.asText))
-          val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-          val it = bm.getLongIterator
-          var seq = 0L
-          while (it.hasNext) {
-            val p = it.next()
-            buf += ((shard * ShardWidth + p % ShardWidth, p / ShardWidth, seq))
-            seq += 1
-          }
-          buf.toSeq
-        }
-      decode("clear").foreach { ps =>
-        bits += ps.length
-        touchedIds ++= ps.map(_._1)
-        if (clearRecords)
-          // Clear is a single row of record bits subtracted from every row
-          // (`handler.go:489-492`): null the whole field for those records
-          next = graft.core.Mutation.storeIds(next,
-            ps.map(_._1).distinct.toDF("_id"), field,
-            org.apache.spark.sql.functions.lit(null))
-        else
-          next = graft.core.Mutation.clearBulk(next, field,
-            ps.toDF("_id", "value", "seq"))
-      }
-      decode("set").foreach { ps =>
-        bits += ps.length
-        touchedIds ++= ps.map(_._1)
-        next = graft.core.Mutation.setBulk(next, field,
-          ps.toDF("_id", "value", "seq"))
-      }
-    }
-    commitState(idx, next, touchedIds.toSeq.toDF("_id"))
-    graft.core.Metrics.add(graft.core.Metrics.ImportedN, bits)
-    s"""{"imported":true,"bits":$bits}"""
+    importBits(idx, views.asScala.toSeq.flatMap { v =>
+      def bitmap(key: String): Option[Array[Byte]] = Option(v.get(key))
+        .map(b => java.util.Base64.getDecoder.decode(b.asText))
+      roaringUpdate(idx, shard,
+        Option(v.get("field")).map(_.asText)
+          .getOrElse(sys.error("view update missing field")),
+        Option(v.get("view")).map(_.asText).getOrElse("standard"),
+        bitmap("clear"), bitmap("set"),
+        Option(v.get("clearRecords")).exists(_.asBoolean(false)))
+    })
+  }
+
+  /** One field update of a shard-level roaring import, on either wire: the
+    * clear bitmap applies before the set bitmap. With `clearRecords` the
+    * clear bitmap is one row of record bits subtracted from every row
+    * (`handler.go:489-492`): it empties the field for those records. */
+  private def roaringUpdate(idx: String, shard: Long, field: String,
+                            view: String, clear: Option[Array[Byte]],
+                            set: Option[Array[Byte]],
+                            clearRecords: Boolean): Seq[FieldWrite] = {
+    require(view == "standard",
+      s"only the standard view is supported, got '$view'")
+    clear.map(roaringWrites(idx, field, shard,
+      if (clearRecords) ImportOp.ClearRecords else ImportOp.Clear, _)).toSeq ++
+      set.map(roaringWrites(idx, field, shard, ImportOp.Set, _))
   }
 
   // ------------------------------------------------------ schema endpoints
@@ -1764,30 +1741,6 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
     ex.close()
   }
 
-  /** POST /index/{i}/field/{f}/import in the Go client's protobuf mode
-    * (`client.go:509-607` EncodeImport/EncodeImportValues →
-    * `http_handler.go:3040-3147` handlePostImport). The client encodes
-    * `pb.ImportRequest` for set/mutex columns — RowIDs/RowKeys are the
-    * VALUES, ColumnIDs/ColumnKeys the record ids — and
-    * `pb.ImportValueRequest` for int/decimal/timestamp columns
-    * (ColumnIDs + Values/FloatValues/StringValues); the server picks the
-    * unmarshal type from the target column's type the same way the
-    * reference picks from `field.Type()`. `?clear=true` routes through
-    * clearBulk like the handler's OptImportOptionsClear. Success answers
-    * the reference's `importOk` — a marshaled `ImportResponse{Err:""}`,
-    * which is zero bytes — with 200; errors follow the handler's
-    * `http.Error` shape (406 non-protobuf Accept, 404 unknown index/field,
-    * 400 undecodable body).
-    *
-    * One divergence, inherent to the storage mapping: an unkeyed mutex
-    * ("ID") column and an int (BSI) column are both LongType here, so both
-    * decode as ImportValueRequest; a client importing an unkeyed-mutex
-    * field with ImportRequest framing is mis-read (keyed mutex — STRING —
-    * columns take the ImportRequest path correctly). */
-  /** Shared rim of the protobuf-mode write routes: auth + the reference's
-    * `validateProtobufHeader` Accept check (`http_handler.go:2621-2629`),
-    * Go `http.Error`-shaped failures, and the zero-byte 200 ack (importOk —
-    * a marshaled `ImportResponse{Err:""}` is empty). */
   /** Route-level Go-`http.Error` shape (for failures before a handler's own
     * error machinery is in scope, e.g. a malformed shard path segment). */
   private def plainError(ex: HttpExchange, code: Int, text: String): Unit = {
@@ -1799,6 +1752,10 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
     ex.close()
   }
 
+  /** Shared rim of the protobuf-mode write routes: auth + the reference's
+    * `validateProtobufHeader` Accept check (`http_handler.go:2621-2629`),
+    * Go `http.Error`-shaped failures, and the zero-byte 200 ack (importOk —
+    * a marshaled `ImportResponse{Err:""}` is empty). */
   private def protoWrite(ex: HttpExchange, idx: String)(f: => Unit): Unit = {
     graft.core.Metrics.inc(graft.core.Metrics.HttpRequest)
     val outcome: Either[PlainError, Unit] =
@@ -1827,92 +1784,89 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
     ex.close()
   }
 
+  /** POST /index/{i}/field/{f}/import in the Go client's protobuf mode
+    * (`client.go:509-607` EncodeImport/EncodeImportValues →
+    * `http_handler.go:3040-3147` handlePostImport). The client encodes
+    * `pb.ImportRequest` for set/mutex columns — RowIDs/RowKeys are the
+    * VALUES, ColumnIDs/ColumnKeys the record ids — and
+    * `pb.ImportValueRequest` for int/decimal/timestamp columns
+    * (ColumnIDs + Values/FloatValues/StringValues); the server picks the
+    * unmarshal type from the target column's type the same way the
+    * reference picks from `field.Type()`. `?clear=true` routes through
+    * clearBulk like the handler's OptImportOptionsClear. Success answers
+    * the reference's `importOk` — a marshaled `ImportResponse{Err:""}`,
+    * which is zero bytes — with 200; errors follow the handler's
+    * `http.Error` shape (406 non-protobuf Accept, 404 unknown index/field,
+    * 400 undecodable body).
+    *
+    * One divergence, inherent to the storage mapping: an unkeyed mutex
+    * ("ID") column and an int (BSI) column are both LongType here, so both
+    * decode as ImportValueRequest; a client importing an unkeyed-mutex
+    * field with ImportRequest framing is mis-read (keyed mutex — STRING —
+    * columns take the ImportRequest path correctly). */
   private def protoImport(ex: HttpExchange, idx: String, field: String,
                           body: Array[Byte]): Unit = protoWrite(ex, idx) {
     import org.apache.spark.sql.types._
-    {
-        val schema =
-          try tableState(idx).schema
-          catch { case _: Exception => throw PlainError(404, "index not found") }
-        val fld = schema.fields.find(_.name == field).getOrElse(
-          throw PlainError(404, "field not found"))
-        val doClear = Option(ex.getRequestURI.getQuery).getOrElse("")
-          .split("&").contains("clear=true")
-        val m = new PbQuery.ImportMsg(body)
-        // (record id, value) pairs by column type, stringified onto the
-        // same bulk path as the CSV wire (setBulk casts to the column
-        // type). Decode shapes are shared with /import-atomic-record
-        // ([[PbQuery.valuePairs]]/[[PbQuery.rowPairs]]); the value path
-        // additionally tolerates ImportRequest framing for unkeyed MUTEX
-        // columns (they share LongType with INT, so this type dispatch
-        // can't distinguish — rowIdFallback reads RowIDs(4) as values
-        // when no value list is present).
-        val pairs: Seq[(String, String)] = fld.dataType match {
-          case LongType | IntegerType | ShortType | DoubleType | FloatType |
-               TimestampType | _: DecimalType =>
-            PbQuery.valuePairs(m, rowIdFallback = true)
-          case _ => // keyed mutex / string / set columns: ImportRequest
-            PbQuery.rowPairs(m)
-        }
-        writeLock(idx) {
-          val t = tableState(idx)
-          import spark.implicits._
-          val writes = pairs.zipWithIndex
-            .map { case ((id, v), i) => (id, v, i.toLong) }
-            .toDF("_id", "value", "seq")
-          val next =
-            if (doClear) graft.core.Mutation.clearBulk(t, field, writes)
-            else graft.core.Mutation.setBulk(t, field, writes)
-          commitState(idx, next, writes)
-        }
+    val schema =
+      try tableState(idx).schema
+      catch { case _: Exception => throw PlainError(404, "index not found") }
+    val fld = schema.fields.find(_.name == field).getOrElse(
+      throw PlainError(404, "field not found"))
+    val doClear = Option(ex.getRequestURI.getQuery).getOrElse("")
+      .split("&").contains("clear=true")
+    val m = new PbQuery.ImportMsg(body)
+    // (record id, value) pairs by column type, stringified like every
+    // import wire. Decode shapes are shared with /import-atomic-record
+    // ([[PbQuery.valuePairs]]/[[PbQuery.rowPairs]]); the value path
+    // additionally tolerates ImportRequest framing for unkeyed MUTEX
+    // columns (they share LongType with INT, so this type dispatch
+    // can't distinguish — rowIdFallback reads RowIDs(4) as values
+    // when no value list is present).
+    val pairs: Seq[(String, String)] = fld.dataType match {
+      case LongType | IntegerType | ShortType | DoubleType | FloatType |
+           TimestampType | _: DecimalType =>
+        PbQuery.valuePairs(m, rowIdFallback = true)
+      case _ => // keyed mutex / string / set columns: ImportRequest
+        PbQuery.rowPairs(m)
     }
+    applyImport(idx, Seq(FieldWrite(field,
+      if (doClear) ImportOp.Clear else ImportOp.Set, pairs)))
   }
 
-  /** The Go client's roaring import wires, translated onto the existing
-    * JSON-envelope handlers (same decode, same bulk-join apply):
-    * `pb.ImportRoaringRequest` (`importRoaringBitmap`, `client.go:694-733`
-    * — view Name "" is the standard view, Clear flag → action) and
-    * `pb.ImportRoaringShardRequest` (`ImportRoaringShard`,
-    * `client.go:661-680` — per-field Set/Clear roaring payloads +
-    * ClearRecords, one transaction). */
+  /** The Go client's roaring import wires, decoded straight into the same
+    * writes as the JSON envelopes' ([[importRoaring]],
+    * [[importRoaringShard]]): `pb.ImportRoaringRequest`
+    * (`importRoaringBitmap`, `client.go:694-733` — view Name "" is the
+    * standard view, Clear flag → action) and `pb.ImportRoaringShardRequest`
+    * (`ImportRoaringShard`, `client.go:661-680` — per-field Set/Clear
+    * roaring payloads + ClearRecords, one transaction). */
   private def protoRoaring(ex: HttpExchange, idx: String, field: String,
                            shard: Long, body: Array[Byte]): Unit =
     protoWrite(ex, idx) {
-      val m = new PbQuery.ImportMsg(body)
-      val doClear = m.longs(1).contains(1L)
-      val views = new Proto.Reader(body).fields.getOrElse(2, Seq.empty)
+      val doClear = new PbQuery.ImportMsg(body).longs(1).contains(1L)
+      importBits(idx, new Proto.Reader(body).fields.getOrElse(2, Seq.empty)
         .collect { case b: Array[Byte] =>
           val v = new Proto.Reader(b)
-          val name = v.str(1).filter(_.nonEmpty).getOrElse("standard")
-          val data = v.fields.get(2).flatMap(_.headOption)
-            .collect { case d: Array[Byte] => d }.getOrElse(Array.emptyByteArray)
-          s"""${js(name)}:${js(java.util.Base64.getEncoder.encodeToString(data))}"""
-        }
-      val action = if (doClear) "clear" else "set"
-      val json = s"""{"action":"$action","views":{${views.mkString(",")}}}"""
-      writeLock(idx)(importRoaring(idx, field, shard, json))
+          roaringView(idx, field, shard, doClear,
+            v.str(1).filter(_.nonEmpty).getOrElse("standard"),
+            v.fields.get(2).flatMap(_.headOption)
+              .collect { case d: Array[Byte] => d }.getOrElse(Array.emptyByteArray))
+        })
     }
 
   private def protoRoaringShard(ex: HttpExchange, idx: String, shard: Long,
                                 body: Array[Byte]): Unit =
     protoWrite(ex, idx) {
-      val updates = new Proto.Reader(body).fields.getOrElse(2, Seq.empty)
+      importBits(idx, new Proto.Reader(body).fields.getOrElse(2, Seq.empty)
         .collect { case b: Array[Byte] =>
           val v = new Proto.Reader(b)
-          def b64(f: Int): Option[String] = v.fields.get(f)
-            .flatMap(_.headOption).collect { case d: Array[Byte] if d.nonEmpty =>
-              java.util.Base64.getEncoder.encodeToString(d) }
-          val parts = Seq(
-            Some(s""""field":${js(v.str(1).getOrElse(sys.error("RoaringUpdate.Field missing")))}"""),
-            Some(s""""view":${js(v.str(2).filter(_.nonEmpty).getOrElse("standard"))}"""),
-            b64(3).map(s => s""""clear":${js(s)}"""),
-            b64(4).map(s => s""""set":${js(s)}"""),
-            Some(s""""clearRecords":${v.fields.get(5).exists(_.headOption.contains(1L))}""")
-          ).flatten
-          parts.mkString("{", ",", "}")
-        }
-      val json = s"""{"views":[${updates.mkString(",")}]}"""
-      writeLock(idx)(importRoaringShard(idx, shard, json))
+          def bitmap(f: Int): Option[Array[Byte]] = v.fields.get(f)
+            .flatMap(_.headOption).collect { case d: Array[Byte] if d.nonEmpty => d }
+          roaringUpdate(idx, shard,
+            v.str(1).getOrElse(sys.error("RoaringUpdate.Field missing")),
+            v.str(2).filter(_.nonEmpty).getOrElse("standard"),
+            bitmap(3), bitmap(4), v.fields.get(5).exists(_.headOption.contains(1L)))
+        }.flatten)
     }
 
   /** An error answered the way Go's `http.Error` does — text/plain body of
@@ -2002,7 +1956,6 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
     * would otherwise collect the whole table into the server's heap. */
   private val MaxWireRows = 100000
 
-  /** DataFrame → reference wire shape. */
   /** The `?plan=true` operator tree — the reference renders its sql3 plan
     * as nested maps with `_op`/`_schema` plus op-specific keys
     * (`sql3/planner/opprojection.go:61-75`). Ours renders the FINAL Spark
@@ -2033,6 +1986,7 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
     node(df.queryExecution.executedPlan, 0)
   }
 
+  /** DataFrame → reference wire shape. */
   private def toWire(df: DataFrame): String = {
     val fields = df.schema.fields.map(f =>
       s"""{"name":${js(f.name)},"base-type":${js(f.dataType.simpleString)}}""")

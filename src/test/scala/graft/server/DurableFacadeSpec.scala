@@ -293,6 +293,67 @@ class DurableFacadeSpec extends SparkSpec {
     } finally { ch.shutdownNow(); hf.stop(); gf.stop() }
   }
 
+  private val importWh = java.nio.file.Files
+    .createTempDirectory("graft-import-wh").toString
+
+  test("every import wire commits durably: CSV, protobuf, roaring and " +
+      "atomic-record imports are visible after Ddl.restoreSession") {
+    def vint(o: java.io.ByteArrayOutputStream, v: Long): Unit = {
+      var x = v
+      while ((x & ~0x7fL) != 0) { o.write(((x & 0x7f) | 0x80).toInt); x >>>= 7 }
+      o.write(x.toInt)
+    }
+    def bytesField(o: java.io.ByteArrayOutputStream, f: Int,
+                   b: Array[Byte]): Unit = {
+      vint(o, (f << 3) | 2); vint(o, b.length.toLong); o.write(b)
+    }
+    def packed(o: java.io.ByteArrayOutputStream, f: Int, v: Long): Unit =
+      bytesField(o, f, { val b = new java.io.ByteArrayOutputStream()
+                         vint(b, v); b.toByteArray })
+    // pb.ImportValueRequest{Field=2, ColumnIDs=5, Values=6}
+    def valueReq(id: Long, v: Long): Array[Byte] = {
+      val o = new java.io.ByteArrayOutputStream()
+      bytesField(o, 2, "s_nationkey".getBytes("UTF-8"))
+      packed(o, 5, id); packed(o, 6, v); o.toByteArray
+    }
+    def postProto(port: Int, path: String, body: Array[Byte]): Int =
+      client.send(
+        HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$path"))
+          .header("Content-Type", "application/x-protobuf")
+          .header("Accept", "application/x-protobuf")
+          .POST(HttpRequest.BodyPublishers.ofByteArray(body)).build(),
+        HttpResponse.BodyHandlers.ofByteArray()).statusCode()
+    val s1 = spark.newSession()
+    s1.conf.set("spark.graft.warehouse", importWh)
+    val f1 = new HttpFacade(s1, sfDir, 0)
+    val p1 = f1.start()
+    try {
+      assert(post(p1, "/index/supplier/field/s_nationkey/import", "1,61")._1 == 200)
+      assert(postProto(p1, "/index/supplier/field/s_nationkey/import",
+        valueReq(2, 62)) == 200)
+      val bm = new org.roaringbitmap.longlong.Roaring64NavigableMap()
+      bm.addLong(63L * (1L << 20) + 3)
+      val b64 = java.util.Base64.getEncoder
+        .encodeToString(graft.index.Bitmap.serialize(bm))
+      assert(post(p1, "/index/supplier/field/s_nationkey/import-roaring/0",
+        s"""{"views":{"standard":"$b64"}}""")._1 == 200)
+      // pb.AtomicRecord{Index=1, Ivr=3}
+      val atomic = new java.io.ByteArrayOutputStream()
+      bytesField(atomic, 1, "supplier".getBytes("UTF-8"))
+      bytesField(atomic, 3, valueReq(4, 64))
+      assert(postProto(p1, "/import-atomic-record", atomic.toByteArray) == 200)
+    } finally f1.stop()
+
+    val s2 = spark.newSession()
+    s2.conf.set("spark.graft.warehouse", importWh)
+    assert(graft.sql.Ddl.restoreSession(s2).contains("supplier"))
+    val got = s2.table("supplier").filter("_id BETWEEN 1 AND 4")
+      .select("_id", "s_nationkey").collect()
+      .map(r => r.getAs[Number](0).longValue -> r.getAs[Number](1).longValue)
+      .toMap
+    assert(got == Map(1L -> 61L, 2L -> 62L, 3L -> 63L, 4L -> 64L), got)
+  }
+
   override def afterAll(): Unit = {
     def rm(p: java.nio.file.Path): Unit = {
       if (java.nio.file.Files.isDirectory(p))
@@ -301,6 +362,7 @@ class DurableFacadeSpec extends SparkSpec {
       java.nio.file.Files.deleteIfExists(p)
     }
     rm(java.nio.file.Paths.get(wh))
+    rm(java.nio.file.Paths.get(importWh))
     super.afterAll()
   }
 }

@@ -247,6 +247,9 @@ class HttpFacadeSpec extends SparkSpec {
     // FieldValue answers a ValCount — (value, count=1), `executor.go:943`
     val (c2, b2) = post("/index/part/query", "FieldValue(field=p_size, column=1)")
     assert(c2 == 200 && b2.contains(""""data":[[77,1]]"""))
+    // a line that is not `id,value` is a 400 that names it
+    val (c3, b3) = post("/index/part/field/p_size/import", "3,99\nbogus")
+    assert(c3 == 400 && b3.contains("line 2") && b3.contains("id,value"), b3)
   }
 
   test("import-roaring round-trips: imported bits visible to PQL Count") {
@@ -1171,5 +1174,102 @@ class HttpFacadeSpec extends SparkSpec {
     val parsed = graft.tools.Advise.parseLog(out.linesIterator.toSeq)
     assert(!parsed.exists(_._3.contains("DROP TABLE")), parsed.toString)
     assert(parsed.contains((false, "", "SELECT 1 AS one")), parsed.toString)
+  }
+
+  private def roaring64(bits: Long*): String = {
+    val bm = new org.roaringbitmap.longlong.Roaring64NavigableMap()
+    bits.foreach(bm.addLong)
+    java.util.Base64.getEncoder.encodeToString(graft.index.Bitmap.serialize(bm))
+  }
+
+  private def send(method: String, path: String, body: String): (Int, String) = {
+    val req = HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$path"))
+      .header("Content-Type", "application/json")
+      .header("Accept", "application/json")
+      .method(method, HttpRequest.BodyPublishers.ofString(body)).build()
+    val r = client.send(req, HttpResponse.BodyHandlers.ofString())
+    (r.statusCode(), r.body())
+  }
+
+  test("shard import-roaring translates keyed record and row ids, like the " +
+      "field-level route (batch/batch.go:1380-1470)") {
+    assert(send("POST", "/index/fbs", """{"options":{"keys":true}}""")._1 == 200)
+    assert(send("POST", "/index/fbs/field/tier",
+      """{"options":{"type":"mutex","keys":true}}""")._1 == 200)
+    val (_, recB) = send("POST",
+      "/internal/translate/index/fbs/keys/create", """["alice","bob"]""")
+    val (_, rowB) = send("POST",
+      "/internal/translate/field/fbs/tier/keys/create", """["gold","silver"]""")
+    def idOf(body: String, k: String): Long =
+      s""""$k":(\\d+)""".r.findFirstMatchIn(body).get.group(1).toLong
+    val (a, b) = (idOf(recB, "alice"), idOf(recB, "bob"))
+    val (g, s) = (idOf(rowB, "gold"), idOf(rowB, "silver"))
+    val W = 1L << 20
+    val (c1, b1) = post("/index/fbs/shard/0/import-roaring",
+      s"""{"views":[{"field":"tier","set":"${roaring64(g * W + a, s * W + b)}"}]}""")
+    assert(c1 == 200 && b1.contains(""""bits":2"""), b1)
+    val (cq, bq) = post("/index/fbs/query",
+      "Count(Row(tier='gold')) Row(tier='silver') Count(All())")
+    assert(cq == 200 && bq.contains(""""data":[[1]]""") && bq.contains("bob") &&
+      bq.contains(""""data":[[2]]"""), bq)
+    val (c2, b2) = post("/index/fbs/shard/0/import-roaring",
+      s"""{"views":[{"field":"tier","clear":"${roaring64(g * W + a)}"}]}""")
+    assert(c2 == 200, b2)
+    val (cq2, bq2) = post("/index/fbs/query", "Count(Row(tier='gold'))")
+    assert(cq2 == 200 && bq2.contains(""""data":[[0]]"""), bq2)
+    assert(send("DELETE", "/index/fbs", "")._1 == 200)
+  }
+
+  test("shard import-roaring clearRecords on a set field empties only the " +
+      "cleared records (handler.go:489-492)") {
+    assert(send("POST", "/index/crs", "")._1 == 200)
+    assert(send("POST", "/index/crs/field/tags",
+      """{"options":{"type":"set"}}""")._1 == 200)
+    assert(post("/index/crs/field/tags/import",
+      "1,10\n1,11\n2,20\n3,30\n3,31\n4,40")._1 == 200)
+    // one request: clear records {1,2} of tags, add 32 to record 3
+    val W = 1L << 20
+    val (c, b) = post("/index/crs/shard/0/import-roaring",
+      s"""{"views":[{"field":"tags","clear":"${roaring64(1, 2)}",
+        "clearRecords":true,"set":"${roaring64(32 * W + 3)}"}]}""")
+    assert(c == 200 && b.contains(""""bits":3"""), b)
+    val (cq, bq) = post("/index/crs/query",
+      "Count(Union(Row(tags=10), Row(tags=11), Row(tags=20))) " +
+        "Count(Intersect(Row(tags=30), Row(tags=31), Row(tags=32))) " +
+        "Count(Row(tags=40))")
+    assert(cq == 200 && """"data":\[\[(\d+)\]\]""".r.findAllMatchIn(bq)
+      .map(_.group(1)).toSeq == Seq("0", "1", "1"), bq)
+    assert(send("DELETE", "/index/crs", "")._1 == 200)
+  }
+
+  test("an import reads only the rows it touches: a 2-bit import-roaring " +
+      "on a 200k-row table shuffles under 1% of its rows") {
+    import org.apache.spark.sql.functions.col
+    val n = 200000L
+    graft.core.TableLog.replace(spark, "bigimp",
+      spark.range(n).select(col("id").as("_id"), (col("id") % 100).as("v")),
+      checkpoint = true)
+    val shuffled = new java.util.concurrent.atomic.AtomicLong
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(te.taskMetrics).foreach(m =>
+          shuffled.addAndGet(m.shuffleWriteMetrics.recordsWritten))
+    }
+    val W = 1L << 20
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val (c, b) = post("/index/bigimp/field/v/import-roaring/0",
+        s"""{"views":{"standard":"${roaring64(7 * W + 5, 7 * W + 150000)}"}}""")
+      assert(c == 200 && b.contains(""""bits":2"""), b)
+      Thread.sleep(1000) // listener events are async
+    } finally spark.sparkContext.removeSparkListener(l)
+    info(s"shuffle records written by the import: ${shuffled.get}")
+    assert(shuffled.get < n / 100,
+      s"the import shuffled ${shuffled.get} records for a $n-row table")
+    val (cq, bq) = post("/index/bigimp/query",
+      "Count(Row(v=7)) Count(All())")
+    assert(cq == 200 && bq.contains(""""data":[[2002]]""") &&
+      bq.contains(s""""data":[[$n]]"""), bq)
   }
 }
