@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -14,10 +14,14 @@ import org.apache.spark.sql.types._
   * here. Each transform returns the successor table; a sink can persist it via
   * overwrite (parquet) or merge (Delta).
   *
-  * Scale note: point writes compile to a full-column `when(_id === k, …)`
-  * projection — one narrow scan, no shuffle. On a real cluster the same
-  * expressions feed a Delta `MERGE WHEN MATCHED` so only touched files
-  * rewrite; the semantics below stay identical.
+  * Scale note: `Set` and `Clear` have one implementation, the bulk ops
+  * below. A PQL call is a one-row [[FieldWrite]] and an import is many;
+  * [[touched]] restricts the table state to the written ids before the
+  * writes fold onto it, so a write rewrites only its own records, and
+  * [[commit]] upserts those rows into [[TableLog]] — the one write-commit
+  * site, like the reference's one RBF write transaction. `ClearRow`,
+  * `Store` and `Delete` are column-wide projections or filters of the
+  * whole state.
   *
   * Semantic quirks preserved (SURVEY.md §1.2):
   *  - set fields accumulate values; `Set` adds a member (dedup on write)
@@ -33,41 +37,6 @@ object Mutation {
 
   private def addMember(arr: Column, v: Column): Column =
     array_distinct(concat(coalesce(arr, array()), array(v)))
-
-  /** Set(id, field=value): point write. Set field → add member;
-    * scalar/mutex/bool → replace (`reference/executor.go:6194`,
-    * mutex replace `reference/field.go:352-365`). A Set on an id not yet in
-    * the table CREATES the record — the reference sets the existence bit for
-    * unseen column ids — as a null-filled row carrying only _id and the
-    * written field, appended via anti-join (no driver-side existence check).
-    */
-  def set(df: DataFrame, id: Any, field: String, value: Column): DataFrame = {
-    val next =
-      if (isSet(df, field)) when(col("_id") === lit(id), addMember(col(field), value))
-        .otherwise(col(field))
-      else when(col("_id") === lit(id), value).otherwise(col(field))
-    val updated = df.withColumn(field, next)
-    val newRow = df.sparkSession.range(1).select(df.schema.fields.map { f =>
-      if (f.name == "_id") lit(id).cast(f.dataType).as("_id")
-      else if (f.name == field)
-        (if (isSet(df, field)) array(value) else value).cast(f.dataType).as(field)
-      else lit(null).cast(f.dataType).as(f.name)
-    }.toIndexedSeq: _*)
-    updated.unionByName(
-      newRow.join(df.filter(col("_id") === lit(id)).select("_id"), Seq("_id"), "left_anti")
-        .select(updated.columns.map(col).toIndexedSeq: _*))
-  }
-
-  /** Clear(id, field=value): remove one bit. Set field → drop member; scalar →
-    * null out iff current value matches (`reference/executor.go:5895`). */
-  def clear(df: DataFrame, id: Any, field: String, value: Column): DataFrame = {
-    val next =
-      if (isSet(df, field)) when(col("_id") === lit(id), array_remove(col(field), value))
-        .otherwise(col(field))
-      else when(col("_id") === lit(id) && col(field) === value, lit(null).cast(df.schema(field).dataType))
-        .otherwise(col(field))
-    df.withColumn(field, next)
-  }
 
   /** ClearRow(field=value): clear value's bitmap across ALL records
     * (`reference/executor.go:5976`). */
@@ -113,10 +82,11 @@ object Mutation {
   def deleteIds(df: DataFrame, ids: DataFrame): DataFrame =
     df.join(ids.select(col("_id")), Seq("_id"), "left_anti")
 
-  /** Bulk Clear: apply `Clear(id, field=value)` for every row of `writes`
-    * in ONE left join (the roaring-import `action=clear` path). Semantics per
-    * [[clear]]: set field — drop the members; scalar — null iff the current
-    * value is among the cleared ones. Ids not in the table are no-ops. */
+  /** Bulk Clear: apply `Clear(id, field=value)` — remove one bit
+    * (`reference/executor.go:5895`) — for every row of `writes` in ONE left
+    * join. Set field: drop the members (a NULL set stays NULL); scalar: null
+    * iff the current value is among the cleared ones. Ids not in the table
+    * are no-ops. */
   def clearBulk(df: DataFrame, field: String, writes: DataFrame): DataFrame = {
     val idType = df.schema("_id").dataType
     val fieldT = df.schema(field).dataType
@@ -129,7 +99,7 @@ object Mutation {
           if (f.name != field) col(f.name)
           else if (isSet(df, field))
             when(col("_rm").isNotNull,
-              array_except(coalesce(col(f.name), array().cast(fieldT)), col("_rm")))
+              array_except(col(f.name), col("_rm")))
               .otherwise(col(f.name))
           else
             when(col("_rm").isNotNull && array_contains(col("_rm"), col(f.name)),
@@ -139,15 +109,18 @@ object Mutation {
       }.toIndexedSeq: _*)
   }
 
-  /** Bulk Set: apply `Set(id, field=value)` for EVERY row of `writes`
-    * (`_id`, `value` string, `seq` apply order) in ONE full-outer join —
-    * the reference's /import endpoints are its bulk-ingest path
-    * (`reference/http_handler.go:517-520`), so a million-bit import must be
-    * one shuffle, not a million stacked plan layers.
+  /** Bulk Set: apply `Set(id, field=value)` (`reference/executor.go:6194`)
+    * for EVERY row of `writes` (`_id`, `value`, `seq` apply order) in ONE
+    * full-outer join — the reference's /import endpoints are its
+    * bulk-ingest path (`reference/http_handler.go:517-520`), so a
+    * million-bit import must be one shuffle, not a million stacked plan
+    * layers.
     *
-    * Semantics per [[set]]: scalar/mutex — last value per id wins (apply
-    * order); set field — every value becomes a member; unseen ids create
-    * records (existence-bit parity), other fields null. */
+    * Scalar/mutex: last value per id wins (apply order; mutex replace,
+    * `reference/field.go:352-365`). Set field: every value becomes a
+    * member, dedup on write. An unseen id creates its record — the
+    * reference sets the existence bit for unseen column ids — with the
+    * other fields null. */
   def setBulk(df: DataFrame, field: String, writes: DataFrame): DataFrame = {
     val idType = df.schema("_id").dataType
     val incoming =
@@ -176,9 +149,9 @@ object Mutation {
   /** Bulk ClearRecords: empty `field` for every `_id` of `writes` (values
     * ignored) in ONE left join — the roaring shard import's `clearRecords`,
     * whose clear bitmap is one row of record bits subtracted from every row
-    * (`reference/handler.go:489-492`). A set field is left with no members,
-    * a scalar with null; other records are unchanged, and ids not in the
-    * table are no-ops. */
+    * (`reference/handler.go:489-492`). The field becomes null for those
+    * records; other records are unchanged, and ids not in the table are
+    * no-ops. */
   def clearRecordsBulk(df: DataFrame, field: String, writes: DataFrame): DataFrame = {
     val cleared = writes.select(col("_id").cast(df.schema("_id").dataType).as("_id"))
       .distinct().withColumn("_rm", lit(true))
@@ -186,4 +159,72 @@ object Mutation {
       .withColumn(field, when(col("_rm").isNull, col(field)))
       .select(df.columns.map(col).toIndexedSeq: _*)
   }
+
+  /** How a [[FieldWrite]] folds onto its field: [[setBulk]], [[clearBulk]]
+    * or [[clearRecordsBulk]]. */
+  sealed trait WriteOp
+  object WriteOp {
+    case object Set extends WriteOp
+    case object Clear extends WriteOp
+    case object ClearRecords extends WriteOp
+  }
+
+  /** One field's share of a write: `(record id, value)` rows in apply
+    * order, spelled as strings the way an import wire carries them — the
+    * fold casts them to the table's id and column types. `value` is the
+    * fold's value column: the row's string, or the typed literal of a PQL
+    * `Set`/`Clear` call, whose one row then carries no value string (a
+    * literal is never round-tripped through a string). */
+  final case class FieldWrite(field: String, op: WriteOp,
+                              rows: Seq[(String, String)],
+                              value: Column = col("value"))
+
+  /** The written ids, distinct, as the table's `_id` type: a driver-side
+    * list, so a join against it broadcasts the list and never shuffles the
+    * table. An id that does not cast names no record. */
+  private def writtenIds(state: DataFrame, writes: Seq[FieldWrite]): DataFrame = {
+    import state.sparkSession.implicits._
+    writes.flatMap(_.rows.map(_._1)).distinct.toDF("_id")
+      .select(col("_id").cast(state.schema("_id").dataType).as("_id"))
+  }
+
+  /** The rows `writes` change or create: `state` restricted to the written
+    * ids, then each write folded on in order, one join per write. The
+    * restriction comes first because Spark does not push a semi-join below
+    * setBulk's full-outer join, so restricting after the fold would shuffle
+    * the whole table. The rows are the same either way: every bulk op
+    * changes or creates only rows whose `_id` is among its writes. */
+  def touched(state: DataFrame, writes: Seq[FieldWrite]): DataFrame = {
+    import state.sparkSession.implicits._
+    writes.foldLeft(state.join(writtenIds(state, writes), Seq("_id"), "left_semi")) {
+      (t, w) =>
+        val rows = w.rows.zipWithIndex.map { case ((id, v), i) => (id, v, i.toLong) }
+          .toDF("_id", "value", "seq").withColumn("value", w.value)
+        w.op match {
+          case WriteOp.Set          => setBulk(t, w.field, rows)
+          case WriteOp.Clear        => clearBulk(t, w.field, rows)
+          case WriteOp.ClearRecords => clearRecordsBulk(t, w.field, rows)
+        }
+    }.filter(col("_id").isNotNull)
+  }
+
+  /** The whole successor of `state` after `writes` (the in-memory PQL
+    * runner's): the untouched rows as they are — null-`_id` rows included,
+    * as [[TableLog]]'s view keeps them — plus [[touched]]. The anti-join
+    * broadcasts the id list, so the table is not shuffled. */
+  def applied(state: DataFrame, writes: Seq[FieldWrite]): DataFrame =
+    state.join(writtenIds(state, writes), Seq("_id"), "left_anti")
+      .unionByName(touched(state, writes))
+
+  /** The one write-commit site of `Set`/`Clear`, for PQL calls and every
+    * import route alike: under the table's TableLog lock, read its view,
+    * and upsert the [[touched]] rows as ONE statement — the reference
+    * applies a write to the fragments it names under one RBF transaction
+    * (`rbf/rbf.go:3-29`, `http_handler.go:517-520`). Holding the lock
+    * across read and upsert keeps a concurrent same-row write from another
+    * frontend from being lost. A write with no rows commits nothing. */
+  def commit(spark: SparkSession, table: String, writes: Seq[FieldWrite]): Unit =
+    if (writes.exists(_.rows.nonEmpty)) TableLog.locked(spark, table) {
+      TableLog.upsert(spark, table, touched(spark.table(Idents.q(table)), writes))
+    }
 }

@@ -243,11 +243,6 @@ final class Compiler(table: DataFrame, timeCol: Option[String] = None,
 
   // ------------------------------------------------------------- write calls
 
-  /** Write-call names (`reference/pql/pql.peg:10-14`, dispatch
-    * `reference/executor.go:723-835`). */
-  def isWrite(call: Call): Boolean =
-    Set("Set", "Clear", "ClearRow", "Store", "Delete")(call.name)
-
   private val writeReserved = Set("from", "to", "timestamp", "field")
 
   private def fieldValueOf(call: Call): (String, Column) = {
@@ -289,12 +284,7 @@ final class Compiler(table: DataFrame, timeCol: Option[String] = None,
   }
 
   private def writeImpl(call: Call): DataFrame = call.name match {
-    case "Set" =>
-      val (f, v) = fieldValueOf(call)
-      graft.core.Mutation.set(table, idOf(call), f, v)
-    case "Clear" =>
-      val (f, v) = fieldValueOf(call)
-      graft.core.Mutation.clear(table, idOf(call), f, v)
+    case "Set" | "Clear" => graft.core.Mutation.applied(table, Seq(fieldWrite(call)))
     case "ClearRow" =>
       val (f, v) = fieldValueOf(call)
       graft.core.Mutation.clearRow(table, f, v)
@@ -312,21 +302,27 @@ final class Compiler(table: DataFrame, timeCol: Option[String] = None,
     case other => sys.error(s"not a write call: $other")
   }
 
-  /** The rows a write call touches, derived from the BEFORE state — what a
+  /** A `Set`/`Clear` call as the one-row write the import path folds too:
+    * its record id, and its value as the typed literal. */
+  private def fieldWrite(call: Call): graft.core.Mutation.FieldWrite = {
+    import graft.core.Mutation.{FieldWrite, WriteOp}
+    val (f, v) = fieldValueOf(call)
+    FieldWrite(f, if (call.name == "Set") WriteOp.Set else WriteOp.Clear,
+      Seq((idOf(call).toString, null)), v)
+  }
+
+  /** What a write call commits, derived from the BEFORE state — what a
     * durable sink needs to persist O(touched) instead of rewriting the
     * table (the reference's RBF writes are O(write), `reference/rbf/
-    * rbf.go:3-29`). `Upserted` ids index into the SUCCESSOR state (includes
-    * records the write creates); `Removed` ids are deleted outright. */
+    * rbf.go:3-29`). `Folded` is a `Set`/`Clear` write for
+    * [[graft.core.Mutation.commit]]; `Upserted` ids index into the
+    * SUCCESSOR state; `Removed` ids are deleted outright. */
   def writeEffect(call: Call): Compiler.WriteEffect = {
     def memberPred(f: String, v: Column): Column =
       if (isSet(f)) array_contains(coalesce(col(f), array().cast(dtype(f))), v)
       else col(f) === v
-    def oneId: DataFrame = {
-      val idT = table.schema("_id").dataType
-      table.sparkSession.range(1).select(lit(idOf(call)).cast(idT).as("_id"))
-    }
     call.name match {
-      case "Set" | "Clear" => Compiler.Upserted(oneId)
+      case "Set" | "Clear" => Compiler.Folded(fieldWrite(call))
       case "ClearRow" =>
         val (f, v) = fieldValueOf(call)
         Compiler.Upserted(table.filter(memberPred(f, v)).select("_id"))
@@ -451,10 +447,7 @@ final class Compiler(table: DataFrame, timeCol: Option[String] = None,
         .getOrElse(sys.error("Options: wrapped call required"))
       val t2 = call.named("shards") match {
         case Some(ListV(vs)) if vs.nonEmpty =>
-          val pred = vs.collect { case LongV(s) =>
-            col("_id") >= s * ShardWidth && col("_id") < (s + 1) * ShardWidth
-          }.reduceLeft(_ || _)
-          table.filter(pred)
+          table.filter(Compiler.inShards(vs.collect { case LongV(s) => s }))
         case _ => table
       }
       new Compiler(t2, timeCol, quantum).run(inner)
@@ -514,8 +507,6 @@ final class Compiler(table: DataFrame, timeCol: Option[String] = None,
     case _ => // bitmap call at top level → its id set
       toIds(bits(call)).orderBy("_id")
   }
-
-  private val ShardWidth = Compiler.ShardWidth
 
   /** TopN(b, field, tanimotoThreshold=T): keep values whose Tanimoto
     * similarity to the source bitmap exceeds T% —
@@ -920,8 +911,20 @@ object Compiler {
   /** Unique suffix for per-query ExternalLookup temp views. */
   private[pql] val lookupViewSeq = new java.util.concurrent.atomic.AtomicLong()
 
+  /** The `_id` ranges of `shards` — the reference's per-call
+    * `Options(shards=[…])` and `QueryRequest.Shards` restriction. */
+  def inShards(shards: Seq[Long]): Column =
+    shards.map(s => col("_id") >= s * ShardWidth && col("_id") < (s + 1) * ShardWidth)
+      .reduceLeft(_ || _)
+
+  /** Write-call names (`reference/pql/pql.peg:10-14`, dispatch
+    * `reference/executor.go:723-835`). */
+  def isWrite(call: Call): Boolean =
+    Set("Set", "Clear", "ClearRow", "Store", "Delete")(call.name)
+
   /** See [[Compiler!.writeEffect]]. */
   sealed trait WriteEffect
+  final case class Folded(write: graft.core.Mutation.FieldWrite) extends WriteEffect
   final case class Upserted(ids: DataFrame) extends WriteEffect
   final case class Removed(ids: DataFrame) extends WriteEffect
 }
@@ -959,10 +962,7 @@ object Pql {
   /** Number of mutating calls in a program (`reference/pql/ast.go:316-323`
     * WriteCallN) — drives the facade's read→write permission escalation
     * (`reference/http_handler.go:798-803`). */
-  def writeCallN(pql: String): Int = {
-    val writes = Set("Set", "Clear", "ClearRow", "Store", "Delete")
-    Parser.parse(pql).count(c => writes(c.name))
-  }
+  def writeCallN(pql: String): Int = Parser.parse(pql).count(Compiler.isWrite)
 
   /** One result per top-level call — the reference's `/index/{i}/query`
     * contract (`reference/handler.go:51-56`: `Results []interface{}`, one
@@ -977,53 +977,58 @@ object Pql {
     val results = calls.map { c =>
       graft.core.QueryContext.validate() // executor.go:193 per-call ctx check
       val comp = new Compiler(state, graft.core.Tables.timeColumn(tableName))
-      if (comp.isWrite(c)) { state = comp.write(c); None }
+      if (Compiler.isWrite(c)) { state = comp.write(c); None }
       else Some(comp.run(c))
     }
     (results, state)
   }
 
-  /** [[programResults]] with committed write semantics: the table's temp
-    * view (registered through [[graft.core.TableLog]]) is the state between
-    * calls, and each write call commits only its touched rows via
-    * `TableLog.upsert`/`deleteByIds` — O(touched), never O(table). With
-    * `spark.graft.warehouse` set the commit is durable: a restarted JVM
-    * restores the writes from the warehouse manifest like the reference's
-    * RBF storage (`reference/rbf/rbf.go:3-29`). Without it the log's pieces
-    * are session-lifetime checkpoints. Either way every frontend on the
-    * session reads the committed view. Each write call takes the table's
-    * TableLog lock; a caller that needs the whole program serialized holds
-    * it across the call. */
-  def programResultsDurable(spark: SparkSession, tableName: String, pql: String)
-      : Seq[Option[DataFrame]] = {
+  /** [[programResults]] with committed write semantics, rendered by
+    * `render`: the table's temp view (registered through
+    * [[graft.core.TableLog]]) is the state between calls, and each write
+    * call commits only its touched rows as its own TableLog statement —
+    * `Set`/`Clear` through [[graft.core.Mutation.commit]], the import
+    * path's fold-and-commit, the others via `TableLog.upsert`/`deleteByIds`
+    * — O(touched), never O(table). With `spark.graft.warehouse` set the
+    * commit is durable: a restarted JVM restores the writes from the
+    * warehouse manifest like the reference's RBF storage
+    * (`reference/rbf/rbf.go:3-29`). Without it the log's pieces are
+    * session-lifetime checkpoints. Either way every frontend on the session
+    * reads the committed view.
+    *
+    * This runner owns the table lock for a PQL program: a program that
+    * writes holds the table's TableLog lock once, across all its calls and
+    * the rendering of its read results (a result bound to a state the
+    * program's later writes replace is rendered before another writer can
+    * commit). Each write computes its delta from the view it re-reads under
+    * that lock, so a concurrent same-row write from another frontend is
+    * never lost. A read-only program takes no lock. */
+  def programResultsDurable[A](spark: SparkSession, tableName: String, pql: String)
+      (render: Seq[Option[DataFrame]] => A): A = {
     val calls = Parser.parse(pql)
     require(calls.nonEmpty, "empty PQL program")
-    calls.map { c =>
+    def run(): A = render(calls.map { c =>
       graft.core.QueryContext.validate() // executor.go:193 per-call ctx check
-      def compiler() =
-        new Compiler(spark.table(graft.core.Idents.q(tableName)), graft.core.Tables.timeColumn(tableName))
-      val probe = compiler()
-      if (probe.isWrite(c)) {
-        // read-state → compute-delta → commit happens UNDER the table's
-        // mutation lock: a delta computed from a pre-lock snapshot would
-        // lose a concurrent same-row write from another frontend (the
-        // upserted full row carries the sibling field at its stale value)
-        graft.core.TableLog.locked(spark, tableName) {
-          val comp = compiler() // re-read state inside the lock
-          comp.writeEffect(c) match {
-            case Compiler.Removed(ids) =>
-              graft.core.TableLog.deleteByIds(spark, tableName, ids)
-            case Compiler.Upserted(ids) =>
-              // delta = the touched rows of the SUCCESSOR state (carries
-              // rows the write creates); upsert replaces them by `_id`
-              val next = comp.write(c)
-              graft.core.TableLog.upsert(spark, tableName,
-                next.join(ids, Seq("_id"), "left_semi"))
-          }
+      val comp = new Compiler(spark.table(graft.core.Idents.q(tableName)),
+        graft.core.Tables.timeColumn(tableName))
+      if (!Compiler.isWrite(c)) Some(comp.run(c))
+      else {
+        comp.writeEffect(c) match {
+          case Compiler.Folded(w) =>
+            graft.core.Mutation.commit(spark, tableName, Seq(w))
+          case Compiler.Removed(ids) =>
+            graft.core.TableLog.deleteByIds(spark, tableName, ids)
+          case Compiler.Upserted(ids) =>
+            // delta = the touched rows of the SUCCESSOR state; upsert
+            // replaces them by `_id`
+            graft.core.TableLog.upsert(spark, tableName,
+              comp.write(c).join(ids, Seq("_id"), "left_semi"))
         }
         None
-      } else Some(probe.run(c))
-    }
+      }
+    })
+    if (calls.exists(Compiler.isWrite)) graft.core.TableLog.locked(spark, tableName)(run())
+    else run()
   }
 }
 

@@ -315,30 +315,6 @@ final class GrpcFacade(spark: SparkSession, dir: String, port: Int,
   private def tableState(name: String): DataFrame =
     spark.table(graft.core.Idents.q(name))
 
-  /** Every index this facade serves: parquet test tables plus DDL-created
-    * catalog tables, minus fb_* system views and CREATE VIEW definitions
-    * (the service's index RPCs list indexes, not views). */
-  private def allIndexNames: Seq[String] = {
-    // SessionCatalog API: pure driver-side metadata (the Dataset-returning
-    // spark.catalog.listTables would launch a Spark job per probe)
-    val cat = spark.sessionState.catalog.listTables("default").map(_.table)
-      .filterNot(_.startsWith("fb_"))
-      // per-SESSION view check — the process-global viewDefs map is keyed by
-      // name only, so another session's CREATE VIEW must not hide a
-      // same-named table from this session's listings
-      .filterNot(graft.sql.Ddl.isView(spark, _))
-    (graft.core.Tables.names ++ cat).distinct
-  }
-
-  /** gRPC handlers run on netty's pool; write programs hold TableLog's
-    * per-(session, table) mutation lock across state-read -> compute ->
-    * commit so concurrent mutations from this facade and the HTTP one on
-    * the same session serialize (the reference's per-shard RBF
-    * transaction). The lock is reentrant, so the log's own mutators
-    * compose. Reads stay lock-free on immutable DataFrames. */
-  private def writeLock[A](name: String)(f: => A): A =
-    graft.core.TableLog.locked(spark, name)(f)
-
   private val MaxWireRows = 100000
 
   // ------------------------------------------------------------- encoding
@@ -450,8 +426,7 @@ final class GrpcFacade(spark: SparkSession, dir: String, port: Int,
       throw Status.INVALID_ARGUMENT
         .withDescription("QueryPQLUnary handles exactly one query")
         .asRuntimeException()
-    def run() = graft.pql.Pql.programResultsDurable(spark, index, pql).head
-    if (graft.pql.Pql.writeCallN(pql) > 0) writeLock(index)(run()) else run()
+    graft.pql.Pql.programResultsDurable(spark, index, pql)(_.head)
   }
 
   // --------------------------------------------------------------- server
@@ -537,7 +512,7 @@ final class GrpcFacade(spark: SparkSession, dir: String, port: Int,
   /** Read-authorized index names for the calling user (everything when
     * auth is off), the filter GetIndexes applies (`grpc.go:459-478`). */
   private def readableIndexes(): Seq[String] = {
-    val names = allIndexNames
+    val names = graft.sql.Ddl.indexNames(spark)
     auth match {
       case None => names
       case Some(cfg) =>
@@ -624,7 +599,7 @@ final class GrpcFacade(spark: SparkSession, dir: String, port: Int,
         // errToStatusError maps ErrIndexExists → ALREADY_EXISTS
         // (`server/grpc.go:80-83`); the raw DDL error would surface as
         // INVALID_ARGUMENT to status-code-sensitive clients
-        if (allIndexNames.contains(name))
+        if (graft.sql.Ddl.indexNames(spark).contains(name))
           throw Status.ALREADY_EXISTS
             .withDescription("index already exists")
             .asRuntimeException()
@@ -649,7 +624,7 @@ final class GrpcFacade(spark: SparkSession, dir: String, port: Int,
                 .contains(name))
             denied(s"permission denied for index $name")
         }
-        if (!allIndexNames.contains(name))
+        if (!graft.sql.Ddl.indexNames(spark).contains(name))
           throw Status.NOT_FOUND
             .withDescription(s"Index with name $name not found")
             .asRuntimeException()
@@ -661,7 +636,7 @@ final class GrpcFacade(spark: SparkSession, dir: String, port: Int,
         chkAdmin("delete") // grpc.go:485-501
         val name = r.str(1).getOrElse(sys.error("DeleteIndexRequest.name missing"))
         // errToStatusError maps ErrIndexNotFound → NOT_FOUND (`grpc.go:74-78`)
-        if (!allIndexNames.contains(name))
+        if (!graft.sql.Ddl.indexNames(spark).contains(name))
           throw Status.NOT_FOUND
             .withDescription("index not found")
             .asRuntimeException()

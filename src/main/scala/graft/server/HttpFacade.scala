@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import scala.jdk.CollectionConverters._
+import graft.core.Mutation.{FieldWrite, WriteOp}
+import graft.pql.Compiler.ShardWidth
 
 /** HTTP facade over the engine — the reference's serving surface re-expressed
   * on the JDK's built-in server (zero extra dependencies):
@@ -118,35 +120,46 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
     Option(spark.conf.get("spark.graft.warehouse", null))
       .map(w => java.nio.file.Paths.get(w, "_translate.tsv")))
 
-  /** A table's current state: its session view, which every write commits
-    * through [[graft.core.TableLog]] — the one store every frontend on this
-    * session reads, like the reference's single RBF store
-    * (`reference/rbf/rbf.go:3-29`). With `spark.graft.warehouse` set the
-    * log persists parquet pieces and a restarted JVM restores them;
-    * without it the same log runs on session-lifetime checkpoint pieces. */
+  /** A table's current state, for reads: its session view. Every write —
+    * a PQL program, an import, `/sql` DML or DDL, from this facade or any
+    * other frontend on the session — commits through
+    * [[graft.core.TableLog]], which re-registers the view on every
+    * statement; the view is the one store every frontend on this session
+    * reads, like the reference's single RBF store
+    * (`reference/rbf/rbf.go:3-29`). Writes go through
+    * [[graft.pql.Pql.programResultsDurable]] and
+    * [[graft.core.Mutation.commit]], which hold TableLog's per-table lock;
+    * this facade takes no lock of its own. With `spark.graft.warehouse`
+    * set the log persists parquet pieces and a restarted JVM restores
+    * them; without it the same log runs on session-lifetime checkpoint
+    * pieces. */
   private def tableState(name: String): DataFrame =
     spark.table(graft.core.Idents.q(name))
 
-  /** `/schema/details` per-table field-cardinality memo: the endpoint is a
-    * metadata probe, and recomputing one agg pass per table per request
-    * would turn it into a repeated table scan. Invalidated on write/DDL
-    * (and wholesale by `/recalculate-caches`), the same spirit as the
-    * reference's cached ranked-cache counts. */
-  private val cardinalityCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.Row]
-
-  /** `/internal/shards/max` per-table memo: same metadata-probe discipline
-    * as the cardinality memo above — one max(_id) agg per table on first
-    * ask, then served driver-side until a write/DDL invalidates (the
-    * sites that clear cardinalityCache clear this too via
-    * [[invalidateTableCaches]]). */
-  private val maxShardCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
-
-  private def invalidateTableCaches(name: String): Unit = {
-    cardinalityCache.remove(name)
-    maxShardCache.remove(name)
+  /** A per-table memo of a metadata probe (a `/schema/details` entry with
+    * its field cardinalities, a table's max shard): recomputing one agg
+    * pass per table per request would turn a probe into a repeated table
+    * scan, the same spirit as the reference's cached ranked-cache counts.
+    * A value is kept with the table's registered view it was computed on
+    * and served while that view is still registered: any commit or DDL,
+    * through any frontend on the session, registers a new view and so
+    * drops it. `/recalculate-caches` clears the memos wholesale. */
+  private final class ViewMemo[V] {
+    private val m = new java.util.concurrent.ConcurrentHashMap[String, (AnyRef, V)]
+    def apply(name: String)(probe: => V): V = {
+      val view = spark.sessionState.catalog.getRawTempView(name).orNull
+      Option(m.get(name)).collect { case (v, x) if v eq view => x }.getOrElse {
+        // probed outside the map's bin lock (a Spark job must not run while
+        // holding it); a probe that throws memoizes nothing
+        val x = probe
+        m.put(name, (view, x))
+        x
+      }
+    }
+    def clear(): Unit = m.clear()
   }
+  private val detailsCache = new ViewMemo[String]
+  private val maxShardCache = new ViewMemo[Long]
 
   /** Query tracker (`reference/tracker.go:11-27`): in-flight queries for
     * `GET /queries`, a bounded ring of finished ones for
@@ -280,18 +293,6 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
     }
   }
 
-  /** Per-table write serialization: requests run on a thread pool (below),
-    * and a read-modify-write against the same table from two threads — or
-    * from this facade and the gRPC one on the same session — would
-    * otherwise lose one of the updates. The read→compute-delta→commit
-    * sequence holds TableLog's per-(session, table) mutation lock, the
-    * log's documented contract (the reference serializes via its per-shard
-    * RBF write transaction, `rbf/rbf.go:3-29`). The lock is reentrant, so
-    * the log's own mutators compose. Reads stay lock-free on immutable
-    * DataFrames. */
-  private def writeLock[A](name: String)(f: => A): A =
-    graft.core.TableLog.locked(spark, name)(f)
-
   /** This node's URI JSON as the Go client's StatusURI/fragmentNode
     * parse it (`client.go:1602-1606,1650-1654`). */
   private def nodeUri: String = {
@@ -411,9 +412,9 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
                 throw PlainError(500,
                   s"$wrap: getting index and field: $field: field not found")
               FieldWrite(field, if (m.longs(clearFlag).headOption.contains(1L))
-                ImportOp.Clear else ImportOp.Set, rows)
+                WriteOp.Clear else WriteOp.Set, rows)
             }
-            applyImport(idx,
+            graft.core.Mutation.commit(spark, idx,
               ivr.map(write(_, "ImportValueRequest", PbQuery.valuePairs(_), 12,
                 "ImportAtomicRecord ImportValueWithTx")) ++ // BSI values
               ir.map(write(_, "ImportRequest", PbQuery.rowPairs, 11,
@@ -466,7 +467,7 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
           // index list
           case Array("index") if method == "GET" =>
             val vis = readable(chk(ex, None, Auth.PermRead))
-            allIndexNames.filter(vis).map(indexInfo).mkString("[", ",", "]")
+            graft.sql.Ddl.indexNames(spark).filter(vis).map(indexInfo).mkString("[", ",", "]")
           case Array("index", idx) if method == "POST" =>
             chk(ex, None, Auth.PermAdmin); createIndex(idx, body)
           case Array("index", idx) if method == "DELETE" =>
@@ -542,26 +543,19 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
             logQuery(ex, uinfo, idx, body)
             // one result per top-level call (`reference/handler.go:51-56`
             // `QueryResponse.Results`): reads as tables, writes as the
-            // reference's boolean ack. Write programs hold the table's
-            // write lock across state-read -> compute -> commit; pure reads
-            // run lock-free on the immutable committed state.
-            def run(): String = {
-              val wire = graft.pql.Pql.programResultsDurable(spark, idx, body).map {
+            // reference's boolean ack
+            tracked(body, "", idx) {
+              graft.pql.Pql.programResultsDurable(spark, idx, body)(_.map {
                 case Some(df) => toWire(df)
                 case None     => "true"
-              }.mkString("""{"results":[""", ",", "]}")
-              if (writes) invalidateTableCaches(idx)
-              wire
-            }
-            tracked(body, "", idx) {
-              if (writes) writeLock(idx)(run()) else run()
+              }.mkString("""{"results":[""", ",", "]}"))
             }
           case Array("index", idx, "field", field, "import") =>
             // CSV lines `id,value` applied with Set semantics (the
             // reference's `/import` endpoints, `http_handler.go:517-520`;
             // wire format here is CSV instead of the roaring/proto encoding)
             chk(ex, Some(idx), Auth.PermWrite)
-            applyImport(idx, Seq(FieldWrite(field, ImportOp.Set,
+            graft.core.Mutation.commit(spark, idx, Seq(FieldWrite(field, WriteOp.Set,
               body.linesIterator.zipWithIndex.filter(_._1.nonEmpty).map {
                 case (line, i) => line.split(",", 2) match {
                   case Array(id, v) => (id.trim, v.trim)
@@ -590,22 +584,17 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
         val vis = readable(chk(ex, None, Auth.PermRead))
         import org.apache.spark.sql.functions.approx_count_distinct
         val indexes = graft.core.Tables.names.filter(vis).map { t =>
-          val df = spark.table(graft.core.Idents.q(t))
-          val fields = df.schema.fields.filter(_.name != "_id")
-          // drop a memo whose shape no longer matches the schema — DDL can
-          // arrive through /sql or gRPC without passing this facade's
-          // invalidation hooks, and zipping a stale Row with a longer
-          // field list would throw on a metadata probe
-          val stale = Option(cardinalityCache.get(t)).exists(_.length != fields.length)
-          if (stale) invalidateTableCaches(t)
-          val cards = cardinalityCache.computeIfAbsent(t, _ =>
-            df.select(fields.map(f =>
-              approx_count_distinct(f.name).as(f.name)).toSeq: _*).collect()(0))
-          val fieldJson = fields.zipWithIndex.map { case (f, i) =>
-            s"""{"name":${js(f.name)},"options":{"type":${js(
-              graft.sql.SystemTables.refType(f.dataType).toLowerCase)}},"cardinality":${cards.getLong(i)}}"""
+          detailsCache(t) {
+            val df = tableState(t)
+            val fields = df.schema.fields.filter(_.name != "_id")
+            val cards = df.select(fields.map(f =>
+              approx_count_distinct(f.name).as(f.name)).toSeq: _*).collect()(0)
+            val fieldJson = fields.zipWithIndex.map { case (f, i) =>
+              s"""{"name":${js(f.name)},"options":{"type":${js(
+                graft.sql.SystemTables.refType(f.dataType).toLowerCase)}},"cardinality":${cards.getLong(i)}}"""
+            }
+            s"""{"name":${js(t)},"fields":[${fieldJson.mkString(",")}]}"""
           }
-          s"""{"name":${js(t)},"fields":[${fieldJson.mkString(",")}]}"""
         }
         s"""{"indexes":[${indexes.mkString(",")}]}"""
       }
@@ -642,7 +631,7 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
       // vocabulary, and the index carries the shardWidth the client uses
       // to route imports.
       val vis = readable(chk(ex, None, Auth.PermRead)) // http_handler.go:524
-      val indexes = allIndexNames.filter(vis).map(indexInfo)
+      val indexes = graft.sql.Ddl.indexNames(spark).filter(vis).map(indexInfo)
       s"""{"indexes":[${indexes.mkString(",")}]}"""
     }}})
     // ANN serving surface: build a residual IVF-PQ index over a registered
@@ -741,30 +730,8 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
     server.createContext("/internal/shards/max", new HttpHandler {
       def handle(ex: HttpExchange): Unit = respond(ex) {
         chk(ex, None, Auth.PermRead)
-        import org.apache.spark.sql.functions.{col, max}
-        val w = graft.pql.Compiler.ShardWidth
-        val entries = allIndexNames.map { n =>
-          // compute OUTSIDE computeIfAbsent: a Spark job must not run while
-          // holding the map's bin lock, and a transient failure must not be
-          // memoized as 0 (only successful probes are cached)
-          val maxShard = Option(maxShardCache.get(n)).map(_.longValue()).getOrElse {
-            val v: Option[Long] = try {
-              val df = tableState(n)
-              if (df.schema("_id").dataType ==
-                  org.apache.spark.sql.types.LongType)
-                Some(df.agg(max(col("_id"))).head.getAs[Any](0) match {
-                  case l: java.lang.Long => l.longValue() / w
-                  case _ => 0L
-                })
-              else Some(0L) // keyed index: key-hash shards unknowable here
-            } catch { case e: Exception =>
-              System.err.println(s"[graft-server] shards/max probe failed for '$n': ${e.getMessage}")
-              None }
-            v.foreach(x => maxShardCache.put(n, java.lang.Long.valueOf(x)))
-            v.getOrElse(0L)
-          }
-          s"${js(n)}:$maxShard"
-        }
+        val entries = graft.sql.Ddl.indexNames(spark).map(n =>
+          s"${js(n)}:${maxShardOf(n)}")
         s"""{"standard":{${entries.mkString(",")}}}"""
       }
     })
@@ -1190,11 +1157,12 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
     // `POST /recalculate-caches` (`http_handler.go:528`, admin): the
     // reference rebuilds TopN ranked caches; our TopN/TopK are exact (no
     // cache), so the contract is an immediate success ack. Also drops the
-    // /schema/details cardinality memo so the next probe recomputes.
+    // /schema/details and /internal/shards/max memos so the next probe
+    // recomputes.
     server.createContext("/recalculate-caches", new HttpHandler {
       def handle(ex: HttpExchange): Unit = respond(ex) {
         chk(ex, None, Auth.PermAdmin)
-        cardinalityCache.clear(); maxShardCache.clear()
+        detailsCache.clear(); maxShardCache.clear()
         graft.core.Metrics.inc(graft.core.Metrics.RecalculateCache)
         ""
       }
@@ -1232,7 +1200,7 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
     server.createContext("/ui/shard-distribution", new HttpHandler {
       def handle(ex: HttpExchange): Unit = respond(ex) {
         chk(ex, None, Auth.PermAdmin)
-        val dist = allIndexNames.sorted.map { idx =>
+        val dist = graft.sql.Ddl.indexNames(spark).sorted.map { idx =>
           val shards = (0L to maxShardOf(idx)).mkString(",")
           s"""${js(idx)}:{"local":{"primary-shards":[$shards],"replica-shards":[]}}"""
         }
@@ -1325,65 +1293,6 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
     if (requestPool != null) requestPool.shutdown()
   }
 
-  /** FeatureBase's shard width: ShardWidth = 1 << Exponent, Exponent = 20
-    * (`reference/shardwidth/helper.go:14`). A fragment bit at position p in
-    * shard s encodes rowID = p / ShardWidth for columnID =
-    * s·ShardWidth + p mod ShardWidth (`reference/fragment.go:36,318`). */
-  private val ShardWidth = 1L << 20
-
-  /** How a [[FieldWrite]] folds onto its field: per
-    * [[graft.core.Mutation.setBulk]], [[graft.core.Mutation.clearBulk]] or
-    * [[graft.core.Mutation.clearRecordsBulk]]. */
-  private sealed trait ImportOp
-  private object ImportOp {
-    case object Set extends ImportOp
-    case object Clear extends ImportOp
-    case object ClearRecords extends ImportOp
-  }
-
-  /** One field's share of a bulk import: `(record id, value)` pairs in
-    * apply order, spelled as the wire gave them — the fold casts them to
-    * the table's id and column types. */
-  private case class FieldWrite(field: String, op: ImportOp,
-                                rows: Seq[(String, String)])
-
-  /** Commit an import's decoded writes as ONE TableLog upsert — the
-    * reference applies an import to the fragments it names under one RBF
-    * transaction (`rbf/rbf.go:3-29`, `http_handler.go:517-520`). Every
-    * import route on every wire ends here. The table state is restricted
-    * to the touched ids (a semi-join against the driver-side id list, so
-    * the table side is not shuffled) BEFORE the writes fold onto it:
-    * Spark does not push that semi-join below setBulk's full-outer join,
-    * so restricting after the fold would shuffle the whole table. The rows
-    * are the same either way, because every bulk op changes or creates
-    * only rows whose `_id` is among its writes. All writes of one request
-    * fold onto one successor in order, each as one join, never one plan
-    * layer per bit. An import with no rows commits nothing. */
-  private def applyImport(idx: String, writes: Seq[FieldWrite]): Unit =
-    writeLock(idx) {
-      import org.apache.spark.sql.functions.col
-      import spark.implicits._
-      val state = tableState(idx)
-      val touched = writes.flatMap(_.rows.map(_._1)).distinct.toDF("_id")
-        .select(col("_id").cast(state.schema("_id").dataType).as("_id"))
-      val next = writes.foldLeft(state.join(touched, Seq("_id"), "left_semi")) {
-        (t, w) =>
-          val df = w.rows.zipWithIndex.map { case ((id, v), i) => (id, v, i.toLong) }
-            .toDF("_id", "value", "seq")
-          w.op match {
-            case ImportOp.Set => graft.core.Mutation.setBulk(t, w.field, df)
-            case ImportOp.Clear => graft.core.Mutation.clearBulk(t, w.field, df)
-            case ImportOp.ClearRecords =>
-              graft.core.Mutation.clearRecordsBulk(t, w.field, df)
-          }
-      }
-      if (writes.exists(_.rows.nonEmpty)) {
-        // an id that does not cast to the table's id type names no record
-        graft.core.TableLog.upsert(spark, idx, next.filter(col("_id").isNotNull))
-        invalidateTableCaches(idx)
-      }
-    }
-
   /** One roaring bitmap of fragment bit positions in `shard` → the write
     * `op` of its bits to `field`: position p is row p / ShardWidth of
     * record shard·ShardWidth + p mod ShardWidth. Decoded driver-side: the
@@ -1395,7 +1304,7 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
     * [[KeyTranslate]]; a ClearRecords bitmap's rows are not values and are
     * not translated. */
   private def roaringWrites(idx: String, field: String, shard: Long,
-                            op: ImportOp, bytes: Array[Byte]): FieldWrite = {
+                            op: WriteOp, bytes: Array[Byte]): FieldWrite = {
     import org.apache.spark.sql.types.{ArrayType, StringType}
     val schema = tableState(idx).schema
     def keyOf(scope: String, what: String)(id: Long): String =
@@ -1405,7 +1314,7 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
       if (schema("_id").dataType == StringType) keyOf(s"idx:$idx", "id")
       else _.toString
     val row: Long => String = schema(field).dataType match {
-      case StringType | ArrayType(StringType, _) if op != ImportOp.ClearRecords =>
+      case StringType | ArrayType(StringType, _) if op != WriteOp.ClearRecords =>
         keyOf(s"fld:$idx/$field", "row")
       case _ => _.toString
     }
@@ -1421,7 +1330,7 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
   /** Commit the decoded writes of a roaring import and answer with its
     * bit count — every decoded position, set or cleared. */
   private def importBits(idx: String, writes: Seq[FieldWrite]): String = {
-    applyImport(idx, writes)
+    graft.core.Mutation.commit(spark, idx, writes)
     val bits = writes.map(_.rows.length.toLong).sum
     graft.core.Metrics.add(graft.core.Metrics.ImportedN, bits)
     s"""{"imported":true,"bits":$bits}"""
@@ -1458,7 +1367,7 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
     require(view == "standard",
       s"only the standard view is supported (time/bsi views pend), got '$view'")
     roaringWrites(idx, field, shard,
-      if (clear) ImportOp.Clear else ImportOp.Set, data)
+      if (clear) WriteOp.Clear else WriteOp.Set, data)
   }
 
   // --------------------------------------------------- export/transactions
@@ -1481,8 +1390,7 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
     val t = tableState(idx)
     val isSet = t.schema(field).dataType
       .isInstanceOf[org.apache.spark.sql.types.ArrayType]
-    val inShard = t.filter(col("_id") >= shard * ShardWidth &&
-      col("_id") < (shard + 1) * ShardWidth)
+    val inShard = t.filter(graft.pql.Compiler.inShards(Seq(shard)))
     val rows =
       if (isSet) inShard.select(explode(col(field)).as("v"), col("_id"))
       else inShard.filter(col(field).isNotNull).select(col(field).as("v"), col("_id"))
@@ -1529,8 +1437,8 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
     require(view == "standard",
       s"only the standard view is supported, got '$view'")
     clear.map(roaringWrites(idx, field, shard,
-      if (clearRecords) ImportOp.ClearRecords else ImportOp.Clear, _)).toSeq ++
-      set.map(roaringWrites(idx, field, shard, ImportOp.Set, _))
+      if (clearRecords) WriteOp.ClearRecords else WriteOp.Clear, _)).toSeq ++
+      set.map(roaringWrites(idx, field, shard, WriteOp.Set, _))
   }
 
   // ------------------------------------------------------ schema endpoints
@@ -1563,47 +1471,33 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
   /** `DELETE /index/{i}` (`http_handler.go:1879-1890`). */
   private def dropIndex(idx: String): String = {
     graft.sql.Ddl.run(spark, s"DROP TABLE $idx")
-    invalidateTableCaches(idx)
     graft.core.Metrics.inc(graft.core.Metrics.DeleteIndex)
     success(idx)
   }
 
-  /** Every index the serving surface knows: the parquet test tables plus
-    * DDL-created catalog tables, minus fb_* system views and CREATE VIEW
-    * definitions (the reference's /schema lists indexes, not views). A
-    * driver-side catalog listing — no Spark job. */
-  /** Highest `_id`-range shard with data; a single node owns 0..maxShard
-    * contiguously (keyed tables collapse to shard 0 on this node). */
+  /** Highest `_id`-range shard with data, memoized per registered view; a
+    * single node owns 0..maxShard contiguously (keyed tables collapse to
+    * shard 0 on this node). A MISSING index keeps throwing (the shards
+    * endpoint 400s on it), but an EXISTING one the probe can't read — a
+    * foreign temp view with no `_id` (any Spark user can create one on the
+    * shared session) or backing files gone — reports shard 0, unmemoized,
+    * instead of failing a whole diagnostics response. */
   private def maxShardOf(idx: String): Long = {
-    // a MISSING index must keep throwing (the shards endpoint 400s on it),
-    // but an EXISTING one the probe can't read — a foreign temp view with
-    // no `_id` (any Spark user can create one on the shared session) or
-    // backing files gone — reports shard 0 instead of failing the whole
-    // diagnostics response (same graceful-skip as the shards/max probe)
-    val df = tableState(idx)
-    try {
+    tableState(idx): Unit // throws for a missing index
+    try maxShardCache(idx) {
+      val df = tableState(idx)
       if (df.schema.fields.exists(f => f.name == "_id" &&
           f.dataType == org.apache.spark.sql.types.LongType))
         Option(df.agg(org.apache.spark.sql.functions.max(
             org.apache.spark.sql.functions.col("_id"))).head.get(0))
-          .map { case l: java.lang.Long =>
-            l.longValue / graft.pql.Compiler.ShardWidth }
+          .map { case l: java.lang.Long => l.longValue / ShardWidth }
           .getOrElse(0L)
       else 0L
     } catch { case e: Exception =>
       System.err.println(
-        s"[graft-server] shard-distribution probe failed for '$idx': ${e.getMessage}")
+        s"[graft-server] max-shard probe failed for '$idx': ${e.getMessage}")
       0L
     }
-  }
-
-  private def allIndexNames: Seq[String] = {
-    // SessionCatalog API: pure driver-side metadata (the Dataset-returning
-    // spark.catalog.listTables would launch a Spark job per probe)
-    val cat = spark.sessionState.catalog.listTables("default").map(_.table)
-      .filterNot(_.startsWith("fb_"))
-      .filterNot(graft.sql.Ddl.viewDefs.contains)
-    (graft.core.Tables.names ++ cat).distinct
   }
 
   /** FieldInfo.Options (`reference/field.go:2166-2198`) in the reference's
@@ -1641,7 +1535,7 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
     s"""{"name":${js(idx)},"options":{"keys":${
       df.schema.fields.exists(f => f.name == "_id" &&
         f.dataType == org.apache.spark.sql.types.StringType)},"trackExistence":true},"fields":[${
-      fields.mkString(",")}],"shardWidth":${graft.pql.Compiler.ShardWidth}}"""
+      fields.mkString(",")}],"shardWidth":$ShardWidth}"""
   }
 
   /** `POST /index/{i}/field/{f}` (`http_handler.go:2088-2140`): the
@@ -1673,7 +1567,6 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
       case other       => sys.error(s"invalid field type: $other")
     }
     graft.sql.Ddl.run(spark, s"ALTER TABLE $idx ADD COLUMN $field $ddlType")
-    invalidateTableCaches(idx)
     graft.core.Metrics.inc(graft.core.Metrics.CreateField)
     success(field)
   }
@@ -1681,7 +1574,6 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
   /** `DELETE /index/{i}/field/{f}` (`http_handler.go:516` DeleteField). */
   private def dropField(idx: String, field: String): String = {
     graft.sql.Ddl.run(spark, s"ALTER TABLE $idx DROP COLUMN $field")
-    invalidateTableCaches(idx)
     graft.core.Metrics.inc(graft.core.Metrics.DeleteField)
     success(field)
   }
@@ -1715,21 +1607,13 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
         if (shards.nonEmpty && writes)
           sys.error("shards restriction unsupported on write programs")
         val calls = graft.pql.Parser.parse(query)
-        def run(): Array[Byte] = {
-          val rs =
-            if (shards.isEmpty) graft.pql.Pql.programResultsDurable(spark, idx, query)
-            else { // a read-only program (checked above) over those shards
-              import org.apache.spark.sql.functions.col
-              val w = graft.pql.Compiler.ShardWidth
-              graft.pql.Pql.programResults(tableState(idx).filter(shards.map(s =>
-                col("_id") >= s * w && col("_id") < (s + 1) * w)
-                .reduceLeft(_ || _)), idx, query)._1
-            }
-          if (writes) invalidateTableCaches(idx)
+        def encode(rs: Seq[Option[DataFrame]]): Array[Byte] =
           PbQuery.encodeResponse(calls.zip(rs), MaxWireRows)
-        }
         (200, tracked(query, "", idx) {
-          if (writes) writeLock(idx)(run()) else run()
+          if (shards.isEmpty) graft.pql.Pql.programResultsDurable(spark, idx, query)(encode)
+          else // a read-only program (checked above) over those shards
+            encode(graft.pql.Pql.programResults(tableState(idx).filter(
+              graft.pql.Compiler.inShards(shards)), idx, query)._1)
         })
       } catch {
         case e: Auth.AuthError => (403, PbQuery.errResponse(msg(e)))
@@ -1829,8 +1713,8 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
       case _ => // keyed mutex / string / set columns: ImportRequest
         PbQuery.rowPairs(m)
     }
-    applyImport(idx, Seq(FieldWrite(field,
-      if (doClear) ImportOp.Clear else ImportOp.Set, pairs)))
+    graft.core.Mutation.commit(spark, idx, Seq(FieldWrite(field,
+      if (doClear) WriteOp.Clear else WriteOp.Set, pairs)))
   }
 
   /** The Go client's roaring import wires, decoded straight into the same

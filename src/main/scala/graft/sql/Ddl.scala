@@ -258,6 +258,20 @@ object Ddl {
   private[graft] def isView(spark: SparkSession, n: String) =
     viewNames.contains((spark, n.toLowerCase))
 
+  /** Every index the serving facades list: the parquet test tables plus
+    * DDL-created catalog tables, minus fb_* system views and this
+    * session's CREATE VIEW definitions (the reference's /schema and index
+    * RPCs list indexes, not views). The view check is per session: another
+    * session's `CREATE VIEW t` must not hide this session's table `t`. A
+    * driver-side catalog listing — the Dataset-returning
+    * `spark.catalog.listTables` would launch a Spark job per probe. */
+  private[graft] def indexNames(spark: SparkSession): Seq[String] = {
+    val cat = spark.sessionState.catalog.listTables("default").map(_.table)
+      .filterNot(_.startsWith("fb_"))
+      .filterNot(isView(spark, _))
+    (graft.core.Tables.names ++ cat).distinct
+  }
+
   /** View bodies (lowercased name → dialect SQL) for durable replay. */
   private[graft] val viewDefs = scala.collection.mutable.Map.empty[String, String]
 

@@ -2,6 +2,8 @@ package graft.pql
 
 import graft.SparkSpec
 import graft.core.{Mutation, Tables}
+import graft.core.Mutation.{FieldWrite, WriteOp}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** PQL write calls (Set/Clear/ClearRow/Store/Delete) — semantics per
@@ -12,9 +14,18 @@ class MutationSpec extends SparkSpec {
   private def orders = Tables.load(spark, sfDir, "orders")
   private def docs   = Tables.load(spark, sfDir, "documents")
 
+  // one PQL `Set`/`Clear` call: a one-row write folded onto the whole state
+  private def point(op: WriteOp, df: DataFrame, id: Any, field: String,
+                    v: Column): DataFrame =
+    Mutation.applied(df, Seq(FieldWrite(field, op, Seq((id.toString, null)), v)))
+  private def set(df: DataFrame, id: Any, field: String, v: Column) =
+    point(WriteOp.Set, df, id, field, v)
+  private def clear(df: DataFrame, id: Any, field: String, v: Column) =
+    point(WriteOp.Clear, df, id, field, v)
+
   test("Set on mutex field replaces the old value") {
     val before = orders.filter(col("_id") === 7).select("o_orderstatus").head.getString(0)
-    val after  = Mutation.set(orders, 7, "o_orderstatus", lit("X"))
+    val after  = set(orders, 7, "o_orderstatus", lit("X"))
     assert(after.filter(col("_id") === 7).select("o_orderstatus").head.getString(0) == "X")
     // no other record changed; old value no longer present at id 7
     assert(after.filter(col("o_orderstatus") === before).count() ==
@@ -23,8 +34,8 @@ class MutationSpec extends SparkSpec {
   }
 
   test("Set on set field adds a member, dedup on write") {
-    val once  = Mutation.set(docs, 3, "words", lit("zz_new"))
-    val twice = Mutation.set(once, 3, "words", lit("zz_new"))
+    val once  = set(docs, 3, "words", lit("zz_new"))
+    val twice = set(once, 3, "words", lit("zz_new"))
     val ws = twice.filter(col("_id") === 3).select("words").head.getSeq[String](0)
     assert(ws.count(_ == "zz_new") == 1)
     assert(twice.filter(array_contains(col("words"), "zz_new")).count() == 1)
@@ -34,25 +45,25 @@ class MutationSpec extends SparkSpec {
     // reference sets the existence bit for a new column id — the write must
     // not silently no-op (ADVICE round 1)
     val freshId = orders.agg(max(col("_id"))).head.getLong(0) + 1000
-    val after = Mutation.set(orders, freshId, "o_orderstatus", lit("X"))
+    val after = set(orders, freshId, "o_orderstatus", lit("X"))
     assert(after.count() == orders.count() + 1)
     val row = after.filter(col("_id") === freshId).collect()(0)
     assert(row.getAs[String]("o_orderstatus") == "X")
     assert(row.isNullAt(row.fieldIndex("o_totalprice"))) // other fields null
     // set on an EXISTING id still does not duplicate
-    val again = Mutation.set(after, freshId, "o_orderstatus", lit("Y"))
+    val again = set(after, freshId, "o_orderstatus", lit("Y"))
     assert(again.count() == after.count())
     // set-field variant: new record carries a singleton set
-    val d = Mutation.set(docs, 999999L, "words", lit("zz"))
+    val d = set(docs, 999999L, "words", lit("zz"))
     assert(d.filter(col("_id") === 999999L).select("words")
       .head.getSeq[String](0) == Seq("zz"))
   }
 
   test("Clear on scalar only clears when value matches") {
     val st = orders.filter(col("_id") === 7).select("o_orderstatus").head.getString(0)
-    val miss = Mutation.clear(orders, 7, "o_orderstatus", lit("__nope__"))
+    val miss = clear(orders, 7, "o_orderstatus", lit("__nope__"))
     assert(miss.filter(col("_id") === 7).select("o_orderstatus").head.getString(0) == st)
-    val hit = Mutation.clear(orders, 7, "o_orderstatus", lit(st))
+    val hit = clear(orders, 7, "o_orderstatus", lit(st))
     assert(hit.filter(col("_id") === 7).select("o_orderstatus").head.isNullAt(0))
   }
 
@@ -122,5 +133,18 @@ class MutationSpec extends SparkSpec {
     val docsAfter = Mutation.setBulk(docs, "words", setWrites)
     val ws = docsAfter.filter(col("_id") === 3).select("words").head.getSeq[String](0)
     assert(ws.count(_ == "zz_a") == 1 && ws.contains("zz_b"))
+  }
+
+  test("clearBulk leaves a NULL set field NULL, as PQL Clear does") {
+    import spark.implicits._
+    val df = Seq((1L, Option.empty[Seq[String]]), (2L, Some(Seq("a", "b"))))
+      .toDF("_id", "tags")
+    val writes = Seq(("1", "a", 0L), ("2", "a", 1L)).toDF("_id", "value", "seq")
+    val bulk = Mutation.clearBulk(df, "tags", writes).orderBy("_id").collect()
+    assert(bulk(0).isNullAt(1), s"NULL set became ${bulk(0).get(1)}")
+    assert(bulk(1).getSeq[String](1) == Seq("b"))
+    val pql = Pql.programOn(df, "tags_t", "Clear(1, tags='a')")._2
+      .filter(col("_id") === 1).collect()
+    assert(pql.length == 1 && pql(0).isNullAt(1))
   }
 }

@@ -1272,4 +1272,40 @@ class HttpFacadeSpec extends SparkSpec {
     assert(cq == 200 && bq.contains(""""data":[[2002]]""") &&
       bq.contains(s""""data":[[$n]]"""), bq)
   }
+
+  test("/internal/shards/max and /schema/details see a write that bypasses " +
+    "this facade's PQL and import routes") {
+    assert(post("/sql", "CREATE TABLE memo_t (_id ID, v INT)")._1 == 200)
+    assert(post("/sql", "INSERT INTO memo_t (_id, v) VALUES (1, 5)")._1 == 200)
+    val names = """"name":"r_name","options":\{[^}]*\},"cardinality":(\d+)""".r
+    def rNames(b: String): Int =
+      names.findFirstMatchIn(b).map(_.group(1).toInt).getOrElse(fail(b))
+    val (c0, b0) = get("/internal/shards/max") // prime both memos
+    assert(c0 == 200 && b0.contains(""""memo_t":0"""), b0)
+    val (d0, e0) = get("/schema/details")
+    assert(d0 == 200, e0)
+    val w = 1L << 20
+    assert(post("/sql", s"INSERT INTO memo_t (_id, v) VALUES (${3 * w + 1}, 6)")._1 == 200)
+    // five new names: the cardinality is an HLL estimate, so one new value
+    // may not move it
+    assert(post("/sql", "INSERT INTO region (_id, r_name) VALUES " +
+      (1 to 5).map(i => s"(${70 + i}, 'MEMO_NEW_$i')").mkString(", "))._1 == 200)
+    val (c1, b1) = get("/internal/shards/max")
+    assert(c1 == 200 && b1.contains(""""memo_t":3"""), b1)
+    val (d1, e1) = get("/schema/details")
+    assert(d1 == 200 && rNames(e1) > rNames(e0), e1)
+  }
+
+  test("another session's CREATE VIEW does not hide this session's table " +
+    "from /schema and /index") {
+    assert(post("/sql", "CREATE TABLE listed_t (_id ID, v INT)")._1 == 200)
+    val other = graft.SparkSpec.session.newSession()
+    graft.sql.Ddl.run(other, "CREATE VIEW listed_t AS SELECT 1 AS x")
+    try {
+      val (c, b) = get("/schema")
+      assert(c == 200 && b.contains(""""name":"listed_t""""), b)
+      val (ci, bi) = get("/index")
+      assert(ci == 200 && bi.contains(""""name":"listed_t""""), bi)
+    } finally graft.sql.Ddl.run(other, "DROP VIEW listed_t")
+  }
 }
