@@ -179,42 +179,40 @@ object Mutation {
                               rows: Seq[(String, String)],
                               value: Column = col("value"))
 
-  /** The written ids, distinct, as the table's `_id` type: a driver-side
-    * list, so a join against it broadcasts the list and never shuffles the
-    * table. An id that does not cast names no record. */
-  private def writtenIds(state: DataFrame, writes: Seq[FieldWrite]): DataFrame = {
+  /** The whole successor of `state` after `writes` (the in-memory PQL
+    * runner's): each write folded on in order, one join per write,
+    * null-`_id` rows kept as [[TableLog]]'s view keeps them. Each bulk op
+    * reads its input once, so a chained program's plan grows by one join
+    * per write — at the price of a shuffle of the table per `Set`, which
+    * the committing runner ([[commit]], all serving traffic) avoids
+    * through [[touched]]. */
+  def applied(state: DataFrame, writes: Seq[FieldWrite]): DataFrame = {
     import state.sparkSession.implicits._
-    writes.flatMap(_.rows.map(_._1)).distinct.toDF("_id")
-      .select(col("_id").cast(state.schema("_id").dataType).as("_id"))
+    writes.foldLeft(state) { (t, w) =>
+      val rows = w.rows.zipWithIndex.map { case ((id, v), i) => (id, v, i.toLong) }
+        .toDF("_id", "value", "seq").withColumn("value", w.value)
+      w.op match {
+        case WriteOp.Set          => setBulk(t, w.field, rows)
+        case WriteOp.Clear        => clearBulk(t, w.field, rows)
+        case WriteOp.ClearRecords => clearRecordsBulk(t, w.field, rows)
+      }
+    }
   }
 
-  /** The rows `writes` change or create: `state` restricted to the written
-    * ids, then each write folded on in order, one join per write. The
-    * restriction comes first because Spark does not push a semi-join below
-    * setBulk's full-outer join, so restricting after the fold would shuffle
-    * the whole table. The rows are the same either way: every bulk op
-    * changes or creates only rows whose `_id` is among its writes. */
+  /** The rows `writes` change or create: [[applied]] to `state` restricted
+    * to the written ids. The restriction comes first because Spark does
+    * not push a semi-join below setBulk's full-outer join, so restricting
+    * after the fold would shuffle the whole table. The rows are the same
+    * either way: every bulk op changes or creates only rows whose `_id` is
+    * among its writes. The written ids are a driver-side list, so the
+    * semi-join broadcasts it; an id that does not cast names no record. */
   def touched(state: DataFrame, writes: Seq[FieldWrite]): DataFrame = {
     import state.sparkSession.implicits._
-    writes.foldLeft(state.join(writtenIds(state, writes), Seq("_id"), "left_semi")) {
-      (t, w) =>
-        val rows = w.rows.zipWithIndex.map { case ((id, v), i) => (id, v, i.toLong) }
-          .toDF("_id", "value", "seq").withColumn("value", w.value)
-        w.op match {
-          case WriteOp.Set          => setBulk(t, w.field, rows)
-          case WriteOp.Clear        => clearBulk(t, w.field, rows)
-          case WriteOp.ClearRecords => clearRecordsBulk(t, w.field, rows)
-        }
-    }.filter(col("_id").isNotNull)
+    val ids = writes.flatMap(_.rows.map(_._1)).distinct.toDF("_id")
+      .select(col("_id").cast(state.schema("_id").dataType).as("_id"))
+    applied(state.join(ids, Seq("_id"), "left_semi"), writes)
+      .filter(col("_id").isNotNull)
   }
-
-  /** The whole successor of `state` after `writes` (the in-memory PQL
-    * runner's): the untouched rows as they are — null-`_id` rows included,
-    * as [[TableLog]]'s view keeps them — plus [[touched]]. The anti-join
-    * broadcasts the id list, so the table is not shuffled. */
-  def applied(state: DataFrame, writes: Seq[FieldWrite]): DataFrame =
-    state.join(writtenIds(state, writes), Seq("_id"), "left_anti")
-      .unionByName(touched(state, writes))
 
   /** The one write-commit site of `Set`/`Clear`, for PQL calls and every
     * import route alike: under the table's TableLog lock, read its view,

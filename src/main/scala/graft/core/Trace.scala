@@ -92,12 +92,12 @@ final class JobSpanListener extends org.apache.spark.scheduler.SparkListener {
     new java.util.concurrent.ConcurrentHashMap[Int, String]
 
   /** Killed-group hooks: group → cancel action. A request killed by
-    * deadline or explicit cancellation registers its group here; group
-    * cancellation is one-shot in Spark, so a job the request launches
-    * AFTER the kill (the next call of a multi-call program, a retry) would
-    * otherwise run to completion. onJobStart re-cancels event-driven —
-    * only when a job actually exists, so no blind periodic re-cancel and
-    * no "cannot find active jobs" scheduler warnings. */
+    * deadline or explicit cancellation ([[Governor]]) registers its group
+    * here. The scheduler refuses later jobs of a cancelled group, but not
+    * later AQE stage submissions, which would otherwise run to completion;
+    * onJobStart re-cancels them event-driven — only when a job actually
+    * exists, so no blind periodic re-cancel and no "cannot find active
+    * jobs" scheduler warnings. */
   val killed = new java.util.concurrent.ConcurrentHashMap[String, () => Unit]
 
   override def onJobStart(
@@ -132,6 +132,9 @@ final class JobSpanListener extends org.apache.spark.scheduler.SparkListener {
       }
     }
   }
+
+  /** Groups whose job spans are not drained yet (bounded above). */
+  private[graft] def openGroups: Int = byGroup.size
 
   /** Remove and convert the group's jobs to spans. Governance (the kill
     * path) deliberately does NOT consult this listener's state: `byGroup`

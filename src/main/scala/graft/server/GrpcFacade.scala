@@ -111,104 +111,36 @@ final class GrpcFacade(spark: SparkSession, dir: String, port: Int,
                        tls: Option[Tls.Config] = None) {
 
   // ----------------------------------------------------- query governance
-  /** The reference's request-context semantics on the gRPC surface: the Go
-    * server hands the RPC's ctx to `api.Query`, so a client disconnect or
-    * deadline aborts the request (`validateQueryContext`,
-    * `reference/executor.go:8165-8180`) and `errToStatusError` maps
-    * ErrQueryTimeout → DEADLINE_EXCEEDED, ErrQueryCancelled → CANCELLED
-    * (`reference/server/grpc.go:109-113`). The shaded grpc `Context`
-    * carries exactly that signal here: its cancellation listener kills the
-    * request's Spark job group (`interruptOnCancel=true` — running tasks
-    * interrupt and the cores free). Group cancellation is one-shot, so the
-    * kill also registers with [[graft.core.JobSpanListener]].killed and
-    * any job launched after it (AQE re-plans, the next call of a program)
-    * is re-cancelled event-driven from onJobStart; driver-side call
-    * boundaries poll [[graft.core.QueryContext]]. A server-side
-    * `spark.graft.queryTimeout` deadline applies when clients set none. */
-  private final class Killed(val reason: String) extends RuntimeException(reason)
-  private val jobSpans = new graft.core.JobSpanListener
-  private val grpcSeq = new java.util.concurrent.atomic.AtomicLong
-  private val watchdog =
-    java.util.concurrent.Executors.newSingleThreadScheduledExecutor { r =>
-      val t = new Thread(r, "graft-grpc-watchdog"); t.setDaemon(true); t
-    }
-  private def confMs(key: String): Long =
-    Option(spark.conf.get(key, null)).filter(_.nonEmpty)
-      .map(org.apache.spark.network.util.JavaUtils.timeStringAsMs)
-      .getOrElse(0L)
+  /** Query governance ([[graft.core.Governor]]). The Go server hands the
+    * RPC's ctx to `api.Query`, so a client disconnect or deadline aborts
+    * the request; the shaded grpc `Context` carries exactly that signal
+    * here, and its cancellation listener kills the request. A server-side
+    * `spark.graft.queryTimeout` deadline applies when clients set none.
+    * gRPC job groups are `graft-grpc-q<id>`. */
+  private val governor = new graft.core.Governor(spark, "GRPC", "graft-grpc-q")
 
-  /** The reference's per-query gRPC access line (`server/grpc.go:1638-1662`
-    * LogQuery: `GRPC: ip, ua, method, userid, username, [index]pql|sql`),
-    * emitted when `spark.graft.queryLog` is set. The shaded ServerCalls
-    * layer doesn't surface peer ip/user-agent to the handler; they log
-    * empty, like the reference's own not-ok fallbacks. */
+  /** The access line ([[graft.core.Governor.logQuery]]). The shaded
+    * ServerCalls layer doesn't surface peer ip/user-agent to the handler;
+    * they log empty, like the reference's own not-ok fallbacks. */
   private def logQuery(method: String, index: String, q: String): Unit =
-    if (spark.conf.get("spark.graft.queryLog", "false") == "true") {
-      // newline-stripped like the HTTP facade's line: a query body spanning
-      // lines would otherwise forge extra access-log records, which
-      // `Advise --from-log` parses as real production queries
-      val clean = q.replace("\n", "").replace("\r", "")
-      val body = if (index.nonEmpty) s"[$index]$clean" else clean
-      System.err.println(s"GRPC: , [], $method, , , $body")
-    }
+    governor.logQuery("", "", method, "", "", index, q)
 
   private def governed[A](f: => A): A = {
-    val group = s"graft-grpc-q${grpcSeq.incrementAndGet()}"
-    val t0 = System.nanoTime()
-    val kill = new java.util.concurrent.atomic.AtomicReference[String](null)
-    val ctlClosed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    def killWith(reason: String): Unit =
-      if (!ctlClosed.get && kill.compareAndSet(null, reason)) {
-        jobSpans.killed.put(group,
-          () => spark.sparkContext.cancelJobGroup(group))
-        // teardown raced between our put and its remove → self-clean;
-        // otherwise cancel unconditionally (see HttpFacade.QueryCtl)
-        if (ctlClosed.get) jobSpans.killed.remove(group)
-        else spark.sparkContext.cancelJobGroup(group)
-      }
-    spark.sparkContext.setJobGroup(group, group, interruptOnCancel = true)
+    val h = governor.handle()
     val ctx = grpc.Context.current()
     val lis = new grpc.Context.CancellationListener {
       def cancelled(c: grpc.Context): Unit =
-        killWith(
+        h.kill(
           if (Option(c.getDeadline).exists(_.isExpired)) "query timeout"
           else "query cancelled") // pilosa.go:55-56 wordings
     }
     ctx.addListener(lis, (r: Runnable) => r.run())
-    val timeoutMs = confMs("spark.graft.queryTimeout")
-    val deadline: Option[java.util.concurrent.ScheduledFuture[_]] =
-      if (timeoutMs <= 0) None
-      else Some(watchdog.schedule(new Runnable {
-        def run(): Unit = killWith("query timeout")
-      }, timeoutMs, java.util.concurrent.TimeUnit.MILLISECONDS))
-    val check: () => Unit =
-      () => Option(kill.get).foreach(r => throw new Killed(r))
-    try graft.core.QueryContext.install(check)(f)
-    catch {
-      // a killed request surfaces Spark's group-cancel wording; answer
-      // with the reference's error instead
-      case e: Throwable =>
-        throw Option(kill.get).map(new Killed(_)).getOrElse(e)
-    } finally {
-      deadline.foreach(_.cancel(false))
-      ctx.removeListener(lis)
-      ctlClosed.set(true)
-      jobSpans.killed.remove(group)
-      jobSpans.drain(group) // spans unused on this surface; keeps the map bounded
-      spark.sparkContext.clearJobGroup()
-      // LongQueryTime accounting, uniform with the HTTP facade
-      // (http_handler.go:397-406; flat counter on /metrics)
-      val longNs = confMs("spark.graft.longQueryTime") * 1000000L
-      val durNs = System.nanoTime() - t0
-      if (longNs > 0 && durNs > longNs) {
-        System.err.println(
-          s"GRPC query duration ${durNs / 1000000}ms exceeds ${longNs / 1000000}ms")
-        graft.core.Metrics.inc(graft.core.Metrics.SlowQuery)
-      }
-    }
+    try governor.run(h, "")(f) finally ctx.removeListener(lis)
   }
 
-  private def killedStatus(e: Killed): grpc.StatusRuntimeException =
+  /** `errToStatusError` (`reference/server/grpc.go:109-113`):
+    * ErrQueryTimeout → DEADLINE_EXCEEDED, ErrQueryCancelled → CANCELLED. */
+  private def killedStatus(e: graft.core.QueryKilled): grpc.StatusRuntimeException =
     (if (e.reason == "query timeout") Status.DEADLINE_EXCEEDED
      else Status.CANCELLED)
       .withDescription(e.reason).asRuntimeException()
@@ -315,8 +247,6 @@ final class GrpcFacade(spark: SparkSession, dir: String, port: Int,
   private def tableState(name: String): DataFrame =
     spark.table(graft.core.Idents.q(name))
 
-  private val MaxWireRows = 100000
-
   // ------------------------------------------------------------- encoding
 
   private def datatypeOf(name: String, t: DataType): String = t match {
@@ -360,13 +290,6 @@ final class GrpcFacade(spark: SparkSession, dir: String, port: Int,
       }
     }
 
-  private def collectCapped(df: DataFrame) = {
-    val rows = df.limit(MaxWireRows + 1).collect()
-    if (rows.length > MaxWireRows)
-      sys.error(s"result exceeds $MaxWireRows rows; add TOP(n) or a filter")
-    rows
-  }
-
   /** DataFrame → TableResponse bytes (headers=1, rows=2). */
   private def toTable(df: DataFrame): Array[Byte] = {
     val w = new Proto.Writer
@@ -374,7 +297,7 @@ final class GrpcFacade(spark: SparkSession, dir: String, port: Int,
     df.schema.fields.zip(dts).foreach { case (f, dt) =>
       w.msg(1)(h => { h.string(1, f.name); h.string(2, dt) })
     }
-    collectCapped(df).foreach { r =>
+    WireRows.collect(df).foreach { r =>
       w.msg(2) { row =>
         dts.indices.foreach(i => writeColumn(row, 1, dts(i), r.get(i)))
       }
@@ -390,7 +313,7 @@ final class GrpcFacade(spark: SparkSession, dir: String, port: Int,
       df.schema.fields.zip(dts).foreach { case (f, dt) =>
         w.msg(1)(h => { h.string(1, f.name); h.string(2, dt) })
       }
-    val rows = collectCapped(df)
+    val rows = WireRows.collect(df)
     if (rows.isEmpty) {
       val w = new Proto.Writer; headers(w); Seq(w.result)
     } else rows.zipWithIndex.map { case (r, i) =>
@@ -465,7 +388,7 @@ final class GrpcFacade(spark: SparkSession, dir: String, port: Int,
       def invoke(req: Array[Byte], out: StreamObserver[Array[Byte]]): Unit =
         try { out.onNext(governed(f(new Proto.Reader(req)))); out.onCompleted() }
         catch {
-          case e: Killed => out.onError(killedStatus(e))
+          case e: graft.core.QueryKilled => out.onError(killedStatus(e))
           case e: grpc.StatusRuntimeException => out.onError(e)
           case e: Auth.AuthError => out.onError(Status.PERMISSION_DENIED
             .withDescription(msg(e)).asRuntimeException())
@@ -480,7 +403,7 @@ final class GrpcFacade(spark: SparkSession, dir: String, port: Int,
         def invoke(req: Array[Byte], out: StreamObserver[Array[Byte]]): Unit =
           try { governed(f(new Proto.Reader(req))).foreach(out.onNext); out.onCompleted() }
           catch {
-            case e: Killed => out.onError(killedStatus(e))
+            case e: graft.core.QueryKilled => out.onError(killedStatus(e))
             case e: grpc.StatusRuntimeException => out.onError(e)
             case e: Auth.AuthError => out.onError(Status.PERMISSION_DENIED
               .withDescription(msg(e)).asRuntimeException())
@@ -687,12 +610,11 @@ final class GrpcFacade(spark: SparkSession, dir: String, port: Int,
     // views + warehouse state must exist before queries land
     graft.core.Tables.registerAll(spark, dir)
     graft.sql.Ddl.restoreSession(spark)
-    spark.sparkContext.addSparkListener(jobSpans) // killed-group re-cancel hook
+    governor.start()
     server.start(); server.getPort
   }
   def stop(): Unit = {
-    spark.sparkContext.removeSparkListener(jobSpans)
-    watchdog.shutdownNow()
+    governor.stop()
     server.shutdownNow()
   }
 }

@@ -63,45 +63,16 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
       Auth.chkAuthZ(cfg, bearer, index, required)
     }
 
-  /** The reference's per-query HTTP access line
-    * (`reference/http_handler.go:806-817`: ip, ua, url-path, userid,
-    * username, query string — newlines stripped; non-query endpoints like
-    * /status and /metrics never log, which holds here by construction
-    * since only the query handlers call this), emitted when
-    * `spark.graft.queryLog` is set — the same switch as the gRPC facade's
-    * lines. `[index]`-tagged PQL bodies feed `tools.Advise --from-log`
-    * alongside the gRPC records, so production traffic on either facade
-    * advises indexes. */
+  /** The per-query access line ([[graft.core.Governor.logQuery]]): only
+    * the query handlers call this, so non-query endpoints like /status and
+    * /metrics never log, as in the reference. */
   private def logQuery(ex: HttpExchange, user: Option[Auth.UserInfo],
                        index: String, q: String): Unit =
-    if (spark.conf.get("spark.graft.queryLog", "false") == "true") {
-      // EVERY client-controlled field is sanitized, not just the body: a
-      // User-Agent (or token-derived user name) carrying a newline would
-      // forge whole 'HTTP:'/'GRPC:' access lines, which `Advise --from-log`
-      // then parses as real production queries — log injection becoming
-      // statement injection on the operator's replay. The ua additionally
-      // drops ']' so it can never terminate the bracketed field early and
-      // shift the path/body columns the parser splits on.
-      // ',' is ALSO stripped from the non-body fields (ip/ua/user): the
-      // access line is comma-split by Advise.parseLog, so a display name
-      // like `x, SELECT …` would shift the parsed columns and prefix forged
-      // text into the query body (the no-execute guards cap the impact at
-      // recommendation skew — but the forgery shouldn't parse at all)
-      def clean(s: String) = s.replace("\n", "").replace("\r", "")
-      def cleanField(s: String) = clean(s).replace(",", "")
-      val ip = cleanField(Option(ex.getRemoteAddress)
-        .flatMap(a => Option(a.getAddress)).map(_.getHostAddress)
-        .getOrElse(""))
-      val ua = cleanField(Option(ex.getRequestHeaders.getFirst("User-Agent"))
-        .getOrElse("")).replace("]", "")
-      // the BODY is the line's LAST comma-split field — its commas are real
-      // query text and parse fine; only newlines are stripped there
-      val body = (if (index.nonEmpty) s"[$index]" else "") + clean(q)
-      System.err.println(
-        s"HTTP: $ip, [$ua], ${cleanField(ex.getRequestURI.getPath)}, " +
-        s"${user.map(u => cleanField(u.userId)).getOrElse("")}, " +
-        s"${user.map(u => cleanField(u.userName)).getOrElse("")}, $body")
-    }
+    governor.logQuery(Option(ex.getRemoteAddress)
+        .flatMap(a => Option(a.getAddress)).map(_.getHostAddress).getOrElse(""),
+      Option(ex.getRequestHeaders.getFirst("User-Agent")).getOrElse(""),
+      ex.getRequestURI.getPath, user.map(_.userId).getOrElse(""),
+      user.map(_.userName).getOrElse(""), index, q)
 
   /** `reference/http_handler.go:1062-1077` filterSchema: with auth on,
     * non-admin callers see only the indexes on their read-authorized list;
@@ -161,121 +132,43 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
   private val detailsCache = new ViewMemo[String]
   private val maxShardCache = new ViewMemo[Long]
 
-  /** Query tracker (`reference/tracker.go:11-27`): in-flight queries for
-    * `GET /queries`, a bounded ring of finished ones for
+  /** Query governance ([[graft.core.Governor]]): a
+    * `spark.graft.queryTimeout` deadline, explicit cancellation by the
+    * admin `POST /queries/cancel?id=` extension (plain-HTTP clients can't
+    * carry a Go context, and the reference cancels on client disconnect,
+    * which JDK HttpServer does not surface mid-handler), the root
+    * `request` span with the request's Spark jobs, and LongQueryTime
+    * accounting. HTTP job groups are `graft-q<id>`, `id` being the one
+    * `/queries` reports. */
+  private val governor = new graft.core.Governor(spark, "HTTP", "graft-q")
+
+  /** Query tracker (`reference/tracker.go:11-27`): in-flight queries, with
+    * the handles `POST /queries/cancel` kills, for `GET /queries`, and a
+    * bounded ring of finished ones, with their span trees, for
     * `GET /query-history`. */
   private case class QueryRec(pql: String, sql: String, index: String,
                               startNs: Long, endNs: Long = 0L,
                               spans: String = "")
   private val activeQueries =
-    new java.util.concurrent.ConcurrentHashMap[Long, QueryRec]
-  private val querySeq = new java.util.concurrent.atomic.AtomicLong
+    new java.util.concurrent.ConcurrentHashMap[Long, (QueryRec, governor.Handle)]
   private val pastQueries =
     new java.util.concurrent.ConcurrentLinkedDeque[QueryRec]
   private val PastQueriesKept = 100
-
-  /** Per-query span tracing (`reference/tracing/tracing.go:14-58`;
-    * `executor.go` wraps each executor section): one ROOT span per tracked
-    * request, compiler sections attach as nested children through the
-    * thread-local, and the Spark jobs the request launched (matched by job
-    * group) attach at close. Spans land on the /query-history record. */
-  private val jobSpans = new graft.core.JobSpanListener
-
-  /** Query governance — the reference's context semantics on Spark's
-    * mechanism. `validateQueryContext` (`reference/executor.go:8165-8180`)
-    * aborts a request whose context is done: deadline → ErrQueryTimeout,
-    * cancellation → ErrQueryCancelled (`reference/pilosa.go:55-56`); and
-    * `collectStats` logs queries over the configured LongQueryTime
-    * (`reference/http_handler.go:397-406`, `server.go:199-204`). Plain-HTTP
-    * clients can't carry a Go context, so here the deadline comes from
-    * `spark.graft.queryTimeout` and explicit cancellation from the admin
-    * `POST /queries/cancel?id=` extension (the reference cancels on client
-    * disconnect, which JDK HttpServer does not surface mid-handler).
-    * Enforcement is the request's Spark job group: `killWith` cancels it
-    * with `interruptOnCancel=true` — running tasks are interrupted and the
-    * 32 cores free IMMEDIATELY, the Spark-native form of the reference's
-    * per-shard ctx polls. Group cancellation is one-shot and a multi-call
-    * program would otherwise launch its next job past it, so the kill also
-    * registers the group with [[graft.core.JobSpanListener]].killed: any
-    * job that starts in the group after the kill is re-cancelled
-    * event-driven from onJobStart. Driver-side call boundaries poll
-    * [[graft.core.QueryContext]] like the executor sections do. */
-  private final class QueryCtl(val group: String) {
-    val kill = new java.util.concurrent.atomic.AtomicReference[String](null)
-    private val closed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    def killWith(reason: String): Unit =
-      if (!closed.get && kill.compareAndSet(null, reason)) {
-        jobSpans.killed.put(group, () => spark.sparkContext.cancelJobGroup(group))
-        // deadline.cancel(false) can't stop a watchdog task already past
-        // the CAS: if close() raced between our put and its remove, the
-        // entry would leak forever — re-check and self-clean
-        if (closed.get) jobSpans.killed.remove(group)
-        // cancel unconditionally: the killed hook re-cancels jobs that
-        // start later, and gating on span-listener liveness would skip the
-        // cancel entirely once the listener's group cap is hit (a cancel
-        // on an idle group merely logs a scheduler warning)
-        else spark.sparkContext.cancelJobGroup(group)
-      }
-    def close(): Unit = { closed.set(true); jobSpans.killed.remove(group) }
-  }
-  private val activeCtl =
-    new java.util.concurrent.ConcurrentHashMap[Long, QueryCtl]
   /** In-flight JFR recording between /cpu-profile/start and /stop (the
     * reference's pprofCPUProfileBuffer slot, `http_handler.go:1624`). */
   private val cpuProfile =
     new java.util.concurrent.atomic.AtomicReference[jdk.jfr.Recording](null)
-  private val watchdog =
-    java.util.concurrent.Executors.newSingleThreadScheduledExecutor { r =>
-      val t = new Thread(r, "graft-query-watchdog"); t.setDaemon(true); t
-    }
-  private def confMs(key: String): Long =
-    Option(spark.conf.get(key, null)).filter(_.nonEmpty)
-      .map(org.apache.spark.network.util.JavaUtils.timeStringAsMs)
-      .getOrElse(0L)
 
   private def tracked[A](pql: String, sql: String, index: String)(f: => A): A = {
-    val id = querySeq.incrementAndGet()
     val rec = QueryRec(pql, sql, index, System.nanoTime())
-    activeQueries.put(id, rec)
-    val group = s"graft-q$id"
-    val ctl = new QueryCtl(group)
-    activeCtl.put(id, ctl)
-    spark.sparkContext.setJobGroup(group, group, interruptOnCancel = true)
-    val timeoutMs = confMs("spark.graft.queryTimeout")
-    val deadline: Option[java.util.concurrent.ScheduledFuture[_]] =
-      if (timeoutMs <= 0) None
-      else Some(watchdog.schedule(new Runnable {
-        def run(): Unit = ctl.killWith("query timeout") // pilosa.go:56
-      }, timeoutMs, java.util.concurrent.TimeUnit.MILLISECONDS))
-    val check: () => Unit =
-      () => Option(ctl.kill.get).foreach(r => throw new RuntimeException(r))
-    val root = new graft.core.Trace.Span("request", System.nanoTime())
-    try graft.core.Trace.install(root)(graft.core.QueryContext.install(check)(f))
-    catch {
-      // a killed request surfaces Spark's job-group-cancel wording; answer
-      // with the reference's error instead (ErrQueryCancelled/Timeout)
-      case e: Throwable => throw Option(ctl.kill.get)
-        .map(new RuntimeException(_)).getOrElse(e)
-    } finally {
-      deadline.foreach(_.cancel(false))
-      ctl.close()
-      activeCtl.remove(id)
-      root.endNs = System.nanoTime()
-      spark.sparkContext.clearJobGroup()
-      jobSpans.drain(group).foreach(root.children.add)
-      activeQueries.remove(id)
+    val h = governor.handle()
+    activeQueries.put(h.id, (rec, h))
+    try governor.run(h, s"$index ${if (pql.nonEmpty) pql else sql}")(f)
+    finally {
+      activeQueries.remove(h.id)
       pastQueries.addFirst(rec.copy(endNs = System.nanoTime(),
-        spans = root.toJson))
+        spans = h.root.toJson))
       while (pastQueries.size > PastQueriesKept) pastQueries.pollLast()
-      val longNs = confMs("spark.graft.longQueryTime") * 1000000L
-      val durNs = root.endNs - rec.startNs
-      if (longNs > 0 && durNs > longNs) {
-        // http_handler.go:406 log shape (method/URL → index + query text)
-        System.err.println(
-          s"HTTP query duration ${durNs / 1000000}ms exceeds ${longNs / 1000000}ms: " +
-            s"$index ${if (pql.nonEmpty) pql else sql}")
-        graft.core.Metrics.inc(graft.core.Metrics.SlowQuery)
-      }
     }
   }
 
@@ -301,7 +194,7 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
   }
 
   def start(): Int = {
-    spark.sparkContext.addSparkListener(jobSpans)
+    governor.start()
     graft.core.Tables.registerAll(spark, dir)
     // with a warehouse: re-register its tables over the parquet views so
     // writes from a previous process are visible (restart = restore)
@@ -578,16 +471,18 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
     // `GET /schema/details` (`http_handler.go:525`): /schema plus per-field
     // cardinality — one agg pass per table (approx_count_distinct: a
     // details probe, not an exact invariant, same spirit as the
-    // reference's cached counts).
+    // reference's cached counts). The same index list as /schema.
     server.createContext("/schema/details", new HttpHandler {
       def handle(ex: HttpExchange): Unit = respond(ex) {
         val vis = readable(chk(ex, None, Auth.PermRead))
         import org.apache.spark.sql.functions.approx_count_distinct
-        val indexes = graft.core.Tables.names.filter(vis).map { t =>
+        val indexes = graft.sql.Ddl.indexNames(spark).filter(vis).map { t =>
           detailsCache(t) {
             val df = tableState(t)
             val fields = df.schema.fields.filter(_.name != "_id")
-            val cards = df.select(fields.map(f =>
+            // an `_id`-only index (`POST /index/{i}`) has no field to
+            // count, and an empty projection would yield no row at all
+            lazy val cards = df.select(fields.map(f =>
               approx_count_distinct(f.name).as(f.name)).toSeq: _*).collect()(0)
             val fieldJson = fields.zipWithIndex.map { case (f, i) =>
               s"""{"name":${js(f.name)},"options":{"type":${js(
@@ -1122,7 +1017,7 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
         chk(ex, None, Auth.PermAdmin)
         import scala.jdk.CollectionConverters._
         s"""{"queries":[${activeQueries.entrySet.asScala.toSeq.sortBy(_.getKey)
-          .map(e => queryJson(e.getValue, past = false, id = e.getKey))
+          .map(e => queryJson(e.getValue._1, past = false, id = e.getKey))
           .mkString(",")}]}"""
       }
     })
@@ -1141,9 +1036,9 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
           .split("&").collectFirst { case s if s.startsWith("id=") =>
             s.drop(3).toLong }
           .getOrElse(sys.error("id required"))
-        activeCtl.get(id) match {
-          case null => throw PlainError(404, s"no active query $id")
-          case ctl  => ctl.killWith("query cancelled"); s"""{"cancelled":$id}"""
+        activeQueries.get(id) match {
+          case null   => throw PlainError(404, s"no active query $id")
+          case (_, h) => h.kill("query cancelled"); s"""{"cancelled":$id}"""
         }
       }
     })
@@ -1281,10 +1176,7 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
   private var requestPool: java.util.concurrent.ExecutorService = null
 
   def stop(): Unit = {
-    // unregister from the SHARED session: specs start many facades on one
-    // SparkContext, and leaked listeners would accumulate per facade
-    spark.sparkContext.removeSparkListener(jobSpans)
-    watchdog.shutdownNow()
+    governor.stop()
     server.stop(0)
     // HttpServer.stop does NOT stop its executor: the 8 NON-DAEMON pool
     // threads outlive the facade — 8 leaked threads per serving bounce,
@@ -1608,7 +1500,7 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
           sys.error("shards restriction unsupported on write programs")
         val calls = graft.pql.Parser.parse(query)
         def encode(rs: Seq[Option[DataFrame]]): Array[Byte] =
-          PbQuery.encodeResponse(calls.zip(rs), MaxWireRows)
+          PbQuery.encodeResponse(calls.zip(rs))
         (200, tracked(query, "", idx) {
           if (shards.isEmpty) graft.pql.Pql.programResultsDurable(spark, idx, query)(encode)
           else // a read-only program (checked above) over those shards
@@ -1835,11 +1727,6 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
     Option(e.getMessage).getOrElse(e.getClass.getSimpleName).linesIterator
       .take(3).mkString(" ")
 
-  /** Hard cap on rows materialized into one HTTP response — the coordinator-
-    * node analogue of the reference's result limits; an unbounded SELECT
-    * would otherwise collect the whole table into the server's heap. */
-  private val MaxWireRows = 100000
-
   /** The `?plan=true` operator tree — the reference renders its sql3 plan
     * as nested maps with `_op`/`_schema` plus op-specific keys
     * (`sql3/planner/opprojection.go:61-75`). Ours renders the FINAL Spark
@@ -1874,10 +1761,7 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
   private def toWire(df: DataFrame): String = {
     val fields = df.schema.fields.map(f =>
       s"""{"name":${js(f.name)},"base-type":${js(f.dataType.simpleString)}}""")
-    val collected = df.limit(MaxWireRows + 1).collect()
-    if (collected.length > MaxWireRows)
-      sys.error(s"result exceeds $MaxWireRows rows; add TOP(n) or a filter")
-    val rows = collected.map { r =>
+    val rows = WireRows.collect(df).map { r =>
       (0 until r.length).map(i => jsAny(r.get(i))).mkString("[", ",", "]")
     }
     s"""{"schema":{"fields":[${fields.mkString(",")}]},"data":[${rows.mkString(",")}]}"""

@@ -140,24 +140,19 @@ private[server] object PbQuery {
   /** Encode one result per top-level call into `QueryResponse.Results`.
     * `calls` pairs each parsed call with its engine result (`None` = write
     * ack). */
-  def encodeResponse(calls: Seq[(graft.pql.Call, Option[DataFrame])],
-                     maxRows: Int): Array[Byte] = {
+  def encodeResponse(calls: Seq[(graft.pql.Call, Option[DataFrame])]): Array[Byte] = {
     val w = new Proto.Writer
     calls.foreach { case (call, df) =>
-      w.msg(2)(rw => encodeResult(rw, call, df, maxRows))
+      w.msg(2)(rw => encodeResult(rw, call, df))
     }
     w.result
   }
 
-  private def collect(df: DataFrame, maxRows: Int) = {
-    val rows = df.limit(maxRows + 1).collect()
-    if (rows.length > maxRows)
-      sys.error(s"result exceeds $maxRows rows over the protobuf wire")
-    rows
-  }
+  private def collect(df: DataFrame) =
+    WireRows.collect(df, " over the protobuf wire")
 
   private def encodeResult(w: Proto.Writer, call: graft.pql.Call,
-                           dfOpt: Option[DataFrame], maxRows: Int): Unit = {
+                           dfOpt: Option[DataFrame]): Unit = {
     val bitmapCalls = Set("Row", "Range", "Intersect", "Union", "Difference",
       "Xor", "Not", "All", "ConstRow", "UnionRows", "Limit", "Shift",
       "Distinct", "Options")
@@ -168,16 +163,16 @@ private[server] object PbQuery {
         case "Count" =>
           w.int(2, headLong(df)); w.int(6, 5)
         case "IncludesColumn" =>
-          w.bool(4, collect(df, maxRows).headOption.exists(_.getBoolean(0)))
+          w.bool(4, collect(df).headOption.exists(_.getBoolean(0)))
           w.int(6, 6)
         case "Sum" | "Min" | "Max" | "Percentile" | "FieldValue" =>
-          val rows = collect(df, maxRows)
+          val rows = collect(df)
           if (rows.isEmpty) w.int(6, 0) // no value → Nil result
           else {
             w.msg(5)(vw => valCount(vw, df.schema, rows.head)); w.int(6, 4)
           }
         case "Rows" => // RowIdentifiers{Rows=1, Keys=2}
-          val rows = collect(df, maxRows)
+          val rows = collect(df)
           w.msg(9) { rw =>
             df.schema.head.dataType match {
               case StringType => rows.foreach(r => rw.string(2, r.getString(0)))
@@ -186,24 +181,24 @@ private[server] object PbQuery {
           }
           w.int(6, 9)
         case "TopN" | "TopK" => // PairsField{Pairs=1, Field=2}
-          val rows = collect(df, maxRows)
+          val rows = collect(df)
           w.msg(11) { pw =>
             rows.foreach(r => pw.msg(1)(p => pair(p, r.get(0), numLong(r.get(1)))))
             call.fieldArg.foreach(pw.string(2, _))
           }
           w.int(6, 3)
         case "MinRow" | "MaxRow" => // PairField{Pair=1, Field=2}
-          val rows = collect(df, maxRows)
+          val rows = collect(df)
           w.msg(12) { pw =>
             rows.headOption.foreach(r =>
               pw.msg(1)(p => pair(p, r.get(0), numLong(r.get(1)))))
             call.fieldArg.foreach(pw.string(2, _))
           }
           w.int(6, 11)
-        case "GroupBy" => encodeGroupCounts(w, call, df, maxRows)
-        case "Extract" => encodeExtractedTable(w, df, maxRows)
+        case "GroupBy" => encodeGroupCounts(w, call, df)
+        case "Extract" => encodeExtractedTable(w, df)
         case n if bitmapCalls(n) => // Row{Columns=1, Keys=3}
-          val rows = collect(df, maxRows)
+          val rows = collect(df)
           w.msg(1) { rw =>
             df.schema.head.dataType match {
               case StringType => rows.foreach(r => rw.string(3, r.getString(0)))
@@ -270,7 +265,7 @@ private[server] object PbQuery {
     * Value=4·Int64} (`public.proto:96-111,270-273`). Our GroupBy result
     * lays out group fields, then `cnt`, then optional `agg`. */
   private def encodeGroupCounts(w: Proto.Writer, call: graft.pql.Call,
-                                df: DataFrame, maxRows: Int): Unit = {
+                                df: DataFrame): Unit = {
     val cols = df.schema.fields
     val nKeys = cols.indexWhere(_.name == "cnt") match {
       case -1 => sys.error("GroupBy result missing cnt")
@@ -280,7 +275,7 @@ private[server] object PbQuery {
     val aggName = call.namedCall("aggregate").map(_.name).getOrElse("")
     w.msg(16) { gw =>
       if (aggName.nonEmpty) gw.string(1, aggName)
-      collect(df, maxRows).foreach { r =>
+      collect(df).foreach { r =>
         gw.msg(2) { cw =>
           (0 until nKeys).foreach { i =>
             cw.msg(1) { fw =>
@@ -318,8 +313,7 @@ private[server] object PbQuery {
     * members by column type: int→BSIValue, string→MutexKey, bool→Bool,
     * idset→IDs, stringset→Keys — the same mapping the reference's executor
     * uses per field type. */
-  private def encodeExtractedTable(w: Proto.Writer, df: DataFrame,
-                                   maxRows: Int): Unit = {
+  private def encodeExtractedTable(w: Proto.Writer, df: DataFrame): Unit = {
     val fields = df.schema.fields.drop(1) // col 0 is _id
     w.msg(14) { tw =>
       fields.foreach { f =>
@@ -328,7 +322,7 @@ private[server] object PbQuery {
           fw.string(2, graft.sql.SystemTables.refType(f.dataType))
         }
       }
-      collect(df, maxRows).foreach { r =>
+      collect(df).foreach { r =>
         tw.msg(2) { cw =>
           r.get(0) match {
             case s: String => cw.string(1, s)

@@ -147,4 +147,22 @@ class MutationSpec extends SparkSpec {
       .filter(col("_id") === 1).collect()
     assert(pql.length == 1 && pql(0).isNullAt(1))
   }
+
+  test("a chained in-memory program plans one join per write, not a copy " +
+    "of the state per write") {
+    import spark.implicits._
+    val df = Seq((0L, "a"), (1L, "b"), (2L, "c"), (3L, "d")).toDF("_id", "s")
+    val n = 10
+    val pql = (1 to n).map(i =>
+      if (i % 3 == 0) s"Clear(${(i - 1) % 5}, s='v${i - 1}')"
+      else s"Set(${i % 5}, s='v$i')").mkString(" ")
+    val state = Pql.programOn(df, "chain_t", pql)._2
+    // the starting state plus one write relation per call; reading the
+    // state twice per write would plan 2^n copies of it
+    val leaves = state.queryExecution.analyzed.collectLeaves().length
+    assert(leaves <= 2 * n + 1, s"$leaves leaf relations for $n writes")
+    assert(state.orderBy("_id").collect().map(r => (r.getLong(0),
+      Option(r.getString(1)))).toSeq == Seq((0L, Some("v10")), (1L, Some("v1")),
+      (2L, Some("v7")), (3L, None), (4L, Some("v4"))))
+  }
 }

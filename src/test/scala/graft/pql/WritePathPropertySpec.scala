@@ -83,10 +83,7 @@ class WritePathPropertySpec extends SparkSpec {
         s"$c(${lit(id)}, $f=$value)"
       }.mkString(" ")
       calls.foreach { case (c, id, f, v) => apply(c, id, f, v) }
-      // a program's successor references its state twice (untouched rows
-      // plus the folded touched ones): cut the lineage between programs so
-      // the chained plan does not double with every call
-      inMemory = Pql.programOn(inMemory, table, pql)._2.localCheckpoint()
+      inMemory = Pql.programOn(inMemory, table, pql)._2
       Pql.programResultsDurable(s, table, pql)(identity)
       val durable = rowsOf(s.table(graft.core.Idents.q(table)))
       assert(durable == model, s"program $p `$pql`: durable runner")

@@ -1296,6 +1296,25 @@ class HttpFacadeSpec extends SparkSpec {
     assert(d1 == 200 && rNames(e1) > rNames(e0), e1)
   }
 
+  test("/schema/details lists an index created over REST, before and " +
+    "after its first field") {
+    def send(method: String, path: String, body: String): (Int, String) = {
+      val req = HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$path"))
+        .method(method, HttpRequest.BodyPublishers.ofString(body)).build()
+      val r = client.send(req, HttpResponse.BodyHandlers.ofString())
+      (r.statusCode(), r.body())
+    }
+    assert(send("POST", "/index/detidx", "")._1 == 200)
+    val (c0, b0) = get("/schema/details")
+    assert(c0 == 200 && b0.contains(""""name":"detidx","fields":[]"""), b0)
+    assert(send("POST", "/index/detidx/field/size",
+      """{"options":{"type":"int","min":0,"max":1000}}""")._1 == 200)
+    val (c1, b1) = get("/schema/details")
+    assert(c1 == 200 && b1.contains(
+      """"name":"detidx","fields":[{"name":"size","options":{"type":"int"},"cardinality":0}]"""),
+      b1)
+  }
+
   test("another session's CREATE VIEW does not hide this session's table " +
     "from /schema and /index") {
     assert(post("/sql", "CREATE TABLE listed_t (_id ID, v INT)")._1 == 200)
