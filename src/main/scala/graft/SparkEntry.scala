@@ -28,8 +28,15 @@ object SparkEntry {
   private def pqlQ(tbl: String, q: String): (SparkSession, String) => DataFrame =
     (s, dir) => Pql.run(s, dir, tbl, q)
 
+  /** A write program on a session of its own, whose one table is
+    * registered through TableLog: later queries on `s` see the unmutated
+    * tables. */
   private def pqlProg(tbl: String, q: String): (SparkSession, String) => DataFrame =
-    (s, dir) => Pql.program(s, dir, tbl, q)
+    (s, dir) => {
+      val own = s.newSession()
+      graft.core.TableLog.replace(own, tbl, Tables.load(own, dir, tbl), checkpoint = false)
+      Pql.programResults(own, tbl, q)(Pql.lastResult(own, tbl))
+    }
 
   // ------------------------------------------------------------------ PQL ops
 

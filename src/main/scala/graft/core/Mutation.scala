@@ -4,83 +4,28 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** PQL write operators as pure DataFrame → DataFrame transforms.
+/** The bulk field writes that PQL `Set`/`Clear` calls and every import
+  * route share, and their one commit site.
   *
   * The reference mutates per-shard roaring bitmaps under an RBF transaction
-  * (`reference/executor.go:6194` Set, `:5895` Clear, `:5976` ClearRow,
-  * `:6077` Store, `:9050` Delete). Spark-side, the storage analogue is a
-  * copy-on-write table format (Delta MERGE / UPDATE / DELETE); the *semantics*
-  * layer — what the new table state must be — is format-independent and lives
-  * here. Each transform returns the successor table; a sink can persist it via
-  * overwrite (parquet) or merge (Delta).
-  *
-  * Scale note: `Set` and `Clear` have one implementation, the bulk ops
-  * below. A PQL call is a one-row [[FieldWrite]] and an import is many;
-  * [[touched]] restricts the table state to the written ids before the
-  * writes fold onto it, so a write rewrites only its own records, and
-  * [[commit]] upserts those rows into [[TableLog]] — the one write-commit
-  * site, like the reference's one RBF write transaction. `ClearRow`,
-  * `Store` and `Delete` are column-wide projections or filters of the
-  * whole state.
+  * (`reference/executor.go:6194` Set, `:5895` Clear). A PQL call is a
+  * one-row [[FieldWrite]] and an import is many; [[touched]] restricts the
+  * table state to the written ids before the writes fold onto it through
+  * the bulk ops below, so a write rewrites only its own records, and
+  * [[commit]] upserts those rows into [[TableLog]] — like the reference's
+  * one RBF write transaction. PQL's other write calls (`ClearRow`,
+  * `Store`, `Delete`) are described by `graft.pql.Compiler.writeEffect`
+  * and commit through TableLog directly.
   *
   * Semantic quirks preserved (SURVEY.md §1.2):
   *  - set fields accumulate values; `Set` adds a member (dedup on write)
   *  - mutex/scalar fields replace-on-write (`reference/field.go:352-365`)
-  *  - `Store(b, f=v)` makes row v's bitmap EXACTLY b: members added where the
-  *    filter holds and removed where it doesn't (`reference/executor.go:6077`)
-  *  - `Delete` removes whole records (existence bits and all field bits)
+  *  - `Clear` of a NULL set leaves it NULL
   */
 object Mutation {
 
   private def isSet(df: DataFrame, field: String): Boolean =
     df.schema(field).dataType.isInstanceOf[ArrayType]
-
-  private def addMember(arr: Column, v: Column): Column =
-    array_distinct(concat(coalesce(arr, array()), array(v)))
-
-  /** ClearRow(field=value): clear value's bitmap across ALL records
-    * (`reference/executor.go:5976`). */
-  def clearRow(df: DataFrame, field: String, value: Column): DataFrame = {
-    val next =
-      if (isSet(df, field)) array_remove(col(field), value)
-      else when(col(field) === value, lit(null).cast(df.schema(field).dataType))
-        .otherwise(col(field))
-    df.withColumn(field, next)
-  }
-
-  /** Store(filter, field=value): row bitmap := filter
-    * (`reference/executor.go:6077`) — add member where pred, remove elsewhere.
-    * Scalar fields: value where pred, null where the old value was `value`. */
-  def store(df: DataFrame, pred: Column, field: String, value: Column): DataFrame = {
-    val p = coalesce(pred, lit(false))
-    val next =
-      if (isSet(df, field))
-        when(p, addMember(col(field), value))
-          .otherwise(array_remove(coalesce(col(field), array()), value))
-      else when(p, value)
-        .otherwise(when(col(field) === value, lit(null).cast(df.schema(field).dataType))
-          .otherwise(col(field)))
-    df.withColumn(field, next)
-  }
-
-  /** Delete(filter): drop whole records (`reference/executor.go:9050-9320`).
-    * Null predicate rows survive (bitmap semantics: not in b ⇒ not deleted). */
-  def delete(df: DataFrame, pred: Column): DataFrame =
-    df.filter(!coalesce(pred, lit(false)))
-
-  /** Store when the filter arrived as a materialized `_id` set (ordinal PQL
-    * children like Limit/Sort): membership via join — Catalyst broadcasts a
-    * small id set; a billion-id set shuffles instead of OOMing the driver. */
-  def storeIds(df: DataFrame, ids: DataFrame, field: String, value: Column): DataFrame = {
-    val marked = df.join(
-      ids.select(col("_id")).distinct().withColumn("__in", lit(true)),
-      Seq("_id"), "left")
-    store(marked, col("__in").isNotNull, field, value).drop("__in")
-  }
-
-  /** Delete by materialized `_id` set — anti join, never collected. */
-  def deleteIds(df: DataFrame, ids: DataFrame): DataFrame =
-    df.join(ids.select(col("_id")), Seq("_id"), "left_anti")
 
   /** Bulk Clear: apply `Clear(id, field=value)` — remove one bit
     * (`reference/executor.go:5895`) — for every row of `writes` in ONE left
@@ -179,16 +124,19 @@ object Mutation {
                               rows: Seq[(String, String)],
                               value: Column = col("value"))
 
-  /** The whole successor of `state` after `writes` (the in-memory PQL
-    * runner's): each write folded on in order, one join per write,
-    * null-`_id` rows kept as [[TableLog]]'s view keeps them. Each bulk op
-    * reads its input once, so a chained program's plan grows by one join
-    * per write — at the price of a shuffle of the table per `Set`, which
-    * the committing runner ([[commit]], all serving traffic) avoids
-    * through [[touched]]. */
-  def applied(state: DataFrame, writes: Seq[FieldWrite]): DataFrame = {
+  /** The rows `writes` change or create: `state` restricted to the
+    * written ids, with each write folded on in order, one join per write.
+    * The restriction comes first because Spark does not push a semi-join
+    * below setBulk's full-outer join, so restricting after the fold would
+    * shuffle the whole table. Every bulk op changes or creates only rows
+    * whose `_id` is among its writes. The written ids are a driver-side
+    * list, so the semi-join broadcasts it; an id that does not cast names
+    * no record. */
+  def touched(state: DataFrame, writes: Seq[FieldWrite]): DataFrame = {
     import state.sparkSession.implicits._
-    writes.foldLeft(state) { (t, w) =>
+    val ids = writes.flatMap(_.rows.map(_._1)).distinct.toDF("_id")
+      .select(col("_id").cast(state.schema("_id").dataType).as("_id"))
+    writes.foldLeft(state.join(ids, Seq("_id"), "left_semi")) { (t, w) =>
       val rows = w.rows.zipWithIndex.map { case ((id, v), i) => (id, v, i.toLong) }
         .toDF("_id", "value", "seq").withColumn("value", w.value)
       w.op match {
@@ -196,22 +144,7 @@ object Mutation {
         case WriteOp.Clear        => clearBulk(t, w.field, rows)
         case WriteOp.ClearRecords => clearRecordsBulk(t, w.field, rows)
       }
-    }
-  }
-
-  /** The rows `writes` change or create: [[applied]] to `state` restricted
-    * to the written ids. The restriction comes first because Spark does
-    * not push a semi-join below setBulk's full-outer join, so restricting
-    * after the fold would shuffle the whole table. The rows are the same
-    * either way: every bulk op changes or creates only rows whose `_id` is
-    * among its writes. The written ids are a driver-side list, so the
-    * semi-join broadcasts it; an id that does not cast names no record. */
-  def touched(state: DataFrame, writes: Seq[FieldWrite]): DataFrame = {
-    import state.sparkSession.implicits._
-    val ids = writes.flatMap(_.rows.map(_._1)).distinct.toDF("_id")
-      .select(col("_id").cast(state.schema("_id").dataType).as("_id"))
-    applied(state.join(ids, Seq("_id"), "left_semi"), writes)
-      .filter(col("_id").isNotNull)
+    }.filter(col("_id").isNotNull)
   }
 
   /** The one write-commit site of `Set`/`Clear`, for PQL calls and every

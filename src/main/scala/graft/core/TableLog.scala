@@ -249,31 +249,17 @@ object TableLog {
 
   // --------------------------------------------------------------- manifest
 
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   /** Record the current piece layout so a fresh session can [[restore]].
-    * Written atomically (tmp + move) after every commit in warehouse mode. */
+    * Replaced atomically after every commit in warehouse mode. */
   private def writeManifest(wh: String, name: String, st: State): Unit = {
-    val d = tableDir(wh, name)
-    java.nio.file.Files.createDirectories(d)
-    val fields = Seq(
-      "schema" -> jstr(st.base.df.schema.json),
-      "base" -> st.base.path.map(jstr).getOrElse("null"),
-      "overlay" -> st.overlay.flatMap(_.path).map(jstr).getOrElse("null"),
-      "tombstones" -> st.tombstones.flatMap(_.path).map(jstr).getOrElse("null"),
-      "depth" -> st.depth.toString)
-    val json = fields.map { case (k, v) => s"${jstr(k)}: $v" }
-      .mkString("{", ", ", "}")
-    val tmp = d.resolve("manifest.json.tmp")
-    java.nio.file.Files.writeString(tmp, json)
-    java.nio.file.Files.move(tmp, d.resolve("manifest.json"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    import org.json4s._
+    def path(p: Option[String]): JValue = p.fold[JValue](JNull)(JString(_))
+    JsonFile.replace(tableDir(wh, name).resolve("manifest.json"), JObject(
+      "schema" -> JString(st.base.df.schema.json),
+      "base" -> path(st.base.path),
+      "overlay" -> path(st.overlay.flatMap(_.path)),
+      "tombstones" -> path(st.tombstones.flatMap(_.path)),
+      "depth" -> JInt(st.depth)))
   }
 
   /** Delete piece dirs that have been SUPERSEDED (older than every piece

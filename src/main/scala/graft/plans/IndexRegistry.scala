@@ -374,7 +374,8 @@ object IndexRegistry {
       }
     }
 
-  /** Read-modify-write of the whole registry file, atomic under [[lock]]:
+  /** Read-modify-write of the whole registry file, atomic under [[lock]]
+    * and replaced whole on disk ([[graft.core.JsonFile]]):
     * `f` maps the decoded records to the records to keep (it may throw to
     * abort the write). No-op without a warehouse. */
   private def rewrite(spark: SparkSession)(
@@ -382,9 +383,8 @@ object IndexRegistry {
     file(spark).foreach { p => lock.synchronized {
       val (opaque, decoded) = readJson(p).partitionMap(j =>
         IndexRecord.fromJson(j).left.map(_ => j))
-      java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.writeString(p, JsonMethods.compact(JsonMethods.render(
-        JArray(f(decoded).map(IndexRecord.toJson) ++ opaque))))
+      graft.core.JsonFile.replace(p,
+        JArray(f(decoded).map(IndexRecord.toJson) ++ opaque))
     }}
 
   /** The seg/group records over the fact table at `basePath`. */

@@ -272,36 +272,6 @@ final class Compiler(table: DataFrame, timeCol: Option[String] = None,
     case other => sys.error(s"${call.name}: column required, got $other")
   }
 
-  /** Execute a write call → the successor table state (see
-    * [[graft.core.Mutation]] for storage-layer notes). */
-  def write(call: Call): DataFrame = {
-    // mutation-path stale warning: a write over a fact table with a
-    // registered index means that index must be rebuilt (deletes have no
-    // inverse in the merge algebra) — say so NOW, not silently at the next
-    // query's freshness decline
-    graft.plans.IndexRewrite.warnMutated(table)
-    writeImpl(call)
-  }
-
-  private def writeImpl(call: Call): DataFrame = call.name match {
-    case "Set" | "Clear" => graft.core.Mutation.applied(table, Seq(fieldWrite(call)))
-    case "ClearRow" =>
-      val (f, v) = fieldValueOf(call)
-      graft.core.Mutation.clearRow(table, f, v)
-    case "Store" =>
-      val (f, v) = fieldValueOf(call)
-      bits(call.children.head) match {
-        case Left(p)    => graft.core.Mutation.store(table, p, f, v)
-        case Right(ids) => graft.core.Mutation.storeIds(table, ids, f, v)
-      }
-    case "Delete" =>
-      bits(call.children.head) match {
-        case Left(p)    => graft.core.Mutation.delete(table, p)
-        case Right(ids) => graft.core.Mutation.deleteIds(table, ids)
-      }
-    case other => sys.error(s"not a write call: $other")
-  }
-
   /** A `Set`/`Clear` call as the one-row write the import path folds too:
     * its record id, and its value as the typed literal. */
   private def fieldWrite(call: Call): graft.core.Mutation.FieldWrite = {
@@ -311,34 +281,46 @@ final class Compiler(table: DataFrame, timeCol: Option[String] = None,
       Seq((idOf(call).toString, null)), v)
   }
 
-  /** What a write call commits, derived from the BEFORE state — what a
-    * durable sink needs to persist O(touched) instead of rewriting the
-    * table (the reference's RBF writes are O(write), `reference/rbf/
-    * rbf.go:3-29`). `Folded` is a `Set`/`Clear` write for
-    * [[graft.core.Mutation.commit]]; `Upserted` ids index into the
-    * SUCCESSOR state; `Removed` ids are deleted outright. */
+  /** What a write call commits, the one description of each write call:
+    * computed from the state before the call and restricted to the rows
+    * the call changes, so a commit costs O(touched), never O(table) (the
+    * reference writes fragments in place, `reference/rbf/rbf.go:3-29`).
+    *  - `Folded`: a `Set`/`Clear` (`executor.go:6194`, `:5895`) as the
+    *    one-row write [[graft.core.Mutation.commit]] folds like an import;
+    *  - `Upserted`: the post-images of exactly the rows a `ClearRow` or
+    *    `Store` changes. `ClearRow(f=v)` (`executor.go:5976`): `v`'s
+    *    members lose it. `Store(b, f=v)` makes `v`'s bitmap exactly `b`
+    *    (`executor.go:6077`): rows of `b` without `v` gain it, members
+    *    outside `b` lose it — a NULL set outside `b` is no member and
+    *    stays NULL;
+    *  - `Removed`: the ids a `Delete` drops (`executor.go:9050`); a row
+    *    whose filter is NULL is not in the bitmap and survives. */
   def writeEffect(call: Call): Compiler.WriteEffect = {
-    def memberPred(f: String, v: Column): Column =
-      if (isSet(f)) array_contains(coalesce(col(f), array().cast(dtype(f))), v)
-      else col(f) === v
+    def member(f: String, v: Column): Column =
+      coalesce(if (isSet(f)) array_contains(col(f), v) else col(f) === v, lit(false))
+    def none(f: String): Column = lit(null).cast(dtype(f))
     call.name match {
       case "Set" | "Clear" => Compiler.Folded(fieldWrite(call))
       case "ClearRow" =>
         val (f, v) = fieldValueOf(call)
-        Compiler.Upserted(table.filter(memberPred(f, v)).select("_id"))
-      case "Store" => // both sides change: rows entering AND leaving v's bitmap
+        Compiler.Upserted(table.filter(member(f, v))
+          .withColumn(f, if (isSet(f)) array_remove(col(f), v) else none(f)))
+      case "Store" =>
         val (f, v) = fieldValueOf(call)
-        val entering = bits(call.children.head) match {
-          case Left(p)    => table.filter(coalesce(p, lit(false))).select("_id")
-          case Right(ids) => ids.select("_id")
+        val (marked, in) = bits(call.children.head) match {
+          case Left(p) => (table, coalesce(p, lit(false)))
+          case Right(ids) => // an ordinal child's id set: membership by join
+            (table.join(ids.distinct().withColumn("__in", lit(true)), Seq("_id"), "left"),
+              col("__in").isNotNull)
         }
-        Compiler.Upserted(
-          entering.unionByName(table.filter(memberPred(f, v)).select("_id")).distinct())
-      case "Delete" =>
-        bits(call.children.head) match {
-          case Left(p)    => Compiler.Removed(table.filter(coalesce(p, lit(false))).select("_id"))
-          case Right(ids) => Compiler.Removed(ids.select("_id"))
-        }
+        val next =
+          if (isSet(f)) when(in, array_distinct(concat(
+              coalesce(col(f), array().cast(dtype(f))), array(v))))
+            .otherwise(array_remove(col(f), v))
+          else when(in, v).otherwise(none(f))
+        Compiler.Upserted(marked.filter(in =!= member(f, v)).withColumn(f, next)
+          .drop("__in"))
+      case "Delete" => Compiler.Removed(toIds(bits(call.children.head)))
       case other => sys.error(s"not a write call: $other")
     }
   }
@@ -925,7 +907,7 @@ object Compiler {
   /** See [[Compiler!.writeEffect]]. */
   sealed trait WriteEffect
   final case class Folded(write: graft.core.Mutation.FieldWrite) extends WriteEffect
-  final case class Upserted(ids: DataFrame) extends WriteEffect
+  final case class Upserted(rows: DataFrame) extends WriteEffect
   final case class Removed(ids: DataFrame) extends WriteEffect
 }
 
@@ -938,72 +920,38 @@ object Pql {
       .run(Parser.parseOne(pql))
   }
 
-  /** Run a multi-call PQL program: write calls advance the table state
-    * (copy-on-write, like the reference's per-shard RBF transactions —
-    * `reference/rbf/rbf.go:3-29`); the final call's result is returned. If the
-    * program ends on a write, returns the new record count (the reference
-    * returns write acks; a count is the closest tabular analogue). */
-  def program(spark: SparkSession, dir: String, tableName: String, pql: String): DataFrame =
-    programOn(graft.core.Tables.load(spark, dir, tableName), tableName, pql)._1
-
-  /** Run a program against an explicit table state; returns (result,
-    * successor state) so stateful callers can persist writes across requests
-    * like the reference's mutable fragments. Returns the FINAL call's result
-    * (a program ending on a write returns the new record count — the closest
-    * tabular analogue of the reference's write ack). */
-  def programOn(initial: DataFrame, tableName: String, pql: String): (DataFrame, DataFrame) = {
-    val (results, state) = programResults(initial, tableName, pql)
-    val result = results.last.getOrElse(
-      state.agg(org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("cnt")))
-    (result, state)
-  }
-
   /** Number of mutating calls in a program (`reference/pql/ast.go:316-323`
     * WriteCallN) — drives the facade's read→write permission escalation
     * (`reference/http_handler.go:798-803`). */
   def writeCallN(pql: String): Int = Parser.parse(pql).count(Compiler.isWrite)
 
-  /** One result per top-level call — the reference's `/index/{i}/query`
-    * contract (`reference/handler.go:51-56`: `Results []interface{}`, one
-    * entry per call). Reads yield tables bound to the state at their point
-    * in the program; writes advance the state and yield `None` (the wire
-    * layer renders the reference's boolean ack). */
-  def programResults(initial: DataFrame, tableName: String, pql: String)
-      : (Seq[Option[DataFrame]], DataFrame) = {
-    val calls = Parser.parse(pql)
-    require(calls.nonEmpty, "empty PQL program")
-    var state = initial
-    val results = calls.map { c =>
-      graft.core.QueryContext.validate() // executor.go:193 per-call ctx check
-      val comp = new Compiler(state, graft.core.Tables.timeColumn(tableName))
-      if (Compiler.isWrite(c)) { state = comp.write(c); None }
-      else Some(comp.run(c))
-    }
-    (results, state)
-  }
-
-  /** [[programResults]] with committed write semantics, rendered by
-    * `render`: the table's temp view (registered through
-    * [[graft.core.TableLog]]) is the state between calls, and each write
-    * call commits only its touched rows as its own TableLog statement —
-    * `Set`/`Clear` through [[graft.core.Mutation.commit]], the import
-    * path's fold-and-commit, the others via `TableLog.upsert`/`deleteByIds`
-    * — O(touched), never O(table). With `spark.graft.warehouse` set the
-    * commit is durable: a restarted JVM restores the writes from the
-    * warehouse manifest like the reference's RBF storage
-    * (`reference/rbf/rbf.go:3-29`). Without it the log's pieces are
-    * session-lifetime checkpoints. Either way every frontend on the session
-    * reads the committed view.
+  /** The one PQL program runner — every program, from the shell, the
+    * oracle or either facade, runs here, like the reference's one
+    * executor over the live fragments. `render` gets one result per
+    * top-level call (the reference's `/index/{i}/query` contract,
+    * `reference/handler.go:51-56`): a read's table, bound to the state at
+    * its point in the program, or `None` for a write (the wire layer
+    * renders the reference's boolean ack).
     *
-    * This runner owns the table lock for a PQL program: a program that
-    * writes holds the table's TableLog lock once, across all its calls and
-    * the rendering of its read results (a result bound to a state the
-    * program's later writes replace is rendered before another writer can
-    * commit). Each write computes its delta from the view it re-reads under
-    * that lock, so a concurrent same-row write from another frontend is
-    * never lost. A read-only program takes no lock. */
-  def programResultsDurable[A](spark: SparkSession, tableName: String, pql: String)
+    * The table's session view (registered through [[graft.core.TableLog]])
+    * is the state between calls. Each write call commits what its
+    * [[Compiler!.writeEffect]] describes as its own TableLog statement:
+    * `Set`/`Clear` through [[graft.core.Mutation.commit]], the import
+    * path's fold-and-commit; `ClearRow`/`Store` through `TableLog.upsert`;
+    * `Delete` through `TableLog.deleteByIds`. With `spark.graft.warehouse`
+    * set the commit is durable: a restarted JVM restores the writes from
+    * the warehouse manifest like the reference's RBF storage
+    * (`reference/rbf/rbf.go:3-29`). Without it the log's pieces are
+    * session-lifetime checkpoints. Either way every frontend on the
+    * session reads the committed view.
+    *
+    * A program that writes holds the table's TableLog lock once, across
+    * all its calls and the rendering of its read results (a result bound
+    * to a state the program's later writes replace is rendered before
+    * another writer can commit). Each write computes its effect from the
+    * view it re-reads under that lock, so a concurrent same-row write from
+    * another frontend is never lost. A read-only program takes no lock. */
+  def programResults[A](spark: SparkSession, tableName: String, pql: String)
       (render: Seq[Option[DataFrame]] => A): A = {
     val calls = Parser.parse(pql)
     require(calls.nonEmpty, "empty PQL program")
@@ -1016,13 +964,10 @@ object Pql {
         comp.writeEffect(c) match {
           case Compiler.Folded(w) =>
             graft.core.Mutation.commit(spark, tableName, Seq(w))
+          case Compiler.Upserted(rows) =>
+            graft.core.TableLog.upsert(spark, tableName, rows)
           case Compiler.Removed(ids) =>
             graft.core.TableLog.deleteByIds(spark, tableName, ids)
-          case Compiler.Upserted(ids) =>
-            // delta = the touched rows of the SUCCESSOR state; upsert
-            // replaces them by `_id`
-            graft.core.TableLog.upsert(spark, tableName,
-              comp.write(c).join(ids, Seq("_id"), "left_semi"))
         }
         None
       }
@@ -1030,6 +975,14 @@ object Pql {
     if (calls.exists(Compiler.isWrite)) graft.core.TableLog.locked(spark, tableName)(run())
     else run()
   }
+
+  /** A [[programResults]] rendering to one table: the last call's result,
+    * or the table's record count when the program ends on a write (the
+    * closest tabular analogue of the reference's write ack). */
+  def lastResult(spark: SparkSession, tableName: String)
+      (results: Seq[Option[DataFrame]]): DataFrame =
+    results.last.getOrElse(spark.table(graft.core.Idents.q(tableName))
+      .agg(count(lit(1)).as("cnt")))
 }
 
 /** `capped_pairs(v, c, cap)` — collects up to cap (v, c) long pairs into

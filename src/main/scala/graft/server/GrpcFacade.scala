@@ -349,7 +349,7 @@ final class GrpcFacade(spark: SparkSession, dir: String, port: Int,
       throw Status.INVALID_ARGUMENT
         .withDescription("QueryPQLUnary handles exactly one query")
         .asRuntimeException()
-    graft.pql.Pql.programResultsDurable(spark, index, pql)(_.head)
+    graft.pql.Pql.programResults(spark, index, pql)(_.head)
   }
 
   // --------------------------------------------------------------- server

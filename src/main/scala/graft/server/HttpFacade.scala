@@ -97,13 +97,13 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
     * [[graft.core.TableLog]], which re-registers the view on every
     * statement; the view is the one store every frontend on this session
     * reads, like the reference's single RBF store
-    * (`reference/rbf/rbf.go:3-29`). Writes go through
-    * [[graft.pql.Pql.programResultsDurable]] and
-    * [[graft.core.Mutation.commit]], which hold TableLog's per-table lock;
-    * this facade takes no lock of its own. With `spark.graft.warehouse`
-    * set the log persists parquet pieces and a restarted JVM restores
-    * them; without it the same log runs on session-lifetime checkpoint
-    * pieces. */
+    * (`reference/rbf/rbf.go:3-29`). PQL programs run through
+    * [[graft.pql.Pql.programResults]], the one program runner, and imports
+    * through [[graft.core.Mutation.commit]]; both hold TableLog's
+    * per-table lock, and this facade takes no lock of its own. With
+    * `spark.graft.warehouse` set the log persists parquet pieces and a
+    * restarted JVM restores them; without it the same log runs on
+    * session-lifetime checkpoint pieces. */
   private def tableState(name: String): DataFrame =
     spark.table(graft.core.Idents.q(name))
 
@@ -438,7 +438,7 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
             // `QueryResponse.Results`): reads as tables, writes as the
             // reference's boolean ack
             tracked(body, "", idx) {
-              graft.pql.Pql.programResultsDurable(spark, idx, body)(_.map {
+              graft.pql.Pql.programResults(spark, idx, body)(_.map {
                 case Some(df) => toWire(df)
                 case None     => "true"
               }.mkString("""{"results":[""", ",", "]}"))
@@ -1502,10 +1502,15 @@ final class HttpFacade(spark: SparkSession, dir: String, port: Int,
         def encode(rs: Seq[Option[DataFrame]]): Array[Byte] =
           PbQuery.encodeResponse(calls.zip(rs))
         (200, tracked(query, "", idx) {
-          if (shards.isEmpty) graft.pql.Pql.programResultsDurable(spark, idx, query)(encode)
-          else // a read-only program (checked above) over those shards
-            encode(graft.pql.Pql.programResults(tableState(idx).filter(
-              graft.pql.Compiler.inShards(shards)), idx, query)._1)
+          if (shards.isEmpty) graft.pql.Pql.programResults(spark, idx, query)(encode)
+          else { // a read-only program (checked above) over those shards
+            val comp = new graft.pql.Compiler(tableState(idx).filter(
+              graft.pql.Compiler.inShards(shards)), graft.core.Tables.timeColumn(idx))
+            encode(calls.map { c =>
+              graft.core.QueryContext.validate() // executor.go:193 per-call ctx check
+              Some(comp.run(c))
+            })
+          }
         })
       } catch {
         case e: Auth.AuthError => (403, PbQuery.errResponse(msg(e)))

@@ -944,15 +944,6 @@ object Ddl {
     scala.util.Try(spark.conf.get("spark.graft.warehouse"))
       .toOption.filter(_.nonEmpty)
 
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-  private def jobj(kvs: Iterable[(String, String)]): String =
-    kvs.map { case (k, v) => s"${jstr(k)}: $v" }.mkString("{", ", ", "}")
-
   /** Write the catalog-shaped state (field semantics, bounds, FKs, views,
     * databases) to `<warehouse>/_ddlmeta.json`. Table DATA durability lives
     * in [[graft.core.TableLog]] manifests; this file is the counterpart for
@@ -960,35 +951,20 @@ object Ddl {
     * (`reference/holder.go` index/field metadata). */
   private[sql] def persistMeta(spark: SparkSession): Unit =
     warehouse(spark).foreach { wh =>
-      val json = jobj(Seq(
-        "timeUnits" -> jobj(timeUnits.toSeq.sortBy(_._1).map { case (t, m) =>
-          t -> jobj(m.map { case (c, (u, e)) =>
-            c -> jobj(Seq("unit" -> jstr(u), "epoch" -> jstr(e.toString))) })
-        }),
-        "bounds" -> jobj(bounds.toSeq.sortBy(_._1).map { case (t, m) =>
-          t -> jobj(m.map { case (c, (mn, mx)) =>
-            c -> jobj(Seq(
-              "min" -> mn.map(v => jstr(v.toString)).getOrElse("null"),
-              "max" -> mx.map(v => jstr(v.toString)).getOrElse("null"))) })
-        }),
-        "foreignKeys" -> jobj(foreignKeys.toSeq.sortBy(_._1).map { case (t, m) =>
-          t -> jobj(m.map { case (c, ft) => c -> jstr(ft) })
-        }),
-        "databases" -> jobj(databases.toSeq.sortBy(_._1).map { case (n, (u, cm)) =>
-          n -> jobj(Seq("units" -> u.toString, "comment" -> jstr(cm)))
-        }),
-        "views" -> jobj(viewDefs.toSeq.sortBy(_._1).map { case (n, b) =>
-          n -> jstr(b) }),
-        "declaredTypes" -> jobj(declaredTypes.toSeq.sortBy(_._1).map { case (t, m) =>
-          t -> jobj(m.map { case (c, rt) => c -> jstr(rt) })
-        })))
-      val dir = java.nio.file.Paths.get(wh)
-      java.nio.file.Files.createDirectories(dir)
-      val tmp = dir.resolve("_ddlmeta.json.tmp")
-      java.nio.file.Files.writeString(tmp, json)
-      java.nio.file.Files.move(tmp, dir.resolve("_ddlmeta.json"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      import org.json4s._
+      def obj[A](kvs: Iterable[(String, A)])(v: A => JValue): JValue =
+        JObject(kvs.toList.sortBy(_._1).map { case (k, a) => k -> v(a) })
+      def num(b: Option[BigDecimal]): JValue = b.fold[JValue](JNull)(v => JString(v.toString))
+      graft.core.JsonFile.replace(java.nio.file.Paths.get(wh, "_ddlmeta.json"), JObject(
+        "timeUnits" -> obj(timeUnits)(obj(_) { case (u, e) =>
+          JObject("unit" -> JString(u), "epoch" -> JString(e.toString)) }),
+        "bounds" -> obj(bounds)(obj(_) { case (mn, mx) =>
+          JObject("min" -> num(mn), "max" -> num(mx)) }),
+        "foreignKeys" -> obj(foreignKeys)(obj(_)(JString(_))),
+        "databases" -> obj(databases) { case (u, cm) =>
+          JObject("units" -> JInt(u), "comment" -> JString(cm)) },
+        "views" -> obj(viewDefs)(JString(_)),
+        "declaredTypes" -> obj(declaredTypes)(obj(_)(JString(_)))))
     }
 
   /** Bring a fresh session up on a durable warehouse: re-register every

@@ -709,12 +709,12 @@ object GraftSql {
     // only plain-identifier columns participate in the implicit sort —
     // auto-generated expression names don't round-trip through orderBy
     def plain(n: String) = n.matches("[A-Za-z_][A-Za-z0-9_]*")
-    def scalarTyped(n: String) = df.schema.fields.find(_.name == n).exists(_.dataType match {
+    def scalar(a: Attribute) = a.dataType match {
       case _: org.apache.spark.sql.types.ArrayType |
            _: org.apache.spark.sql.types.StructType |
            _: org.apache.spark.sql.types.MapType => false
       case _ => true
-    })
+    }
     val hasJoin = nodes.exists(_.isInstanceOf[Join])
     grouped match {
       case Some(a) =>
@@ -733,8 +733,8 @@ object GraftSql {
           case _ => Seq.empty
         }
         val keyCols = a.groupingExpressions.collect {
-          case att: Attribute => att.name
-        }.filter(n => df.columns.contains(n) && plain(n) && scalarTyped(n))
+          case att: Attribute if scalar(att) => att.name
+        }.filter(n => df.columns.contains(n) && plain(n))
         val dropped = sumCols.foldLeft(df)((d, c) => d.filter(fcol(c).isNotNull))
         // grouped-join and SET-keyed results stream in the driving scan's
         // FIRST-APPEARANCE order in the reference — its post-PQL aggregator
@@ -752,12 +752,17 @@ object GraftSql {
           dropped.orderBy(keyCols.map(fcol(_).asc).toIndexedSeq: _*)
         else if (hasJoin || setKeyed) firstEncounterSort(dropped, a)
         else dropped
-      case None if df.columns.contains("_id") =>
-        val sortable = df.columns.filter(n => plain(n) && scalarTyped(n))
-        if (!sortable.contains("_id")) df
-        else df.orderBy((fcol("_id").asc +: sortable.filter(_ != "_id")
-          .map(fcol(_).asc_nulls_last)).toIndexedSeq: _*)
-      case None => df
+      case None =>
+        // by output attribute, in position, never by name: a self-join
+        // outputs two `_id`s (and two of every column); the first leads
+        import org.apache.spark.sql.graftshim.Shim
+        val sortable = plan.output.filter(a => plain(a.name) && scalar(a))
+        sortable.find(_.name == "_id") match {
+          case None => df
+          case Some(id) =>
+            df.orderBy((Shim.column(id).asc +: sortable.filter(_.exprId != id.exprId)
+              .map(Shim.column(_).asc_nulls_last)): _*)
+        }
     }
   }
 

@@ -7,7 +7,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Statement input:
   *   - plain input  → reference-dialect SQL (`graft.sql.GraftSql`)
-  *   - `:pql <index> <program>` → PQL against that table
+  *   - `:pql <index> <program>` → a PQL program on the session's table;
+  *     its writes commit through TableLog like the facades', so SQL and
+  *     later `:pql` statements see them
   *   - end a line with `\` to continue the statement on the next line
   *
   * psql-style meta-commands (`reference/cli/meta.go:1110-1161` dispatch):
@@ -150,14 +152,17 @@ object Shell {
                            stmt: String): Unit = {
     val t0 = System.nanoTime()
     try {
-      val df =
+      val out =
         if (stmt.startsWith(":pql ")) {
-          val rest = stmt.stripPrefix(":pql ").trim
-          val (idx, q) = rest.span(!_.isWhitespace)
-          graft.pql.Pql.program(spark, dir, idx, q.trim)
-        } else graft.sql.GraftSql.sql(spark, dir, stmt)
+          // the session's table, committed through TableLog like the
+          // facades' programs; rendered under the runner's lock
+          val (idx, q) = stmt.stripPrefix(":pql ").trim.span(!_.isWhitespace)
+          graft.core.Tables.registerAll(spark, dir)
+          graft.pql.Pql.programResults(spark, idx, q.trim)(rs =>
+            render(graft.pql.Pql.lastResult(spark, idx)(rs), st))
+        } else render(graft.sql.GraftSql.sql(spark, dir, stmt), st)
       st.lastQuery = Some(stmt)
-      st.sink.println(render(df, st))
+      st.sink.println(out)
       if (st.timing)
         st.sink.println(s"Execution time: ${(System.nanoTime() - t0) / 1000}μs")
     } catch { case e: Exception =>

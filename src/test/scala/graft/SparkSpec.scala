@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -8,6 +8,20 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
+
+  /** A session of its own whose table `name` starts as `rows` built in
+    * it, registered through TableLog like a facade's table: PQL write
+    * programs commit to it and leave the shared session's tables alone. */
+  def sessionWith(name: String)(rows: SparkSession => DataFrame): SparkSession = {
+    val s = spark.newSession()
+    graft.core.TableLog.replace(s, name, rows(s), checkpoint = false)
+    s
+  }
+
+  /** A PQL program on `s`'s table `name`, through the one runner: the last
+    * call's result, or the record count after a trailing write. */
+  def program(s: SparkSession, name: String, pql: String): DataFrame =
+    graft.pql.Pql.programResults(s, name, pql)(graft.pql.Pql.lastResult(s, name))
 }
 
 object SparkSpec {

@@ -76,7 +76,7 @@ class AutoRefoldSpec extends SparkSpec {
       val probe = s.table(graft.core.Idents.q(name))
         .select("_id", "value").orderBy("_id").limit(1).collect()(0)
       val id = probe.getLong(0)
-      graft.pql.Pql.programResultsDurable(s, name, s"Set($id, value=999999)")(identity)
+      graft.pql.Pql.programResults(s, name, s"Set($id, value=999999)")(identity)
       // post-write: the view is a PLAIN scan again (write-through
       // compaction), the registration moved to the new base, and the
       // GROUP BY is index-served with the Set applied
@@ -109,8 +109,8 @@ class AutoRefoldSpec extends SparkSpec {
         .select("_id").orderBy("_id").limit(3).collect().map(_.getLong(0))
       // two writes: below the compaction budget — view is join-shaped,
       // queries answer from the log (correct, not index-served)
-      graft.pql.Pql.programResultsDurable(s, name, s"Set(${ids(0)}, value=111)")(identity)
-      graft.pql.Pql.programResultsDurable(s, name,
+      graft.pql.Pql.programResults(s, name, s"Set(${ids(0)}, value=111)")(identity)
+      graft.pql.Pql.programResults(s, name,
         s"Set(${ids(1)}, event_type=moved)")(identity)
       val mid = q(s, name)
       assert(!mid.queryExecution.executedPlan.toString.contains(root),
@@ -118,7 +118,7 @@ class AutoRefoldSpec extends SparkSpec {
       val midRows = mid.collect()
       assert(midRows.exists(_.getString(0) == "moved"))
       // third write crosses compactAfter → compaction → auto-refold+rebind
-      graft.pql.Pql.programResultsDurable(s, name,
+      graft.pql.Pql.programResults(s, name,
         "Delete(Row(event_type=click))")(identity)
       val served = q(s, name)
       val phys = served.queryExecution.executedPlan.toString
@@ -147,7 +147,7 @@ class AutoRefoldSpec extends SparkSpec {
     try {
       val id = s.table(graft.core.Idents.q(name))
         .select("_id").orderBy("_id").limit(1).collect()(0).getLong(0)
-      graft.pql.Pql.programResultsDurable(s, name, s"Set($id, value=5)")(identity)
+      graft.pql.Pql.programResults(s, name, s"Set($id, value=5)")(identity)
       val served = q(s, name)
       val phys = served.queryExecution.executedPlan.toString
       assert(!phys.contains(root), s"no rebind requested — no index:\n$phys")

@@ -100,7 +100,6 @@ class IndexFreshnessSpec extends SparkSpec {
       Seq("value"), s"$root/g")
     IndexCatalog.registerGroup(fact, Seq("event_type"), Set.empty,
       Seq("value"), spark.read.parquet(s"$root/g"))
-    val factsDf = spark.read.parquet(fact)
     // capture stderr around a PQL write over the indexed facts
     def capturing(f: => Unit): String = {
       val buf = new java.io.ByteArrayOutputStream()
@@ -109,10 +108,10 @@ class IndexFreshnessSpec extends SparkSpec {
       try f finally System.setErr(old)
       new String(buf.toByteArray, "UTF-8")
     }
+    // the facts as a session table, where a PQL write commits
+    val s = sessionWith("facts")(_.read.parquet(fact).withColumn("_id", col("event_id")))
     val out = capturing {
-      new graft.pql.Compiler(factsDf)
-        .write(graft.pql.Parser.parseOne("Delete(Row(event_type='click'))"))
-        .count(): Unit
+      program(s, "facts", "Delete(Row(event_type='click'))"): Unit
     }
     // autoRefold defaults on: the warning names the merge-on-read window
     // (facts answer until the next compaction refolds + rebinds); with it
@@ -122,16 +121,13 @@ class IndexFreshnessSpec extends SparkSpec {
       s"expected immediate warning, got: '$out'")
     // once per path: a second write over the same facts stays quiet
     val out2 = capturing {
-      new graft.pql.Compiler(factsDf)
-        .write(graft.pql.Parser.parseOne("Delete(Row(event_type='view'))"))
-        .count(): Unit
+      program(s, "facts", "Delete(Row(event_type='view'))"): Unit
     }
     assert(!out2.contains("mutation touched"), s"second warn: '$out2'")
     // an UNINDEXED table never warns
     val out3 = capturing {
-      new graft.pql.Compiler(Tables.load(spark, sfDir, "nation"))
-        .write(graft.pql.Parser.parseOne("Set(901, n_regionkey=7)"))
-        .count(): Unit
+      program(sessionWith("nation")(Tables.load(_, sfDir, "nation")), "nation",
+        "Set(901, n_regionkey=7)"): Unit
     }
     assert(!out3.contains("mutation touched"), s"unindexed warn: '$out3'")
     IndexCatalog.clear()

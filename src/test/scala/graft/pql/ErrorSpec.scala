@@ -37,7 +37,8 @@ class ErrorSpec extends SparkSpec {
     assert(err("orders", "Set(o_orderstatus='X')").nonEmpty) // missing record id
     // interleaved reads are accepted (reference /index/{i}/query programs);
     // the final call's result is returned and earlier writes still apply
-    val out = Pql.program(spark, sfDir, "orders",
+    val s = sessionWith("orders")(graft.core.Tables.load(_, sfDir, "orders"))
+    val out = program(s, "orders",
       "Count(All()) Set(7, o_orderstatus='X') Count(Row(o_orderstatus='X'))")
       .collect()(0).getLong(0)
     assert(out == 1L)

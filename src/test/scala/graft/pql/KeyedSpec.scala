@@ -32,12 +32,11 @@ class KeyedSpec extends SparkSpec {
   }
 
   test("Set/Clear writes with string record ids") {
-    val c = new Compiler(keyed)
-    val afterSet = c.write(Parser.parseOne("Set('ca', v=99)"))
-    assert(afterSet.filter(col("_id") === "ca").collect()(0).getLong(1) == 99L)
-    val afterClear = new Compiler(afterSet)
-      .write(Parser.parseOne("Clear('or', tags='b')"))
-    assert(afterClear.filter(col("_id") === "or")
+    val s = sessionWith("keyed")(s => s.createDataFrame(keyed.collectAsList(), keyed.schema))
+    program(s, "keyed", "Set('ca', v=99) Clear('or', tags='b')")
+    val after = s.table("keyed")
+    assert(after.filter(col("_id") === "ca").collect()(0).getLong(1) == 99L)
+    assert(after.filter(col("_id") === "or")
       .collect()(0).getSeq[String](2).isEmpty)
   }
 

@@ -2,40 +2,38 @@ package graft.pql
 
 import graft.SparkSpec
 import graft.core.{Mutation, Tables}
-import graft.core.Mutation.{FieldWrite, WriteOp}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** PQL write calls (Set/Clear/ClearRow/Store/Delete) — semantics per
   * `reference/executor.go:6194,5895,5976,6077,9050` and mutex replace
-  * `reference/field.go:352-365`. */
+  * `reference/field.go:352-365`. Programs run through the one runner on a
+  * session of their own, committing through TableLog. */
 class MutationSpec extends SparkSpec {
 
   private def orders = Tables.load(spark, sfDir, "orders")
   private def docs   = Tables.load(spark, sfDir, "documents")
 
-  // one PQL `Set`/`Clear` call: a one-row write folded onto the whole state
-  private def point(op: WriteOp, df: DataFrame, id: Any, field: String,
-                    v: Column): DataFrame =
-    Mutation.applied(df, Seq(FieldWrite(field, op, Seq((id.toString, null)), v)))
-  private def set(df: DataFrame, id: Any, field: String, v: Column) =
-    point(WriteOp.Set, df, id, field, v)
-  private def clear(df: DataFrame, id: Any, field: String, v: Column) =
-    point(WriteOp.Clear, df, id, field, v)
+  /** A session of its own whose sf table `name` the program wrote, and
+    * the table after it. */
+  private def after(name: String, pql: String): DataFrame = {
+    val s = sessionWith(name)(Tables.load(_, sfDir, name))
+    program(s, name, pql)
+    s.table(name)
+  }
 
   test("Set on mutex field replaces the old value") {
     val before = orders.filter(col("_id") === 7).select("o_orderstatus").head.getString(0)
-    val after  = set(orders, 7, "o_orderstatus", lit("X"))
-    assert(after.filter(col("_id") === 7).select("o_orderstatus").head.getString(0) == "X")
+    val set = after("orders", "Set(7, o_orderstatus='X')")
+    assert(set.filter(col("_id") === 7).select("o_orderstatus").head.getString(0) == "X")
     // no other record changed; old value no longer present at id 7
-    assert(after.filter(col("o_orderstatus") === before).count() ==
+    assert(set.filter(col("o_orderstatus") === before).count() ==
       orders.filter(col("o_orderstatus") === before && col("_id") =!= 7).count())
-    assert(after.count() == orders.count())
+    assert(set.count() == orders.count())
   }
 
   test("Set on set field adds a member, dedup on write") {
-    val once  = set(docs, 3, "words", lit("zz_new"))
-    val twice = set(once, 3, "words", lit("zz_new"))
+    val twice = after("documents", "Set(3, words='zz_new') Set(3, words='zz_new')")
     val ws = twice.filter(col("_id") === 3).select("words").head.getSeq[String](0)
     assert(ws.count(_ == "zz_new") == 1)
     assert(twice.filter(array_contains(col("words"), "zz_new")).count() == 1)
@@ -45,68 +43,85 @@ class MutationSpec extends SparkSpec {
     // reference sets the existence bit for a new column id — the write must
     // not silently no-op (ADVICE round 1)
     val freshId = orders.agg(max(col("_id"))).head.getLong(0) + 1000
-    val after = set(orders, freshId, "o_orderstatus", lit("X"))
-    assert(after.count() == orders.count() + 1)
-    val row = after.filter(col("_id") === freshId).collect()(0)
+    val s = sessionWith("orders")(Tables.load(_, sfDir, "orders"))
+    program(s, "orders", s"Set($freshId, o_orderstatus='X')")
+    assert(s.table("orders").count() == orders.count() + 1)
+    val row = s.table("orders").filter(col("_id") === freshId).collect()(0)
     assert(row.getAs[String]("o_orderstatus") == "X")
     assert(row.isNullAt(row.fieldIndex("o_totalprice"))) // other fields null
     // set on an EXISTING id still does not duplicate
-    val again = set(after, freshId, "o_orderstatus", lit("Y"))
-    assert(again.count() == after.count())
+    program(s, "orders", s"Set($freshId, o_orderstatus='Y')")
+    assert(s.table("orders").count() == orders.count() + 1)
     // set-field variant: new record carries a singleton set
-    val d = set(docs, 999999L, "words", lit("zz"))
+    val d = after("documents", "Set(999999, words='zz')")
     assert(d.filter(col("_id") === 999999L).select("words")
       .head.getSeq[String](0) == Seq("zz"))
   }
 
   test("Clear on scalar only clears when value matches") {
     val st = orders.filter(col("_id") === 7).select("o_orderstatus").head.getString(0)
-    val miss = clear(orders, 7, "o_orderstatus", lit("__nope__"))
+    val miss = after("orders", "Clear(7, o_orderstatus='__nope__')")
     assert(miss.filter(col("_id") === 7).select("o_orderstatus").head.getString(0) == st)
-    val hit = clear(orders, 7, "o_orderstatus", lit(st))
+    val hit = after("orders", s"Clear(7, o_orderstatus='$st')")
     assert(hit.filter(col("_id") === 7).select("o_orderstatus").head.isNullAt(0))
   }
 
   test("ClearRow clears the value across all records") {
-    val cleared = Mutation.clearRow(docs, "words", lit("the"))
+    val cleared = after("documents", "ClearRow(words='the')")
     assert(cleared.filter(array_contains(col("words"), "the")).count() == 0)
     assert(cleared.count() == docs.count())
   }
 
   test("Store makes the row bitmap exactly equal to the filter") {
-    val stored = Mutation.store(docs, col("n_chars") > 900, "words", lit("__big__"))
+    val s = sessionWith("documents")(Tables.load(_, sfDir, "documents"))
+    program(s, "documents", "Store(Row(n_chars > 900), words='__big__')")
     val want = docs.filter(col("n_chars") > 900).count()
-    assert(stored.filter(array_contains(col("words"), "__big__")).count() == want)
+    assert(s.table("documents").filter(array_contains(col("words"), "__big__"))
+      .count() == want)
     // re-store with a different filter removes stale members
-    val restored = Mutation.store(stored, col("n_chars") > 100000, "words", lit("__big__"))
-    assert(restored.filter(array_contains(col("words"), "__big__")).count() == 0)
+    program(s, "documents", "Store(Row(n_chars > 100000), words='__big__')")
+    assert(s.table("documents").filter(array_contains(col("words"), "__big__"))
+      .count() == 0)
+  }
+
+  test("Store leaves a NULL set outside the filter NULL") {
+    val s = sessionWith("tags_t") { s =>
+      import s.implicits._
+      Seq((1L, Option(Seq("a"))), (2L, Option.empty[Seq[String]]),
+        (3L, Option(Seq("b")))).toDF("_id", "tags")
+    }
+    program(s, "tags_t", "Store(Row(_id=1), tags='b')")
+    val got = s.table("tags_t").orderBy("_id").collect()
+      .map(r => Option(r.getSeq[String](1)).map(_.toSet)).toSeq
+    assert(got == Seq(Some(Set("a", "b")), None, Some(Set.empty[String])), got)
   }
 
   test("Delete drops matching records; null predicate rows survive") {
-    val del = Mutation.delete(orders, col("o_orderstatus") === "F")
+    val del = after("orders", "Delete(Row(o_orderstatus='F'))")
     assert(del.count() == orders.filter(col("o_orderstatus") =!= "F").count())
   }
 
   test("Store/Delete with materialized id sets use joins, not collect") {
     // ordinal child (Limit) produces a Right(ids) bitmap → join path
-    val out = Pql.program(spark, sfDir, "orders",
+    val out = program(sessionWith("orders")(Tables.load(_, sfDir, "orders")), "orders",
       "Delete(Limit(Row(o_orderstatus='F'), limit=5)) Count(Row(o_orderstatus='F'))")
     assert(out.head.getLong(0) ==
       orders.filter(col("o_orderstatus") === "F").count() - 5)
-    val stored = Pql.program(spark, sfDir, "orders",
+    val stored = program(sessionWith("orders")(Tables.load(_, sfDir, "orders")), "orders",
       "Store(Limit(All(), limit=3), o_orderpriority='X-TOP') " +
         "Count(Row(o_orderpriority='X-TOP'))")
     assert(stored.head.getLong(0) == 3L)
   }
 
   test("program: write calls chain, final read sees all of them") {
-    val out = Pql.program(spark, sfDir, "orders",
+    val out = program(sessionWith("orders")(Tables.load(_, sfDir, "orders")), "orders",
       "Set(7, o_orderstatus='X') Delete(Row(o_orderstatus='F')) Count(Row(o_orderstatus='X'))")
     assert(out.head.getLong(0) == 1L)
   }
 
   test("program: trailing write returns record count") {
-    val out = Pql.program(spark, sfDir, "orders", "Delete(Row(o_orderstatus='F'))")
+    val out = program(sessionWith("orders")(Tables.load(_, sfDir, "orders")), "orders",
+      "Delete(Row(o_orderstatus='F'))")
     assert(out.head.getLong(0) ==
       orders.filter(col("o_orderstatus") =!= "F").count())
   }
@@ -143,26 +158,9 @@ class MutationSpec extends SparkSpec {
     val bulk = Mutation.clearBulk(df, "tags", writes).orderBy("_id").collect()
     assert(bulk(0).isNullAt(1), s"NULL set became ${bulk(0).get(1)}")
     assert(bulk(1).getSeq[String](1) == Seq("b"))
-    val pql = Pql.programOn(df, "tags_t", "Clear(1, tags='a')")._2
-      .filter(col("_id") === 1).collect()
+    val s1 = sessionWith("tags_t")(s1 => s1.createDataFrame(df.collectAsList(), df.schema))
+    program(s1, "tags_t", "Clear(1, tags='a')")
+    val pql = s1.table("tags_t").filter(col("_id") === 1).collect()
     assert(pql.length == 1 && pql(0).isNullAt(1))
-  }
-
-  test("a chained in-memory program plans one join per write, not a copy " +
-    "of the state per write") {
-    import spark.implicits._
-    val df = Seq((0L, "a"), (1L, "b"), (2L, "c"), (3L, "d")).toDF("_id", "s")
-    val n = 10
-    val pql = (1 to n).map(i =>
-      if (i % 3 == 0) s"Clear(${(i - 1) % 5}, s='v${i - 1}')"
-      else s"Set(${i % 5}, s='v$i')").mkString(" ")
-    val state = Pql.programOn(df, "chain_t", pql)._2
-    // the starting state plus one write relation per call; reading the
-    // state twice per write would plan 2^n copies of it
-    val leaves = state.queryExecution.analyzed.collectLeaves().length
-    assert(leaves <= 2 * n + 1, s"$leaves leaf relations for $n writes")
-    assert(state.orderBy("_id").collect().map(r => (r.getLong(0),
-      Option(r.getString(1)))).toSeq == Seq((0L, Some("v10")), (1L, Some("v1")),
-      (2L, Some("v7")), (3L, None), (4L, Some("v4"))))
   }
 }

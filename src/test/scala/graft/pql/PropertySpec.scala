@@ -69,7 +69,8 @@ class PropertySpec extends SparkSpec {
   test("named-arg order and whitespace layout do not change results") {
     val ev = Tables.load(spark, sfDir, "events")
     def run(q: String) =
-      graft.pql.Pql.programOn(ev, "events", q)._1.collect().toSeq
+      new Compiler(ev, Tables.timeColumn("events")).run(Parser.parseOne(q))
+        .collect().toSeq
     val canonical = run(
       "GroupBy(Rows(event_type), filter=Row(value > 0.5), aggregate=Sum(field=user_id), limit=5)")
     val reordered = run(

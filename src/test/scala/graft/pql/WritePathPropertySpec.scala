@@ -4,14 +4,15 @@ import graft.SparkSpec
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
-/** Randomized equivalence sweep for PQL `Set`/`Clear`: seeded programs of
-  * one to three calls on a scalar field and a set field — creating unseen
-  * records, clearing absent values and values of absent records — run on
-  * both runners. The in-memory runner ([[Pql.programOn]], chained program
-  * to program) and the committing runner ([[Pql.programResultsDurable]]
-  * over a TableLog table) must end on the same rows, and both on the rows
-  * of a small Scala model of the reference's semantics
-  * (`reference/executor.go:6194` Set, `:5895` Clear; mutex replace
+/** Randomized sweep of every PQL write call: seeded programs of one to
+  * three `Set`/`Clear`/`ClearRow`/`Store`/`Delete` calls on a scalar field
+  * and a set field — creating unseen records, clearing absent values and
+  * values of absent records, filtering by predicate and by an ordinal id
+  * set (`Limit`), over records with NULL fields — run through the one
+  * runner ([[Pql.programResults]]) on a TableLog table. After every
+  * program the table must hold the rows of a small Scala model of the
+  * reference's semantics (`reference/executor.go:6194` Set, `:5895` Clear,
+  * `:5976` ClearRow, `:6077` Store, `:9050` Delete; mutex replace
   * `reference/field.go:352-365`). Run on an unkeyed and a keyed table.
   *
   * Seeded; boost via SPARK_GRAFT_WRITE_FUZZ_N/_SEED like the other
@@ -25,12 +26,12 @@ class WritePathPropertySpec extends SparkSpec {
   private def sweep(table: String, idType: DataType, ids: Seq[String],
                     lit: String => String): Unit = {
     val rnd = new scala.util.Random(seed + table.hashCode)
-    val s = spark.newSession()
     val sType = if (idType == StringType) StringType else LongType
     val schema = StructType(Seq(StructField("_id", idType),
       StructField("s", sType), StructField("tags", ArrayType(StringType))))
     def cast(v: String): Any = if (sType == LongType) v.toLong else v
     def castId(id: String): Any = if (idType == LongType) id.toLong else id
+    def value(f: String, v: String) = if (f == "s" && sType == LongType) v else s"'$v'"
     val sVals = Seq("1", "2", "3")
     val tagVals = Seq("a", "b", "c")
 
@@ -41,24 +42,61 @@ class WritePathPropertySpec extends SparkSpec {
         if (i % 2 == 0) None else Some(Set(tagVals(i % tagVals.length))))
     }.toMap
     import scala.jdk.CollectionConverters._
-    val initial = s.createDataFrame(model.toSeq.map { case (id, r) =>
+    val s = sessionWith(table)(_.createDataFrame(model.toSeq.map { case (id, r) =>
       Row(castId(id), r.s.map(cast).orNull, r.tags.map(_.toSeq).orNull)
-    }.asJava, schema)
-    graft.core.TableLog.replace(s, table, initial, checkpoint = true)
-    var inMemory: DataFrame = initial
+    }.asJava, schema))
 
-    def apply(call: String, id: String, field: String, v: String): Unit = {
-      val r = model.get(id)
-      (call, field) match {
-        case ("Set", "s") =>
-          model += id -> r.getOrElse(Rec(None, None)).copy(s = Some(v))
-        case ("Set", _) =>
-          val cur = r.getOrElse(Rec(None, None))
-          model += id -> cur.copy(tags = Some(cur.tags.getOrElse(Set.empty) + v))
-        case ("Clear", "s") =>
-          r.filter(_.s.contains(v)).foreach(c => model += id -> c.copy(s = None))
+    /** A filter bitmap: its PQL and its model membership. */
+    final case class Filter(pql: String, in: (String, Rec) => Boolean)
+    def randomFilter(): Filter = rnd.nextInt(3) match {
+      case 0 =>
+        val v = sVals(rnd.nextInt(sVals.length))
+        Filter(s"Row(s=${value("s", v)})", (_, r) => r.s.contains(v))
+      case 1 =>
+        val v = tagVals(rnd.nextInt(tagVals.length))
+        Filter(s"Row(tags='$v')", (_, r) => r.tags.exists(_.contains(v)))
+      case _ => // an ordinal id set: the first n records in `_id` order
+        val n = 1 + rnd.nextInt(2)
+        val first = model.keys.toSeq.sortBy(id =>
+          if (idType == LongType) f"${id.toLong}%020d" else id).take(n).toSet
+        Filter(s"Limit(All(), limit=$n)", (id, _) => first(id))
+    }
+
+    /** One random call: its PQL, applied to the model. */
+    def randomCall(): String = {
+      val (field, v) =
+        if (rnd.nextBoolean()) ("s", sVals(rnd.nextInt(sVals.length)))
+        else ("tags", tagVals(rnd.nextInt(tagVals.length)))
+      def update(f: Rec => Rec): Unit = model = model.map { case (k, r) => k -> f(r) }
+      def without(r: Rec): Rec =
+        if (field == "s") r.copy(s = r.s.filterNot(_ == v))
+        else r.copy(tags = r.tags.map(_ - v))
+      rnd.nextInt(5) match {
+        case 0 => // Set: mutex replace / set add; an unseen id is created
+          val id = ids(rnd.nextInt(ids.length))
+          val cur = model.getOrElse(id, Rec(None, None))
+          model += id -> (if (field == "s") cur.copy(s = Some(v))
+                          else cur.copy(tags = Some(cur.tags.getOrElse(Set.empty) + v)))
+          s"Set(${lit(id)}, $field=${value(field, v)})"
+        case 1 => // Clear: a NULL set stays NULL; an absent id is a no-op
+          val id = ids(rnd.nextInt(ids.length))
+          model.get(id).foreach(r => model += id -> without(r))
+          s"Clear(${lit(id)}, $field=${value(field, v)})"
+        case 2 => // ClearRow: v leaves every record
+          update(without)
+          s"ClearRow($field=${value(field, v)})"
+        case 3 => // Store: v's bitmap becomes exactly the filter's
+          val b = randomFilter()
+          model = model.map { case (k, r) =>
+            k -> (if (!b.in(k, r)) without(r)
+                  else if (field == "s") r.copy(s = Some(v))
+                  else r.copy(tags = Some(r.tags.getOrElse(Set.empty) + v)))
+          }
+          s"Store(${b.pql}, $field=${value(field, v)})"
         case _ =>
-          r.foreach(c => model += id -> c.copy(tags = c.tags.map(_ - v)))
+          val b = randomFilter()
+          model = model.filterNot { case (k, r) => b.in(k, r) }
+          s"Delete(${b.pql})"
       }
     }
 
@@ -70,34 +108,17 @@ class WritePathPropertySpec extends SparkSpec {
       }.toMap
 
     for (p <- 1 to programs) {
-      val calls = Seq.fill(1 + rnd.nextInt(3)) {
-        val call = if (rnd.nextBoolean()) "Set" else "Clear"
-        val id = ids(rnd.nextInt(ids.length))
-        val (field, v) =
-          if (rnd.nextBoolean()) ("s", sVals(rnd.nextInt(sVals.length)))
-          else ("tags", tagVals(rnd.nextInt(tagVals.length)))
-        (call, id, field, v)
-      }
-      val pql = calls.map { case (c, id, f, v) =>
-        val value = if (f == "s" && sType == LongType) v else s"'$v'"
-        s"$c(${lit(id)}, $f=$value)"
-      }.mkString(" ")
-      calls.foreach { case (c, id, f, v) => apply(c, id, f, v) }
-      inMemory = Pql.programOn(inMemory, table, pql)._2
-      Pql.programResultsDurable(s, table, pql)(identity)
-      val durable = rowsOf(s.table(graft.core.Idents.q(table)))
-      assert(durable == model, s"program $p `$pql`: durable runner")
-      assert(rowsOf(inMemory) == model, s"program $p `$pql`: in-memory runner")
+      val pql = Seq.fill(1 + rnd.nextInt(3))(randomCall()).mkString(" ")
+      program(s, table, pql)
+      assert(rowsOf(s.table(table)) == model, s"program $p `$pql`")
     }
   }
 
-  test("Set/Clear: the in-memory and the committing runner end on the " +
-    "model's rows (unkeyed table, scalar and set field)") {
+  test("every write call: the runner ends on the model's rows (unkeyed)") {
     sweep("wp_unkeyed", LongType, (1 to 8).map(_.toString), identity)
   }
 
-  test("Set/Clear: the in-memory and the committing runner end on the " +
-    "model's rows (keyed table, scalar and set field)") {
+  test("every write call: the runner ends on the model's rows (keyed)") {
     sweep("wp_keyed", StringType, (1 to 8).map(i => s"k$i"), id => s"'$id'")
   }
 }

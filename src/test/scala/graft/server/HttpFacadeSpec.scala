@@ -145,6 +145,23 @@ class HttpFacadeSpec extends SparkSpec {
     assert(body.contains(""""data":[[0,"""))
   }
 
+  test("POST /sql answers a self-join whose output carries two _id columns") {
+    import org.json4s._
+    def answer(q: String): (List[String], List[List[JValue]]) = {
+      val (code, body) = post("/sql", q)
+      assert(code == 200, body)
+      val js = org.json4s.jackson.JsonMethods.parse(body)
+      ((js \ "schema" \ "fields").children.map(f => (f \ "name").values.toString),
+        (js \ "data").children.map(_.children))
+    }
+    assert(answer("SELECT * FROM region a, region b")._2.length == 25)
+    val (fields, rows) = answer("SELECT * FROM nation a, nation b")
+    assert(rows.length == 625)
+    // the implicit order leads with the FIRST `_id` (the a side)
+    val ids = rows.map(_(fields.indexOf("_id")).values.toString.toLong)
+    assert(ids == ids.sorted, ids.take(30))
+  }
+
   test("profiling endpoints: /cpu-profile start/stop lifecycle with the " +
     "reference wordings (http_handler.go:1624-1668, JFR artifact); " +
     "/debug/pprof goroutine + heap") {

@@ -278,10 +278,11 @@ class DdlSpec extends SparkSpec {
       "(2, 20.50, '2021-01-01T00:00:00Z'), (3, 30.75, '2022-01-01T00:00:00Z'), " +
       "(4, 40.00, '2023-01-01T00:00:00Z'), (5, 50.10, '2024-01-01T00:00:00Z')")
     val t = spark.table("pctl")
-    val med = graft.pql.Pql.programOn(t, "pctl", "Percentile(field=price, nth=50)")._1
+    def pql(q: String) = new graft.pql.Compiler(t).run(graft.pql.Parser.parseOne(q))
+    val med = pql("Percentile(field=price, nth=50)")
     val mrow = med.collect()(0)
     assert(mrow.getDecimal(0).compareTo(new java.math.BigDecimal("30.75")) == 0, mrow)
-    val tsMed = graft.pql.Pql.programOn(t, "pctl", "Percentile(field=at, nth=50)")._1
+    val tsMed = pql("Percentile(field=at, nth=50)")
     assert(tsMed.schema.head.dataType ==
       org.apache.spark.sql.types.TimestampType)
     // the reference's bisection may stop on a non-data midpoint

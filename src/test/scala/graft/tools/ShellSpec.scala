@@ -16,6 +16,44 @@ class ShellSpec extends SparkSpec {
     new String(bos.toByteArray, "UTF-8")
   }
 
+  /** The repl on a session of its own, in tuples-only mode: the
+    * non-empty output lines, prompts removed. */
+  private def runOwn(script: String): Seq[String] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    Shell.repl(spark.newSession(), sfDir,
+      new java.io.BufferedReader(new java.io.StringReader(s"\\t on\n$script\\q\n")),
+      new java.io.PrintStream(bos, true, "UTF-8"))
+    new String(bos.toByteArray, "UTF-8").replace("graft> ", "").linesIterator
+      .filter(l => l.nonEmpty && !l.startsWith("Tuples only")).toSeq
+  }
+
+  test(":pql writes commit to the session table the next :pql reads") {
+    val o = runOwn(
+      """:pql region Set(99, r_name='X')
+        |:pql region Count(All())
+        |:pql region Count(Row(r_name='X'))
+        |""".stripMargin)
+    // a program ending on a write prints the record count
+    assert(o == Seq("6", "6", "1"), o)
+  }
+
+  test("a SQL INSERT is visible to :pql") {
+    val o = runOwn(
+      """INSERT INTO region (_id, r_regionkey, r_name) VALUES (77, 77, 'Y')
+        |:pql region Count(Row(r_name='Y'))
+        |""".stripMargin)
+    assert(o.lastOption.contains("1"), o)
+  }
+
+  test(":pql answers on a table made by CREATE TABLE") {
+    val o = runOwn(
+      """CREATE TABLE shell_pql (_id ID, v INT)
+        |INSERT INTO shell_pql VALUES (1, 5), (2, 6)
+        |:pql shell_pql Count(Row(v > 5))
+        |""".stripMargin)
+    assert(o.lastOption.contains("1"), o)
+  }
+
   test(":set warehouse / :backup / :restore round-trip through the repl") {
     val wh1 = Files.createTempDirectory("graft-shell-wh1").toString
     val wh2 = Files.createTempDirectory("graft-shell-wh2").toString
