@@ -282,29 +282,37 @@ final class Compiler(table: DataFrame, timeCol: Option[String] = None,
   }
 
   /** What a write call commits, the one description of each write call:
-    * computed from the state before the call and restricted to the rows
-    * the call changes, so a commit costs O(touched), never O(table) (the
-    * reference writes fragments in place, `reference/rbf/rbf.go:3-29`).
+    * computed from the state before the call and restricted to the
+    * records the call changes, so a commit costs O(touched), never
+    * O(table) (the reference writes fragments in place,
+    * `reference/rbf/rbf.go:3-29`).
     *  - `Folded`: a `Set`/`Clear` (`executor.go:6194`, `:5895`) as the
     *    one-row write [[graft.core.Mutation.commit]] folds like an import;
-    *  - `Upserted`: the post-images of exactly the rows a `ClearRow` or
-    *    `Store` changes. `ClearRow(f=v)` (`executor.go:5976`): `v`'s
-    *    members lose it. `Store(b, f=v)` makes `v`'s bitmap exactly `b`
-    *    (`executor.go:6077`): rows of `b` without `v` gain it, members
-    *    outside `b` lose it — a NULL set outside `b` is no member and
-    *    stays NULL;
+    *  - `Upserted`: the post-images of the rows a `ClearRow` or `Store`
+    *    changes (with any other row sharing their `_id`). `ClearRow(f=v)`
+    *    (`executor.go:5976`): `v`'s members lose it. `Store(b, f=v)`
+    *    makes `v`'s bitmap exactly `b` (`executor.go:6077`): rows of `b`
+    *    without `v` gain it, members outside `b` lose it — a NULL set
+    *    outside `b` is no member and stays NULL;
     *  - `Removed`: the ids a `Delete` drops (`executor.go:9050`); a row
     *    whose filter is NULL is not in the bitmap and survives. */
   def writeEffect(call: Call): Compiler.WriteEffect = {
     def member(f: String, v: Column): Column =
       coalesce(if (isSet(f)) array_contains(col(f), v) else col(f) === v, lit(false))
-    def none(f: String): Column = lit(null).cast(dtype(f))
+    // v's bitmap without the row; identity on rows that are no member
+    def cleared(f: String, v: Column): Column =
+      if (isSet(f)) array_remove(col(f), v)
+      else when(member(f, v), lit(null).cast(dtype(f))).otherwise(col(f))
+    // an upsert replaces every row of an `_id`, and `_id` need not be
+    // unique: the post-images are those of all rows of the changed ids
+    def upserted(state: DataFrame, changed: Column, f: String, next: Column) =
+      Compiler.Upserted(state.join(state.filter(changed).select("_id").distinct(),
+        Seq("_id"), "left_semi").withColumn(f, next).drop("__in"))
     call.name match {
       case "Set" | "Clear" => Compiler.Folded(fieldWrite(call))
       case "ClearRow" =>
         val (f, v) = fieldValueOf(call)
-        Compiler.Upserted(table.filter(member(f, v))
-          .withColumn(f, if (isSet(f)) array_remove(col(f), v) else none(f)))
+        upserted(table, member(f, v), f, cleared(f, v))
       case "Store" =>
         val (f, v) = fieldValueOf(call)
         val (marked, in) = bits(call.children.head) match {
@@ -313,13 +321,10 @@ final class Compiler(table: DataFrame, timeCol: Option[String] = None,
             (table.join(ids.distinct().withColumn("__in", lit(true)), Seq("_id"), "left"),
               col("__in").isNotNull)
         }
-        val next =
-          if (isSet(f)) when(in, array_distinct(concat(
-              coalesce(col(f), array().cast(dtype(f))), array(v))))
-            .otherwise(array_remove(col(f), v))
-          else when(in, v).otherwise(none(f))
-        Compiler.Upserted(marked.filter(in =!= member(f, v)).withColumn(f, next)
-          .drop("__in"))
+        val added =
+          if (isSet(f)) array_distinct(concat(coalesce(col(f), array().cast(dtype(f))), array(v)))
+          else v
+        upserted(marked, in =!= member(f, v), f, when(in, added).otherwise(cleared(f, v)))
       case "Delete" => Compiler.Removed(toIds(bits(call.children.head)))
       case other => sys.error(s"not a write call: $other")
     }

@@ -96,6 +96,20 @@ class MutationSpec extends SparkSpec {
     assert(got == Seq(Some(Set("a", "b")), None, Some(Set.empty[String])), got)
   }
 
+  test("ClearRow and Store keep the other rows of a duplicated _id") {
+    def run(pql: String) = {
+      val s = sessionWith("dup_t") { s =>
+        import s.implicits._
+        Seq((1L, "R"), (1L, "A"), (2L, "R"), (3L, "A")).toDF("_id", "f")
+      }
+      program(s, "dup_t", pql)
+      s.table("dup_t").collect().map(r => (r.getLong(0), Option(r.getString(1)))).toSet
+    }
+    assert(run("ClearRow(f='R')") == Set((1L, None), (1L, Some("A")), (2L, None), (3L, Some("A"))))
+    assert(run("Store(Row(_id=3), f='R')") ==
+      Set((1L, None), (1L, Some("A")), (2L, None), (3L, Some("R"))))
+  }
+
   test("Delete drops matching records; null predicate rows survive") {
     val del = after("orders", "Delete(Row(o_orderstatus='F'))")
     assert(del.count() == orders.filter(col("o_orderstatus") =!= "F").count())
