@@ -5,17 +5,18 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** The bulk field writes that PQL `Set`/`Clear` calls and every import
-  * route share, and their one commit site.
+  * route share.
   *
   * The reference mutates per-shard roaring bitmaps under an RBF transaction
   * (`reference/executor.go:6194` Set, `:5895` Clear). A PQL call is a
   * one-row [[FieldWrite]] and an import is many; [[touched]] restricts the
   * table state to the written ids before the writes fold onto it through
-  * the bulk ops below, so a write rewrites only its own records, and
-  * [[commit]] upserts those rows into [[TableLog]] — like the reference's
-  * one RBF write transaction. PQL's other write calls (`ClearRow`,
-  * `Store`, `Delete`) are described by `graft.pql.Compiler.writeEffect`
-  * and commit through TableLog directly.
+  * the bulk ops below, so a write rewrites only its own records. Those
+  * rows replace every row of their ids as one [[TableLog]] statement —
+  * like the reference's one RBF write transaction: [[commit]] upserts
+  * them for an import, and `graft.pql.Compiler.writeEffect` hands them to
+  * the PQL runner as the call's `TableLog.Change`, as it does for the
+  * other write calls (`ClearRow`, `Store`, `Delete`).
   *
   * Semantic quirks preserved (SURVEY.md §1.2):
   *  - set fields accumulate values; `Set` adds a member (dedup on write)
@@ -147,9 +148,9 @@ object Mutation {
     }.filter(col("_id").isNotNull)
   }
 
-  /** The one write-commit site of `Set`/`Clear`, for PQL calls and every
-    * import route alike: under the table's TableLog lock, read its view,
-    * and upsert the [[touched]] rows as ONE statement — the reference
+  /** The write-commit site of every import route: under the table's
+    * TableLog lock, read its view and upsert the [[touched]] rows as ONE
+    * statement — the reference
     * applies a write to the fragments it names under one RBF transaction
     * (`rbf/rbf.go:3-29`, `http_handler.go:517-520`). Holding the lock
     * across read and upsert keeps a concurrent same-row write from another

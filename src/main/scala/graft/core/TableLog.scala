@@ -16,7 +16,17 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * transaction (`reference/rbf/`, `reference/executor.go:6194` Set) — point
   * writes cost O(write), not O(table). The Spark-idiomatic equivalent of
   * that property is a log-structured table: a large stable *base* plus a
-  * small *overlay* of upserted rows and a *tombstone* set of deleted ids.
+  * small *overlay* of replacement rows and a *tombstone* set of ids whose
+  * rows are gone.
+  *
+  * Every keyed DML statement is ONE state transition, a [[Change]]: the
+  * rows of the `_id`s K become the rows R, where every id of R is in K.
+  * An upsert (SQL INSERT, every import route, PQL `Set`/`Clear`/
+  * `ClearRow`/`Store`) has K = ids(R); a DELETE has K = the ids of the
+  * matching rows and R = the rows of those ids that do not match, so a
+  * repeated `_id` keeps its other rows. The overlay then holds R, the
+  * tombstones the ids of K that R leaves empty. A keyless table has no
+  * ids to replace: an upsert appends, a DELETE rewrites the table.
   *
   *  - write cost   = O(delta): only the overlay/tombstones (re-)materialize
   *    per statement, never the base. A keyed delta piece is ONE file of
@@ -32,9 +42,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    overlay and the tombstones) in memory and the view carries it as one
   *    `InSet`, the way the reference answers existence from a bitmap
   *    (`reference/index.go:1078` TrackExistence) rather than a join. Each
-  *    statement adds only its own ids, collected from the piece it already
-  *    materialized; at most [[MaxRemovedIds]] are kept, and a statement
-  *    that would pass that cap compacts in its own commit;
+  *    statement adds only its own ids, collected from the rows it already
+  *    materialized, and takes them out of the pieces by the same `InSet`;
+  *    at most [[MaxRemovedIds]] are kept, and a statement that would pass
+  *    that cap compacts in its own commit;
   *  - plan depth   = CONSTANT in statement count (leaves are materialized),
   *    so chained DML can't stack an unbounded analysis tree;
   *  - compaction   = after `compactAfter` statements the merged state is
@@ -58,8 +69,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * Invariant: overlay and tombstones are disjoint by `_id`, so the merged
   * view is `base ∖ (tombstones ∪ overlayIds) ∪ overlay` with no double
   * filtering. DELETE-then-INSERT of the same id resurrects the record
-  * (upsert anti-removes the tombstone); INSERT-then-DELETE tombstones the
-  * base row AND drops the overlay row.
+  * (the insert's K takes the id out of the tombstones); INSERT-then-DELETE
+  * tombstones the base row AND drops the overlay row.
   *
   * A statement on a table whose temp view was re-registered behind our back
   * (CREATE TABLE over an existing name, a test registering parquet directly)
@@ -98,8 +109,7 @@ object TableLog {
       depth: Int,                // statements since last compaction
       registered: LogicalPlan)   // canonicalized plan we last put in the view
 
-  private def clean(base: Piece, registered: LogicalPlan) =
-    State(base, None, None, Some(Set.empty), 0, registered)
+  private def clean(base: Piece) = State(base, None, None, Some(Set.empty), 0, null)
 
   private val states =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), State]
@@ -210,14 +220,19 @@ object TableLog {
     }
   }
 
-  /** The `_id`s of a piece the statement already materialized, or None
-    * when it holds more than [[MaxRemovedIds]] rows: one bounded read in
-    * one task, never a re-run of the statement's query. */
-  private def idsOf(piece: DataFrame): Option[Set[Any]] = {
-    val ids = piece.select("_id").where(col("_id").isNotNull).coalesce(1)
+  /** The `(_id, kept)` pairs of a piece the statement already
+    * materialized, or None when it holds more than [[MaxRemovedIds]] rows:
+    * one bounded read in one task, never a re-run of the statement's query. */
+  private def marksOf(piece: DataFrame, kept: Column): Option[Seq[(Any, Boolean)]] = {
+    val rows = piece.select(col("_id"), kept).coalesce(1)
       .limit(MaxRemovedIds + 1).collect()
-    if (ids.length > MaxRemovedIds) None else Some(ids.iterator.map(_.get(0)).toSet)
+    if (rows.length > MaxRemovedIds) None
+    else Some(rows.toSeq.map(r => (r.get(0), r.getBoolean(1))))
   }
+
+  /** The non-null `_id`s of a piece, or None past the cap. */
+  private def idsOf(piece: DataFrame): Option[Set[Any]] =
+    marksOf(piece, lit(true)).map(_.iterator.map(_._1).filter(_ != null).toSet)
 
   /** The removed-id set with `more` added, or None past the cap. */
   private def plus(removed: Option[Set[Any]], more: => Option[Set[Any]]) =
@@ -230,20 +245,22 @@ object TableLog {
                     removed: Option[Set[Any]], df: DataFrame): Piece =
     if (removed.isDefined) mat(spark, name, kind, df) else Piece(df, None)
 
-  /** `base` without the removed ids, plus the overlay. Rows with a null
-    * `_id` stay, as they did under the anti-joins this filter replaced. */
-  private def merged(st: State): DataFrame = {
-    val base = st.base.df
-    val kept = st.removed match {
-      case Some(ids) if ids.nonEmpty =>
-        val id = base.col("_id")
-        val toCatalyst = CatalystTypeConverters
-          .createToCatalystConverter(base.schema("_id").dataType)
-        base.filter(id.isNull ||
-          !Shim.column(InSet(Shim.expression(id), ids.map(toCatalyst))))
-      case Some(_) => base
-      case None => sys.error("merged view over an id set past the cap")
+  /** `df` without the rows whose `_id` is among `ids`, as one `InSet`.
+    * Rows with a null `_id` stay, as they do under an anti-join. */
+  private def without(df: DataFrame, ids: Set[Any]): DataFrame =
+    if (ids.isEmpty) df
+    else {
+      val id = df.col("_id")
+      val toCatalyst = CatalystTypeConverters
+        .createToCatalystConverter(df.schema("_id").dataType)
+      df.filter(id.isNull ||
+        !Shim.column(InSet(Shim.expression(id), ids.map(toCatalyst))))
     }
+
+  /** `base` without the removed ids, plus the overlay. */
+  private def merged(st: State): DataFrame = {
+    val kept = without(st.base.df,
+      st.removed.getOrElse(sys.error("merged view over an id set past the cap")))
     st.overlay.fold(kept)(o => kept.unionByName(o.df))
   }
 
@@ -314,9 +331,9 @@ object TableLog {
     java.nio.file.Files.deleteIfExists(p)
   }
 
-  /** Register the merged plan as the table's temp view and record the state.
-    * Compacts first when the statement budget is spent, when the
-    * removed-id set has passed [[MaxRemovedIds]] — or, for a table
+  /** Fold the log into a new base when it is due, then [[register]] the
+    * state. Compaction is due when the statement budget is spent, when
+    * the removed-id set has passed [[MaxRemovedIds]] — or, for a table
     * whose base carries registered indexes, on EVERY write when
     * `spark.graft.index.writeThrough=true`: compaction is the moment the
     * table becomes a plain parquet scan again (merge-on-read views filter
@@ -327,12 +344,11 @@ object TableLog {
     * the O(table) base rewrite per write that merge-on-read otherwise
     * defers.
     * Either way, when compaction runs and the old base had registered
-    * indexes, `spark.graft.index.autoRefold` (default ON) delta-refolds
-    * them against the new base and rebinds the registrations
-    * ([[graft.plans.IndexRegistry.rebindRefold]]) — the touched rows are
-    * exactly the log's overlay ∪ pre-image-of-(overlay+tombstone) ids,
-    * already at hand, so maintenance is O(touched) on top of the
-    * already-paid compaction. */
+    * indexes, it delta-refolds them against the new base and rebinds the
+    * registrations ([[graft.plans.IndexRegistry.rebindRefold]]) — the
+    * touched rows are exactly the log's overlay ∪ pre-image-of-(overlay+
+    * tombstone) ids, already at hand, so maintenance is O(touched) on top
+    * of the already-paid compaction. */
   private def commit(spark: SparkSession, name: String, st1: State): Unit = {
     // A base that entered the log as a plain view (stateOf reset) has no
     // files yet — durably materialize it once, or restore would lose it.
@@ -350,9 +366,6 @@ object TableLog {
       if (st0.depth >= compactAfter ||
           st0.removed.isEmpty ||
           (writeThrough && dirty && indexedBase.isDefined)) {
-        val autoRefold = scala.util.Try(
-          spark.conf.get("spark.graft.index.autoRefold")).getOrElse("true") !=
-          "false"
         // the `_id`s of overlay ∪ tombstones, as pieces (no in-memory set)
         def pieceIds = (st0.overlay.map(_.df.select("_id")).toSeq ++
           st0.tombstones.map(_.df.select("_id")).toSeq)
@@ -362,7 +375,7 @@ object TableLog {
         // tables have no ids — their only logged mutation is append, whose
         // touched set IS the overlay)
         val touched: Option[DataFrame] =
-          if (!autoRefold || indexedBase.isEmpty) None
+          if (indexedBase.isEmpty) None
           else if (!dirty) Some(st0.base.df.limit(0)) // clean compaction:
             // rebind only — zero touched combos, the index copies over
           else if (hasId(st0.base.df)) {
@@ -381,9 +394,18 @@ object TableLog {
         for {
           ob <- indexedBase; nb <- newBase.path; t <- touched
         } graft.plans.IndexRegistry.rebindRefold(spark, ob, nb, t): Unit
-        clean(newBase, st0.registered)
+        clean(newBase)
       } else st0
-    val view = merged(st)
+    register(spark, name, st)
+  }
+
+  /** Make `st` the table's state in `spark`: register its merged view in
+    * `spark` — not in whichever session built the pieces — record the
+    * state, and in warehouse mode write the manifest and collect
+    * superseded pieces. The one registration step of [[commit]],
+    * [[replace]] and [[restore]]. */
+  private def register(spark: SparkSession, name: String, st: State): Unit = {
+    val view = Shim.ofRows(spark, merged(st).queryExecution.analyzed)
     view.createOrReplaceTempView(Idents.q(name))
     states.put(key(spark, name), st.copy(registered = canon(view)))
     warehouse(spark).foreach { wh =>
@@ -398,7 +420,7 @@ object TableLog {
     val cur = spark.table(Idents.q(name))
     val existing = Option(states.get(key(spark, name)))
       .filter(st => scala.util.Try(canon(cur) == st.registered).getOrElse(false))
-    existing.getOrElse(clean(Piece(cur, None), canon(cur)))
+    existing.getOrElse(clean(Piece(cur, None)).copy(registered = canon(cur)))
   }
 
   /** Swap in a whole new table state (CREATE TABLE, COPY TO, ALTER —
@@ -411,13 +433,7 @@ object TableLog {
       if (warehouse(spark).isDefined) mat(spark, name, "base", df)
       else if (checkpoint) Piece(Materialize.stable(df), None)
       else Piece(df, None)
-    base.df.createOrReplaceTempView(Idents.q(name))
-    val st = clean(base, canon(base.df))
-    states.put(key(spark, name), st)
-    warehouse(spark).foreach { wh =>
-      writeManifest(wh, name, st)
-      gc(spark, wh, name, st)
-    }
+    register(spark, name, clean(base))
   }
 
   /** Conform `df` to the table's recorded schema (same column set → cast
@@ -433,92 +449,104 @@ object TableLog {
         col(f.name).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
     else df
 
-  /** Upsert-by-`_id`: incoming replaces same-id rows (mutex replace on every
-    * field, `reference/field.go:352-365`), resurrects tombstoned ids, appends
-    * the rest. Cost: materializes `incoming` + new overlay/tombstones only. */
-  def upsert(spark: SparkSession, name: String, incoming0: DataFrame): Unit =
+  /** One keyed DML statement: the rows of the `_id`s of `rows` become
+    * those of its rows where `keep` holds (NULL counts as false). Every id
+    * of the result is among the statement's, so the statement writes only
+    * the rows of its own ids. */
+  final case class Change(rows: DataFrame, keep: Column = lit(true))
+
+  object Change {
+    /** DELETE `WHERE hit` over `state`: every row of an id with a
+      * matching row, keeping the rows that do not match — a row whose
+      * filter is NULL does not match. So a repeated `_id` keeps its other
+      * rows, as a row-level delete does (`reference/executor.go:9050`
+      * clears the record bits of the matching rows). */
+    def deleting(state: DataFrame, hit: Column): Change = {
+      val h = coalesce(hit, lit(false))
+      Change(state.join(state.filter(h).select("_id"), Seq("_id"), "left_semi"), !h)
+    }
+  }
+
+  /** Upsert-by-`_id`: the incoming rows replace every row of their ids
+    * (mutex replace on every field, `reference/field.go:352-365`),
+    * resurrect tombstoned ids and add the rest. */
+  def upsert(spark: SparkSession, name: String, rows: DataFrame): Unit =
+    write(spark, name, Change(rows))
+
+  /** Commit `change` as one statement (see [[Change]]). On a keyless table
+    * the kept rows are appended. Cost: materializes the change's rows and
+    * the new overlay/tombstones only. */
+  def write(spark: SparkSession, name: String, change: Change): Unit =
     mutate(spark, name) {
     val st = stateOf(spark, name)
     graft.plans.IndexRewrite.warnMutated(st.base.df)
-    val incoming = alignTo(st.base.df.schema, incoming0)
-    val next =
-      if (!hasId(st.base.df) || !hasId(incoming)) {
-        // keyless table: INSERT is append
-        val o = mat(spark, name, "overlay",
-          st.overlay.map(_.df.unionByName(incoming)).getOrElse(incoming))
-        st.copy(overlay = Some(o), depth = st.depth + 1)
-      } else {
-        // reused by the joins below and by the removed-id set, which is
-        // decided before any piece is written
-        val inc = Materialize.stable(incoming)
-        val ids = inc.select("_id")
-        val removed = plus(st.removed, idsOf(inc))
-        val o = delta(spark, name, "overlay", removed, st.overlay match {
-          case Some(prev) => prev.df.join(ids, Seq("_id"), "left_anti")
-            .unionByName(inc)
-          case None => inc
-        })
-        val t = st.tombstones.map(p => delta(spark, name, "tomb", removed,
-          p.df.join(ids, Seq("_id"), "left_anti")))
-        st.copy(overlay = Some(o), tombstones = t, removed = removed,
+    val rows = alignTo(st.base.df.schema, change.rows)
+    commit(spark, name,
+      if (hasId(st.base.df) && hasId(rows)) rewritten(spark, name, st, rows, change.keep)
+      else {
+        val kept = rows.filter(change.keep)
+        st.copy(overlay = Some(mat(spark, name, "overlay",
+          st.overlay.map(_.df.unionByName(kept)).getOrElse(kept))),
           depth = st.depth + 1)
-      }
-    commit(spark, name, next)
+      })
     }
 
+  private val Keep = "__keep"
+
+  /** The one keyed state transition: the rows of the `_id`s K of `rows`
+    * become R, its rows where `keep` holds. K leaves the overlay and the
+    * tombstones; R joins the overlay, and the ids of K that R leaves empty
+    * join the tombstones. `rows` is materialized once — the statement's one
+    * distributed pass — and read once for its `(_id, kept)` marks, which
+    * decide the removed-id set, the `InSet` that takes K out of the pieces
+    * and which pieces need writing: an upsert writes no tombstone piece
+    * where none exists, a delete that keeps no row no overlay piece. */
+  private def rewritten(spark: SparkSession, name: String, st: State,
+                        rows: DataFrame, keep: Column): State = {
+    val marked = Materialize.stable(rows.withColumn(Keep, coalesce(keep, lit(false))))
+    val r = marked.filter(col(Keep)).drop(Keep)
+    val marks = marksOf(marked, col(Keep))
+    val k = marks.map(_.iterator.map(_._1).filter(_ != null).toSet)
+    val removed = plus(st.removed, k)
+    // a piece without the rows of K; past the cap K is not on the driver
+    def outside(df: DataFrame): DataFrame = k match {
+      case Some(ids) => without(df, ids)
+      case None => df.join(marked.select("_id"), Seq("_id"), "left_anti")
+    }
+    val emptied = marks match {
+      case Some(ms) =>
+        val g = k.get -- ms.collect { case (id, true) if id != null => id }
+        if (g.isEmpty) None
+        else Some(spark.createDataFrame(
+          scala.jdk.CollectionConverters.SeqHasAsJava(g.toSeq.map(Row(_))).asJava,
+          StructType(Seq(st.base.df.schema("_id")))))
+      case None => Some(marked.select("_id").join(r.select("_id"), Seq("_id"), "left_anti"))
+    }
+    val o =
+      if (st.overlay.isEmpty && marks.exists(!_.exists(_._2))) None
+      else Some(delta(spark, name, "overlay", removed,
+        st.overlay.fold(r)(p => outside(p.df).unionByName(r))))
+    val t = (st.tombstones.map(p => outside(p.df)) ++ emptied)
+      .reduceOption(_ unionByName _).map(delta(spark, name, "tomb", removed, _))
+    st.copy(overlay = o, tombstones = t, removed = removed, depth = st.depth + 1)
+  }
+
   /** DELETE: `cond=None` truncates; a predicate evaluates once over the
-    * merged view (one read — the unavoidable cost of finding matches) but
-    * materializes only the matching ids, Delta-deletion-vector style. */
+    * merged view (one read — the unavoidable cost of finding matches) and
+    * commits the [[Change.deleting]] of its matches; a keyless table has
+    * no ids, so its filtered rewrite is the honest cost. */
   def delete(spark: SparkSession, name: String, cond: Option[Column]): Unit =
     mutate(spark, name) {
     val st = stateOf(spark, name)
-    graft.plans.IndexRewrite.warnMutated(st.base.df)
+    val m = merged(st)
     cond match {
-      case None =>
-        replace(spark, name,
-          emptyLike(spark, merged(st).schema), checkpoint = false)
-      case Some(w) =>
-        val m = merged(st)
-        val hit = coalesce(w, lit(false))
-        if (!hasId(m)) {
-          // keyless: no id to tombstone — filtered rewrite is the honest cost
-          replace(spark, name, m.filter(!hit), checkpoint = true)
-        } else {
-          commit(spark, name,
-            tombstoned(spark, name, st, m.filter(hit).select("_id")))
-        }
+      case Some(w) if hasId(m) => write(spark, name, Change.deleting(m, w))
+      case _ =>
+        graft.plans.IndexRewrite.warnMutated(st.base.df)
+        replace(spark, name, cond.fold(emptyLike(spark, m.schema))(w =>
+          m.filter(!coalesce(w, lit(false)))), checkpoint = cond.isDefined)
     }
   }
-
-  /** The state after a DELETE of the `_id`s `hits`: they join the
-    * tombstones and the removed-id set and leave the overlay. `hits` is
-    * materialized once — the statement's one distributed pass — and the
-    * pieces are then written from it. */
-  private def tombstoned(spark: SparkSession, name: String, st: State,
-                         hits0: DataFrame): State = {
-    val hits = Materialize.stable(hits0)
-    val removed = plus(st.removed, idsOf(hits))
-    val t = delta(spark, name, "tomb", removed,
-      st.tombstones.map(_.df.unionByName(hits)).getOrElse(hits))
-    val o = st.overlay.map(p => delta(spark, name, "overlay", removed,
-      p.df.join(hits, Seq("_id"), "left_anti")))
-    st.copy(overlay = o, tombstones = Some(t), removed = removed,
-      depth = st.depth + 1)
-  }
-
-  /** DELETE by a materialized `_id` set (serving-path `Delete` whose ids
-    * are already computed): tombstones the ids directly — no predicate pass
-    * over the merged view. Same state transition as [[delete]]'s predicate
-    * branch. */
-  def deleteByIds(spark: SparkSession, name: String, ids: DataFrame): Unit =
-    mutate(spark, name) {
-      val st = stateOf(spark, name)
-      graft.plans.IndexRewrite.warnMutated(st.base.df)
-      if (!hasId(st.base.df)) sys.error(s"$name is keyless; deleteByIds needs _id")
-      val idT = st.base.df.schema("_id").dataType
-      commit(spark, name, tombstoned(spark, name, st,
-        ids.select(col("_id").cast(idT).as("_id"))))
-    }
 
   /** Whether this session persists DML durably (`spark.graft.warehouse`). */
   def isDurable(spark: SparkSession): Boolean = warehouse(spark).isDefined
@@ -577,13 +605,8 @@ object TableLog {
               (r, p) => plus(r, idsOf(p.df)))
           val st = State(base, overlay, tombstones, removed, depth, null)
           // a log written past the cap folds once here (commit compacts)
-          if (removed.isEmpty)
-            mutate(spark, name)(commit(spark, name, st))
-          else {
-            val view = merged(st)
-            view.createOrReplaceTempView(Idents.q(name))
-            states.put(key(spark, name), st.copy(registered = canon(view)))
-          }
+          mutate(spark, name)(
+            if (removed.isEmpty) commit(spark, name, st) else register(spark, name, st))
           name
         }
     }

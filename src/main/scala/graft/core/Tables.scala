@@ -21,8 +21,13 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Deterministic record-id per table. lineitem has a composite natural key;
-    * l_linenumber is 1..7 so (l_orderkey*8 + l_linenumber) is injective.
+  /** Deterministic record-id per table. lineitem has a composite natural key,
+    * and its id (l_orderkey*8 + l_linenumber) is NOT injective in the test
+    * data: sf0.001 has 6000 rows and 4599 ids, sf0.01 60000 rows and 45832
+    * ids, with up to 6 rows per id. So a write must say whether it works on
+    * rows or on ids: `Delete`/`ClearRow`/`Store` (and SQL DELETE) change
+    * only the rows they match, while `Set`/`Clear` (and SQL INSERT) fold
+    * onto and replace every row of their ids.
     * DuckDB-side equivalent is documented next to each oracle SQL.
     */
   def idExpr(name: String): Option[Column] = name match {

@@ -865,15 +865,15 @@ object IndexRewrite {
   private[plans] val staleWarned =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** Immediate mutation-path stale warning: a write that touches a fact
-    * table with a registered index warns NOW, at mutation time — not
-    * silently at the next query via the freshness guard — because the
-    * operator action (rebuild / re-register; `docs/DEPLOY.md` §indexes) is
-    * the same either way, and a silent decline just moves the 100× scan
-    * latency cliff to an arbitrary later query. Deletes have no inverse in
-    * the merge algebra (`graft.index.GroupIndex.merge`), so rebuild is the
-    * documented step. Once per base path per process, sharing the guard's
-    * warning ledger. Analysis-only cost; never throws. */
+  /** Immediate mutation-path warning: a write that touches a fact table
+    * with a registered index says NOW, at mutation time, that reads answer
+    * from the facts (merge-on-read) until the table's next compaction
+    * refolds the index(es) against the new base and rebinds them
+    * ([[graft.core.TableLog]]; at once under
+    * `spark.graft.index.writeThrough=true`) — not silently at the next
+    * query via the freshness guard. Once per base path per process,
+    * sharing the guard's warning ledger. Analysis-only cost; never
+    * throws. */
   def warnMutated(df: org.apache.spark.sql.DataFrame): Unit =
     try {
       val paths = df.queryExecution.analyzed.collect {
@@ -882,24 +882,13 @@ object IndexRewrite {
             _, _, _, _) =>
           fs.location.rootPaths.map(_.toString)
       }.flatten
-      val autoRefold = scala.util.Try(
-        df.sparkSession.conf.get("spark.graft.index.autoRefold"))
-        .getOrElse("true") != "false"
       paths.filter(IndexCatalog.isRegistered).foreach { p =>
         if (staleWarned.add(p))
           System.err.println(
-            if (autoRefold)
-              s"[graft] mutation touched indexed fact table $p — " +
-                "merge-on-read answers from facts until the next " +
-                "compaction auto-refolds + rebinds the index(es) " +
-                "(immediate with spark.graft.index.writeThrough=true)"
-            else
-              s"[graft] mutation touched indexed fact table " +
-                s"$p — its registered index(es) will decline as STALE; for a " +
-                "key-column DELETE run IndexRegistry.refoldDelete, for an " +
-                "UPDATE or row-level delete run IndexRegistry.refoldMutation " +
-                "with the pre+post-image rows, otherwise rebuild or " +
-                "re-register the index (docs/DEPLOY.md)")
+            s"[graft] mutation touched indexed fact table $p — " +
+              "merge-on-read answers from facts until the next " +
+              "compaction auto-refolds + rebinds the index(es) " +
+              "(immediate with spark.graft.index.writeThrough=true)")
       }
     } catch { case _: Exception => () }
 

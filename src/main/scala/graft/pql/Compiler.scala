@@ -282,21 +282,24 @@ final class Compiler(table: DataFrame, timeCol: Option[String] = None,
   }
 
   /** What a write call commits, the one description of each write call:
-    * computed from the state before the call and restricted to the
-    * records the call changes, so a commit costs O(touched), never
-    * O(table) (the reference writes fragments in place,
-    * `reference/rbf/rbf.go:3-29`).
-    *  - `Folded`: a `Set`/`Clear` (`executor.go:6194`, `:5895`) as the
-    *    one-row write [[graft.core.Mutation.commit]] folds like an import;
-    *  - `Upserted`: the post-images of the rows a `ClearRow` or `Store`
-    *    changes (with any other row sharing their `_id`). `ClearRow(f=v)`
+    * a [[graft.core.TableLog.Change]] computed from the state before the
+    * call and restricted to the records the call changes, so a commit
+    * costs O(touched), never O(table) (the reference writes fragments in
+    * place, `reference/rbf/rbf.go:3-29`).
+    *  - `Set`/`Clear` (`executor.go:6194`, `:5895`): the one-row write
+    *    folded onto its record like an import ([[graft.core.Mutation.touched]]);
+    *  - `ClearRow`/`Store`: the post-images of the rows the call changes,
+    *    with any other row sharing their `_id`. `ClearRow(f=v)`
     *    (`executor.go:5976`): `v`'s members lose it. `Store(b, f=v)`
     *    makes `v`'s bitmap exactly `b` (`executor.go:6077`): rows of `b`
     *    without `v` gain it, members outside `b` lose it — a NULL set
     *    outside `b` is no member and stays NULL;
-    *  - `Removed`: the ids a `Delete` drops (`executor.go:9050`); a row
-    *    whose filter is NULL is not in the bitmap and survives. */
-  def writeEffect(call: Call): Compiler.WriteEffect = {
+    *  - `Delete(b)` (`executor.go:9050`): the rows of `b` go. A predicate
+    *    works on rows — a row whose filter is NULL is not in the bitmap
+    *    and survives, and so do the other rows of a matching `_id`; an
+    *    ordinal child's id set works on whole ids. */
+  def writeEffect(call: Call): graft.core.TableLog.Change = {
+    import graft.core.TableLog.Change
     def member(f: String, v: Column): Column =
       coalesce(if (isSet(f)) array_contains(col(f), v) else col(f) === v, lit(false))
     // v's bitmap without the row; identity on rows that are no member
@@ -306,10 +309,10 @@ final class Compiler(table: DataFrame, timeCol: Option[String] = None,
     // an upsert replaces every row of an `_id`, and `_id` need not be
     // unique: the post-images are those of all rows of the changed ids
     def upserted(state: DataFrame, changed: Column, f: String, next: Column) =
-      Compiler.Upserted(state.join(state.filter(changed).select("_id").distinct(),
+      Change(state.join(state.filter(changed).select("_id").distinct(),
         Seq("_id"), "left_semi").withColumn(f, next).drop("__in"))
     call.name match {
-      case "Set" | "Clear" => Compiler.Folded(fieldWrite(call))
+      case "Set" | "Clear" => Change(graft.core.Mutation.touched(table, Seq(fieldWrite(call))))
       case "ClearRow" =>
         val (f, v) = fieldValueOf(call)
         upserted(table, member(f, v), f, cleared(f, v))
@@ -325,7 +328,10 @@ final class Compiler(table: DataFrame, timeCol: Option[String] = None,
           if (isSet(f)) array_distinct(concat(coalesce(col(f), array().cast(dtype(f))), array(v)))
           else v
         upserted(marked, in =!= member(f, v), f, when(in, added).otherwise(cleared(f, v)))
-      case "Delete" => Compiler.Removed(toIds(bits(call.children.head)))
+      case "Delete" => bits(call.children.head) match {
+        case Left(p) => Change.deleting(table, p)
+        case Right(ids) => Change(table.join(ids, Seq("_id"), "left_semi"), lit(false))
+      }
       case other => sys.error(s"not a write call: $other")
     }
   }
@@ -908,12 +914,6 @@ object Compiler {
     * `reference/executor.go:723-835`). */
   def isWrite(call: Call): Boolean =
     Set("Set", "Clear", "ClearRow", "Store", "Delete")(call.name)
-
-  /** See [[Compiler!.writeEffect]]. */
-  sealed trait WriteEffect
-  final case class Folded(write: graft.core.Mutation.FieldWrite) extends WriteEffect
-  final case class Upserted(rows: DataFrame) extends WriteEffect
-  final case class Removed(ids: DataFrame) extends WriteEffect
 }
 
 object Pql {
@@ -939,16 +939,15 @@ object Pql {
     * renders the reference's boolean ack).
     *
     * The table's session view (registered through [[graft.core.TableLog]])
-    * is the state between calls. Each write call commits what its
-    * [[Compiler!.writeEffect]] describes as its own TableLog statement:
-    * `Set`/`Clear` through [[graft.core.Mutation.commit]], the import
-    * path's fold-and-commit; `ClearRow`/`Store` through `TableLog.upsert`;
-    * `Delete` through `TableLog.deleteByIds`. With `spark.graft.warehouse`
-    * set the commit is durable: a restarted JVM restores the writes from
-    * the warehouse manifest like the reference's RBF storage
-    * (`reference/rbf/rbf.go:3-29`). Without it the log's pieces are
-    * session-lifetime checkpoints. Either way every frontend on the
-    * session reads the committed view.
+    * is the state between calls. Each write call commits the
+    * [[graft.core.TableLog.Change]] its [[Compiler!.writeEffect]]
+    * describes as its own TableLog statement, the one keyed transition
+    * SQL DML and every import route commit through too. With
+    * `spark.graft.warehouse` set the commit is durable: a restarted JVM
+    * restores the writes from the warehouse manifest like the reference's
+    * RBF storage (`reference/rbf/rbf.go:3-29`). Without it the log's
+    * pieces are session-lifetime checkpoints. Either way every frontend on
+    * the session reads the committed view.
     *
     * A program that writes holds the table's TableLog lock once, across
     * all its calls and the rendering of its read results (a result bound
@@ -966,14 +965,7 @@ object Pql {
         graft.core.Tables.timeColumn(tableName))
       if (!Compiler.isWrite(c)) Some(comp.run(c))
       else {
-        comp.writeEffect(c) match {
-          case Compiler.Folded(w) =>
-            graft.core.Mutation.commit(spark, tableName, Seq(w))
-          case Compiler.Upserted(rows) =>
-            graft.core.TableLog.upsert(spark, tableName, rows)
-          case Compiler.Removed(ids) =>
-            graft.core.TableLog.deleteByIds(spark, tableName, ids)
-        }
+        graft.core.TableLog.write(spark, tableName, comp.writeEffect(c))
         None
       }
     })

@@ -137,29 +137,4 @@ class AutoRefoldSpec extends SparkSpec {
       IndexCatalog.clear()
     }
   }
-
-  test("spark.graft.index.autoRefold=false opts out: compaction moves the " +
-    "base and the index honestly goes dark (answers from facts) — the " +
-    "old-base record is left for the operator") {
-    val (s, name, base, root) = fixture("off")
-    s.conf.set("spark.graft.index.writeThrough", "true")
-    s.conf.set("spark.graft.index.autoRefold", "false")
-    try {
-      val id = s.table(graft.core.Idents.q(name))
-        .select("_id").orderBy("_id").limit(1).collect()(0).getLong(0)
-      graft.pql.Pql.programResults(s, name, s"Set($id, value=5)")(identity)
-      val served = q(s, name)
-      val phys = served.queryExecution.executedPlan.toString
-      assert(!phys.contains(root), s"no rebind requested — no index:\n$phys")
-      // still CORRECT, just unserved — and the record remains on the old
-      // base for a manual rebuild/rebind
-      assert(served.collect().nonEmpty)
-      assert(IndexRegistry.currentIndexPath(s, base,
-        Seq("event_type")).isDefined)
-    } finally {
-      s.conf.unset("spark.graft.index.writeThrough")
-      s.conf.unset("spark.graft.index.autoRefold")
-      IndexCatalog.clear()
-    }
-  }
 }

@@ -231,4 +231,11 @@ class TableLogSpec extends SparkSpec {
     assert(rows("tl_tr") === Set((7L, "z")))
     Ddl.run(spark, "DROP TABLE tl_tr")
   }
+
+  test("replace registers the table in the session it is given") {
+    val other = spark.newSession()
+    val df = spark.range(3).withColumnRenamed("id", "_id")
+    TableLog.replace(other, "tl_other", df, checkpoint = false)
+    assert(other.table("tl_other").count() === 3)
+  }
 }

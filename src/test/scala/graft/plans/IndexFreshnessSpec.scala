@@ -113,11 +113,10 @@ class IndexFreshnessSpec extends SparkSpec {
     val out = capturing {
       program(s, "facts", "Delete(Row(event_type='click'))"): Unit
     }
-    // autoRefold defaults on: the warning names the merge-on-read window
-    // (facts answer until the next compaction refolds + rebinds); with it
-    // off the message names the STALE decline instead — accept either
+    // the warning names the merge-on-read window (facts answer until the
+    // next compaction refolds + rebinds)
     assert(out.contains("mutation touched indexed fact table") &&
-      (out.contains("auto-refolds") || out.contains("STALE")),
+      out.contains("auto-refolds"),
       s"expected immediate warning, got: '$out'")
     // once per path: a second write over the same facts stays quiet
     val out2 = capturing {

@@ -108,6 +108,7 @@ class MutationSpec extends SparkSpec {
     assert(run("ClearRow(f='R')") == Set((1L, None), (1L, Some("A")), (2L, None), (3L, Some("A"))))
     assert(run("Store(Row(_id=3), f='R')") ==
       Set((1L, None), (1L, Some("A")), (2L, None), (3L, Some("R"))))
+    assert(run("Delete(Row(f='R'))") == Set((1L, Some("A")), (3L, Some("A"))))
   }
 
   test("Delete drops matching records; null predicate rows survive") {

@@ -98,6 +98,14 @@ class DdlSpec extends SparkSpec {
     assert(spark.table("t2").count() == 0)
   }
 
+  test("DELETE with WHERE removes matching rows, not every row of their _id") {
+    // lineitem's `_id` repeats (sf0.001: 6000 rows, 4599 ids); DuckDB
+    // leaves 4808 rows after this DELETE
+    val s = sessionWith("lineitem")(graft.core.Tables.load(_, sfDir, "lineitem"))
+    GraftSql.statement(s, "DELETE FROM lineitem WHERE l_quantity > 40")
+    assert(s.table("lineitem").count() == 4808L)
+  }
+
   test("CREATE VIEW with dialect rewrite, DROP") {
     run("CREATE TABLE t3 (_id ID, v INT)")
     run("INSERT INTO t3 (_id, v) VALUES (1, 5), (2, 6), (3, 7)")
