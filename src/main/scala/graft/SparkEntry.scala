@@ -1360,7 +1360,6 @@ SELECT v AS val FROM bisect WHERE done""".replace("\n", " ")
       import graft.streaming.KafkaIngest.IdkField
       val ev = Tables.load(s, dir, "events")
       val src  = graft.streaming.Ingest.scratch("q_kafka_src")
-      val tgt  = graft.streaming.Ingest.scratch("q_kafka_tgt") + "/t"
       val ckpt = graft.streaming.Ingest.scratch("q_kafka_ckpt")
       ev.select(to_json(struct(col("event_id"), col("event_type"),
           col("user_id"), col("value"),
@@ -1370,9 +1369,9 @@ SELECT v AS val FROM bisect WHERE done""".replace("\n", " ")
         IdkField("event_type", "string"), IdkField("user_id", "int"),
         IdkField("value", "double"), IdkField("ts", "timestamp", unit = "us"))
       val stream = graft.streaming.KafkaIngest.fileCompatSource(s, src + "/*", fields)
-      graft.streaming.Ingest.startUpsert(stream, tgt, ckpt,
+      graft.streaming.Ingest.startUpsert(stream, "stream_kafka", ckpt,
         idCol = "event_id", orderCol = "ts").awaitTermination()
-      s.read.parquet(tgt).agg(count(lit(1)).as("cnt"),
+      s.table("stream_kafka").agg(count(lit(1)).as("cnt"),
         round(sum(col("value")), 2).as("sv"), max(col("ts")).as("mts"))
     }),
     // CSV IDK ingest: events re-encoded as a headerless CSV wire, typed by a
@@ -1463,7 +1462,6 @@ SELECT v AS val FROM bisect WHERE done""".replace("\n", " ")
     "stream_csv" -> ((s, dir) => {
       val ev = Tables.load(s, dir, "events")
       val src  = graft.streaming.Ingest.scratch("q_csv_src")
-      val tgt  = graft.streaming.Ingest.scratch("q_csv_tgt") + "/t"
       val ckpt = graft.streaming.Ingest.scratch("q_csv_ckpt")
       ev.select(col("event_id"), col("user_id"), col("event_type"),
           date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX").as("ts"))
@@ -1471,9 +1469,9 @@ SELECT v AS val FROM bisect WHERE done""".replace("\n", " ")
       val header = Seq("event_id__ID", "user_id__Int",
         "event_type__String", "ts__Timestamp")
       val stream = graft.streaming.CsvIngest.source(s, src + "/*", header)
-      graft.streaming.Ingest.startUpsert(stream, tgt, ckpt,
+      graft.streaming.Ingest.startUpsert(stream, "stream_csv", ckpt,
         idCol = "event_id", orderCol = "ts").awaitTermination()
-      s.read.parquet(tgt).agg(count(lit(1)).as("cnt"),
+      s.table("stream_csv").agg(count(lit(1)).as("cnt"),
         sum(col("user_id")).as("su"), max(col("ts")).as("mts"))
     }),
     // Kinesis IDK ingest (`reference/idk/kinesis/source.go:81,110`): record
@@ -1484,7 +1482,6 @@ SELECT v AS val FROM bisect WHERE done""".replace("\n", " ")
       import graft.streaming.KafkaIngest.IdkField
       val ev = Tables.load(s, dir, "events")
       val src  = graft.streaming.Ingest.scratch("q_kin_src")
-      val tgt  = graft.streaming.Ingest.scratch("q_kin_tgt") + "/t"
       val ckpt = graft.streaming.Ingest.scratch("q_kin_ckpt")
       ev.select(to_json(struct(
           col("event_id"), col("user_id"), col("event_type"), col("value")))
@@ -1493,9 +1490,9 @@ SELECT v AS val FROM bisect WHERE done""".replace("\n", " ")
       val fields = Seq(IdkField("event_id", "id"), IdkField("user_id", "int"),
         IdkField("event_type", "string"), IdkField("value", "double"))
       val stream = graft.streaming.KinesisIngest.fileCompatSource(s, src + "/*", fields)
-      graft.streaming.Ingest.startUpsert(stream, tgt, ckpt,
+      graft.streaming.Ingest.startUpsert(stream, "src_kinesis", ckpt,
         idCol = "event_id", orderCol = "user_id").awaitTermination()
-      s.read.parquet(tgt).agg(count(lit(1)).as("cnt"),
+      s.table("src_kinesis").agg(count(lit(1)).as("cnt"),
         sum(col("user_id")).as("su"), round(sum(col("value")), 2).as("sv"))
     }),
     // datagen IDK source (`reference/idk/datagen/`, the able perf profile):
@@ -1539,15 +1536,14 @@ SELECT v AS val FROM bisect WHERE done""".replace("\n", " ")
     "stream_upsert" -> ((s, dir) => {
       val ev = Tables.load(s, dir, "events")
       val src  = graft.streaming.Ingest.scratch("q_upsert_src")
-      val tgt  = graft.streaming.Ingest.scratch("q_upsert_tgt") + "/t"
       val ckpt = graft.streaming.Ingest.scratch("q_upsert_ckpt")
       ev.select("event_id", "ts", "event_type", "value")
         .write.mode("overwrite").parquet(src + "/ev.parquet")
       val stream = graft.streaming.Ingest.fileSource(s, src + "/*", "PARQUET",
         s.read.parquet(src + "/ev.parquet").schema)
-      graft.streaming.Ingest.startUpsert(stream, tgt, ckpt,
+      graft.streaming.Ingest.startUpsert(stream, "stream_upsert", ckpt,
         idCol = "event_id", orderCol = "ts").awaitTermination()
-      s.read.parquet(tgt).agg(count(lit(1)).as("cnt"),
+      s.table("stream_upsert").agg(count(lit(1)).as("cnt"),
         round(sum(col("value")), 2).as("sv"))
     }),
   )

@@ -576,39 +576,46 @@ object TableLog {
       if (!java.nio.file.Files.isDirectory(root)) Seq.empty
       else scala.jdk.CollectionConverters.IteratorHasAsScala(
         java.nio.file.Files.list(root).iterator).asScala.toList
-        .filter(d => java.nio.file.Files.exists(d.resolve("manifest.json")))
-        .map { d =>
-          val name = d.getFileName.toString
-          import org.json4s._
-          val m = org.json4s.jackson.JsonMethods.parse(
-            java.nio.file.Files.readString(d.resolve("manifest.json")))
-          def str(k: String): Option[String] = m \ k match {
-            case JString(s) => Some(s)
-            case _          => None
-          }
-          val schema = DataType.fromJson(str("schema").get)
-            .asInstanceOf[StructType]
-          def piece(k: String, s: StructType): Option[Piece] =
-            str(k).map(p => Piece(spark.read.schema(s).parquet(p), Some(p)))
-          val base = piece("base", schema)
-            .getOrElse(Piece(emptyLike(spark, schema), None))
-          val tombSchema = StructType(schema.filter(_.name == "_id"))
-          val depth = m \ "depth" match {
-            case JInt(n) => n.toInt
-            case _       => 0
-          }
-          val overlay = piece("overlay", schema)
-          val tombstones = piece("tombstones", tombSchema)
-          val removed =
-            if (!schema.fieldNames.contains("_id")) Some(Set.empty[Any])
-            else (overlay ++ tombstones).foldLeft(Option(Set.empty[Any]))(
-              (r, p) => plus(r, idsOf(p.df)))
-          val st = State(base, overlay, tombstones, removed, depth, null)
-          // a log written past the cap folds once here (commit compacts)
-          mutate(spark, name)(
-            if (removed.isEmpty) commit(spark, name, st) else register(spark, name, st))
-          name
+        .map(_.getFileName.toString).filter(restoreTable(spark, _))
+    }
+
+  /** Re-register `name` into `spark` from its warehouse manifest; false
+    * when the warehouse holds no such table. The manifest is read under
+    * the table's lock, so a write the session commits meanwhile is never
+    * rolled back to an older manifest. */
+  def restoreTable(spark: SparkSession, name: String): Boolean =
+    warehouse(spark).exists { wh =>
+      val f = tableDir(wh, name).resolve("manifest.json")
+      java.nio.file.Files.exists(f) && mutate(spark, name) {
+        import org.json4s._
+        val m = org.json4s.jackson.JsonMethods.parse(
+          java.nio.file.Files.readString(f))
+        def str(k: String): Option[String] = m \ k match {
+          case JString(s) => Some(s)
+          case _          => None
         }
+        val schema = DataType.fromJson(str("schema").get)
+          .asInstanceOf[StructType]
+        def piece(k: String, s: StructType): Option[Piece] =
+          str(k).map(p => Piece(spark.read.schema(s).parquet(p), Some(p)))
+        val base = piece("base", schema)
+          .getOrElse(Piece(emptyLike(spark, schema), None))
+        val tombSchema = StructType(schema.filter(_.name == "_id"))
+        val depth = m \ "depth" match {
+          case JInt(n) => n.toInt
+          case _       => 0
+        }
+        val overlay = piece("overlay", schema)
+        val tombstones = piece("tombstones", tombSchema)
+        val removed =
+          if (!schema.fieldNames.contains("_id")) Some(Set.empty[Any])
+          else (overlay ++ tombstones).foldLeft(Option(Set.empty[Any]))(
+            (r, p) => plus(r, idsOf(p.df)))
+        val st = State(base, overlay, tombstones, removed, depth, null)
+        // a log written past the cap folds once here (commit compacts)
+        if (removed.isEmpty) commit(spark, name, st) else register(spark, name, st)
+        true
+      }
     }
 
   private def emptyLike(spark: SparkSession, schema: StructType): DataFrame =

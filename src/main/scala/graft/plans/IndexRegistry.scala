@@ -585,47 +585,23 @@ object IndexRegistry {
   /** The one per-record maintenance loop behind [[refoldDelete]],
     * [[refoldMutation]], [[foldAppend]] and [[rebindRefold]]: for each
     * seg/group record on the fact table `on`, `work` writes and registers
-    * the record's next version; a failure goes to [[refuseOrRebuild]],
-    * whose fallback rebuild reads `rebuildOn`. Callers hold [[maintLock]],
-    * so the records are read inside it: the indexPath each refold starts
-    * from must still be the registered one when it re-registers. Returns
-    * (indexPath, maintained?) per record. */
-  private def maintain(spark: SparkSession, tag: String, on: String,
-                       rebuildOn: String)(
+    * the record's next version; a failure flags the record stale
+    * ([[markStale]]) so `/status` and `Advise` surface the needed rebuild.
+    * Callers hold [[maintLock]], so the records are read inside it: the
+    * indexPath each refold starts from must still be the registered one
+    * when it re-registers. Returns (indexPath, maintained?) per record. */
+  private def maintain(spark: SparkSession, tag: String, on: String)(
       work: OnFacts => Unit): Seq[(String, Boolean)] =
     recordsOn(spark, on).map { r =>
       scala.util.Try(work(r)) match {
         case scala.util.Success(_)  => (r.indexPath, true)
         case scala.util.Failure(ex) =>
-          refuseOrRebuild(spark, rebuildOn, r, ex, tag)
+          System.err.println(s"[$tag] ${r.indexPath} NOT maintained " +
+            s"(declines stale until rebuilt): ${ex.getMessage}")
+          markStale(spark, r, String.valueOf(ex.getMessage))
+          (r.indexPath, false)
       }
     }
-
-  /** Shared refusal handling: with `spark.graft.index.autoRebuild=true` a
-    * refused maintenance falls back to the O(corpus) [[rebuildRecord]] over
-    * `basePath` — the index keeps serving at the rebuild's cost instead of
-    * declining stale indefinitely; otherwise (default) the record is
-    * flagged stale ([[markStale]]) so `/status` and `Advise` surface the
-    * needed rebuild. */
-  private def refuseOrRebuild(spark: SparkSession, basePath: String,
-      r: OnFacts, ex: Throwable, tag: String): (String, Boolean) = {
-    System.err.println(s"[$tag] ${r.indexPath} NOT maintained " +
-      s"(declines stale until rebuilt): ${ex.getMessage}")
-    val auto =
-      spark.conf.get("spark.graft.index.autoRebuild", "false") == "true"
-    if (auto) scala.util.Try(rebuildRecord(spark, basePath, r)) match {
-      case scala.util.Success(next) =>
-        System.err.println(s"[$tag] ${r.indexPath} auto-rebuilt -> $next")
-        (r.indexPath, true)
-      case scala.util.Failure(ex2) =>
-        markStale(spark, r,
-          s"${ex.getMessage}; auto-rebuild failed: ${ex2.getMessage}")
-        (r.indexPath, false)
-    } else {
-      markStale(spark, r, String.valueOf(ex.getMessage))
-      (r.indexPath, false)
-    }
-  }
 
   /** Register `next` as `r`'s new version over `basePath`, with the
     * caller's pre-scan fact signature and the CAS on the version it
@@ -646,13 +622,12 @@ object IndexRegistry {
     * old record. `touched` is the union of the mutation window's pre-image
     * and post-image rows — exactly what the log's overlay/tombstone state
     * provides for free at compaction time, so maintenance stays O(touched)
-    * on top of the already-paid O(table) compaction. Refusals follow
-    * [[refuseOrRebuild]]'s policy: the rebuild reads `newBase`, and the
-    * stale flag goes on the old record (the one that exists). */
+    * on top of the already-paid O(table) compaction. A refusal flags the
+    * old record (the one that exists) stale. */
   def rebindRefold(spark: SparkSession, oldBase: String, newBase: String,
                    touched: DataFrame): Seq[(String, Boolean)] =
     maintLock(newBase) {
-      val out = maintain(spark, "rebind", oldBase, newBase) { r =>
+      val out = maintain(spark, "rebind", oldBase) { r =>
         IndexRewrite.suppress(refoldTouched(spark, newBase, r, touched))
       }
       val moved = out.collect { case (p, true) => p }.toSet
@@ -767,7 +742,7 @@ object IndexRegistry {
   def refoldDelete(spark: SparkSession, basePath: String,
                    pred: org.apache.spark.sql.Column)
       : Seq[(String, Boolean)] = maintLock(basePath) {
-    maintain(spark, "refoldDelete", basePath, basePath) { r =>
+    maintain(spark, "refoldDelete", basePath) { r =>
       // fact listing captured BEFORE the maintenance scan (r14 ADVICE):
       // registered as the new version's signature, so an out-of-band
       // fact write landing mid-refold declines stale at serve
@@ -856,7 +831,7 @@ object IndexRegistry {
   def refoldMutation(spark: SparkSession, basePath: String,
                      touched: DataFrame): Seq[(String, Boolean)] =
     maintLock(basePath) {
-      maintain(spark, "refoldMutation", basePath, basePath) { r =>
+      maintain(spark, "refoldMutation", basePath) { r =>
         IndexRewrite.suppress(refoldTouched(spark, basePath, r, touched))
       }
     }
@@ -881,7 +856,7 @@ object IndexRegistry {
                  publishFacts: () => Unit = () => ())
       : Seq[(String, Boolean)] = maintLock(basePath) {
     publishFacts()
-    maintain(spark, "foldAppend", basePath, basePath) { r =>
+    maintain(spark, "foldAppend", basePath) { r =>
       val preSig = IndexCatalog.factSignatureFast(spark, basePath)
       val next = r match {
         case g: Group =>
@@ -934,28 +909,6 @@ object IndexRegistry {
             UnresolvedAttribute(ts), Some(tz))
         acc.withColumn(k, org.apache.spark.sql.graftshim.Shim.column(ex))
       }
-  }
-
-  /** O(corpus) rebuild of ONE registered index from its fact table —
-    * the recovery every refusal path can fall back to. Registers the new
-    * version with the pre-scan fact signature and the CAS guard; caller
-    * holds [[maintLock]]. */
-  private def rebuildRecord(spark: SparkSession, basePath: String,
-                            r: OnFacts): String = {
-    val next = nextVersionOf(r.indexPath)
-    val preSig = IndexCatalog.factSignatureFast(spark, basePath)
-    IndexRewrite.suppress {
-      val facts = spark.read.parquet(basePath)
-      (r match {
-        case g: Group =>
-          graft.index.GroupIndex.build(
-            deriveQuantumKeys(spark, facts, g.groupCols, g.quantums),
-            g.groupCols, g.sumCols, g.distinctCols)
-        case s: Seg => graft.index.Bitmap.segmentIndex(facts, s.segCol, s.idCol)
-      }).write.mode("overwrite").parquet(next)
-    }
-    publishNext(spark, basePath, r, next, preSig)
-    next
   }
 
   /** One record's delta refold against the facts at `basePath` (see

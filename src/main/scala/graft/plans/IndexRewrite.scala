@@ -66,24 +66,23 @@ case class IndexRewrite(spark: SparkSession) extends Rule[LogicalPlan]
     * changed underneath (outside [[graft.streaming.IndexMaintain]], which
     * re-fingerprints per batch) must not serve stale aggregates. The
     * reference has no analogous hazard (its fragments ARE the storage;
-    * ours summarize external parquet). `spark.graft.indexFreshnessCheck=
-    * false` disables (the pre-guard behavior); a signature-less entry
-    * serves unguarded. Cost: hashing the file list Spark already resolved
-    * for the scan — no extra IO. Warns once per base path on mismatch. */
+    * ours summarize external parquet). The guard always runs; a
+    * signature-less entry serves unguarded. Cost: hashing the file list
+    * Spark already resolved for the scan — no extra IO. Warns once per
+    * base path on mismatch. */
   private def fresh(sig: Option[String],
       loc: org.apache.spark.sql.execution.datasources.FileIndex): Boolean =
-    spark.conf.get("spark.graft.indexFreshnessCheck", "true") == "false" ||
-      sig.forall { s =>
-        val ok = s == IndexCatalog.locationSig(loc)
-        if (!ok) {
-          val key = loc.rootPaths.map(_.toString).mkString(",")
-          if (IndexRewrite.staleWarned.add(key))
-            System.err.println(s"[graft] index for $key is STALE " +
-              "(fact listing changed since registration) — serving from the " +
-              "fact table; rebuild or re-register the index")
-        }
-        ok
+    sig.forall { s =>
+      val ok = s == IndexCatalog.locationSig(loc)
+      if (!ok) {
+        val key = loc.rootPaths.map(_.toString).mkString(",")
+        if (IndexRewrite.staleWarned.add(key))
+          System.err.println(s"[graft] index for $key is STALE " +
+            "(fact listing changed since registration) — serving from the " +
+            "fact table; rebuild or re-register the index")
       }
+      ok
+    }
 
   private def rewriteDistinct(agg: Aggregate): Option[LogicalPlan] = agg match {
     case Aggregate(Seq(groupExpr), aggExprs, child, _)

@@ -1,6 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.{Idents, TableLog}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -22,19 +24,26 @@ import org.apache.spark.sql.types.StructType
   *   - Commit()    → checkpointLocation (exactly-once file sources / Kafka
   *                   offsets; strictly stronger than the reference's
   *                   at-least-once);
-  *   - batch import→ `foreachBatch` upsert, latest-write-wins per `_id`
-  *                   (mutex replace, `reference/field.go:352-365`);
+  *   - batch import→ `foreachBatch` commit, latest-write-wins per `_id`
+  *                   (mutex replace, `reference/field.go:352-365`), as ONE
+  *                   [[graft.core.TableLog.upsert]] into a session table —
+  *                   the fragments queries read, as the reference's import
+  *                   writes into the fragments it serves
+  *                   (`reference/fragment.go:1498` bulkImport);
   *   - quantum view→ watermarked event-time window aggregation — maintained
   *                   *incrementally* by the state store instead of being
   *                   re-derived per query;
   *   - TTL         → event-time filter job (Delta `DELETE WHERE` in prod).
   *
-  * Scale notes (100 TB): the upsert here rewrites a parquet snapshot, which is
-  * correct-but-local; on a cluster the same `foreachBatch` body becomes a
-  * Delta/Iceberg MERGE keyed on `_id` (file-skipping bounds rewrite to touched
-  * partitions). The windowed aggregation path is already scale-correct: state
-  * is partitioned by group key across executors and watermarking bounds state
-  * size; shuffle partitions should be sized to cluster cores.
+  * Streamed rows are then a TableLog table like any other: the facades
+  * serve them, `spark.graft.warehouse` makes them durable,
+  * `Ddl.restoreSession` restores them and compaction rebinds their
+  * indexes. A micro-batch of at most `TableLog.MaxRemovedIds` ids costs
+  * O(batch) plus one compaction every `TableLog.compactAfter` batches; a
+  * larger one compacts in its own commit, O(table). The windowed
+  * aggregation path is already scale-correct: state is partitioned by
+  * group key across executors and watermarking bounds state size;
+  * shuffle partitions should be sized to cluster cores.
   */
 object Ingest {
 
@@ -54,44 +63,38 @@ object Ingest {
     }
   }
 
-  /** Upsert one micro-batch into a parquet-backed table: within the batch the
-    * last record per id wins (Kafka offset order = arrival order; here the
-    * caller supplies `orderCol`, e.g. the event timestamp), then batch rows
-    * replace existing rows with the same id — the reference's mutex
-    * replace-on-write. Prod: Delta `MERGE WHEN MATCHED UPDATE`. */
-  def upsertBatch(spark: SparkSession, targetDir: String, idCol: String,
-      orderCol: String)(batch: DataFrame, batchId: Long): Unit = {
-    import org.apache.spark.sql.expressions.Window
-    val deduped = batch
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(idCol).orderBy(col(orderCol).desc)))
-      .filter(col("__rn") === 1).drop("__rn")
-    val tgt = new java.io.File(targetDir)
-    val next =
-      if (tgt.exists()) {
-        val existing = spark.read.parquet(targetDir)
-        existing.join(deduped.select(idCol), Seq(idCol), "left_anti")
-          .unionByName(deduped)
-      } else deduped
-    // local-FS snapshot swap; Delta MERGE replaces this block in prod
-    val tmp = targetDir + ".tmp"
-    next.write.mode("overwrite").parquet(tmp)
-    val old = new java.io.File(targetDir + ".old")
-    deleteRec(old)
-    if (tgt.exists()) tgt.renameTo(old)
-    new java.io.File(tmp).renameTo(tgt)
-    deleteRec(old)
-  }
-
-  /** Start the ingest loop: stream → foreachBatch upsert. */
-  def startUpsert(stream: DataFrame, targetDir: String, checkpointDir: String,
-      idCol: String = "_id", orderCol: String = "_id"): StreamingQuery =
+  /** Start the ingest loop: stream → one [[TableLog.upsert]] per
+    * micro-batch into the session table `table`. Within a batch the last
+    * record per id wins (Kafka offset order = arrival order; here the
+    * caller supplies `orderCol`, e.g. the event timestamp), then it
+    * replaces every row of its id — the reference's mutex replace-on-write.
+    * `idCol` becomes the table's `_id`. A table neither the session nor
+    * its warehouse holds is created empty from the stream's schema; an
+    * existing one is upserted into, never replaced, so a replay from an
+    * empty checkpoint converges to the same table. Batches commit on the
+    * session that started the stream: foreachBatch hands each batch a
+    * cloned session, and TableLog keeps its state per session. */
+  def startUpsert(stream: DataFrame, table: String, checkpointDir: String,
+      idCol: String = "_id", orderCol: String = "_id"): StreamingQuery = {
+    val spark = stream.sparkSession
+    if (!spark.catalog.tableExists(Idents.q(table)) &&
+        !TableLog.restoreTable(spark, table))
+      TableLog.replace(spark, table, spark.createDataFrame(
+        spark.sparkContext.emptyRDD[Row],
+        stream.withColumnRenamed(idCol, "_id").schema), checkpoint = false)
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch((b: DataFrame, id: Long) =>
-        upsertBatch(b.sparkSession, targetDir, idCol, orderCol)(b, id))
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        val latest = b
+          .withColumn("__rn", row_number().over(
+            Window.partitionBy(idCol).orderBy(col(orderCol).desc)))
+          .filter(col("__rn") === 1).drop("__rn")
+          .withColumnRenamed(idCol, "_id")
+        TableLog.upsert(spark, table, latest)
+      }
       .trigger(Trigger.AvailableNow())
       .start()
+  }
 
   /** Incrementally-maintained time-quantum view (reference views
     * `standard_2023 / 202301 / …`, `reference/time.go:74-225`): watermarked

@@ -191,7 +191,7 @@ object Advise {
     val stale = graft.plans.IndexRegistry.staleRecords(spark)
     if (stale.nonEmpty) {
       out ++= s"\n${stale.size} STALE registration(s) — declining until " +
-        "rebuilt (Advise --build, or spark.graft.index.autoRebuild=true):\n"
+        "rebuilt (Advise --build):\n"
       stale.foreach { case (k, bp, key, idx, reason) =>
         out ++= s"  [$k] $bp ($key) -> $idx: $reason\n"
       }

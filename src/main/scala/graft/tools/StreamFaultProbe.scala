@@ -5,10 +5,11 @@ import org.apache.spark.sql.functions._
 
 /** Streaming executor-loss probe: under a multi-JVM master it runs a
   * 20-micro-batch file-source upsert stream ([[graft.streaming.Ingest
-  * .startUpsert]] — the Kafka/CSV/IDK ingest sink) and `kill -9`s one
-  * executor JVM mid-stream, then asserts the final target table is
-  * EXACTLY the deterministic upsert result — no lost rows, no duplicated
-  * rows, no stale versions.
+  * .startUpsert]] — the Kafka/CSV/IDK ingest sink, one TableLog upsert per
+  * batch into the session table `stream_fault`) and `kill -9`s one
+  * executor JVM mid-stream, then asserts the final table is EXACTLY the
+  * deterministic upsert result — no lost rows, no duplicated rows, no
+  * stale versions.
   *
   * This is the streaming half of the fault story ([[FaultProbe]] covers
   * ad-hoc queries): exactly-once at 100 TB is the checkpointed source
@@ -16,9 +17,12 @@ import org.apache.spark.sql.functions._
   * (a) retries the dead tasks on surviving executors and the batch
   * commits normally, or (b) fails the streaming query, in which case a
   * RESTART from the same checkpoint replays the uncommitted batch through
-  * the snapshot-swap upsert — `upsertBatch` replaces rows by id, so the
-  * replay converges to the same state (the probe restarts the query until
+  * the same upsert — it replaces rows by id, so the replay converges to
+  * the same state (the probe restarts the query until
   * `Trigger.AvailableNow` drains and reports how many restarts it took).
+  * The table's pieces are materialized per [[graft.core.Materialize]]'s
+  * tier, replicated to two executors here, so the kill loses no
+  * committed batch.
   * The reference's ingest makes the same promise via batch import
   * idempotence (`reference/client/client.go` import retry on fragment
   * errors); checkpoint + idempotent-upsert is the engine-native form.
@@ -68,7 +72,6 @@ object StreamFaultProbe {
     val scratch = java.nio.file.Files
       .createTempDirectory("graft-stream-fault").toString
     val inDir = s"$scratch/in"
-    val tgtDir = s"$scratch/tgt"
     val ckDir = s"$scratch/ck"
 
     // 40 input files with overlapping ids and globally increasing seq:
@@ -114,12 +117,12 @@ object StreamFaultProbe {
           "_id BIGINT, seq BIGINT, payload STRING"))
         .option("maxFilesPerTrigger", "2")
         .parquet(inDir)
-      graft.streaming.Ingest.startUpsert(src, tgtDir, ckDir,
+      graft.streaming.Ingest.startUpsert(src, "stream_fault", ckDir,
         idCol = "_id", orderCol = "seq")
     }
 
     // kill one executor once a few micro-batches have committed — the
-    // stream is mid-flight for many seconds (20 snapshot-swap batches)
+    // stream is mid-flight for many seconds (20 upsert batches)
     val victim = pids0.head
     @volatile var killedMid = false
     @volatile var died = false
@@ -160,7 +163,7 @@ object StreamFaultProbe {
     }
     check("stream_result") {
       require(done, s"stream did not drain after $restarts restarts")
-      val got = spark.read.parquet(tgtDir)
+      val got = spark.table("stream_fault")
         .orderBy("_id").collect().map(_.toSeq).toVector
       require(got.size == expected.size,
         s"row count ${got.size} != expected ${expected.size}")

@@ -19,9 +19,7 @@ import org.apache.spark.sql.functions._
   * final facts (both maintenance operations applied, in either order); a
   * CAS mismatch REFUSES registration; repeated refolds reap old versions
   * (disk stays ≤ bare stem + two); a refused maintenance flags the record
-  * stale for `/status`/`Advise`, a later success clears it, and
-  * `spark.graft.index.autoRebuild=true` converts the refusal into an
-  * O(corpus) rebuild that keeps the index serving. */
+  * stale for `/status`/`Advise`, and a later success clears it. */
 class ConcurrentMaintainSpec extends SparkSpec {
 
   /** Fresh warehouse session + fact dir with a grouped (event_type) index
@@ -163,24 +161,6 @@ class ConcurrentMaintainSpec extends SparkSpec {
       ev.filter(col("event_type") === "click"))
     assert(ok.length == 1 && ok.head._2, ok.toString)
     assert(IndexRegistry.staleRecords(s).isEmpty)
-    IndexCatalog.clear()
-  }
-
-  test("spark.graft.index.autoRebuild=true converts a refusal into a " +
-    "rebuild that keeps the index serving") {
-    val (s, ev, fact, _) = fixture("arb")
-    s.conf.set("spark.graft.index.autoRebuild", "true")
-    try {
-      // same refusal shape as above — but now the fallback rebuilds
-      val r = IndexRegistry.refoldMutation(s, fact, ev.select("value"))
-      assert(r.length == 1 && r.head._2, s"auto-rebuild must report ok: $r")
-      assert(IndexRegistry.staleRecords(s).isEmpty)
-      val served = q(s, fact)
-      val phys = served.queryExecution.executedPlan.toString
-      assert(!phys.contains("/fact") && phys.contains("/g.v1"), phys)
-      assertSame(served.collect(),
-        IndexRewrite.suppress(q(s, fact).collect()))
-    } finally s.conf.unset("spark.graft.index.autoRebuild")
     IndexCatalog.clear()
   }
 }

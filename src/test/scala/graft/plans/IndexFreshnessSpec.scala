@@ -41,11 +41,6 @@ class IndexFreshnessSpec extends SparkSpec {
       .orderBy("event_type").collect().toSeq
     assert(after.collect().toSeq == want, "declined query must read new facts")
 
-    // kill-switch: documented unguarded behavior (serves the stale index)
-    spark.conf.set("spark.graft.indexFreshnessCheck", "false")
-    try assert(!grouped(fact).queryExecution.executedPlan.toString.contains("/fact"))
-    finally spark.conf.unset("spark.graft.indexFreshnessCheck")
-
     // rebuilding + re-registering against the new facts resumes serving
     GroupIndex.buildTo(spark.read.parquet(fact), Seq("event_type"),
       Seq("value"), s"$root/g2")

@@ -68,18 +68,18 @@ class CsvIngestSpec extends SparkSpec {
 
   test("streaming source feeds the checkpointed upsert sink end-to-end") {
     val root = Ingest.scratch("csvidk-stream")
-    val in = root + "/in"; val tgt = root + "/tgt"; val ck = root + "/ck"
+    val in = root + "/in"; val ck = root + "/ck"
     write(in, "one.csv", "1,first,100", "2,second,200")
     val header = Seq("id__ID", "label__String", "v__Int")
     val q = Ingest.startUpsert(
-      CsvIngest.source(spark, in, header), tgt, ck, idCol = "id", orderCol = "v")
+      CsvIngest.source(spark, in, header), "csvidk_t", ck, idCol = "id", orderCol = "v")
     q.awaitTermination()
     // a later file upserts: id=2 replaced, id=3 appended (latest-wins)
     write(in, "two.csv", "2,second-v2,300", "3,third,50")
     val q2 = Ingest.startUpsert(
-      CsvIngest.source(spark, in, header), tgt, ck, idCol = "id", orderCol = "v")
+      CsvIngest.source(spark, in, header), "csvidk_t", ck, idCol = "id", orderCol = "v")
     q2.awaitTermination()
-    val out = spark.read.parquet(tgt).orderBy("id").collect()
+    val out = spark.table("csvidk_t").orderBy("_id").collect()
     assert(out.map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq ==
       Seq((1L, "first", 100L), (2L, "second-v2", 300L), (3L, "third", 50L)))
   }

@@ -62,23 +62,83 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("file-source ingest upserts with latest-write-wins") {
+  /** Two parquet files of (_id, seq, v) under a fresh `src`: `_id=1`
+    * arrives three times, and its highest `seq` ("c") must win. */
+  private def upsertFiles(tag: String): String = {
     import spark.implicits._
-    val src = Ingest.scratch("upsert_src")
-    val tgt = Ingest.scratch("upsert_tgt") + "/t"
-    val ckpt = Ingest.scratch("upsert_ckpt")
+    val src = Ingest.scratch(s"${tag}_src")
     Seq((1L, 10L, "a"), (2L, 20L, "b")).toDF("_id", "seq", "v")
       .write.parquet(src + "/f1.parquet")
     // duplicate _id=1 with higher seq must replace, lower seq must lose
     Seq((1L, 30L, "c"), (1L, 5L, "stale"), (3L, 1L, "d")).toDF("_id", "seq", "v")
       .write.parquet(src + "/f2.parquet")
-    val stream = Ingest.fileSource(spark, src + "/*", "PARQUET",
-      spark.read.parquet(src + "/f1.parquet").schema)
-    val q = Ingest.startUpsert(stream, tgt, ckpt, idCol = "_id", orderCol = "seq")
-    q.awaitTermination()
-    val rows = spark.read.parquet(tgt).orderBy("_id")
-      .collect().map(r => (r.getLong(0), r.getString(2)))
-    assert(rows.toSeq == Seq((1L, "c"), (2L, "b"), (3L, "d")))
+    src
+  }
+
+  /** Stream `src` into `s`'s table `table` from the checkpoint `ckpt`. */
+  private def streamInto(s: org.apache.spark.sql.SparkSession, src: String,
+                         table: String, ckpt: String): Unit =
+    Ingest.startUpsert(Ingest.fileSource(s, src + "/*", "PARQUET",
+        s.read.parquet(src + "/f1.parquet").schema),
+      table, ckpt, idCol = "_id", orderCol = "seq").awaitTermination()
+
+  private def idV(s: org.apache.spark.sql.SparkSession, table: String) =
+    s.table(table).orderBy("_id").collect()
+      .map(r => (r.getAs[Long]("_id"), r.getAs[String]("v"))).toSeq
+
+  private val upserted = Seq((1L, "c"), (2L, "b"), (3L, "d"))
+
+  test("file-source ingest upserts with latest-write-wins") {
+    val s = spark.newSession()
+    streamInto(s, upsertFiles("upsert"), "ups", Ingest.scratch("upsert_ckpt"))
+    assert(idV(s, "ups") == upserted)
+  }
+
+  test("streamed rows are a TableLog table: PQL reads them on the session") {
+    val s = spark.newSession()
+    streamInto(s, upsertFiles("ups_pql"), "ups_pql", Ingest.scratch("ups_pql_ckpt"))
+    assert(program(s, "ups_pql", "Count(Row(v='c'))").head().getLong(0) == 1L)
+    assert(program(s, "ups_pql", "Count(All())").head().getLong(0) == 3L)
+    // a PQL write commits through the same log the stream committed to
+    program(s, "ups_pql", "Set(2, v='q')")
+    assert(idV(s, "ups_pql") == Seq((1L, "c"), (2L, "q"), (3L, "d")))
+  }
+
+  test("re-running the stream from an empty checkpoint leaves the table unchanged") {
+    val s = spark.newSession()
+    val src = upsertFiles("ups_rerun")
+    streamInto(s, src, "ups_rerun", Ingest.scratch("ups_rerun_ckpt"))
+    streamInto(s, src, "ups_rerun", Ingest.scratch("ups_rerun_ckpt"))
+    assert(idV(s, "ups_rerun") == upserted)
+    assert(s.table("ups_rerun").count() == 3)
+  }
+
+  test("with a warehouse, streamed rows survive into a restored session, " +
+    "and a stream on a fresh session upserts into the warehouse's table") {
+    import spark.implicits._
+    val wh = java.nio.file.Files.createTempDirectory("graft-stream-wh").toString
+    def durable() = {
+      val s = spark.newSession()
+      s.conf.set("spark.graft.warehouse", wh)
+      s
+    }
+    val s1 = durable()
+    streamInto(s1, upsertFiles("ups_wh"), "ups_wh", Ingest.scratch("ups_wh_ckpt"))
+    val s2 = durable()
+    assert(graft.sql.Ddl.restoreSession(s2).contains("ups_wh"))
+    assert(idV(s2, "ups_wh") == upserted)
+    // a fresh session that never restored: the stream finds the
+    // warehouse's table and upserts into it instead of replacing it
+    val more = Ingest.scratch("ups_wh_more_src")
+    Seq((3L, 40L, "e"), (4L, 1L, "f")).toDF("_id", "seq", "v")
+      .write.parquet(more + "/f1.parquet")
+    val s3 = durable()
+    streamInto(s3, more, "ups_wh", Ingest.scratch("ups_wh_more_ckpt"))
+    val want = Seq((1L, "c"), (2L, "b"), (3L, "e"), (4L, "f"))
+    assert(idV(s3, "ups_wh") == want)
+    val s4 = durable()
+    graft.sql.Ddl.restoreSession(s4)
+    assert(idV(s4, "ups_wh") == want)
   }
 
   test("quantum window counts match batch date_trunc rollup") {
@@ -178,7 +238,6 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import KafkaIngest.IdkField
     val src = Ingest.scratch("kafka_src")
-    val tgt = Ingest.scratch("kafka_tgt") + "/t"
     val ckpt = Ingest.scratch("kafka_ckpt")
     val fields = Seq(IdkField("_id", "id"), IdkField("seq", "int"),
       IdkField("v", "string"))
@@ -188,9 +247,9 @@ class StreamingSpec extends SparkSpec {
       .toDF("value").write.text(src + "/f2")
     val stream = KafkaIngest.fileCompatSource(spark, src + "/*", fields)
     // same sink as production Kafka: checkpointed upsert
-    Ingest.startUpsert(stream, tgt, ckpt, idCol = "_id", orderCol = "seq")
+    Ingest.startUpsert(stream, "kafka_t", ckpt, idCol = "_id", orderCol = "seq")
       .awaitTermination()
-    val rows = spark.read.parquet(tgt).orderBy("_id")
+    val rows = spark.table("kafka_t").orderBy("_id")
       .collect().map(r => (r.getAs[Long]("_id"), r.getAs[String]("v")))
     assert(rows.toSeq == Seq((1L, "c"), (2L, "b"), (3L, "d")))
   }
@@ -199,7 +258,6 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import KafkaIngest.IdkField
     val src = Ingest.scratch("kin_src")
-    val tgt = Ingest.scratch("kin_tgt") + "/t"
     val ckpt = Ingest.scratch("kin_ckpt")
     val fields = Seq(IdkField("_id", "id"), IdkField("seq", "int"),
       IdkField("ts", "timestamp", unit = "ms"))
@@ -207,9 +265,9 @@ class StreamingSpec extends SparkSpec {
         """{"_id":2,"seq":20,"ts":1672628646000}""")
       .toDF("value").write.text(src + "/f1")
     val stream = KinesisIngest.fileCompatSource(spark, src + "/*", fields)
-    Ingest.startUpsert(stream, tgt, ckpt, idCol = "_id", orderCol = "seq")
+    Ingest.startUpsert(stream, "kinesis_t", ckpt, idCol = "_id", orderCol = "seq")
       .awaitTermination()
-    val rows = spark.read.parquet(tgt).orderBy("_id").collect()
+    val rows = spark.table("kinesis_t").orderBy("_id").collect()
     assert(rows.length == 2)
     assert(rows(0).getAs[java.sql.Timestamp]("ts").toInstant ==
       java.time.Instant.ofEpochMilli(1672628645000L))
