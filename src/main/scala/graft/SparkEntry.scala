@@ -513,6 +513,13 @@ SELECT v AS val FROM bisect WHERE done""".replace("\n", " ")
 
   private def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
   private def emb(s: SparkSession, dir: String) = Tables.load(s, dir, "embeddings")
+  /** A fresh session of `s` over the scratch warehouse `name`: the
+    * upsert sink needs a warehouse, as its checkpoint is durable too. */
+  private def durable(s: SparkSession, name: String): SparkSession = {
+    val w = s.newSession()
+    w.conf.set("spark.graft.warehouse", graft.streaming.Ingest.scratch(name))
+    w
+  }
   private def queryVec(s: SparkSession, dir: String): Seq[Float] =
     emb(s, dir).filter(col("vec_id") === 0).select("embedding")
       .head().getSeq[Float](0)
@@ -1368,10 +1375,11 @@ SELECT v AS val FROM bisect WHERE done""".replace("\n", " ")
       val fields = Seq(IdkField("event_id", "id"),
         IdkField("event_type", "string"), IdkField("user_id", "int"),
         IdkField("value", "double"), IdkField("ts", "timestamp", unit = "us"))
-      val stream = graft.streaming.KafkaIngest.fileCompatSource(s, src + "/*", fields)
+      val w = durable(s, "q_kafka_wh")
+      val stream = graft.streaming.KafkaIngest.fileCompatSource(w, src + "/*", fields)
       graft.streaming.Ingest.startUpsert(stream, "stream_kafka", ckpt,
         idCol = "event_id", orderCol = "ts").awaitTermination()
-      s.table("stream_kafka").agg(count(lit(1)).as("cnt"),
+      w.table("stream_kafka").agg(count(lit(1)).as("cnt"),
         round(sum(col("value")), 2).as("sv"), max(col("ts")).as("mts"))
     }),
     // CSV IDK ingest: events re-encoded as a headerless CSV wire, typed by a
@@ -1468,10 +1476,11 @@ SELECT v AS val FROM bisect WHERE done""".replace("\n", " ")
         .write.mode("overwrite").option("header", "false").csv(src + "/wire")
       val header = Seq("event_id__ID", "user_id__Int",
         "event_type__String", "ts__Timestamp")
-      val stream = graft.streaming.CsvIngest.source(s, src + "/*", header)
+      val w = durable(s, "q_csv_wh")
+      val stream = graft.streaming.CsvIngest.source(w, src + "/*", header)
       graft.streaming.Ingest.startUpsert(stream, "stream_csv", ckpt,
         idCol = "event_id", orderCol = "ts").awaitTermination()
-      s.table("stream_csv").agg(count(lit(1)).as("cnt"),
+      w.table("stream_csv").agg(count(lit(1)).as("cnt"),
         sum(col("user_id")).as("su"), max(col("ts")).as("mts"))
     }),
     // Kinesis IDK ingest (`reference/idk/kinesis/source.go:81,110`): record
@@ -1489,10 +1498,11 @@ SELECT v AS val FROM bisect WHERE done""".replace("\n", " ")
         .write.mode("overwrite").text(src + "/wire")
       val fields = Seq(IdkField("event_id", "id"), IdkField("user_id", "int"),
         IdkField("event_type", "string"), IdkField("value", "double"))
-      val stream = graft.streaming.KinesisIngest.fileCompatSource(s, src + "/*", fields)
+      val w = durable(s, "q_kin_wh")
+      val stream = graft.streaming.KinesisIngest.fileCompatSource(w, src + "/*", fields)
       graft.streaming.Ingest.startUpsert(stream, "src_kinesis", ckpt,
         idCol = "event_id", orderCol = "user_id").awaitTermination()
-      s.table("src_kinesis").agg(count(lit(1)).as("cnt"),
+      w.table("src_kinesis").agg(count(lit(1)).as("cnt"),
         sum(col("user_id")).as("su"), round(sum(col("value")), 2).as("sv"))
     }),
     // datagen IDK source (`reference/idk/datagen/`, the able perf profile):
@@ -1539,11 +1549,12 @@ SELECT v AS val FROM bisect WHERE done""".replace("\n", " ")
       val ckpt = graft.streaming.Ingest.scratch("q_upsert_ckpt")
       ev.select("event_id", "ts", "event_type", "value")
         .write.mode("overwrite").parquet(src + "/ev.parquet")
-      val stream = graft.streaming.Ingest.fileSource(s, src + "/*", "PARQUET",
+      val w = durable(s, "q_upsert_wh")
+      val stream = graft.streaming.Ingest.fileSource(w, src + "/*", "PARQUET",
         s.read.parquet(src + "/ev.parquet").schema)
       graft.streaming.Ingest.startUpsert(stream, "stream_upsert", ckpt,
         idCol = "event_id", orderCol = "ts").awaitTermination()
-      s.table("stream_upsert").agg(count(lit(1)).as("cnt"),
+      w.table("stream_upsert").agg(count(lit(1)).as("cnt"),
         round(sum(col("value")), 2).as("sv"))
     }),
   )

@@ -246,15 +246,20 @@ object TableLog {
     if (removed.isDefined) mat(spark, name, kind, df) else Piece(df, None)
 
   /** `df` without the rows whose `_id` is among `ids`, as one `InSet`.
-    * Rows with a null `_id` stay, as they do under an anti-join. */
+    * Rows with a null `_id` stay, as they do under an anti-join. The
+    * `coalesce` keeps the set out of parquet filter pushdown, where it
+    * would become one equality per id in a left-deep or-chain: parquet's
+    * filter visitors recurse down that chain and overflow a task thread's
+    * stack at a few thousand ids, and a negated point set prunes no row
+    * group anyway. */
   private def without(df: DataFrame, ids: Set[Any]): DataFrame =
     if (ids.isEmpty) df
     else {
       val id = df.col("_id")
       val toCatalyst = CatalystTypeConverters
         .createToCatalystConverter(df.schema("_id").dataType)
-      df.filter(id.isNull ||
-        !Shim.column(InSet(Shim.expression(id), ids.map(toCatalyst))))
+      df.filter(!coalesce(
+        Shim.column(InSet(Shim.expression(id), ids.map(toCatalyst))), lit(false)))
     }
 
   /** `base` without the removed ids, plus the overlay. */

@@ -36,14 +36,15 @@ import org.apache.spark.sql.types.StructType
   *   - TTL         → event-time filter job (Delta `DELETE WHERE` in prod).
   *
   * Streamed rows are then a TableLog table like any other: the facades
-  * serve them, `spark.graft.warehouse` makes them durable,
-  * `Ddl.restoreSession` restores them and compaction rebinds their
-  * indexes. A micro-batch of at most `TableLog.MaxRemovedIds` ids costs
-  * O(batch) plus one compaction every `TableLog.compactAfter` batches; a
-  * larger one compacts in its own commit, O(table). The windowed
-  * aggregation path is already scale-correct: state is partitioned by
-  * group key across executors and watermarking bounds state size;
-  * shuffle partitions should be sized to cluster cores.
+  * serve them, `spark.graft.warehouse` (required, as the checkpoint is
+  * durable too) persists them, `Ddl.restoreSession` restores them and
+  * compaction rebinds their indexes. A micro-batch of at most
+  * `TableLog.MaxRemovedIds` ids costs O(batch) plus one compaction every
+  * `TableLog.compactAfter` batches; a larger one compacts in its own
+  * commit, O(table). The windowed aggregation path is already
+  * scale-correct: state is partitioned by group key across executors and
+  * watermarking bounds state size; shuffle partitions should be sized to
+  * cluster cores.
   */
 object Ingest {
 
@@ -68,20 +69,28 @@ object Ingest {
     * record per id wins (Kafka offset order = arrival order; here the
     * caller supplies `orderCol`, e.g. the event timestamp), then it
     * replaces every row of its id — the reference's mutex replace-on-write.
-    * `idCol` becomes the table's `_id`. A table neither the session nor
-    * its warehouse holds is created empty from the stream's schema; an
-    * existing one is upserted into, never replaced, so a replay from an
-    * empty checkpoint converges to the same table. Batches commit on the
-    * session that started the stream: foreachBatch hands each batch a
-    * cloned session, and TableLog keeps its state per session. */
+    * `idCol` becomes the table's `_id`. The session must have a
+    * warehouse: the checkpoint records batches as done across restarts,
+    * so only a table that persists as long may take them. A table neither
+    * the session nor its warehouse holds is created empty from the
+    * stream's schema, under the table's lock; an existing one is upserted
+    * into, never replaced, so a replay from an empty checkpoint converges
+    * to the same table. Batches commit on the session that started the
+    * stream: foreachBatch hands each batch a cloned session, and TableLog
+    * keeps its state per session. */
   def startUpsert(stream: DataFrame, table: String, checkpointDir: String,
       idCol: String = "_id", orderCol: String = "_id"): StreamingQuery = {
     val spark = stream.sparkSession
-    if (!spark.catalog.tableExists(Idents.q(table)) &&
-        !TableLog.restoreTable(spark, table))
-      TableLog.replace(spark, table, spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row],
-        stream.withColumnRenamed(idCol, "_id").schema), checkpoint = false)
+    require(TableLog.isDurable(spark), s"streaming into $table needs " +
+      "spark.graft.warehouse: the checkpoint outlives the session, so " +
+      "a session-only table would lose every batch it records as done")
+    TableLog.locked(spark, table) {
+      if (!spark.catalog.tableExists(Idents.q(table)) &&
+          !TableLog.restoreTable(spark, table))
+        TableLog.replace(spark, table, spark.createDataFrame(
+          spark.sparkContext.emptyRDD[Row],
+          stream.withColumnRenamed(idCol, "_id").schema), checkpoint = false)
+    }
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (b: DataFrame, _: Long) =>

@@ -20,9 +20,9 @@ import org.apache.spark.sql.functions._
   * the same upsert — it replaces rows by id, so the replay converges to
   * the same state (the probe restarts the query until
   * `Trigger.AvailableNow` drains and reports how many restarts it took).
-  * The table's pieces are materialized per [[graft.core.Materialize]]'s
-  * tier, replicated to two executors here, so the kill loses no
-  * committed batch.
+  * The table's pieces are parquet files in a scratch warehouse
+  * (`spark.graft.warehouse`, which the sink requires), so the kill loses
+  * no committed batch.
   * The reference's ingest makes the same promise via batch import
   * idempotence (`reference/client/client.go` import retry on fragment
   * errors); checkpoint + idempotent-upsert is the engine-native form.
@@ -73,6 +73,7 @@ object StreamFaultProbe {
       .createTempDirectory("graft-stream-fault").toString
     val inDir = s"$scratch/in"
     val ckDir = s"$scratch/ck"
+    spark.conf.set("spark.graft.warehouse", s"$scratch/wh")
 
     // 40 input files with overlapping ids and globally increasing seq:
     // file f covers ids [f*750, f*750 + 3000) — each id appears in ~4

@@ -165,6 +165,26 @@ class DurabilitySpec extends SparkSpec {
     }
   }
 
+  test("a statement of thousands of ids within the cap reads and writes " +
+      "the parquet pieces it filters by them") {
+    withWarehouse { wh =>
+      import org.apache.spark.sql.functions._
+      Ddl.run(spark, "CREATE TABLE dur_many (_id ID, v STRING)")
+      val n = TableLog.MaxRemovedIds - 96
+      def rows(tag: String) = spark.range(0, n)
+        .select(col("id").as("_id"), concat(lit(tag), col("id")).as("v"))
+      TableLog.upsert(spark, "dur_many", rows("a"))
+      // the second statement takes its ids out of the first's overlay
+      // piece, and every read takes the removed ids out of the base
+      TableLog.upsert(spark, "dur_many", rows("b"))
+      assert(TableLog.depthOf(spark, "dur_many") > 0)
+      assert(idRows(spark, "dur_many") ===
+        (0 until n).map(i => (i.toLong, s"b$i")).toSet)
+      assert(idRows(restored(wh), "dur_many") === idRows(spark, "dur_many"))
+      Ddl.run(spark, "DROP TABLE dur_many")
+    }
+  }
+
   test("compaction GCs stale piece dirs; restore sees only the live state") {
     withWarehouse { wh =>
       TableLog.compactAfter = 4

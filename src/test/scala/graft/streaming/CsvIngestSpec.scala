@@ -71,15 +71,17 @@ class CsvIngestSpec extends SparkSpec {
     val in = root + "/in"; val ck = root + "/ck"
     write(in, "one.csv", "1,first,100", "2,second,200")
     val header = Seq("id__ID", "label__String", "v__Int")
+    val s = spark.newSession()
+    s.conf.set("spark.graft.warehouse", root + "/wh")
     val q = Ingest.startUpsert(
-      CsvIngest.source(spark, in, header), "csvidk_t", ck, idCol = "id", orderCol = "v")
+      CsvIngest.source(s, in, header), "csvidk_t", ck, idCol = "id", orderCol = "v")
     q.awaitTermination()
     // a later file upserts: id=2 replaced, id=3 appended (latest-wins)
     write(in, "two.csv", "2,second-v2,300", "3,third,50")
     val q2 = Ingest.startUpsert(
-      CsvIngest.source(spark, in, header), "csvidk_t", ck, idCol = "id", orderCol = "v")
+      CsvIngest.source(s, in, header), "csvidk_t", ck, idCol = "id", orderCol = "v")
     q2.awaitTermination()
-    val out = spark.table("csvidk_t").orderBy("_id").collect()
+    val out = s.table("csvidk_t").orderBy("_id").collect()
     assert(out.map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq ==
       Seq((1L, "first", 100L), (2L, "second-v2", 300L), (3L, "third", 50L)))
   }

@@ -65,14 +65,29 @@ class StreamingSpec extends SparkSpec {
   /** Two parquet files of (_id, seq, v) under a fresh `src`: `_id=1`
     * arrives three times, and its highest `seq` ("c") must win. */
   private def upsertFiles(tag: String): String = {
-    import spark.implicits._
     val src = Ingest.scratch(s"${tag}_src")
+    upsertF1(src); upsertF2(src)
+    src
+  }
+  private def upsertF1(src: String): Unit = {
+    import spark.implicits._
     Seq((1L, 10L, "a"), (2L, 20L, "b")).toDF("_id", "seq", "v")
       .write.parquet(src + "/f1.parquet")
+  }
+  private def upsertF2(src: String): Unit = {
+    import spark.implicits._
     // duplicate _id=1 with higher seq must replace, lower seq must lose
     Seq((1L, 30L, "c"), (1L, 5L, "stale"), (3L, 1L, "d")).toDF("_id", "seq", "v")
       .write.parquet(src + "/f2.parquet")
-    src
+  }
+
+  /** A fresh session over the warehouse `wh` (a new one by default): the
+    * upsert sink refuses a session without one. */
+  private def durable(wh: String = java.nio.file.Files
+      .createTempDirectory("graft-stream-wh").toString) = {
+    val s = spark.newSession()
+    s.conf.set("spark.graft.warehouse", wh)
+    s
   }
 
   /** Stream `src` into `s`'s table `table` from the checkpoint `ckpt`. */
@@ -89,13 +104,22 @@ class StreamingSpec extends SparkSpec {
   private val upserted = Seq((1L, "c"), (2L, "b"), (3L, "d"))
 
   test("file-source ingest upserts with latest-write-wins") {
-    val s = spark.newSession()
+    val s = durable()
     streamInto(s, upsertFiles("upsert"), "ups", Ingest.scratch("upsert_ckpt"))
     assert(idV(s, "ups") == upserted)
   }
 
-  test("streamed rows are a TableLog table: PQL reads them on the session") {
+  test("a session without a warehouse may not stream: its table would " +
+    "not outlive the checkpoint") {
     val s = spark.newSession()
+    val e = intercept[IllegalArgumentException](streamInto(s,
+      upsertFiles("ups_nowh"), "ups_nowh", Ingest.scratch("ups_nowh_ckpt")))
+    assert(e.getMessage.contains("spark.graft.warehouse"))
+    assert(!s.catalog.tableExists("ups_nowh"))
+  }
+
+  test("streamed rows are a TableLog table: PQL reads them on the session") {
+    val s = durable()
     streamInto(s, upsertFiles("ups_pql"), "ups_pql", Ingest.scratch("ups_pql_ckpt"))
     assert(program(s, "ups_pql", "Count(Row(v='c'))").head().getLong(0) == 1L)
     assert(program(s, "ups_pql", "Count(All())").head().getLong(0) == 3L)
@@ -105,7 +129,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("re-running the stream from an empty checkpoint leaves the table unchanged") {
-    val s = spark.newSession()
+    val s = durable()
     val src = upsertFiles("ups_rerun")
     streamInto(s, src, "ups_rerun", Ingest.scratch("ups_rerun_ckpt"))
     streamInto(s, src, "ups_rerun", Ingest.scratch("ups_rerun_ckpt"))
@@ -113,18 +137,28 @@ class StreamingSpec extends SparkSpec {
     assert(s.table("ups_rerun").count() == 3)
   }
 
+  test("a restart on a new session resumes from the checkpoint and keeps " +
+    "every row the checkpoint records as done") {
+    val wh = java.nio.file.Files.createTempDirectory("graft-stream-wh").toString
+    val src = Ingest.scratch("ups_restart_src")
+    val ckpt = Ingest.scratch("ups_restart_ckpt")
+    upsertF1(src)
+    streamInto(durable(wh), src, "ups_restart", ckpt)
+    // the restart: a new session that never restored, the same
+    // checkpoint (which skips f1 from here on), and one more file
+    upsertF2(src)
+    val s2 = durable(wh)
+    streamInto(s2, src, "ups_restart", ckpt)
+    assert(idV(s2, "ups_restart") == upserted)
+  }
+
   test("with a warehouse, streamed rows survive into a restored session, " +
     "and a stream on a fresh session upserts into the warehouse's table") {
     import spark.implicits._
     val wh = java.nio.file.Files.createTempDirectory("graft-stream-wh").toString
-    def durable() = {
-      val s = spark.newSession()
-      s.conf.set("spark.graft.warehouse", wh)
-      s
-    }
-    val s1 = durable()
+    val s1 = durable(wh)
     streamInto(s1, upsertFiles("ups_wh"), "ups_wh", Ingest.scratch("ups_wh_ckpt"))
-    val s2 = durable()
+    val s2 = durable(wh)
     assert(graft.sql.Ddl.restoreSession(s2).contains("ups_wh"))
     assert(idV(s2, "ups_wh") == upserted)
     // a fresh session that never restored: the stream finds the
@@ -132,11 +166,11 @@ class StreamingSpec extends SparkSpec {
     val more = Ingest.scratch("ups_wh_more_src")
     Seq((3L, 40L, "e"), (4L, 1L, "f")).toDF("_id", "seq", "v")
       .write.parquet(more + "/f1.parquet")
-    val s3 = durable()
+    val s3 = durable(wh)
     streamInto(s3, more, "ups_wh", Ingest.scratch("ups_wh_more_ckpt"))
     val want = Seq((1L, "c"), (2L, "b"), (3L, "e"), (4L, "f"))
     assert(idV(s3, "ups_wh") == want)
-    val s4 = durable()
+    val s4 = durable(wh)
     graft.sql.Ddl.restoreSession(s4)
     assert(idV(s4, "ups_wh") == want)
   }
@@ -245,11 +279,12 @@ class StreamingSpec extends SparkSpec {
       .toDF("value").write.text(src + "/f1")
     Seq("""{"_id":1,"seq":30,"v":"c"}""", """{"_id":3,"seq":1,"v":"d"}""")
       .toDF("value").write.text(src + "/f2")
-    val stream = KafkaIngest.fileCompatSource(spark, src + "/*", fields)
+    val s = durable()
+    val stream = KafkaIngest.fileCompatSource(s, src + "/*", fields)
     // same sink as production Kafka: checkpointed upsert
     Ingest.startUpsert(stream, "kafka_t", ckpt, idCol = "_id", orderCol = "seq")
       .awaitTermination()
-    val rows = spark.table("kafka_t").orderBy("_id")
+    val rows = s.table("kafka_t").orderBy("_id")
       .collect().map(r => (r.getAs[Long]("_id"), r.getAs[String]("v")))
     assert(rows.toSeq == Seq((1L, "c"), (2L, "b"), (3L, "d")))
   }
@@ -264,10 +299,11 @@ class StreamingSpec extends SparkSpec {
     Seq("""{"_id":1,"seq":10,"ts":1672628645000}""",
         """{"_id":2,"seq":20,"ts":1672628646000}""")
       .toDF("value").write.text(src + "/f1")
-    val stream = KinesisIngest.fileCompatSource(spark, src + "/*", fields)
+    val s = durable()
+    val stream = KinesisIngest.fileCompatSource(s, src + "/*", fields)
     Ingest.startUpsert(stream, "kinesis_t", ckpt, idCol = "_id", orderCol = "seq")
       .awaitTermination()
-    val rows = spark.table("kinesis_t").orderBy("_id").collect()
+    val rows = s.table("kinesis_t").orderBy("_id").collect()
     assert(rows.length == 2)
     assert(rows(0).getAs[java.sql.Timestamp]("ts").toInstant ==
       java.time.Instant.ofEpochMilli(1672628645000L))
